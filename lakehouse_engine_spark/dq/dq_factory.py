@@ -3,8 +3,10 @@
 Reference parity: ``dq_processors/dq_factory.py:280-378`` (process),
 ``:423-527`` (result-sink explosion), ``:636-719`` (failure policies) and
 ``dq_processors/validator.py:136-228`` (source tagging) — minus the GE
-dependency. All row-level expectations evaluate in ONE aggregate job over the
-input; only uniqueness/aggregate expectations add a job each.
+dependency. All row-level expectations evaluate in ONE aggregate pass over the
+input. A uniqueness expectation rides in the same pass: it groups by its
+column, and the row counts fold over the groups. Only a uniqueness check on a
+second column and the queried-aggregate expectation add a pass each.
 """
 
 from __future__ import annotations
@@ -87,6 +89,48 @@ class DQFactory:
         )
         return "||".join(r["__pk"] for r in vals)
 
+    @staticmethod
+    def _suite_stats(df: DataFrame, row_fns, agg_fns) -> Tuple[object, dict]:
+        """ONE aggregate pass over ``df``: the element count ``__n`` and
+        every row expectation's unexpected count ``__u{i}``.
+
+        When the suite checks uniqueness, the pass groups by the first
+        uniqueness column with a per-key row count plus the per-key
+        unexpected sums, then folds the groups into ``__n``, ``__u{i}`` and
+        ``__dup`` — the rows whose key occurs more than once, NULL keys
+        included, exactly :func:`expectations.eval_unique`. Returns that
+        column (None without uniqueness) and the counts."""
+        unique_col = next(
+            (
+                fn.args["column"]
+                for fn in agg_fns
+                if fn.function == "expect_column_values_to_be_unique"
+            ),
+            None,
+        )
+        unexpected = [F.when(~cond, F.lit(1)) for _, cond in row_fns]
+        if unique_col is None:
+            row = df.agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[F.sum(u).alias(f"__u{i}") for i, u in enumerate(unexpected)],
+            ).first()
+        else:
+            cnt = F.col("__cnt")
+            row = (
+                df.groupBy(unique_col)
+                .agg(
+                    F.count(F.lit(1)).alias("__cnt"),
+                    *[F.sum(u).alias(f"__u{i}") for i, u in enumerate(unexpected)],
+                )
+                .agg(
+                    F.sum(cnt).alias("__n"),
+                    F.sum(F.when(cnt > 1, cnt)).alias("__dup"),
+                    *[F.sum(f"__u{i}").alias(f"__u{i}") for i in range(len(unexpected))],
+                )
+                .first()
+            )
+        return unique_col, {k: int(v or 0) for k, v in row.asDict().items()}
+
     @classmethod
     def run_dq_process(cls, spark: SparkSession, spec: DQSpec, df: DataFrame) -> DataFrame:
         if spec.cache_df:
@@ -104,22 +148,19 @@ class DQFactory:
             else:
                 raise ValueError(f"Unknown DQ expectation: {fn.function}")
 
-        # One aggregate pass: element count + every row-level unexpected count.
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, (_, cond) in enumerate(row_fns):
-            aggs.append(
-                F.coalesce(F.sum(F.when(~cond, F.lit(1))), F.lit(0)).alias(f"__u{i}")
-            )
-        stats = df.agg(*aggs).first()
-        n = int(stats["__n"])
+        unique_col, stats = cls._suite_stats(df, row_fns, agg_fns)
+        n = stats["__n"]
 
         results = []  # (fn_spec, success, unexpected_count, element_count)
         for i, (fn, _) in enumerate(row_fns):
-            u = int(stats[f"__u{i}"])
+            u = stats[f"__u{i}"]
             results.append((fn, u == 0, u, n))
         for fn in agg_fns:
             if fn.function == "expect_column_values_to_be_unique":
-                u, total = E.eval_unique(df, fn.args["column"])
+                if fn.args["column"] == unique_col:
+                    u, total = stats["__dup"], n
+                else:
+                    u, total = E.eval_unique(df, fn.args["column"])
                 results.append((fn, u == 0, u, total))
             elif fn.function == "expect_table_row_count_to_be_between":
                 ok = E.eval_row_count_between(n, **fn.args)

@@ -4,7 +4,10 @@ Each *row-level* expectation builds a boolean Column (True = row OK); the DQ
 factory evaluates ALL of them in ONE aggregate pass
 (``sum(when(~cond,1))`` per expectation), unlike the reference's
 one-GE-checkpoint-per-suite design — same results, one job.
-*Aggregate-level* expectations return a closure evaluated against aggregates.
+*Aggregate-level* expectations are evaluated against aggregates.
+``expect_column_values_to_be_unique`` rides in the row pass (grouped by its
+column, the row counts folded over the groups); :func:`eval_unique` is its
+definition and the separate pass for a second uniqueness column.
 
 Includes the reference's 7 custom expectations
 (``dq_processors/custom_expectations/*.py``) plus the common core GE names its

@@ -4,9 +4,11 @@ Reference parity: ``io/writers/delta_merge_writer.py:28-210`` (full
 MergeOptions semantics: delete/update/insert predicates + column sets,
 insert-only mode). On clusters with delta-spark installed this is a real
 ``DeltaTable.merge`` (low-shuffle, file-pruned by the merge predicate). In
-environments without Delta (this container) the same semantics run as a
-full-outer-join rewrite + atomic overwrite — correct, but O(target) IO; the
-Delta path is the 100 TB path.
+environments without Delta the same semantics run as a rewrite: ONE pass
+over a full outer join of target and source (a single filter that applies
+the delete/insert clauses and a single projection that picks each column's
+current, updated or inserted value), then an atomic overwrite — correct,
+but O(target) IO; the Delta path is the 100 TB path.
 
 Predicates reference the aliases ``current`` (target) and ``new`` (source),
 exactly as in the reference.
@@ -106,9 +108,16 @@ def _table_location(spark, db_table):
         return None
 
 
-def _save_table(frame, spark, db_table, fmt):
+_LOOKUP = object()
+
+
+def _save_table(frame, spark, db_table, fmt, loc=_LOOKUP):
+    """Overwrite ``db_table`` with ``frame``, keeping an EXTERNAL table at
+    its path. ``loc`` is the table's already-resolved
+    :func:`_table_location`; by default it is looked up here."""
     writer = frame.write.format(fmt).mode("overwrite")
-    loc = _table_location(spark, db_table)
+    if loc is _LOOKUP:
+        loc = _table_location(spark, db_table)
     if loc:
         writer = writer.option("path", loc)
     writer.saveAsTable(db_table)
@@ -262,18 +271,23 @@ def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_forma
     from lakehouse_engine_spark.io.table_lock import WriterLock
 
     fmt = data_format if data_format != "delta" else "parquet"
-    lock_loc = location or _table_location(spark, db_table)
+    # one catalog lookup per merge: the same Location anchors the lock
+    # and re-pins an EXTERNAL table on the overwrite
+    table_loc = _table_location(spark, db_table) if db_table else None
+    lock_loc = location or table_loc
     if lock_loc is None:
         # managed table with no resolvable path (embedded single-process
         # metastore): nothing to anchor a lock file to; proceed under the
         # documented single-writer assumption
-        _merge_rewrite_locked(spark, df, opts, location, db_table, fmt, None)
+        _merge_rewrite_locked(spark, df, opts, location, db_table, fmt, None, table_loc)
         return
     with WriterLock(spark, lock_loc, op="merge") as lk:
-        _merge_rewrite_locked(spark, df, opts, location, db_table, fmt, lk)
+        _merge_rewrite_locked(spark, df, opts, location, db_table, fmt, lk, table_loc)
 
 
-def _merge_rewrite_locked(spark, df, opts: MergeOptions, location, db_table, fmt, lock) -> None:
+def _merge_rewrite_locked(
+    spark, df, opts: MergeOptions, location, db_table, fmt, lock, table_loc
+) -> None:
 
     def _first_load():
         frame = df
@@ -287,7 +301,7 @@ def _merge_rewrite_locked(spark, df, opts: MergeOptions, location, db_table, fmt
         if lock is not None:
             lock.verify()  # detect a mid-flight lock steal before writing
         if db_table:
-            _save_table(frame, spark, db_table, fmt)
+            _save_table(frame, spark, db_table, fmt, table_loc)
         else:
             frame.write.format(fmt).mode("overwrite").save(location)
 
@@ -303,6 +317,29 @@ def _merge_rewrite_locked(spark, df, opts: MergeOptions, location, db_table, fmt
             _first_load()
             return
         raise
+    target, df, src_cols = _prepare_merge(spark, target, df, opts)
+    result = _merged(target, df, opts, src_cols)
+    # Materialize before overwriting the table we read from.
+    result = result.localCheckpoint(eager=True)
+    if lock is not None:
+        # last gate before the destructive overwrite: if another writer
+        # stole the lock (treated ours as stale), our materialized result
+        # no longer includes their update — refuse loudly
+        lock.verify()
+    if db_table:
+        _save_table(result, spark, db_table, fmt, table_loc)
+    else:
+        result.write.format(fmt).mode("overwrite").save(location)
+
+
+def _prepare_merge(spark, target, df, opts: MergeOptions):
+    """Validate the source against the target and align both to one schema.
+
+    Returns ``(target, df, src_cols)``: ``df`` store-assigned to the target's
+    types (source-only columns kept for the predicates), ``target`` widened
+    with typed-null columns under autoMerge schema evolution, and
+    ``src_cols`` the lower-cased column names of the ORIGINAL source (which
+    decides what updateAll overwrites)."""
     src_cols = {c.lower() for c in df.columns}
     auto_merge_flag = (
         spark.conf.get(
@@ -336,75 +373,73 @@ def _merge_rewrite_locked(spark, df, opts: MergeOptions, location, db_table, fmt
         for c in df.columns:
             if c.lower() not in tgt_lower:
                 target = target.withColumn(c, F.lit(None).cast(src_types[c]))
+    return target, df, src_cols
+
+
+def _merged(target, df, opts: MergeOptions, src_cols) -> DataFrame:
+    """The merge result as ONE filter + projection over the full outer join.
+
+    Each joined row is target-only (``new`` is null), source-only
+    (``current`` is null) or matched. ``keep`` applies Delta's clause
+    semantics — a NULL condition never fires: a matched row is dropped only
+    when the delete condition is true (insert-only keeps every matched row),
+    a source-only row is admitted only when the insert condition is true.
+    Each output column then picks the current value, the insert value or,
+    when the update condition is true, the update value."""
     cols = target.columns
-    cur = target.select(F.struct(*target.columns).alias("current"))
+    cur = target.select(F.struct(*cols).alias("current"))
     new = df.select(F.struct(*df.columns).alias("new"))
     joined = cur.join(new, on=F.expr(opts.merge_predicate), how="full_outer")
 
-    target_only = joined.filter(F.col("new").isNull()).select("current.*")
-    matched = joined.filter(F.col("current").isNotNull() & F.col("new").isNotNull())
-    source_only = joined.filter(F.col("current").isNull())
+    target_only = F.col("new").isNull()
+    source_only = F.col("current").isNull()
+
+    def _fires(pred):
+        return F.coalesce(F.expr(pred), F.lit(False)) if pred else F.lit(True)
 
     if opts.insert_only:
-        kept_matched = matched.select("current.*")
+        matched_keep = F.lit(True)
+        upd = None
     else:
-        # Delta clause semantics: a NULL condition means the clause does
-        # NOT fire — a row with a null delete condition survives, and a
-        # row with a null update condition stays untouched (never lost)
-        if opts.delete_predicate:
-            matched = matched.filter(
-                ~F.coalesce(F.expr(opts.delete_predicate), F.lit(False))
-            )
-        upd_cond = F.expr(opts.update_predicate) if opts.update_predicate else F.lit(True)
-        to_update = matched.filter(upd_cond)
-        untouched = (
-            matched.filter(~F.coalesce(upd_cond, F.lit(False)))
-            if opts.update_predicate
-            else matched.limit(0)
+        matched_keep = (
+            ~_fires(opts.delete_predicate) if opts.delete_predicate else F.lit(True)
         )
-        if opts.update_column_set:
-            upd_cols = [
-                F.expr(opts.update_column_set[c]).alias(c)
-                if c in opts.update_column_set
-                else F.col(f"current.{c}").alias(c)
-                for c in cols
-            ]
-        else:
-            # Delta updateAll = "SET *" over the SOURCE's columns: a
-            # target column absent from the original source keeps its
-            # CURRENT value on update (inserts leave it null)
-            upd_cols = [
-                (
-                    F.col(f"new.{c}")
-                    if c.lower() in src_cols
-                    else F.col(f"current.{c}")
-                ).alias(c)
-                for c in cols
-            ]
-        kept_matched = to_update.select(*upd_cols).unionByName(untouched.select("current.*"))
+        upd = _fires(opts.update_predicate)
+    keep = (
+        F.when(target_only, F.lit(True))
+        .when(source_only, _fires(opts.insert_predicate))
+        .otherwise(matched_keep)
+    )
 
-    if opts.insert_predicate:
-        source_only = source_only.filter(F.expr(opts.insert_predicate))
     if opts.insert_column_set:
-        ins_cols = [
-            F.expr(opts.insert_column_set[c]).alias(c)
+        ins = {
+            c: F.expr(opts.insert_column_set[c])
             if c in opts.insert_column_set
-            else F.lit(None).cast(dict(target.dtypes)[c]).alias(c)
+            else F.lit(None).cast(dict(target.dtypes)[c])
             for c in cols
-        ]
+        }
     else:
-        ins_cols = [F.col(f"new.{c}").alias(c) for c in cols]
-    inserts = source_only.select(*ins_cols)
+        ins = {c: F.col(f"new.{c}") for c in cols}
+    if opts.update_column_set:
+        upd_vals = {
+            c: F.expr(opts.update_column_set[c])
+            if c in opts.update_column_set
+            else F.col(f"current.{c}")
+            for c in cols
+        }
+    else:
+        # Delta updateAll = "SET *" over the SOURCE's columns: a target
+        # column absent from the original source keeps its CURRENT value
+        # on update (inserts leave it null)
+        upd_vals = {
+            c: F.col(f"new.{c}") if c.lower() in src_cols else F.col(f"current.{c}")
+            for c in cols
+        }
 
-    result = target_only.unionByName(kept_matched).unionByName(inserts)
-    # Materialize before overwriting the table we read from.
-    result = result.localCheckpoint(eager=True)
-    if lock is not None:
-        # last gate before the destructive overwrite: if another writer
-        # stole the lock (treated ours as stale), our materialized result
-        # no longer includes their update — refuse loudly
-        lock.verify()
-    if db_table:
-        _save_table(result, spark, db_table, fmt)
-    else:
-        result.write.format(fmt).mode("overwrite").save(location)
+    def _out(c):
+        v = F.when(target_only, F.col(f"current.{c}")).when(source_only, ins[c])
+        if upd is not None:
+            v = v.when(upd, upd_vals[c])
+        return v.otherwise(F.col(f"current.{c}")).alias(c)
+
+    return joined.filter(keep).select(*[_out(c) for c in cols])

@@ -277,3 +277,137 @@ def test_prisma_meta_contract_validation(spark):
         "at_rest",
         ["dq_rule_id", "execution_point"],
     )
+
+
+# ------------------------------------------- uniqueness in the row pass
+
+_ROW_SUITE = [
+    ("expect_column_values_to_not_be_null", {"column": "name"}),
+    ("expect_column_values_to_be_between", {"column": "score", "min_value": 0, "max_value": 100}),
+]
+
+
+def _results(spark, df, functions, tmp_dir, **kw):
+    """Per-expectation ``(type, column, success, unexpected, elements)``
+    from the run's file-store artifact (no Spark job to read it back)."""
+    import glob
+    import json
+
+    run(spark, df, functions, fail_on_error=False, local_fs_root_dir=tmp_dir, **kw)
+    (path,) = glob.glob(os.path.join(tmp_dir, "*", "validation_result.json"))
+    with open(path) as fh:
+        payload = json.load(fh)
+    os.remove(path)
+    return [
+        (
+            e["expectation_type"],
+            e["kwargs"].get("column"),
+            e["success"],
+            e["unexpected_count"],
+            e["element_count"],
+        )
+        for e in payload["expectations"]
+    ]
+
+
+def _unique_ref(df, column):
+    from lakehouse_engine_spark.dq.expectations import eval_unique
+
+    u, total = eval_unique(df, column)
+    return ("expect_column_values_to_be_unique", column, u == 0, u, total)
+
+
+_UNIQUE_ID = ("expect_column_values_to_be_unique", {"column": "id"})
+_UNIQUE_NAME = ("expect_column_values_to_be_unique", {"column": "name"})
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # several NULL keys count as duplicates of each other
+        [(None, "a", 5), (None, "b", 50), (None, None, 500), (1, "d", -1), (2, "d", 7), (2, "e", 8)],
+        [],
+    ],
+    ids=["null_keys", "empty"],
+)
+def test_fused_uniqueness_matches_eval_unique(spark, tmp_dir, rows):
+    """Uniqueness on the grouped column (twice) and on a second column: the
+    counts equal ``eval_unique``'s, and the row expectations report what
+    the same suite reports without any uniqueness expectation."""
+    frame = spark.createDataFrame(rows, "id INT, name STRING, score INT").localCheckpoint()
+    got = _results(spark, frame, _ROW_SUITE + [_UNIQUE_ID, _UNIQUE_ID, _UNIQUE_NAME], tmp_dir)
+    rows_only = _results(spark, frame, _ROW_SUITE, tmp_dir)
+    assert got[:2] == rows_only
+    assert got[2:] == [_unique_ref(frame, "id")] * 2 + [_unique_ref(frame, "name")]
+    if rows:
+        assert got[2][2:] == (False, 5, 6) and got[4][2:] == (False, 2, 6)
+    else:
+        assert [r[2:] for r in got] == [(True, 0, 0)] * 5
+
+
+def test_uniqueness_alone_matches_eval_unique(spark, df, tmp_dir):
+    assert _results(spark, df, [_UNIQUE_ID], tmp_dir) == [_unique_ref(df, "id")]
+
+
+def test_failure_policies_with_fused_uniqueness(spark, df):
+    # critical uniqueness still raises on its own
+    with pytest.raises(DQValidationsFailedException, match="Critical"):
+        run(spark, df, [], critical=[_UNIQUE_ID], fail_on_error=False)
+    # 1 of 2 fails (50%): 60 tolerates it, 40 does not
+    passing = ("expect_column_values_to_not_be_null", {"column": "id"})
+    assert run(spark, df, [passing, _UNIQUE_ID], max_percentage_failure=60.0).count() == 4
+    with pytest.raises(DQValidationsFailedException, match="max_percentage_failure"):
+        run(spark, df, [passing, _UNIQUE_ID], max_percentage_failure=40.0)
+
+
+def test_tag_source_data_with_fused_uniqueness(spark, df):
+    """Rows are tagged by the row expectations only; the failed uniqueness
+    shows in ``run_success``."""
+    out = run(
+        spark, df, _ROW_SUITE + [_UNIQUE_ID], tag_source_data=True, fail_on_error=False
+    )
+    tags = sorted(
+        (r["id"], r["score"], r["dq_validations"]["run_row_success"],
+         r["dq_validations"]["run_success"])
+        for r in out.collect()
+    )
+    assert tags == [(1, 5, True, False), (2, 50, True, False),
+                    (3, -1, False, False), (3, 500, False, False)]
+
+
+def _jobs(spark, fn):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dq-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_uniqueness_adds_no_pass_over_the_input(spark):
+    """Load-independent guard against a second pass for uniqueness, by
+    Spark job count. On input already partitioned by the key (what the
+    in-motion DQ sees after a CDC condense) the suite with uniqueness fires
+    exactly as many jobs as the suite without it. On input that is not,
+    the grouping adds its one shuffle stage: the suite then fires exactly
+    as many jobs as the uniqueness check on its own."""
+    from lakehouse_engine_spark.dq.expectations import eval_unique
+
+    base = spark.createDataFrame(
+        [(i % 40, f"n{i}", i) for i in range(200)], "id INT, name STRING, score INT"
+    ).localCheckpoint()
+
+    def suite(frame, *functions):
+        return lambda: run(spark, frame, functions, fail_on_error=False)
+
+    keyed = base.repartition(4, "id")
+    assert _jobs(spark, suite(keyed, *_ROW_SUITE, _UNIQUE_ID)) == _jobs(
+        spark, suite(keyed, *_ROW_SUITE)
+    )
+    assert _jobs(spark, suite(base, *_ROW_SUITE, _UNIQUE_ID)) == _jobs(
+        spark, lambda: eval_unique(base, "id")
+    )

@@ -573,3 +573,287 @@ def test_does_not_exist_failure_not_treated_as_contention(spark, tmp_dir):
     with pytest.raises(RuntimeError, match="non-contention") as ei:
         lk.__enter__()
     assert "bucket" in str(ei.value.__cause__)
+
+
+# ------------------------------------------------- single-pass parity
+
+
+def _merged_by_clause(target, df, opts, src_cols):
+    """Test-only oracle: the merge result built clause by clause — target-only,
+    updated, untouched and inserted rows as separate filters over the full
+    outer join, unioned by name. The engine's single filter + projection
+    must give the same rows and the same output schema."""
+    from pyspark.sql import functions as F
+
+    cols = target.columns
+    cur = target.select(F.struct(*target.columns).alias("current"))
+    new = df.select(F.struct(*df.columns).alias("new"))
+    joined = cur.join(new, on=F.expr(opts.merge_predicate), how="full_outer")
+    target_only = joined.filter(F.col("new").isNull()).select("current.*")
+    matched = joined.filter(F.col("current").isNotNull() & F.col("new").isNotNull())
+    source_only = joined.filter(F.col("current").isNull())
+    if opts.insert_only:
+        kept_matched = matched.select("current.*")
+    else:
+        if opts.delete_predicate:
+            matched = matched.filter(
+                ~F.coalesce(F.expr(opts.delete_predicate), F.lit(False))
+            )
+        upd_cond = F.expr(opts.update_predicate) if opts.update_predicate else F.lit(True)
+        to_update = matched.filter(upd_cond)
+        untouched = (
+            matched.filter(~F.coalesce(upd_cond, F.lit(False)))
+            if opts.update_predicate
+            else matched.limit(0)
+        )
+        if opts.update_column_set:
+            upd_cols = [
+                F.expr(opts.update_column_set[c]).alias(c)
+                if c in opts.update_column_set
+                else F.col(f"current.{c}").alias(c)
+                for c in cols
+            ]
+        else:
+            upd_cols = [
+                (F.col(f"new.{c}") if c.lower() in src_cols else F.col(f"current.{c}")).alias(c)
+                for c in cols
+            ]
+        kept_matched = to_update.select(*upd_cols).unionByName(untouched.select("current.*"))
+    if opts.insert_predicate:
+        source_only = source_only.filter(F.expr(opts.insert_predicate))
+    if opts.insert_column_set:
+        ins_cols = [
+            F.expr(opts.insert_column_set[c]).alias(c)
+            if c in opts.insert_column_set
+            else F.lit(None).cast(dict(target.dtypes)[c]).alias(c)
+            for c in cols
+        ]
+    else:
+        ins_cols = [F.col(f"new.{c}").alias(c) for c in cols]
+    return target_only.unionByName(kept_matched).unionByName(source_only.select(*ins_cols))
+
+
+_TARGET_ROWS = [(1, "a", 10), (2, "b", None), (3, "c", 30), (4, None, 40), (5, "e", 50)]
+# matched ids 1-4 (val higher, lower, NULL on either side), source-only 6-8
+_SOURCE_ROWS = [
+    (1, "A", 11), (2, "B", 20), (3, "C", None), (4, "D", 4),
+    (6, "F", 60), (7, None, 70), (8, "H", None),
+]
+# unset, true, false, NULL-valued, and per-row true/false/NULL
+_PREDICATES = [None, "true", "false", "CAST(NULL AS BOOLEAN)", "current.val < new.val"]
+_INSERT_PREDICATES = [None, "true", "false", "CAST(NULL AS BOOLEAN)", "new.val > 60"]
+
+
+def _frame(spark, rows, ddl="id INT, tag STRING, val INT"):
+    # checkpointed so each of the oracle's four scans reads JVM blocks
+    # instead of re-running the Python-side rows
+    return spark.createDataFrame(rows, ddl).localCheckpoint()
+
+
+@pytest.fixture(scope="module")
+def merge_inputs(spark):
+    return _frame(spark, _TARGET_ROWS), _frame(spark, _SOURCE_ROWS)
+
+
+def _assert_single_pass_matches_clause_oracle(spark, target, source, **opts):
+    """Same output schema (names and types) and same row multiset from the
+    single pass and the clause-by-clause oracle; returns the sorted rows."""
+    from lakehouse_engine_spark.core.definitions import MergeOptions
+    from lakehouse_engine_spark.io.merge_writer import _merged, _prepare_merge
+
+    opts = MergeOptions(**{"merge_predicate": "current.id = new.id", **opts})
+    tgt, src, src_cols = _prepare_merge(spark, target, source, opts)
+    got = _merged(tgt, src, opts, src_cols)
+    want = _merged_by_clause(tgt, src, opts, src_cols)
+
+    def _types(frame):
+        return [(f.name, f.dataType) for f in frame.schema.fields]
+
+    def _rows(frame):
+        return sorted((tuple(r) for r in frame.collect()), key=repr)
+
+    assert _types(got) == _types(want)
+    rows = _rows(got)
+    assert rows == _rows(want)
+    return rows
+
+
+@pytest.mark.parametrize("delete", _PREDICATES)
+@pytest.mark.parametrize("update", _PREDICATES)
+def test_single_pass_merge_matches_clause_oracle(spark, merge_inputs, delete, update):
+    """Each of the delete/update/insert predicates unset, constant true,
+    constant false, NULL-valued and true/false/NULL per row. Delete and
+    update both act on matched rows, so they run as a full product; the
+    insert predicate cycles through its values across that product."""
+    insert = _INSERT_PREDICATES[
+        (_PREDICATES.index(delete) + _PREDICATES.index(update)) % len(_INSERT_PREDICATES)
+    ]
+    _assert_single_pass_matches_clause_oracle(
+        spark,
+        *merge_inputs,
+        delete_predicate=delete,
+        update_predicate=update,
+        insert_predicate=insert,
+    )
+
+
+@pytest.mark.parametrize("insert", _INSERT_PREDICATES)
+def test_single_pass_insert_only_matches_clause_oracle(spark, merge_inputs, insert):
+    # the delete and update predicates must be ignored under insert_only
+    _assert_single_pass_matches_clause_oracle(
+        spark,
+        *merge_inputs,
+        insert_only=True,
+        insert_predicate=insert,
+        delete_predicate="true",
+        update_predicate="true",
+    )
+
+
+@pytest.mark.parametrize(
+    "opts",
+    [
+        {
+            "update_column_set": {
+                "val": "current.val + new.val",
+                "tag": "concat(current.tag, '+')",
+            },
+            "insert_column_set": {"id": "new.id", "tag": "'inserted'"},
+        },
+        # expressions whose types differ from the target columns (INT val
+        # gets a DOUBLE and a BIGINT): both forms widen to the same type
+        {
+            "update_predicate": "current.val < new.val",
+            "update_column_set": {"val": "new.val * 1.5"},
+            "insert_column_set": {"id": "new.id", "val": "CAST(new.val AS BIGINT) * 2"},
+        },
+        {"insert_only": True, "insert_column_set": {"id": "new.id + 100"}},
+    ],
+    ids=["column_sets", "column_sets_other_types", "insert_only_column_set"],
+)
+def test_single_pass_column_sets_match_clause_oracle(spark, merge_inputs, opts):
+    _assert_single_pass_matches_clause_oracle(spark, *merge_inputs, **opts)
+
+
+@pytest.fixture()
+def auto_merge(spark):
+    key = "spark.databricks.delta.schema.autoMerge.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    yield
+    if before is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, before)
+
+
+def test_single_pass_auto_merge_evolution_matches_clause_oracle(spark, merge_inputs, auto_merge):
+    rows = _assert_single_pass_matches_clause_oracle(
+        spark,
+        merge_inputs[0],
+        _frame(
+            spark,
+            [(1, "A", 11, "x1"), (3, "C", 31, "x3"), (9, "I", 90, "x9")],
+            "id INT, tag STRING, val INT, extra STRING",
+        ),
+        update_predicate="current.val < new.val",
+    )
+    # existing rows get NULL in the evolved column; inserts carry it
+    assert (2, "b", None, None) in rows and (9, "I", 90, "x9") in rows
+
+
+def test_single_pass_missing_source_column_keeps_current_value(spark, merge_inputs, auto_merge):
+    """A source without ``val``: updateAll keeps each matched row's current
+    ``val``; an insert leaves it NULL."""
+    rows = _assert_single_pass_matches_clause_oracle(
+        spark,
+        merge_inputs[0],
+        _frame(spark, [(1, "A"), (9, "I")], "id INT, tag STRING"),
+    )
+    assert (1, "A", 10) in rows and (9, "I", None) in rows
+
+
+def test_single_pass_two_source_rows_matching_one_target_row(spark, merge_inputs):
+    """Known divergence from Delta: Delta fails a merge in which several
+    source rows match one target row; the rewrite keeps one output row per
+    joined pair (the target row appears once per matching source row), in
+    the single pass exactly as in the clause-by-clause form."""
+    rows = _assert_single_pass_matches_clause_oracle(
+        spark,
+        merge_inputs[0],
+        _frame(spark, [(1, "first", 11), (1, "second", 12), (6, "F", 60)]),
+        update_predicate="new.val > 0",
+    )
+    assert [r for r in rows if r[0] == 1] == [(1, "first", 11), (1, "second", 12)]
+
+
+def _plan_nodes(frame, name):
+    import re
+
+    plan = frame._jdf.queryExecution().optimizedPlan().toString()
+    return sum(
+        1 for line in plan.splitlines() if re.match(rf"^[\s:|+\-]*{name}\b", line)
+    )
+
+
+def test_merge_result_is_one_join_and_no_union(spark, merge_inputs):
+    """Load-independent guard against a multi-pass rewrite: the merge result
+    with every clause set plans ONE join and no union."""
+    from lakehouse_engine_spark.core.definitions import MergeOptions
+    from lakehouse_engine_spark.io.merge_writer import _merged, _prepare_merge
+
+    opts = MergeOptions(
+        merge_predicate="current.id = new.id",
+        delete_predicate="current.tag = 'c'",
+        update_predicate="current.val < new.val",
+        insert_predicate="new.val > 60",
+    )
+    tgt, src, src_cols = _prepare_merge(spark, *merge_inputs, opts)
+    result = _merged(tgt, src, opts, src_cols)
+    assert _plan_nodes(result, "Join") == 1
+    assert _plan_nodes(result, "Union") == 0
+    # the guard can see the multi-pass shape it rejects
+    oracle = _merged_by_clause(tgt, src, opts, src_cols)
+    assert _plan_nodes(oracle, "Join") > 1 and _plan_nodes(oracle, "Union") > 0
+
+
+def test_table_merge_resolves_catalog_location_once(spark, tmp_dir, monkeypatch):
+    """One ``DESCRIBE FORMATTED`` per merge into an EXTERNAL table: the
+    location that anchors the writer lock also re-pins the overwrite."""
+    from lakehouse_engine_spark.io import merge_writer
+
+    path = os.path.join(tmp_dir, "ext_tgt")
+    spark.createDataFrame(
+        [(1, "keep", 100), (2, "update-me", 200)], "id INT, tag STRING, val INT"
+    ).write.parquet(path)
+    spark.sql("DROP TABLE IF EXISTS merge_once_ext")
+    spark.sql(
+        f"CREATE TABLE merge_once_ext (id INT, tag STRING, val INT) "
+        f"USING parquet LOCATION '{path}'"
+    )
+    calls = []
+    real = merge_writer._table_location
+
+    def counting(spark_, db_table):
+        calls.append(db_table)
+        return real(spark_, db_table)
+
+    monkeypatch.setattr(merge_writer, "_table_location", counting)
+    try:
+        merge_writer.merge(
+            spark,
+            spark.createDataFrame([(2, "updated", 222), (3, "new", 300)],
+                                  "id INT, tag STRING, val INT"),
+            merge_writer.MergeOptions(merge_predicate="current.id = new.id"),
+            db_table="merge_once_ext",
+            data_format="parquet",
+        )
+        assert calls == ["merge_once_ext"]
+        assert_df_equal(
+            spark.table("merge_once_ext"),
+            [(1, "keep", 100), (2, "updated", 222), (3, "new", 300)],
+        )
+        # still EXTERNAL at its path after the overwrite
+        assert merge_writer._table_location(spark, "merge_once_ext") is not None
+    finally:
+        spark.sql("DROP TABLE IF EXISTS merge_once_ext")
