@@ -42,6 +42,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from lakehouse_engine_spark.datapipes.driver_tier import bounded_collect
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
     probe_materialize,
@@ -168,16 +169,10 @@ def apply_merges_py(word: str, merges: List[Tuple[str, str]]) -> List[str]:
     return syms
 
 
-# Word tables at or under this many distinct rows train on the DRIVER:
-# the same canonical merge loop over the collected (symbol-string, count)
-# rows — bit-identical picks and merges (pair counts are exact integer
-# sums; the (count DESC, pair ASC) tie-break compares Python str the way
-# Spark compares UTF8String — both are Unicode code-point order for valid
-# strings) — while the distributed per-round jobs remain the >threshold
-# path. Why: canonical training at merges_per_round=1 scheduled ~2 Spark
-# jobs PER MERGE (pair-count + checkpoint), pure fixed overhead whenever
-# the vocabulary is bounded; 200k rows × ~60 B is ~12 MB driver-side, the
-# same cost class as the encoder's broadcast dictionary gate.
+# Driver tier budget of the BPE trainers: distinct word rows, ~12 MB at
+# the default (see driver_tier.py). The driver loop makes the same picks:
+# pair counts are exact integer sums, and the (count DESC, pair ASC)
+# tie-break compares Python str the way Spark compares UTF8String.
 DRIVER_TRAIN_THRESHOLD_ROWS = 200_000
 
 
@@ -250,7 +245,6 @@ def bpe_train(
     num_merges: int = 100,
     merges_per_round: int = 1,
     lowercase: bool = False,
-    driver_train_threshold_rows: int = DRIVER_TRAIN_THRESHOLD_ROWS,
 ) -> TransformerFn:
     """Learn a BPE merge table from the corpus; returns one row per merge:
     ``(rank, left, right, merged)`` in application order, ties broken by
@@ -276,10 +270,7 @@ def bpe_train(
             _word_counts(df.select(src.alias(text_col)), text_col)
             .select(_to_symbols(F.col("__w")).alias("__s"), "__cnt")
         )
-        return _train_merge_loop(
-            spark, words, num_merges, merges_per_round,
-            driver_train_threshold_rows,
-        )
+        return _train_merge_loop(spark, words, num_merges, merges_per_round)
 
     return _train
 
@@ -289,7 +280,6 @@ def _train_merge_loop(
     words: DataFrame,
     num_merges: int,
     merges_per_round: int,
-    driver_threshold_rows: int = DRIVER_TRAIN_THRESHOLD_ROWS,
 ) -> DataFrame:
     """The shared BPE merge loop over a materialized ``(__s symbol
     string, __cnt)`` word-frequency table — char-level (``bpe_train``,
@@ -297,24 +287,21 @@ def _train_merge_loop(
     marker) seed it differently but train identically. Takes OWNERSHIP
     of ``words``' cache handle (releases it every round and at exit).
 
-    Tables at or under ``driver_threshold_rows`` rows (probed with ONE
-    bounded collect over the already-materialized table) train on the
+    Tables within :data:`DRIVER_TRAIN_THRESHOLD_ROWS` train on the
     driver via :func:`_train_merge_loop_driver` — zero per-round Spark
-    jobs, identical merge table; ``driver_threshold_rows <= 0`` pins the
-    distributed path."""
-    if driver_threshold_rows > 0:
-        head = words.limit(driver_threshold_rows + 1).collect()
-        if len(head) <= driver_threshold_rows:
-            _release(words)
-            picked = _train_merge_loop_driver(
-                [(r["__s"], r["__cnt"]) for r in head],
-                num_merges,
-                merges_per_round,
-            )
-            return spark.createDataFrame(
-                [(i, a, b, a + b) for i, (a, b) in enumerate(picked)],
-                "rank INT, left STRING, right STRING, merged STRING",
-            )
+    jobs, identical merge table."""
+    head = bounded_collect(words, DRIVER_TRAIN_THRESHOLD_ROWS)
+    if head is not None:
+        _release(words)
+        picked = _train_merge_loop_driver(
+            [(r["__s"], r["__cnt"]) for r in head],
+            num_merges,
+            merges_per_round,
+        )
+        return spark.createDataFrame(
+            [(i, a, b, a + b) for i, (a, b) in enumerate(picked)],
+            "rank INT, left STRING, right STRING, merged STRING",
+        )
     merges: List[Tuple[str, str]] = []
     try:
         while len(merges) < num_merges:
@@ -445,6 +432,24 @@ _DRIVER_ENCODE_THRESHOLD_ROWS = 200_000
 _EMPTY_PIECES = "array<string>"
 
 
+def _probe_words(
+    distinct_words: DataFrame,
+    broadcast_dictionary: bool | None,
+    broadcast_threshold_rows: int,
+):
+    """The complete distinct-word list when the driver-encode tiers
+    (1/2) may run, else None. They are broadcast-class strategies, so
+    with an unpinned ``broadcast_dictionary`` they also respect the
+    caller's ``broadcast_threshold_rows`` (0 pins the shuffle join)."""
+    if broadcast_dictionary is False:
+        return None
+    cap = _DRIVER_ENCODE_THRESHOLD_ROWS
+    if broadcast_dictionary is None:
+        cap = min(cap, broadcast_threshold_rows)
+    rows = bounded_collect(distinct_words, cap)
+    return None if rows is None else [r["__w"] for r in rows]
+
+
 def _dictionary_encode(
     make_word_encoder,
     text_col: str,
@@ -497,18 +502,11 @@ def _dictionary_encode(
             F.explode("__words").alias("__w")
         ).distinct()
 
-        # bounded probe: complete dictionary iff the limit was not hit.
-        # Tiers 1/2 are broadcast-class strategies, so with an unpinned
-        # broadcast_dictionary they must also respect the caller's
-        # broadcast_threshold_rows budget (=0 pins the shuffle join).
-        head = None
-        probe_cap = _DRIVER_ENCODE_THRESHOLD_ROWS
-        if broadcast_dictionary is None:
-            probe_cap = min(probe_cap, broadcast_threshold_rows)
-        if broadcast_dictionary is not False and probe_cap > 0:
-            rows = distinct_words.limit(probe_cap + 1).collect()
-            if len(rows) <= probe_cap:
-                head = [(r["__w"], word_encoder(r["__w"])) for r in rows]
+        head = _probe_words(
+            distinct_words, broadcast_dictionary, broadcast_threshold_rows
+        )
+        if head is not None:
+            head = [(w, word_encoder(w)) for w in head]
 
         if head is not None and len(head) <= _LITERAL_MAP_THRESHOLD_ROWS:
             # tier 1: literal-map attach. try_element_at (not element_at)
@@ -605,7 +603,6 @@ def bpe_byte_train(
     merges_per_round: int = 1,
     lowercase: bool = False,
     pretokenizer: str = "whitespace",
-    driver_train_threshold_rows: int = DRIVER_TRAIN_THRESHOLD_ROWS,
 ) -> TransformerFn:
     """Learn a BYTE-level BPE merge table (the GPT-2 training scheme):
     pretokens (whitespace or the GPT-2 regex split) map to their UTF-8
@@ -650,10 +647,7 @@ def bpe_byte_train(
             .agg(F.count(F.lit(1)).alias("__cnt"))
         )
         words = _materialize(counts.select(_sym("__w").alias("__s"), "__cnt"))
-        return _train_merge_loop(
-            spark, words, num_merges, merges_per_round,
-            driver_train_threshold_rows,
-        )
+        return _train_merge_loop(spark, words, num_merges, merges_per_round)
 
     return _train
 
@@ -864,20 +858,17 @@ def unigram_encode(
         # words; scores ride a second parallel map) or broadcast as
         # plain rows: no probe-materialize, no count job, no
         # ArrowEvalPython inside a BroadcastExchange.
-        head = None
-        probe_cap = _DRIVER_ENCODE_THRESHOLD_ROWS
-        if broadcast_dictionary is None:
-            probe_cap = min(probe_cap, broadcast_threshold_rows)
-        if broadcast_dictionary is not False and probe_cap > 0:
-            hrows = distinct_words.limit(probe_cap + 1).collect()
-            if len(hrows) <= probe_cap:
-                head = []
-                for r in hrows:
-                    p, s = unigram_viterbi_py(
-                        r["__w"], vmap, max_piece, unk_token,
-                        unk_logp_s, max_word_len,
-                    )
-                    head.append((r["__w"], p, int(s)))
+        head = _probe_words(
+            distinct_words, broadcast_dictionary, broadcast_threshold_rows
+        )
+        if head is not None:
+            segs = [
+                unigram_viterbi_py(
+                    w, vmap, max_piece, unk_token, unk_logp_s, max_word_len
+                )
+                for w in head
+            ]
+            head = [(w, p, int(sc)) for w, (p, sc) in zip(head, segs)]
         if head is not None and len(head) <= _LITERAL_MAP_THRESHOLD_ROWS:
             # r14 tier 1, the _dictionary_encode literal-map rule: ≤256
             # distinct words → pieces and scores attach as literal

@@ -62,6 +62,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from lakehouse_engine_spark.datapipes.driver_tier import (
+    bounded_collect,
+    driver_safe_ids,
+)
 from lakehouse_engine_spark.datapipes.registry import register
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -79,14 +83,8 @@ def _floordiv(s: int, n: int) -> int:
     return -((-s + n - 1) // n)
 
 
-# Driver tier (r15, the bpe_train pattern): when the whole quantized
-# corpus fits under this element budget (rows x dim int64 grid points —
-# ~120 MB of collected Python rows at the default), the Lloyd loop runs
-# on the driver with ZERO per-iteration Spark jobs instead of
-# 1-2 collect jobs per round. The distributed loop is byte-for-byte
-# unchanged above the gate (the 100 TB path), and the gate probe is a
-# BOUNDED limit(n+1) collect, not a count over the corpus. Tests pin the
-# two tiers bit-identical (test_kmeans_driver_tier_parity).
+# Driver tier budget of the k-means trainers: rows x dim of the quantized
+# corpus, ~120 MB of collected rows at the default (see driver_tier.py).
 DRIVER_KMEANS_MAX_ELEMS = 4_000_000
 
 
@@ -102,28 +100,18 @@ def _py_id_hash(x) -> str:
 
 def _driver_collect(df: DataFrame, id_col: str, input_col: str,
                     quant_scale: int, dim: int):
-    """Bounded collect of the quantized (id, vector) table for the
-    driver tier. Returns the complete row list when the corpus fits
-    under :data:`DRIVER_KMEANS_MAX_ELEMS` and ids are driver-hashable
-    (int/str — matching the md5-cast replica); None otherwise (the
-    distributed loop takes over)."""
-    max_rows = max(DRIVER_KMEANS_MAX_ELEMS // max(dim, 1), 1)
-    if max_rows <= 0:
-        return None
-    rows = (
+    """The quantized ``(__km_id, __km_v)`` rows when the corpus fits
+    :data:`DRIVER_KMEANS_MAX_ELEMS` and every id is driver-hashable
+    (matching the md5-cast replica); None otherwise."""
+    rows = bounded_collect(
         df.select(
             F.col(id_col).alias("__km_id"),
             _quantize_expr(input_col, quant_scale).alias("__km_v"),
-        )
-        .limit(max_rows + 1)
-        .collect()
+        ),
+        DRIVER_KMEANS_MAX_ELEMS // dim,
     )
-    if len(rows) > max_rows:
+    if rows is None or not driver_safe_ids(rows, "__km_id", allow_null=False):
         return None
-    for r in rows:
-        i = r["__km_id"]
-        if isinstance(i, bool) or not isinstance(i, (int, str)):
-            return None  # exotic id type: keep the engine-side md5 path
     return rows
 
 
@@ -1070,16 +1058,14 @@ def knn_pq(
         # simply not selected (filter semantics)
         qsrc = df.filter(query_filter) if query_filter else df
         max_q = 100_000
-        qrows = (
+        qrows = bounded_collect(
             qsrc.select(
                 F.col(id_col).alias("__pq_id"),
                 _quantize_expr(embedding_col, quant_scale).alias("__pq_v"),
-            )
-            .filter(_usable_sample("__pq_v"))
-            .limit(max_q + 1)
-            .collect()
+            ).filter(_usable_sample("__pq_v")),
+            max_q,
         )
-        if len(qrows) > max_q:
+        if qrows is None:
             raise ValueError(
                 f"knn_pq: query_filter selected more than {max_q} rows — "
                 "queries and their LUTs ride the kernel closure; a "

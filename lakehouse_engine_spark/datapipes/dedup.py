@@ -25,6 +25,7 @@ the digest. The naive alternative (one md5 per shingle *per seed*) is
 
 from __future__ import annotations
 
+import logging
 from typing import Callable, List, Optional
 
 from pyspark import StorageLevel
@@ -35,6 +36,12 @@ from lakehouse_engine_spark.datapipes.colbuild import (
     dot_cols,
     dot_elements,
     element_aliases,
+)
+from lakehouse_engine_spark.datapipes.driver_tier import (
+    bounded_collect,
+    driver_safe_ids,
+    labels_frame,
+    min_labels,
 )
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
@@ -65,14 +72,12 @@ def _gen_ab(n: int) -> List[tuple]:
     return out
 
 
+_LOGGER = logging.getLogger(__name__)
+
 MINHASH_AB = _gen_ab(32)
 
-# Driver tier gate for dedup_connected_components (r15, the kmeans/bpe
-# pattern): when the (doc, bucket) edge table fits under this row
-# budget — probed with a bounded limit(n+1) collect, never a corpus
-# count — the min-label fixpoint runs as a driver union-find with zero
-# per-round Spark jobs. The distributed propagation loop is unchanged
-# above the gate (the 100 TB path). Tests pin both tiers row-identical.
+# Driver tier budget of dedup_connected_components: (doc, bucket) rows
+# (see driver_tier.py).
 DEDUP_CC_DRIVER_MAX_EDGES = 500_000
 
 
@@ -1013,9 +1018,12 @@ def dedup_connected_components(
     bucket, then min bucket-label per doc) shuffling only (id/bucket, long);
     rounds needed = the bucket-graph diameter of the largest cluster (tiny
     for near-dup clusters — they are bucket-cliques; converges in 1-3 rounds
-    in practice, bounded by ``max_iterations``). Convergence is detected by
-    an exact changed-label count over the materialized round result (type-
-    agnostic — ids may be strings), one scalar action per round;
+    in practice, bounded by ``max_iterations``; when the bound stops it
+    unconverged it logs a WARNING, since the converged labels — what the
+    driver tier's union-find returns below its budget — are canonical).
+    Convergence is detected by an exact changed-label count over the
+    materialized round result (type-agnostic — ids may be strings), one
+    scalar action per round;
     ``localCheckpoint`` truncates the growing lineage so round N's plan does
     not replay rounds 1..N-1.
 
@@ -1037,56 +1045,20 @@ def dedup_connected_components(
     def _cc(df: DataFrame) -> DataFrame:
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
         edges = _band_exploded(sig, bands, rows).persist(StorageLevel.MEMORY_AND_DISK)
-        # ----- driver tier (r15, the kmeans/bpe gate pattern): when the
-        # (doc, bucket) edge table fits under a bounded limit(n+1)
-        # collect, the min-label fixpoint is a driver union-find over
-        # the bipartite graph — the component minimum over DOC ids is
-        # exactly what the iterative propagation converges to — with
-        # zero per-round Spark jobs. The distributed loop below is
-        # unchanged above the gate or for exotic/NULL ids (Python
-        # ordering must replicate Spark's; a NULL id never equi-joins).
-        probe_rows = edges.limit(DEDUP_CC_DRIVER_MAX_EDGES + 1).collect()
-        driver_ok = len(probe_rows) <= DEDUP_CC_DRIVER_MAX_EDGES and all(
-            r["__id"] is not None
-            and r["__h"] is not None
-            and not isinstance(r["__id"], bool)
-            and isinstance(r["__id"], (int, str))
-            for r in probe_rows
-        )
-        if driver_ok:
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in probe_rows:
-                a, b = find(("d", r["__id"])), find(("b", r["__h"]))
-                if a != b:
-                    parent[b] = a
-            comp_min: dict = {}
-            doc_ids = {r["__id"] for r in probe_rows}
-            for i in doc_ids:
-                root = find(("d", i))
-                cur = comp_min.get(root)
-                if cur is None or i < cur:
-                    comp_min[root] = i
-            from pyspark.sql import types as T
-
-            idt = df.schema[id_col].dataType
-            labels = df.sparkSession.createDataFrame(
-                [(i, comp_min[find(("d", i))]) for i in doc_ids],
-                T.StructType(
-                    [
-                        T.StructField("__id", idt),
-                        T.StructField("__label", idt),
-                    ]
+        probe = bounded_collect(edges, DEDUP_CC_DRIVER_MAX_EDGES)
+        # a NULL id never equi-joins, so it stays on the distributed path
+        if probe is not None and driver_safe_ids(probe, "__id", allow_null=False):
+            # join each doc to the first doc of its bucket: the same
+            # closure as the doc-bucket graph, with doc ids only
+            first: dict = {}
+            labels = labels_frame(
+                df.sparkSession,
+                min_labels(
+                    (r["__id"], first.setdefault(r["__h"], r["__id"]))
+                    for r in probe
                 ),
-            )
+                edges.schema["__id"].dataType,
+            ).withColumnRenamed("__node", "__id")
             edges.unpersist()
             return _cc_emit(df, F.broadcast(labels))
         labels = iter_materialize(
@@ -1159,6 +1131,14 @@ def dedup_connected_components(
             )
             if changed == 0:
                 break
+        else:
+            # the driver tier's converged labels are canonical; a
+            # truncated closure here differs from them
+            _LOGGER.warning(
+                "dedup_connected_components: labels still changing after "
+                "max_iterations=%d rounds; components may be split",
+                max_iterations,
+            )
         edges.unpersist()
         return _cc_emit(df, labels)
 

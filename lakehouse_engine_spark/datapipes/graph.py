@@ -25,6 +25,12 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_engine_spark.datapipes.driver_tier import (
+    bounded_collect,
+    driver_safe_ids,
+    labels_frame,
+    min_labels,
+)
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
     release,
@@ -35,28 +41,9 @@ TransformerFn = Callable[[DataFrame], DataFrame]
 
 SCALE = 10**12
 
-# Driver tier gate (r15, the kmeans/bpe pattern): when the DISTINCT
-# canonical edge set fits under this row budget (probed with a bounded
-# limit(n+1) collect, never a corpus count), the iterative loop runs on
-# the driver — union-find for connected components, the exact int64
-# recurrence for PageRank — with ZERO per-round Spark jobs. The
-# distributed loops are byte-for-byte unchanged above the gate (the
-# 100 TB path); ids outside int/str fall back too (Python ordering must
-# replicate Spark's). Tests pin both tiers row-identical.
+# Driver tier budget (see driver_tier.py): distinct undirected edges for
+# connected components, edge rows for PageRank.
 GRAPH_DRIVER_MAX_EDGES = 200_000
-
-
-def _driver_safe_ids(rows, *cols) -> bool:
-    """True when every id in the collected rows is an int or str —
-    the types whose Python ordering/equality replicate Spark's."""
-    for r in rows:
-        for c in cols:
-            v = r[c]
-            if v is None:
-                continue
-            if isinstance(v, bool) or not isinstance(v, (int, str)):
-                return False
-    return True
 
 
 @register("graph_connected_components")
@@ -119,6 +106,15 @@ def connected_components(
             .union(raw.select(F.col("__b").alias("__node")))
             .distinct()
         )
+
+        def _emit(labels: DataFrame) -> DataFrame:
+            # roots and isolated nodes carry no label row: they label
+            # themselves
+            return nodes.join(labels, "__node", "left").select(
+                F.col("__node").alias("node"),
+                F.coalesce("__label", "__node").alias(output_col),
+            )
+
         def _stats(e: DataFrame):
             row = e.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -137,61 +133,17 @@ def connected_components(
             )
             .distinct()
         )
-        # ----- driver tier (r15): union-find when the edge set is small.
-        # The star rounds exist for graphs whose EDGE SET cannot sit on
-        # one machine; below the gate a driver union-find computes the
-        # identical min-of-component labels (pinned against the star
-        # rounds by test_connected_components_driver_tier_parity and by
-        # the union-find reference test) with zero per-round jobs. The
-        # bounded limit(n+1) collect doubles as the materialization the
-        # stats probe would have paid.
-        probe_rows = canonical.limit(GRAPH_DRIVER_MAX_EDGES + 1).collect()
-        if len(probe_rows) <= GRAPH_DRIVER_MAX_EDGES and _driver_safe_ids(
-            probe_rows, "__u", "__v"
-        ):
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in probe_rows:
-                ra, rb = find(r["__u"]), find(r["__v"])
-                if ra != rb:
-                    # union by the SMALLER root so every component root
-                    # is its minimum id (the star algorithm's label)
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            members = set(parent)
-            for r in probe_rows:
-                members.add(r["__u"])
-                members.add(r["__v"])
-            spark = df.sparkSession
-            from pyspark.sql import types as T
-
-            ndt = df.schema[src_col].dataType
-            labels = spark.createDataFrame(
-                [(m, find(m)) for m in members],
-                T.StructType(
-                    [
-                        T.StructField("__node", ndt),
-                        T.StructField("__comp", ndt),
-                    ]
-                ),
+        # materialize once: the driver-tier probe and, above the gate,
+        # the _stats probe both read these blocks
+        edges = iter_materialize(canonical, eager=False, corpus_sized=True)
+        rows = bounded_collect(edges, GRAPH_DRIVER_MAX_EDGES)
+        if rows is not None and driver_safe_ids(rows, "__u", "__v"):
+            labels = labels_frame(
+                df.sparkSession,
+                min_labels((r["__u"], r["__v"]) for r in rows),
+                canonical.schema["__u"].dataType,
             )
-            return nodes.join(F.broadcast(labels), "__node", "left").select(
-                F.col("__node").alias("node"),
-                F.coalesce("__comp", "__node").alias(output_col),
-            )
-        edges = iter_materialize(
-            canonical,
-            eager=False,  # the _stats probe below materializes it (r14)
-            corpus_sized=True,
-        )
+            return _emit(F.broadcast(labels))
         prev_n, prev_h = _stats(edges)
         converged = prev_n == 0
         node_w = Window.partitionBy("__u")
@@ -254,18 +206,38 @@ def connected_components(
             )
         # converged edge set is (child, root) stars rooted at each
         # component's minimum; roots + isolated nodes label themselves
-        labels = edges.select(
-            F.col("__u").alias("__node"), F.col("__v").alias("__comp")
-        )
-        return (
-            nodes.join(labels, "__node", "left")
-            .select(
-                F.col("__node").alias("node"),
-                F.coalesce("__comp", "__node").alias(output_col),
+        return _emit(
+            edges.select(
+                F.col("__u").alias("__node"), F.col("__v").alias("__label")
             )
         )
 
     return _cc
+
+
+def _driver_pagerank(rows, iterations: int) -> dict:
+    """The distributed loop's int64 recurrence over collected
+    ``(__src, __dst)`` rows: node -> scaled rank. SQL equi-join semantics
+    carry over: a NULL-src edge never matches the rank table, while a
+    NULL destination aggregates as a regular group."""
+    nodes = {r["__src"] for r in rows} | {r["__dst"] for r in rows}
+    if not nodes:
+        return {}
+    outdeg: dict = {}
+    for r in rows:
+        outdeg[r["__src"]] = outdeg.get(r["__src"], 0) + 1
+    base_s = (3 * SCALE) // (20 * len(nodes))
+    ranks = dict.fromkeys(nodes, SCALE // len(nodes))
+    for _ in range(iterations):
+        contrib: dict = {}
+        for r in rows:
+            s = r["__src"]
+            if s is not None:
+                d = r["__dst"]
+                c = (ranks[s] * 17) // (20 * outdeg[s])
+                contrib[d] = contrib.get(d, 0) + c
+        ranks = {m: base_s + contrib.get(m, 0) for m in nodes}
+    return ranks
 
 
 @register("graph_pagerank")
@@ -303,105 +275,39 @@ def pagerank(
 
     def _pr(df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
+        from pyspark.sql import types as T
 
         edges = df.select(
             F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
         )
-        # ----- driver tier (r15): the exact int64 recurrence locally
-        # when the edge list is small (bounded limit(n+1) collect; the
-        # kmeans/bpe gate pattern). Every quantity is the same integer
-        # arithmetic the distributed loop computes — order-free sums,
-        # floor division, dangling leak — so ranks are bit-identical
-        # (pinned by test_pagerank_driver_tier_parity and the existing
-        # pure-Python reference test). Zero per-iteration Spark jobs;
-        # the distributed loop is unchanged above the gate. SQL
-        # equi-join semantics are replicated exactly: a NULL-src edge
-        # never matches the rank table (contributes nothing), while
-        # NULL destinations aggregate as a regular group.
-        probe_rows = edges.limit(GRAPH_DRIVER_MAX_EDGES + 1).collect()
-        if len(probe_rows) <= GRAPH_DRIVER_MAX_EDGES and _driver_safe_ids(
-            probe_rows, "__src", "__dst"
-        ):
-            from pyspark.sql import types as T
+        endpoints = edges.select(F.col("__src").alias("__node")).union(
+            edges.select(F.col("__dst").alias("__node"))
+        )
+        ndt = endpoints.schema["__node"].dataType
 
-            ndt = df.schema[src_col].dataType
-            node_set = set()
-            outdeg_d: dict = {}
-            for r in probe_rows:
-                node_set.add(r["__src"])
-                node_set.add(r["__dst"])
-                outdeg_d[r["__src"]] = outdeg_d.get(r["__src"], 0) + 1
-            n = len(node_set)
-            if n == 0:
-                return df.sparkSession.createDataFrame(
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("node", ndt),
-                            T.StructField(f"{output_col}_s", T.LongType()),
-                            T.StructField(output_col, T.DoubleType()),
-                        ]
-                    ),
-                )
-            init_s = SCALE // n
-            base_s = (3 * SCALE) // (20 * n)
-            ranks_d = {m: init_s for m in node_set}
-            for _ in range(iterations):
-                contrib: dict = {}
-                for r in probe_rows:
-                    s = r["__src"]
-                    if s is None:
-                        continue  # NULL src: the rank equi-join drops it
-                    c = (ranks_d[s] * 17) // (20 * outdeg_d[s])
-                    d = r["__dst"]
-                    contrib[d] = contrib.get(d, 0) + c
-                ranks_d = {
-                    m: base_s + contrib.get(m, 0) for m in node_set
-                }
-            out = df.sparkSession.createDataFrame(
-                [(m, ranks_d[m]) for m in node_set],
-                T.StructType(
-                    [
-                        T.StructField("__node", ndt),
-                        T.StructField("__r", T.LongType()),
-                    ]
-                ),
-            )
-            return out.select(
+        def _emit(ranks: DataFrame) -> DataFrame:
+            return ranks.select(
                 F.col("__node").alias("node"),
-                F.col("__r").alias(f"{output_col}_s"),
-                (F.col("__r") / F.lit(float(SCALE))).alias(output_col),
+                F.col("__label").alias(f"{output_col}_s"),
+                (F.col("__label") / F.lit(float(SCALE))).alias(output_col),
             )
+
+        rows = bounded_collect(edges, GRAPH_DRIVER_MAX_EDGES)
+        if rows is not None and driver_safe_ids(rows, "__src", "__dst"):
+            ranks = _driver_pagerank(rows, iterations)
+            return _emit(labels_frame(df.sparkSession, ranks, ndt, T.LongType()))
         outdeg = edges.groupBy("__src").agg(
             F.count(F.lit(1)).cast("long").alias("__outdeg")
         )
         # annotate each edge with its source's out-degree ONCE — the
         # per-iteration join then only touches the rank table
         annotated = edges.join(outdeg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
-        nodes = (
-            edges.select(F.col("__src").alias("__node"))
-            .union(edges.select(F.col("__dst").alias("__node")))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        nodes = endpoints.distinct().persist(StorageLevel.MEMORY_AND_DISK)
         n = nodes.count()
         if n == 0:
-            # empty-graph schema must MATCH the populated path's: node
-            # keeps the caller's src column type (a long-typed empty
-            # frame breaks unions with string-keyed outputs — r14 review)
-            from pyspark.sql import types as T
-
-            ndt = df.schema[src_col].dataType
-            return df.sparkSession.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("node", ndt),
-                        T.StructField(f"{output_col}_s", T.LongType()),
-                        T.StructField(output_col, T.DoubleType()),
-                    ]
-                ),
-            )
+            annotated.unpersist()
+            nodes.unpersist()
+            return _emit(labels_frame(df.sparkSession, {}, ndt, T.LongType()))
         init_s = SCALE // n
         base_s = (3 * SCALE) // (20 * n)
         ranks = iter_materialize(
@@ -452,10 +358,6 @@ def pagerank(
             ranks = nxt
         annotated.unpersist()
         nodes.unpersist()
-        return ranks.select(
-            F.col("__node").alias("node"),
-            F.col("__r").alias(f"{output_col}_s"),
-            (F.col("__r") / F.lit(float(SCALE))).alias(output_col),
-        )
+        return _emit(ranks.withColumnRenamed("__r", "__label"))
 
     return _pr

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_engine_spark.datapipes.driver_tier import bounded_collect
 from lakehouse_engine_spark.datapipes.registry import register
 
 BUCKETS = 1_000_000
@@ -40,13 +41,13 @@ def _guarded_group_totals(df: DataFrame, group_col: str, tok: Column, op: str):
     version used — the limit rides the existing aggregate exchange
     instead of adding a single-partition window (~0.4 s of plan overhead
     per invocation at bench scale)."""
-    rows = (
-        df.groupBy(F.col(group_col).alias("__g"))
-        .agg(F.sum(tok.cast("long")).alias("__tot"))
-        .limit(MAX_MIX_GROUPS + 1)
-        .collect()
+    rows = bounded_collect(
+        df.groupBy(F.col(group_col).alias("__g")).agg(
+            F.sum(tok.cast("long")).alias("__tot")
+        ),
+        MAX_MIX_GROUPS,
     )
-    if len(rows) > MAX_MIX_GROUPS:
+    if rows is None:
         raise ValueError(
             f"{op}: more than {MAX_MIX_GROUPS} distinct {group_col} groups "
             "— the per-group threshold table is a driver control decision "

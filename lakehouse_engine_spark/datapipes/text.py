@@ -2533,6 +2533,7 @@ def dsir_score(
     # operator trees (same when/otherwise shape, same left-assoc
     # arithmetic) as one parser call each.
     def _toks_sql(src: str) -> str:
+        src = src.replace("`", "``")
         return f"filter(split(trim(lower(`{src}`)), '\\\\s+'), t -> t != '')"
 
     def _shingles_sql(src: str, n: int) -> str:

@@ -2041,40 +2041,6 @@ def test_bpe_train_matches_reference_trainer(spark):
         t("bpe_train", merges_per_round=0)
 
 
-def test_bpe_driver_path_equals_distributed_path(spark):
-    """The r14 driver-side fast path (word table collected under the
-    threshold, merge loop run in Python) must produce the bit-identical
-    merge table the distributed per-round loop produces — including on a
-    tie-rich corpus (equal pair counts decided by the pair-string
-    tie-break) and under batched merges_per_round>1 picking."""
-    text = ("ab ab ba ba cd cd dc dc abab baba low lower lowest "
-            "aa aa aa bb bb bb ab ba")
-    df = spark.createDataFrame([(1, text)], "doc_id LONG, text STRING")
-    for mpr in (1, 3):
-        fast = df.transform(
-            t("bpe_train", num_merges=10, merges_per_round=mpr)
-        )
-        slow = df.transform(
-            t("bpe_train", num_merges=10, merges_per_round=mpr,
-              driver_train_threshold_rows=0)  # pins the distributed path
-        )
-        got_fast = [tuple(r) for r in fast.orderBy("rank").collect()]
-        got_slow = [tuple(r) for r in slow.orderBy("rank").collect()]
-        assert got_fast == got_slow, f"mpr={mpr}"
-    # byte-level trainer: same dual-path pin (gpt2 pretokens exercise the
-    # space-carrying byte symbols)
-    fast_b = df.transform(
-        t("bpe_byte_train", num_merges=6, pretokenizer="gpt2")
-    )
-    slow_b = df.transform(
-        t("bpe_byte_train", num_merges=6, pretokenizer="gpt2",
-          driver_train_threshold_rows=0)
-    )
-    assert [tuple(r) for r in fast_b.orderBy("rank").collect()] == [
-        tuple(r) for r in slow_b.orderBy("rank").collect()
-    ]
-
-
 def test_bpe_batched_rounds_yield_valid_encoder(spark):
     """merges_per_round>1 batches non-interacting pairs: the merge table
     may reorder vs canonical, but encoding still reconstructs every word
@@ -2779,81 +2745,6 @@ def test_connected_components_round_set_identity():
             if got_old == E:
                 break
             E = got_old
-
-
-def test_graph_driver_tier_parity(spark, monkeypatch):
-    """The r15 driver tier (union-find CC / exact int64 PageRank under
-    the bounded edge-count gate) must be row-identical to the
-    distributed loops — hub, path and seeded random graphs, self-loops
-    included."""
-    import random
-
-    from lakehouse_engine_spark.datapipes import graph as G
-
-    rng = random.Random(5)
-    graphs = [
-        [(0, i) for i in range(1, 40)]
-        + [(i, i + 1) for i in range(30, 50)]
-        + [(50, 50), (7, 7)],
-        [(i, i + 1) for i in range(99)],
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(150)],
-    ]
-    for g in graphs:
-        df = spark.createDataFrame(g, "src LONG, dst LONG")
-        monkeypatch.setattr(G, "GRAPH_DRIVER_MAX_EDGES", 200_000)
-        cc_d = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_connected_components")).collect()
-        )
-        pr_d = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_pagerank", iterations=4)).collect()
-        )
-        monkeypatch.setattr(G, "GRAPH_DRIVER_MAX_EDGES", 0)
-        cc_s = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_connected_components")).collect()
-        )
-        pr_s = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_pagerank", iterations=4)).collect()
-        )
-        assert cc_d == cc_s
-        assert pr_d == pr_s
-
-
-def test_dedup_cc_driver_tier_parity(spark, monkeypatch):
-    """The r15 union-find driver tier of dedup_connected_components
-    must match the distributed propagation loop for every keep mode,
-    long AND string ids."""
-    from lakehouse_engine_spark.datapipes import dedup as DD
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"shared near duplicate body text number {i % 4} plus words")
-            for i in range(40)
-        ],
-        "doc_id LONG, text STRING",
-    )
-    docs_s = docs.selectExpr("concat('id_', doc_id) as doc_id", "text")
-    for frame in (docs, docs_s):
-        for kw in (
-            dict(keep="clusters"),
-            dict(keep="survivors"),
-            dict(keep="best", best_by="length(text)"),
-        ):
-            fn = t(
-                "dedup_connected_components",
-                num_hashes=12,
-                bands=4,
-                shingle_size=3,
-                **kw,
-            )
-            monkeypatch.setattr(DD, "DEDUP_CC_DRIVER_MAX_EDGES", 500_000)
-            driver = sorted(tuple(r) for r in frame.transform(fn).collect())
-            monkeypatch.setattr(DD, "DEDUP_CC_DRIVER_MAX_EDGES", 0)
-            dist = sorted(tuple(r) for r in frame.transform(fn).collect())
-            assert driver == dist
 
 
 def test_connected_components_hub_duplicate_edges(spark):
@@ -4316,6 +4207,13 @@ def test_dsir_score_matches_python_reference(spark):
     got = {r["doc_id"]: r["dsir_score"] for r in df.transform(
         t("text_dsir_score", target_df=tgt, num_buckets=B)).collect()}
     assert got == expect, (got, expect)
+    # a backtick in a column name is escaped, not a SQL parse error
+    tick = "te`xt"
+    got_tick = {r["doc_id"]: r["dsir_score"] for r in df.withColumnRenamed(
+        "text", tick).transform(t(
+            "text_dsir_score", target_df=tgt.withColumnRenamed("text", tick),
+            input_col=tick, target_text_col=tick, num_buckets=B)).collect()}
+    assert got_tick == expect
     # the alien-vocab doc scores strictly below both target-like docs
     assert got[3] < min(got[1], got[2])
     with pytest.raises(ValueError, match="num_buckets"):
@@ -4783,53 +4681,6 @@ def test_embedding_kmeans_edge_cases(spark):
         t("embedding_kmeans", k=0)
     with _pt.raises(ValueError):
         t("embedding_kmeans", iterations=-1)
-
-
-def test_kmeans_driver_tier_parity(spark, monkeypatch):
-    """The r15 driver tier (whole-corpus local Lloyd under the element
-    budget) must be bit-identical to the distributed loop — both
-    trainers, long AND string ids, with null vectors and null elements
-    routed per the usable-sample contract."""
-    import random as rnd
-
-    from lakehouse_engine_spark.datapipes import clustering as cl
-
-    rnd.seed(7)
-    rows = []
-    for i in range(300):
-        if i % 37 == 0:
-            v = None
-        elif i % 53 == 0:
-            v = [rnd.uniform(-1, 1) if j != 2 else None for j in range(6)]
-        else:
-            v = [rnd.uniform(-1, 1) for j in range(6)]
-        rows.append((i, v))
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    df_s = df.select(
-        F.concat(F.lit("id_"), F.col("vec_id")).alias("vec_id"), "embedding"
-    )
-
-    def run(frame, fn):
-        return sorted(
-            tuple(r) for r in frame.transform(fn).collect()
-        )
-
-    for frame in (df, df_s):
-        for fn in (
-            t("embedding_kmeans", k=5, iterations=2),
-            t(
-                "embedding_kmeans_hier",
-                k_coarse=3,
-                k_fine=3,
-                coarse_iterations=2,
-                fine_iterations=2,
-            ),
-        ):
-            monkeypatch.setattr(cl, "DRIVER_KMEANS_MAX_ELEMS", 4_000_000)
-            driver = run(frame, fn)
-            monkeypatch.setattr(cl, "DRIVER_KMEANS_MAX_ELEMS", 0)
-            distributed = run(frame, fn)
-            assert driver == distributed
 
 
 def test_cluster_stats(spark):
