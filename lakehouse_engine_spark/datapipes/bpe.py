@@ -21,16 +21,18 @@ table, not the corpus:
   top pairs interact).
 * ``localCheckpoint`` truncates the per-round lineage the way the
   connected-components loop does (dedup.py); under
-  ``spark.dynamicAllocation.enabled`` the ``_materialize`` helper
-  instead persists (recomputable) behind a plan-truncating LogicalRDD
-  wrapper with an explicit ``_release`` per round, and one-shot size
-  probes (``_probe_materialize``) skip materialization entirely — so
-  executor scale-in cannot strand non-recomputable checkpoint blocks
-  and long-lived sessions cannot leak cache entries.
-* ``bpe_encode`` never tokenizes the corpus in Python: it encodes the
-  DISTINCT words (small table) with the merge list in an Arrow-batched
-  pandas pass, then broadcast-joins the word→pieces dictionary back onto
-  the corpus and reassembles per document with JVM array functions.
+  ``spark.dynamicAllocation.enabled`` ``iter_materialize`` instead
+  persists (recomputable) behind a plan-truncating LogicalRDD wrapper
+  with an explicit ``release`` per round (materialize.py) — so executor
+  scale-in cannot strand non-recomputable checkpoint blocks and
+  long-lived sessions cannot leak cache entries.
+* The four encoders (``bpe_encode``, ``bpe_byte_encode``,
+  ``wordpiece_encode``, ``unigram_encode``) never tokenize the corpus in
+  Python: they share one plan, :func:`_dictionary_encode`, which encodes
+  the DISTINCT words only and attaches the word→pieces dictionary by its
+  size — a literal map, driver-encoded broadcast rows, or a pandas encode
+  joined back by broadcast or, above ``_BROADCAST_THRESHOLD_ROWS`` words,
+  by shuffle — then reassembles per document with JVM array functions.
 """
 
 from __future__ import annotations
@@ -49,17 +51,8 @@ from lakehouse_engine_spark.datapipes.materialize import (
     release,
 )
 
-from lakehouse_engine_spark.datapipes.registry import register, register_contextual
+from lakehouse_engine_spark.datapipes.registry import register, register_with
 from lakehouse_engine_spark.datapipes.text import tokens
-
-
-# Materialization policy shared with the other iterative loops (CC,
-# PageRank) — see datapipes/materialize.py for the full
-# static/checkpoint-dir/persist-wrapper decision table and the
-# release protocol.
-_materialize = iter_materialize
-_release = release
-_probe_materialize = probe_materialize
 
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -266,7 +259,7 @@ def bpe_train(
     def _train(df: DataFrame) -> DataFrame:
         spark = df.sparkSession
         src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-        words = _materialize(
+        words = iter_materialize(
             _word_counts(df.select(src.alias(text_col)), text_col)
             .select(_to_symbols(F.col("__w")).alias("__s"), "__cnt")
         )
@@ -292,7 +285,7 @@ def _train_merge_loop(
     jobs, identical merge table."""
     head = bounded_collect(words, DRIVER_TRAIN_THRESHOLD_ROWS)
     if head is not None:
-        _release(words)
+        release(words)
         picked = _train_merge_loop_driver(
             [(r["__s"], r["__cnt"]) for r in head],
             num_merges,
@@ -355,14 +348,14 @@ def _train_merge_loop(
             # lazy truncation: the NEXT round's pair-count job (or the
             # final release) materializes the checkpoint — one job per
             # round instead of two (30-round canonical training halves)
-            nxt = _materialize(
+            nxt = iter_materialize(
                 words.select(col.alias("__s"), "__cnt"), eager=False
             )
-            _release(words)  # previous round's cache handle, if any
+            release(words)  # previous round's cache handle, if any
             words = nxt
             merges.extend(picked)
     finally:
-        _release(words)  # the merge list lives on the driver now
+        release(words)  # the merge list lives on the driver now
     return spark.createDataFrame(
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "rank INT, left STRING, right STRING, merged STRING",
@@ -376,8 +369,6 @@ def bpe_encode(
     id_col: str = "doc_id",
     output_col: str = "bpe_tokens",
     lowercase: bool = False,
-    broadcast_dictionary: bool | None = None,
-    broadcast_threshold_rows: int = 2_000_000,
     pretokenizer: str = "whitespace",
 ) -> TransformerFn:
     """Tokenize the corpus with a trained merge table: adds ``output_col``
@@ -387,19 +378,13 @@ def bpe_encode(
     which must be UNIQUE per row (duplicate ids would interleave their
     token streams); token-less documents survive with an empty array.
 
-    Corpus cost: one distinct-word pass, a pandas encode over the
-    DISTINCT words only, a join back, and JVM-side per-document
-    reassembly — Python never sees corpus-scale data.
-
-    Broadcast gate: the dictionary is *distinct word types*, which on
-    clean prose is vocabulary-sized but on 100 TB of web text (typos,
-    URLs, code) can reach 10⁸–10⁹ rows × piece arrays — force-broadcasting
-    that OOMs executors. Default (``broadcast_dictionary=None``) counts
-    the distinct-word table (one aggregate over the already-persisted
-    distinct — no extra corpus pass) and broadcasts only under
-    ``broadcast_threshold_rows``; above it the encode join runs as a
-    regular shuffle join on ``__w``. Pass ``True``/``False`` to skip the
-    count and pin the strategy.
+    Corpus cost: one distinct-word pass, an encode over the DISTINCT
+    words only, the size-tiered dictionary attach of
+    :func:`_dictionary_encode`, and JVM-side per-document reassembly —
+    Python never sees corpus-scale data. The dictionary is *distinct
+    word types*, which on 100 TB of web text (typos, URLs, code) can
+    reach 10⁸–10⁹ rows, so above ``_BROADCAST_THRESHOLD_ROWS`` words the
+    encode join runs as a shuffle join on ``__w`` instead of a broadcast.
     """
 
     def _make():
@@ -409,10 +394,11 @@ def bpe_encode(
         return lambda w: apply_merges_py(w, mlist)
 
     return _dictionary_encode(
-        _make, text_col, id_col, output_col,
-        lowercase, broadcast_dictionary, broadcast_threshold_rows,
-        pretokenizer,
+        _make, text_col, id_col, output_col, lowercase, pretokenizer
     )
+
+
+register_with("bpe_encode_with", bpe_encode, "merges_id", "merges")
 
 
 # Dictionary-attach tier bounds (rows of DISTINCT words). Under
@@ -423,31 +409,14 @@ def bpe_encode(
 # shuffle cost ~1.5 s/query of pure overhead at sf0.1). Under
 # ``_DRIVER_ENCODE_THRESHOLD_ROWS`` the pieces are computed on the DRIVER
 # (the merge list already lives there) and broadcast as plain rows — no
-# ArrowEvalPython inside a BroadcastExchange, no persist, no count job.
-# Both bounds are dictionary-sized gates, corpus-size independent; real
-# web-scale vocabularies (10⁶–10⁹ words) fall through to the distributed
-# pandas encode + size-gated join exactly as before.
+# ArrowEvalPython inside a BroadcastExchange, no probe materialization,
+# no count job. Under ``_BROADCAST_THRESHOLD_ROWS`` the pandas-encoded
+# dictionary is broadcast; above it the join shuffles on ``__w``. All
+# three are dictionary-sized gates, corpus-size independent.
 _LITERAL_MAP_THRESHOLD_ROWS = 256
 _DRIVER_ENCODE_THRESHOLD_ROWS = 200_000
-_EMPTY_PIECES = "array<string>"
-
-
-def _probe_words(
-    distinct_words: DataFrame,
-    broadcast_dictionary: bool | None,
-    broadcast_threshold_rows: int,
-):
-    """The complete distinct-word list when the driver-encode tiers
-    (1/2) may run, else None. They are broadcast-class strategies, so
-    with an unpinned ``broadcast_dictionary`` they also respect the
-    caller's ``broadcast_threshold_rows`` (0 pins the shuffle join)."""
-    if broadcast_dictionary is False:
-        return None
-    cap = _DRIVER_ENCODE_THRESHOLD_ROWS
-    if broadcast_dictionary is None:
-        cap = min(cap, broadcast_threshold_rows)
-    rows = bounded_collect(distinct_words, cap)
-    return None if rows is None else [r["__w"] for r in rows]
+_BROADCAST_THRESHOLD_ROWS = 2_000_000
+_PIECES = "array<string>"
 
 
 def _dictionary_encode(
@@ -456,45 +425,56 @@ def _dictionary_encode(
     id_col: str,
     output_col: str,
     lowercase: bool,
-    broadcast_dictionary: bool | None,
-    broadcast_threshold_rows: int,
     pretokenizer: str = "whitespace",
+    scored: bool = False,
 ) -> TransformerFn:
-    """The shared distinct-word dictionary-encode plan behind
-    :func:`bpe_encode` (word-level, ``apply_merges_py``),
-    :func:`bpe_byte_encode` (byte-level, ``apply_merges_byte_py``) and
-    :func:`wordpiece_encode` (greedy longest-match): one distinct-word
-    pass, pieces computed over DISTINCT words only, the size-tiered
-    dictionary attach, JVM per-document reassembly. ONE copy so a fix
-    to the plan (tier gates, reassembly order) can never drift between
-    the encoders. ``make_word_encoder`` is called once per application
-    (collecting the merge table / vocabulary to the driver) and returns
-    a ``word -> [pieces]`` callable that also rides the pandas closure
-    in the distributed tiers.
+    """The distinct-word dictionary-encode plan behind the four encoders:
+    :func:`bpe_encode` (``apply_merges_py``), :func:`bpe_byte_encode`
+    (``apply_merges_byte_py``), :func:`wordpiece_encode` (greedy longest
+    match) and :func:`unigram_encode` (Viterbi). One distinct-word pass,
+    pieces computed over DISTINCT words only, the size-tiered dictionary
+    attach, JVM per-document reassembly. ``make_word_encoder`` is called
+    once per application (collecting the merge table / vocabulary to the
+    driver) and returns ``word -> pieces``, or ``word -> (pieces,
+    score)`` when ``scored``; a scored plan carries the word score as
+    ``__score`` and adds ``<output_col>_score_s``, its per-document sum.
+    The encoder also rides the pandas closure in tiers 3/4.
 
-    Attach tiers by dictionary size (``broadcast_dictionary=False`` pins
-    tier 4; ``True`` pins a broadcast but still picks the cheapest one):
+    Attach tiers by distinct-word count:
 
-    1. ≤ ``_LITERAL_MAP_THRESHOLD_ROWS``: literal-map projection —
-       no join, no reassembly shuffle, no Python stage.
+    1. ≤ ``_LITERAL_MAP_THRESHOLD_ROWS``: literal-map projection (scores
+       in a second map, summed by ``aggregate``) — no join, no
+       reassembly shuffle, no Python stage.
     2. ≤ ``_DRIVER_ENCODE_THRESHOLD_ROWS``: driver-encoded rows,
        broadcast join + per-doc reassembly.
-    3. ≤ ``broadcast_threshold_rows``: distributed pandas encode,
-       broadcast join (the pre-r14 default path).
+    3. ≤ ``_BROADCAST_THRESHOLD_ROWS``: distributed pandas encode,
+       broadcast join.
     4. else: distributed pandas encode, shuffle join on ``__w``.
+
+    Tiers 3/4 size the dictionary with one count over the
+    ``probe_materialize``d distinct words, which leaves no cache entry
+    behind. Every tier yields the same rows.
     """
+    names = ["__pieces", "__score"] if scored else ["__pieces"]
+    fields = "__pieces array<string>" + (", __score long" if scored else "")
+
+    def _finish(frame: DataFrame, pieces, score) -> DataFrame:
+        out = frame.withColumn(
+            output_col, F.coalesce(pieces, F.array().cast(_PIECES))
+        ).withColumn(f"{output_col}_n", F.size(output_col).cast("int"))
+        if scored:
+            out = out.withColumn(
+                f"{output_col}_score_s",
+                F.coalesce(score, F.lit(0)).cast("long"),
+            )
+        return out.drop("__words", "__assembled", "__sc")
 
     def _encode(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-        from pyspark.sql import types as T
-
-        spark = df.sparkSession
         word_encoder = make_word_encoder()
 
-        def _enc_fn(words):
-            return words.map(word_encoder)
-
-        _enc = F.pandas_udf(_enc_fn, "array<string>")
+        def record(w):
+            enc = word_encoder(w)
+            return (w, *enc) if scored else (w, enc)
 
         src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
         with_words = df.withColumn("__words", _pretokens(src, pretokenizer))
@@ -502,73 +482,70 @@ def _dictionary_encode(
             F.explode("__words").alias("__w")
         ).distinct()
 
-        head = _probe_words(
-            distinct_words, broadcast_dictionary, broadcast_threshold_rows
-        )
+        head = bounded_collect(distinct_words, _DRIVER_ENCODE_THRESHOLD_ROWS)
         if head is not None:
-            head = [(w, word_encoder(w)) for w in head]
+            head = [record(r["__w"]) for r in head]
 
         if head is not None and len(head) <= _LITERAL_MAP_THRESHOLD_ROWS:
             # tier 1: literal-map attach. try_element_at (not element_at)
             # so ANSI mode cannot raise on a key the map must contain by
             # construction; pretokenizers on NULL text yield a NULL array,
-            # which flatten propagates and the coalesce restores to [].
+            # which flatten/aggregate propagate and _finish restores to
+            # []/0. An empty corpus has no words anywhere.
+            pieces = score = F.lit(None)
             if head:
-                entries = []
-                for w, pieces in head:
-                    entries.append(F.lit(w))
-                    entries.append(
-                        F.array(*[F.lit(p) for p in pieces])
-                        if pieces
-                        else F.array().cast(_EMPTY_PIECES)
-                    )
-                lookup = F.create_map(*entries)
-                assembled = F.flatten(
+                lookup = F.create_map(
+                    *[
+                        c
+                        for r in head
+                        for c in (
+                            F.lit(r[0]),
+                            F.array(*[F.lit(p) for p in r[1]]).cast(_PIECES),
+                        )
+                    ]
+                )
+                pieces = F.flatten(
                     F.transform(
                         F.col("__words"), lambda w: F.try_element_at(lookup, w)
                     )
                 )
-            else:  # empty corpus: no words anywhere
-                assembled = F.lit(None).cast(_EMPTY_PIECES)
-            return (
-                with_words.withColumn(
-                    output_col,
-                    F.coalesce(assembled, F.array().cast(_EMPTY_PIECES)),
-                )
-                .drop("__words")
-                .withColumn(f"{output_col}_n", F.size(output_col).cast("int"))
-            )
+                if scored:
+                    scores = F.create_map(
+                        *[
+                            c
+                            for r in head
+                            for c in (F.lit(r[0]), F.lit(r[2]).cast("long"))
+                        ]
+                    )
+                    score = F.aggregate(
+                        F.col("__words"),
+                        F.lit(0).cast("long"),
+                        lambda acc, w: acc + F.try_element_at(scores, w),
+                    )
+            return _finish(with_words, pieces, score)
 
         if head is not None:
             # tier 2: driver-encoded dictionary rows, broadcast join
             dictionary = F.broadcast(
-                spark.createDataFrame(
-                    head,
-                    T.StructType(
-                        [
-                            T.StructField("__w", T.StringType()),
-                            T.StructField(
-                                "__pieces", T.ArrayType(T.StringType())
-                            ),
-                        ]
-                    ),
-                )
+                df.sparkSession.createDataFrame(head, "__w string, " + fields)
             )
         else:
-            # tiers 3/4: distributed pandas encode over the persisted
-            # distinct words (reused by the size probe, so the pandas
-            # encode runs exactly once and the count never invokes Python)
-            cached = distinct_words.persist(StorageLevel.MEMORY_AND_DISK)
-            do_broadcast = broadcast_dictionary
-            if do_broadcast is None:
-                do_broadcast = cached.count() <= broadcast_threshold_rows
-            dictionary = cached.withColumn("__pieces", _enc(F.col("__w")))
-            if do_broadcast:
+            # tiers 3/4: distributed pandas encode over DISTINCT words
+            def _enc_fn(words):
+                return pd.DataFrame(
+                    [record(w)[1:] for w in words], columns=names
+                )
+
+            enc = F.pandas_udf(_enc_fn, f"struct<{fields}>")(F.col("__w"))
+            words = probe_materialize(distinct_words)
+            dictionary = words.select("__w", *[enc[n].alias(n) for n in names])
+            if words.count() <= _BROADCAST_THRESHOLD_ROWS:
                 dictionary = F.broadcast(dictionary)
         exploded = with_words.select(
             F.col(id_col).alias("__id"),
             F.posexplode("__words").alias("__p", "__w"),
         )
+        sums = [F.sum("__score").alias("__sc")] if scored else []
         assembled = (
             exploded.join(dictionary, "__w")
             .groupBy("__id")
@@ -578,20 +555,13 @@ def _dictionary_encode(
                         F.array_sort(F.collect_list(F.struct("__p", "__pieces"))),
                         lambda s: s["__pieces"],
                     )
-                ).alias("__assembled")
+                ).alias("__assembled"),
+                *sums,
             )
         )
         # left join back so token-less docs keep a row (empty array)
-        return (
-            df.join(assembled, df[id_col] == assembled["__id"], "left")
-            .drop("__id")
-            .withColumn(
-                output_col,
-                F.coalesce("__assembled", F.array().cast("array<string>")),
-            )
-            .drop("__assembled")
-            .withColumn(f"{output_col}_n", F.size(output_col).cast("int"))
-        )
+        joined = df.join(assembled, df[id_col] == assembled["__id"], "left")
+        return _finish(joined.drop("__id"), F.col("__assembled"), F.col("__sc"))
 
     return _encode
 
@@ -646,23 +616,10 @@ def bpe_byte_train(
             .groupBy("__w")
             .agg(F.count(F.lit(1)).alias("__cnt"))
         )
-        words = _materialize(counts.select(_sym("__w").alias("__s"), "__cnt"))
+        words = iter_materialize(counts.select(_sym("__w").alias("__s"), "__cnt"))
         return _train_merge_loop(spark, words, num_merges, merges_per_round)
 
     return _train
-
-
-@register_contextual("bpe_encode_with")
-def bpe_encode_with(data: dict, merges_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`bpe_encode`: resolve the merge table from an
-    upstream spec_id (e.g. a ``bpe_train`` output)."""
-
-    def _enc(df: DataFrame) -> DataFrame:
-        if merges_id not in data:
-            raise ValueError(f"bpe_encode_with: unknown spec_id {merges_id!r}")
-        return bpe_encode(merges=data[merges_id], **args)(df)
-
-    return _enc
 
 
 def wordpiece_py(
@@ -709,8 +666,6 @@ def wordpiece_encode(
     unk_token: str = "[UNK]",
     max_word_len: int = 100,
     lowercase: bool = False,
-    broadcast_dictionary: bool | None = None,
-    broadcast_threshold_rows: int = 2_000_000,
 ) -> TransformerFn:
     """Tokenize the corpus with a fixed WordPiece vocabulary (the BERT
     family's greedy longest-match-first subword scheme — the other
@@ -721,11 +676,8 @@ def wordpiece_encode(
     un-segmentable or over-long words become ``unk_token``. ``id_col``
     must be unique per row (the ``bpe_encode`` reassembly contract).
 
-    Same production plan as ``bpe_encode``: one distinct-word pass, a
-    pandas encode over DISTINCT words only (the vocab set rides the
-    closure — vocabulary-sized), a size-gated dictionary join
-    (broadcast under ``broadcast_threshold_rows`` distinct words, else
-    a shuffle join), and JVM-side per-document reassembly — Python
+    Same production plan as ``bpe_encode`` (:func:`_dictionary_encode`;
+    the vocab set rides the encoder closure — vocabulary-sized): Python
     never sees corpus-scale data. The greedy scan is a pure
     per-position function, so a SQL oracle replays it exactly
     (longest-match table + deterministic walk).
@@ -738,13 +690,10 @@ def wordpiece_encode(
             w, vset, cont_prefix, unk_token, max_word_len
         )
 
-    # r14: the shared size-tiered plan (literal-map projection /
-    # driver-encoded broadcast rows / distributed pandas + gated join) —
-    # one copy with the BPE encoders instead of a parallel body
-    return _dictionary_encode(
-        _make, text_col, id_col, output_col,
-        lowercase, broadcast_dictionary, broadcast_threshold_rows,
-    )
+    return _dictionary_encode(_make, text_col, id_col, output_col, lowercase)
+
+
+register_with("wordpiece_encode_with", wordpiece_encode, "vocab_id", "vocab")
 
 
 SEP = "\x01"  # path separator: sorts below every token character, so
@@ -801,8 +750,6 @@ def unigram_encode(
     unk_logp_s: int = -100_000,
     max_word_len: int = 100,
     lowercase: bool = False,
-    broadcast_dictionary: bool | None = None,
-    broadcast_threshold_rows: int = 2_000_000,
 ) -> TransformerFn:
     """Tokenize the corpus with a fixed unigram language model — the
     SentencePiece scheme (Kudo 2018) used by the LLaMA/T5 tokenizer
@@ -816,16 +763,16 @@ def unigram_encode(
     by exhaustive path enumeration on bounded words. Adds ``output_col``
     (pieces, word order preserved), ``<output_col>_n``, and
     ``<output_col>_score_s`` (exact summed piece scores; UNK words
-    contribute ``unk_logp_s``).
+    contribute ``unk_logp_s``); token-less and NULL-text documents get
+    ``[]``/0/0.
 
-    Same production plan as the other two encoders: one distinct-word
-    pass, a pandas DP over DISTINCT words only (the vocab dict rides the
-    closure), a size-gated dictionary join, JVM-side per-document
-    reassembly — Python never touches corpus-scale data, and the DP is
-    O(len · max_piece_len) per distinct word.
+    Same production plan as the other encoders (:func:`_dictionary_encode`,
+    scored; the vocab dict rides the encoder closure) — Python never
+    touches corpus-scale data, and the DP is O(len · max_piece_len) per
+    distinct word.
     """
 
-    def _encode(df: DataFrame) -> DataFrame:
+    def _make():
         cols = vocab.columns
         rows = vocab.select(cols[0], cols[1]).collect()
         vmap = {r[0]: int(r[1]) for r in rows}
@@ -833,196 +780,20 @@ def unigram_encode(
         # wordpiece_encode degenerate contract, not an error)
         max_piece = max((len(p) for p in vmap), default=1)
 
-        def _enc_fn(words):
-            recs = [
-                unigram_viterbi_py(
-                    w, vmap, max_piece, unk_token, unk_logp_s, max_word_len
-                )
-                for w in words
-            ]
-            return pd.DataFrame(
-                {"p": [r[0] for r in recs], "s": [r[1] for r in recs]}
+        def _viterbi(w):
+            pieces, score = unigram_viterbi_py(
+                w, vmap, max_piece, unk_token, unk_logp_s, max_word_len
             )
+            return pieces, int(score)
 
-        _enc = F.pandas_udf(_enc_fn, "struct<p: array<string>, s: long>")
+        return _viterbi
 
-        src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-        with_words = df.withColumn("__words", tokens(src))
-        distinct_words = with_words.select(
-            F.explode("__words").alias("__w")
-        ).distinct()
-        # r14 driver-encode tiers (the _dictionary_encode rules, same
-        # thresholds): vocab-bounded distinct words are Viterbi-
-        # segmented on the driver — the unigram LM dict already lives
-        # there — then attached via the literal-map projection (≤256
-        # words; scores ride a second parallel map) or broadcast as
-        # plain rows: no probe-materialize, no count job, no
-        # ArrowEvalPython inside a BroadcastExchange.
-        head = _probe_words(
-            distinct_words, broadcast_dictionary, broadcast_threshold_rows
-        )
-        if head is not None:
-            segs = [
-                unigram_viterbi_py(
-                    w, vmap, max_piece, unk_token, unk_logp_s, max_word_len
-                )
-                for w in head
-            ]
-            head = [(w, p, int(sc)) for w, (p, sc) in zip(head, segs)]
-        if head is not None and len(head) <= _LITERAL_MAP_THRESHOLD_ROWS:
-            # r14 tier 1, the _dictionary_encode literal-map rule: ≤256
-            # distinct words → pieces and scores attach as literal
-            # create_map lookups inside a pure projection — no dictionary
-            # join, no per-doc reassembly shuffle, no Python stage. The
-            # scored output rides as TWO parallel maps (word→pieces,
-            # word→score) so each lookup stays a plain ANSI-safe
-            # try_element_at; both maps contain every distinct word by
-            # construction. NULL-text docs: the tokenizer yields a NULL
-            # array, flatten/aggregate propagate it, and the coalesces
-            # restore the join path's []/0.
-            if head:
-                p_entries: list = []
-                s_entries: list = []
-                for w, pieces, score in head:
-                    p_entries.append(F.lit(w))
-                    p_entries.append(
-                        F.array(*[F.lit(p) for p in pieces])
-                        if pieces
-                        else F.array().cast("array<string>")
-                    )
-                    s_entries.append(F.lit(w))
-                    s_entries.append(F.lit(score).cast("long"))
-                p_lookup = F.create_map(*p_entries)
-                s_lookup = F.create_map(*s_entries)
-                assembled = F.flatten(
-                    F.transform(
-                        F.col("__words"),
-                        lambda w: F.try_element_at(p_lookup, w),
-                    )
-                )
-                score_col = F.aggregate(
-                    F.col("__words"),
-                    F.lit(0).cast("long"),
-                    lambda acc, w: acc + F.try_element_at(s_lookup, w),
-                )
-            else:  # empty corpus: no words anywhere
-                assembled = F.lit(None).cast("array<string>")
-                score_col = F.lit(None).cast("long")
-            return (
-                with_words.withColumn(
-                    output_col,
-                    F.coalesce(
-                        assembled, F.array().cast("array<string>")
-                    ),
-                )
-                .withColumn(
-                    f"{output_col}_n", F.size(output_col).cast("int")
-                )
-                .withColumn(
-                    f"{output_col}_score_s",
-                    F.coalesce(score_col, F.lit(0)).cast("long"),
-                )
-                .drop("__words")
-            )
-
-        if head is not None:
-            from pyspark.sql import types as T
-
-            dictionary = F.broadcast(
-                df.sparkSession.createDataFrame(
-                    head,
-                    T.StructType(
-                        [
-                            T.StructField("__w", T.StringType()),
-                            T.StructField(
-                                "__pieces", T.ArrayType(T.StringType())
-                            ),
-                            T.StructField("__score", T.LongType()),
-                        ]
-                    ),
-                )
-            )
-        else:
-            do_broadcast = broadcast_dictionary
-            if do_broadcast is None:
-                # one-shot probe policy (_probe_materialize): checkpoint
-                # on static clusters, recompute under dynamic allocation
-                distinct_words = _probe_materialize(distinct_words)
-                do_broadcast = (
-                    distinct_words.count() <= broadcast_threshold_rows
-                )
-            enc = _enc(F.col("__w"))
-            dictionary = distinct_words.select(
-                "__w", enc["p"].alias("__pieces"), enc["s"].alias("__score")
-            )
-            if do_broadcast:
-                dictionary = F.broadcast(dictionary)
-        exploded = with_words.select(
-            F.col(id_col).alias("__id"),
-            F.posexplode("__words").alias("__p", "__w"),
-        )
-        assembled = (
-            exploded.join(dictionary, "__w")
-            .groupBy("__id")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("__p", "__pieces"))
-                        ),
-                        lambda s: s["__pieces"],
-                    )
-                ).alias("__assembled"),
-                F.sum("__score").alias("__sc"),
-            )
-        )
-        return (
-            df.join(assembled, df[id_col] == assembled["__id"], "left")
-            .drop("__id")
-            .withColumn(
-                output_col,
-                F.coalesce("__assembled", F.array().cast("array<string>")),
-            )
-            .drop("__assembled")
-            .withColumn(f"{output_col}_n", F.size(output_col).cast("int"))
-            .withColumn(
-                f"{output_col}_score_s",
-                F.coalesce("__sc", F.lit(0)).cast("long"),
-            )
-            .drop("__sc")
-        )
-
-    return _encode
+    return _dictionary_encode(
+        _make, text_col, id_col, output_col, lowercase, scored=True
+    )
 
 
-@register_contextual("unigram_encode_with")
-def unigram_encode_with(data: dict, vocab_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`unigram_encode`: resolve the unigram LM
-    vocabulary from an upstream spec_id."""
-
-    def _enc(df: DataFrame) -> DataFrame:
-        if vocab_id not in data:
-            raise ValueError(
-                f"unigram_encode_with: unknown spec_id {vocab_id!r}"
-            )
-        return unigram_encode(vocab=data[vocab_id], **args)(df)
-
-    return _enc
-
-
-@register_contextual("wordpiece_encode_with")
-def wordpiece_encode_with(data: dict, vocab_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`wordpiece_encode`: resolve the vocabulary
-    from an upstream spec_id."""
-
-    def _enc(df: DataFrame) -> DataFrame:
-        if vocab_id not in data:
-            raise ValueError(
-                f"wordpiece_encode_with: unknown spec_id {vocab_id!r}"
-            )
-        return wordpiece_encode(vocab=data[vocab_id], **args)(df)
-
-    return _enc
+register_with("unigram_encode_with", unigram_encode, "vocab_id", "vocab")
 
 
 def bytes_to_unicode_table() -> dict:
@@ -1079,8 +850,6 @@ def bpe_byte_encode(
     id_col: str = "doc_id",
     output_col: str = "bpe_tokens",
     lowercase: bool = False,
-    broadcast_dictionary: bool | None = None,
-    broadcast_threshold_rows: int = 2_000_000,
     pretokenizer: str = "whitespace",
 ) -> TransformerFn:
     """BYTE-level BPE encode (the GPT-2 scheme): every word is first
@@ -1094,10 +863,8 @@ def bpe_byte_encode(
     one symbol per byte).
 
     Same production plan as :func:`bpe_encode` (whose word-level
-    contract and broadcast gate this op shares verbatim): one
-    distinct-word pass, a pandas encode over DISTINCT words only, a
-    size-gated dictionary join, JVM per-document reassembly — Python
-    never touches corpus-scale data. Differences: no ``</w>`` marker
+    contract and :func:`_dictionary_encode` attach tiers this op shares
+    verbatim) — Python never touches corpus-scale data. Differences: no ``</w>`` marker
     (byte-level's boundary is the pretokenizer split itself), and the
     dictionary's pieces are byte symbols.
 
@@ -1118,7 +885,5 @@ def bpe_byte_encode(
         return lambda w: apply_merges_byte_py(w, mlist)
 
     return _dictionary_encode(
-        _make, text_col, id_col, output_col,
-        lowercase, broadcast_dictionary, broadcast_threshold_rows,
-        pretokenizer,
+        _make, text_col, id_col, output_col, lowercase, pretokenizer
     )

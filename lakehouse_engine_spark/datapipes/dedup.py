@@ -48,7 +48,7 @@ from lakehouse_engine_spark.datapipes.materialize import (
     release,
 )
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-from lakehouse_engine_spark.datapipes.registry import register, register_contextual
+from lakehouse_engine_spark.datapipes.registry import register, register_with
 from lakehouse_engine_spark.datapipes.text import shingles, tokens_lower, winnow_fingerprint
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -404,44 +404,9 @@ def dedup_cross_embedding(
     return _dedup
 
 
-@register_contextual("dedup_cross_embedding_with")
-def dedup_cross_embedding_with(data: dict, other: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`dedup_cross_embedding` resolving ``other``
-    as an upstream spec_id."""
-
-    def _dedup(df: DataFrame) -> DataFrame:
-        if other not in data:
-            raise ValueError(f"dedup_cross_embedding_with: unknown spec_id {other}")
-        return dedup_cross_embedding(other_df=data[other], **args)(df)
-
-    return _dedup
-
-
-@register_contextual("dedup_cross_minhash_with")
-def dedup_cross_minhash_with(data: dict, other: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`dedup_cross_minhash` resolving ``other`` as
-    an upstream spec_id."""
-
-    def _dedup(df: DataFrame) -> DataFrame:
-        if other not in data:
-            raise ValueError(f"dedup_cross_minhash_with: unknown spec_id {other}")
-        return dedup_cross_minhash(other_df=data[other], **args)(df)
-
-    return _dedup
-
-
-@register_contextual("dedup_cross_exact_with")
-def dedup_cross_exact_with(data: dict, other: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`dedup_cross_exact`: resolve ``other`` as an
-    upstream spec_id from the dataflow dict (same convention as
-    ``text_decontaminate_with``)."""
-
-    def _dedup(df: DataFrame) -> DataFrame:
-        if other not in data:
-            raise ValueError(f"dedup_cross_exact_with: unknown spec_id {other}")
-        return dedup_cross_exact(other_df=data[other], **args)(df)
-
-    return _dedup
+register_with("dedup_cross_embedding_with", dedup_cross_embedding, "other", "other_df")
+register_with("dedup_cross_minhash_with", dedup_cross_minhash, "other", "other_df")
+register_with("dedup_cross_exact_with", dedup_cross_exact, "other", "other_df")
 
 
 @register("dedup_substring_exact")
@@ -2528,17 +2493,9 @@ def text_winnow_cross_overlap(
     return _overlap
 
 
-@register_contextual("text_winnow_cross_overlap_with")
-def text_winnow_cross_overlap_with(data: dict, other: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`text_winnow_cross_overlap` resolving
-    ``other`` as an upstream spec_id."""
-
-    def _fn(df: DataFrame) -> DataFrame:
-        if other not in data:
-            raise ValueError(f"text_winnow_cross_overlap_with: unknown spec_id {other}")
-        return text_winnow_cross_overlap(other_df=data[other], **args)(df)
-
-    return _fn
+register_with(
+    "text_winnow_cross_overlap_with", text_winnow_cross_overlap, "other", "other_df"
+)
 
 
 @register("text_winnow_incremental")

@@ -24,7 +24,7 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_engine_spark.datapipes.registry import register, register_contextual
+from lakehouse_engine_spark.datapipes.registry import register, register_with
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -120,16 +120,7 @@ def snapshot_diff(
     return _diff
 
 
-@register_contextual("snapshot_diff_with")
-def snapshot_diff_with(data: dict, right_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`snapshot_diff` (spec_id resolution)."""
-
-    def _d(df: DataFrame) -> DataFrame:
-        if right_id not in data:
-            raise ValueError(f"snapshot_diff_with: unknown spec_id {right_id!r}")
-        return snapshot_diff(right=data[right_id], **args)(df)
-
-    return _d
+register_with("snapshot_diff_with", snapshot_diff, "right_id", "right")
 
 
 @register("schema_drift")
@@ -190,13 +181,4 @@ def schema_drift(
     return _drift
 
 
-@register_contextual("schema_drift_with")
-def schema_drift_with(data: dict, right_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`schema_drift` (spec_id resolution)."""
-
-    def _d(df: DataFrame) -> DataFrame:
-        if right_id not in data:
-            raise ValueError(f"schema_drift_with: unknown spec_id {right_id!r}")
-        return schema_drift(right=data[right_id], **args)(df)
-
-    return _d
+register_with("schema_drift_with", schema_drift, "right_id", "right")

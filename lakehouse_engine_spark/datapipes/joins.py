@@ -34,7 +34,7 @@ from typing import Callable, List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakehouse_engine_spark.datapipes.registry import register, register_contextual
+from lakehouse_engine_spark.datapipes.registry import register, register_with
 from lakehouse_engine_spark.utils.timeutils import epoch_us
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -457,36 +457,9 @@ def salted_join(
     return _join
 
 
-def _resolve_right(data: dict, op: str, right_id: str) -> DataFrame:
-    if right_id not in data:
-        raise ValueError(f"{op}: unknown spec_id {right_id!r}")
-    return data[right_id]
-
-
-@register_contextual("asof_join_with")
-def asof_join_with(data: dict, right_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`asof_join`: resolve ``right_id`` as an
-    upstream spec_id from the dataflow dict (pure-JSON ACON usage, same
-    convention as the core ``join`` transformer)."""
-    return lambda df: asof_join(
-        right=_resolve_right(data, "asof_join_with", right_id), **args
-    )(df)
-
-
-@register_contextual("range_join_with", streaming_ok=True)
-def range_join_with(data: dict, right_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`range_join` (see :func:`asof_join_with`)."""
-    return lambda df: range_join(
-        right=_resolve_right(data, "range_join_with", right_id), **args
-    )(df)
-
-
-@register_contextual("salted_join_with", streaming_ok=True)
-def salted_join_with(data: dict, right_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`salted_join` (see :func:`asof_join_with`)."""
-    return lambda df: salted_join(
-        right=_resolve_right(data, "salted_join_with", right_id), **args
-    )(df)
+register_with("asof_join_with", asof_join, "right_id", "right")
+register_with("range_join_with", range_join, "right_id", "right", streaming_ok=True)
+register_with("salted_join_with", salted_join, "right_id", "right", streaming_ok=True)
 
 
 @register("fuzzy_join", streaming_ok=True)
@@ -546,12 +519,7 @@ def fuzzy_join(
     return _join
 
 
-@register_contextual("fuzzy_join_with", streaming_ok=True)
-def fuzzy_join_with(data: dict, right_id: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`fuzzy_join` (see :func:`asof_join_with`)."""
-    return lambda df: fuzzy_join(
-        right=_resolve_right(data, "fuzzy_join_with", right_id), **args
-    )(df)
+register_with("fuzzy_join_with", fuzzy_join, "right_id", "right", streaming_ok=True)
 
 
 @register("merge_intervals")

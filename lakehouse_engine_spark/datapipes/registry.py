@@ -48,14 +48,28 @@ def register(name: str, streaming_ok: bool = False):
     return _wrap
 
 
-def register_contextual(name: str, streaming_ok: bool = False):
-    """Decorator: expose a datapipes factory that receives the dataflow
-    dict as its first argument (spec_id resolution inside ACONs)."""
+def register_with(
+    name: str, op, id_arg: str, frame_arg: str, streaming_ok: bool = False
+) -> None:
+    """Expose ``op`` as the contextual ACON op ``name``: the factory takes
+    the dataflow dict plus ``id_arg=<spec_id>`` and ``op``'s own
+    arguments; applied to a frame, it passes that spec's frame to ``op``
+    as ``frame_arg``, or raises ``ValueError`` naming ``name`` when the
+    spec_id is unknown."""
 
-    def _wrap(fn):
-        CONTEXTUAL[name] = fn
-        if streaming_ok:
-            STREAMING_OK.add(name)
-        return fn
+    def factory(data: dict, **args):
+        if id_arg not in args:
+            raise TypeError(f"{name}: missing required argument {id_arg!r}")
+        spec_id = args.pop(id_arg)
 
-    return _wrap
+        def _apply(df):
+            if spec_id not in data:
+                raise ValueError(f"{name}: unknown spec_id {spec_id!r}")
+            return op(**{frame_arg: data[spec_id]}, **args)(df)
+
+        return _apply
+
+    factory.id_arg = id_arg
+    CONTEXTUAL[name] = factory
+    if streaming_ok:
+        STREAMING_OK.add(name)

@@ -20,9 +20,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_engine_spark.datapipes.registry import register, register_contextual
+from lakehouse_engine_spark.datapipes.registry import register, register_with
 
 TransformerFn = Callable[[DataFrame], DataFrame]
+
+# Broadcast gates (rows) of the vocabulary-sized join sides: frequent-term
+# candidates, PMI unigrams, TF-IDF document frequencies and BM25 query
+# terms. At web scale these sides can be every distinct term, so each is
+# broadcast only while one count stays under its gate; above it the join
+# shuffles instead of OOMing executors.
+_CANDIDATE_BROADCAST_THRESHOLD_ROWS = 1_000_000
+_BROADCAST_THRESHOLD_ROWS = 2_000_000
 
 # whitespace tokens; filter('' ) guards leading/trailing whitespace
 def tokens(col: Column) -> Column:
@@ -538,41 +546,15 @@ def decontaminate_bloom(
     return _bloom
 
 
-@register_contextual("text_decontaminate_bloom_with")
-def decontaminate_bloom_with(
-    data: dict,
-    benchmark_with: str,
-    **args,
-) -> TransformerFn:
-    """ACON wrapper for :func:`decontaminate_bloom` (resolve ``benchmark_with``
-    as an upstream spec_id, the ``text_decontaminate_with`` convention)."""
-
-    def _decon(df: DataFrame) -> DataFrame:
-        if benchmark_with not in data:
-            raise ValueError(
-                f"text_decontaminate_bloom_with: unknown spec_id {benchmark_with}"
-            )
-        return decontaminate_bloom(benchmark_df=data[benchmark_with], **args)(df)
-
-    return _decon
-
-
-@register_contextual("text_decontaminate_with")
-def decontaminate_with(
-    data: dict,
-    benchmark_with: str,
-    **args,
-) -> TransformerFn:
-    """ACON wrapper for :func:`decontaminate`: resolve ``benchmark_with`` as
-    an upstream spec_id from the dataflow dict (pure-JSON ACON usage), the
-    same convention as the core ``join`` transformer."""
-
-    def _decon(df: DataFrame) -> DataFrame:
-        if benchmark_with not in data:
-            raise ValueError(f"text_decontaminate_with: unknown spec_id {benchmark_with}")
-        return decontaminate(benchmark_df=data[benchmark_with], **args)(df)
-
-    return _decon
+register_with(
+    "text_decontaminate_bloom_with",
+    decontaminate_bloom,
+    "benchmark_with",
+    "benchmark_df",
+)
+register_with(
+    "text_decontaminate_with", decontaminate, "benchmark_with", "benchmark_df"
+)
 
 
 @register("vocab_top_k")
@@ -611,8 +593,6 @@ def frequent_terms(
     input_col: str = "text",
     min_support: float = 0.001,
     ngram: int = 1,
-    broadcast_candidates: bool | None = None,
-    max_broadcast_candidates: int = 1_000_000,
 ) -> TransformerFn:
     """EXACT corpus heavy hitters: every word whose occurrence count is
     ``>= ceil(min_support * total_tokens)``, with exact counts — the
@@ -633,8 +613,9 @@ def frequent_terms(
     per partition ever reach the shuffle, independent of vocabulary
     size. Pass 2 re-scans the corpus once and exact-counts ONLY the
     candidate terms (hash semi-join against the deduped candidate set —
-    broadcast when small, auto-probed against
-    ``max_broadcast_candidates``), then applies the exact threshold.
+    broadcast while the candidate count is within
+    ``_CANDIDATE_BROADCAST_THRESHOLD_ROWS``), then applies the exact
+    threshold.
     Recompute-over-shuffle, the same trade recorded for ``dsir_score``
     in BASELINE.md: two cheap scans beat shuffling an unbounded tail.
 
@@ -729,14 +710,11 @@ def frequent_terms(
             .localCheckpoint(eager=True)
         )
         summary.unpersist()
-        if broadcast_candidates is None:
-            do_broadcast = cand.count() <= max_broadcast_candidates
-        else:
-            do_broadcast = broadcast_candidates
-        cand_side = F.broadcast(cand) if do_broadcast else cand
+        if cand.count() <= _CANDIDATE_BROADCAST_THRESHOLD_ROWS:
+            cand = F.broadcast(cand)
         exploded = sdf.select(F.explode(_stream()).alias("term"))
         return (
-            exploded.join(cand_side, "term")
+            exploded.join(cand, "term")
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("n"))
             .where(F.col("n") >= threshold)
@@ -1244,8 +1222,6 @@ def word_pmi(
     input_col: str = "text",
     k: int = 100,
     min_count: int = 5,
-    broadcast_unigrams: bool | None = None,
-    max_broadcast_unigrams: int = 2_000_000,
 ) -> TransformerFn:
     """Collocation mining: the top-``k`` adjacent word pairs by pointwise
     mutual information — ``PMI(a,b) = log10( p(ab) / (p(a)·p(b)) )`` with
@@ -1311,10 +1287,7 @@ def word_pmi(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if broadcast_unigrams is None:
-            do_broadcast = words.count() <= max_broadcast_unigrams
-        else:
-            do_broadcast = broadcast_unigrams
+        do_broadcast = words.count() <= _BROADCAST_THRESHOLD_ROWS
         words_side = F.broadcast(words) if do_broadcast else words
         uni = (
             base.select(F.explode("__t").alias("__w"))
@@ -1354,8 +1327,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     k: int = 5,
     min_df: int = 1,
-    broadcast_df: bool | None = None,
-    broadcast_threshold_rows: int = 2_000_000,
 ) -> TransformerFn:
     """Per-document top-``k`` TF-IDF terms — the keyword-extraction /
     salient-term step of corpus analytics. Returns one row per (doc, term)
@@ -1377,12 +1348,10 @@ def tfidf_top_terms(
 
     Broadcast gate: the df side is "vocabulary-sized", but with the
     default ``min_df=1`` on web-scale text that is every distinct term —
-    potentially 10⁸+ rows, which a forced broadcast would OOM. Default
-    (``broadcast_df=None``) counts ``dfreq`` (one aggregate over the
-    already-persisted pairs — cheap) and broadcasts only under
-    ``broadcast_threshold_rows``; above it the tf⋈df join runs as a
-    regular shuffle join on ``term``. Pass ``True``/``False`` to skip the
-    count and pin the strategy.
+    potentially 10⁸+ rows, which a forced broadcast would OOM. The op
+    counts ``dfreq`` (one aggregate over the already-persisted pairs —
+    cheap) and broadcasts only under ``_BROADCAST_THRESHOLD_ROWS``; above
+    it the tf⋈df join runs as a regular shuffle join on ``term``.
     """
 
     def _tfidf(df: DataFrame) -> DataFrame:
@@ -1406,10 +1375,7 @@ def tfidf_top_terms(
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") >= min_df)
         )
-        do_broadcast = broadcast_df
-        if do_broadcast is None:
-            do_broadcast = dfreq.count() <= broadcast_threshold_rows
-        if do_broadcast:
+        if dfreq.count() <= _BROADCAST_THRESHOLD_ROWS:
             dfreq = F.broadcast(dfreq)
         w = Window.partitionBy("__id").orderBy(
             F.desc("__tfidf_s"), F.asc("term")
@@ -1751,7 +1717,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     k: int = 10,
     broadcast_queries: bool | None = None,
-    broadcast_threshold_rows: int = 2_000_000,
 ) -> TransformerFn:
     """Per-query top-``k`` documents by BM25 (k1=1.2, b=0.75) — the
     retrieval/relevance primitive for eval-set mining, nearest-document
@@ -1789,7 +1754,7 @@ def bm25_topk(
     Broadcast gate: the three query-derived tables (qterms, the query
     vocabulary, and the per-term document frequencies — all bounded by
     the QUERY SET, not the corpus) are broadcast only while the distinct
-    (query, term) count stays under ``broadcast_threshold_rows``; for
+    (query, term) count stays under ``_BROADCAST_THRESHOLD_ROWS``; for
     eval-set mining with millions of queries the joins degrade to
     regular shuffle joins instead of blowing the broadcast. Default
     (``broadcast_queries=None``) probes the persisted qterms table with
@@ -1819,7 +1784,7 @@ def bm25_topk(
         # there is no sound place to unpersist after materialization).
         do_broadcast = broadcast_queries
         if do_broadcast is None:
-            do_broadcast = qterms.count() <= broadcast_threshold_rows
+            do_broadcast = qterms.count() <= _BROADCAST_THRESHOLD_ROWS
         bq = F.broadcast if do_broadcast else (lambda d: d)
         qvocab = qterms.select("term").distinct()
         # corpus stats BEFORE vocab pruning: BM25's D, T and dl cover the
@@ -1887,17 +1852,7 @@ def bm25_topk(
     return _bm25
 
 
-@register_contextual("text_bm25_topk_with")
-def bm25_topk_with(data: dict, queries_with: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`bm25_topk`: resolve the query set from an
-    upstream spec_id (same convention as ``text_decontaminate_with``)."""
-
-    def _fn(df: DataFrame) -> DataFrame:
-        if queries_with not in data:
-            raise ValueError(f"text_bm25_topk_with: unknown spec_id {queries_with!r}")
-        return bm25_topk(queries_df=data[queries_with], **args)(df)
-
-    return _fn
+register_with("text_bm25_topk_with", bm25_topk, "queries_with", "queries_df")
 
 
 @register("text_sentence_split", streaming_ok=True)
@@ -2052,23 +2007,9 @@ def corpus_overlap_stats(
     return _stats
 
 
-@register_contextual("corpus_overlap_stats_with")
-def corpus_overlap_stats_with(
-    data: dict,
-    other_with: str,
-    **args,
-) -> TransformerFn:
-    """ACON wrapper for :func:`corpus_overlap_stats` (resolve ``other_with``
-    as an upstream spec_id)."""
-
-    def _stats(df: DataFrame) -> DataFrame:
-        if other_with not in data:
-            raise ValueError(
-                f"corpus_overlap_stats_with: unknown spec_id {other_with}"
-            )
-        return corpus_overlap_stats(other_df=data[other_with], **args)(df)
-
-    return _stats
+register_with(
+    "corpus_overlap_stats_with", corpus_overlap_stats, "other_with", "other_df"
+)
 
 
 @register("text_unicode_normalize", streaming_ok=True)
@@ -2636,19 +2577,7 @@ def dsir_score(
     return _score
 
 
-@register_contextual("text_dsir_score_with")
-def dsir_score_with(data: dict, target_with: str, **args) -> TransformerFn:
-    """ACON wrapper for :func:`dsir_score` (resolve ``target_with`` as an
-    upstream spec_id)."""
-
-    def _score(df: DataFrame) -> DataFrame:
-        if target_with not in data:
-            raise ValueError(
-                f"text_dsir_score_with: unknown spec_id {target_with}"
-            )
-        return dsir_score(target_df=data[target_with], **args)(df)
-
-    return _score
+register_with("text_dsir_score_with", dsir_score, "target_with", "target_df")
 
 
 @register("text_decontaminate_spans")

@@ -1744,11 +1744,11 @@ def test_salted_join_salts_the_exchange(spark):
 
 def test_join_with_wrappers_resolve_spec_ids(spark):
     """Pure-JSON ACON variants: *_with resolve the right side from the
-    dataflow dict; unknown spec_ids raise with the op name."""
-    from lakehouse_engine_spark.core.definitions import TransformerSpec
-    from lakehouse_engine_spark.transformers.transformer_factory import (
-        TransformerFactory,
-    )
+    dataflow dict; for EVERY contextual datapipes op, an unknown spec_id
+    raises on application with the op name."""
+    import re
+
+    from lakehouse_engine_spark.datapipes.registry import CONTEXTUAL
 
     left = spark.createDataFrame([(1, 10), (2, 20)], "k INT, p INT")
     right = spark.createDataFrame([(1, "x")], "k INT, lab STRING")
@@ -1757,12 +1757,40 @@ def test_join_with_wrappers_resolve_spec_ids(spark):
         {"dim": right},
     )
     assert sorted(map(tuple, fn(left).collect())) == [(1, 10, "x")]
-    bad = TransformerFactory.get_transformer(
-        TransformerSpec("asof_join_with", {"right_id": "nope", "on": ["k"]}),
-        {"dim": right},
-    )
-    with pytest.raises(ValueError, match="asof_join_with"):
-        bad(left)
+    assert len(CONTEXTUAL) == 18
+    for name, factory in sorted(CONTEXTUAL.items()):
+        bad = TransformerFactory.get_transformer(
+            TransformerSpec(name, {factory.id_arg: "nope"}), {"dim": right}
+        )
+        with pytest.raises(
+            ValueError, match=re.escape(name) + ": unknown spec_id 'nope'"
+        ):
+            bad(left)
+    with pytest.raises(TypeError, match="asof_join_with"):
+        t("asof_join_with", on=["k"])
+
+
+def test_no_unset_broadcast_knobs_in_registered_ops():
+    """Broadcast gates are module constants, not per-call options: no
+    registered op takes a ``broadcast_*`` parameter defaulting to None
+    (an unpinned tri-state) or a ``*threshold_rows`` / ``max_broadcast_*``
+    size knob — except ``text_bm25_topk.broadcast_queries``, which dp83
+    pins to True to save build jobs."""
+    import inspect
+
+    import lakehouse_engine_spark.datapipes  # noqa: F401 — fills the registry
+    from lakehouse_engine_spark.datapipes.registry import SIMPLE
+
+    found = []
+    for name, factory in sorted(SIMPLE.items()):
+        for p in inspect.signature(factory).parameters.values():
+            tri_state = p.name.startswith("broadcast_") and p.default is None
+            size_knob = p.name.endswith("threshold_rows") or p.name.startswith(
+                "max_broadcast_"
+            )
+            if tri_state or size_knob:
+                found.append(f"{name}.{p.name}")
+    assert found == ["text_bm25_topk.broadcast_queries"]
 
 
 def test_cc_keep_best_selects_argmax(spark):
@@ -2887,7 +2915,7 @@ def test_embedding_pca_contracts(spark):
     assert np.abs(W[:, 2]).max() == 0.0  # constant third dim -> zeroed
 
 
-def test_frequent_terms_exact_vs_counter(spark):
+def test_frequent_terms_exact_vs_counter(spark, monkeypatch):
     """text_frequent_terms pinned against an exact Counter replay under
     conditions that FORCE Misra-Gries pruning (tiny counter budget,
     vocabulary far beyond 8*k), on a skewed corpus across multiple
@@ -2895,6 +2923,8 @@ def test_frequent_terms_exact_vs_counter(spark):
     import math
     import random
     from collections import Counter
+
+    from lakehouse_engine_spark.datapipes import text as text_mod
 
     rng = random.Random(3)
     vocab = [f"w{i}" for i in range(400)]
@@ -2917,16 +2947,14 @@ def test_frequent_terms_exact_vs_counter(spark):
             ).collect()
         }
         assert got == ref, f"support={support}"
-    shuffled = {
-        r["term"]: r["n"]
-        for r in df.transform(
-            t(
-                "text_frequent_terms",
-                min_support=0.02,
-                broadcast_candidates=False,
-            )
-        ).collect()
-    }
+    with monkeypatch.context() as mp:  # shuffle-join arm
+        mp.setattr(text_mod, "_CANDIDATE_BROADCAST_THRESHOLD_ROWS", 0)
+        shuffled = {
+            r["term"]: r["n"]
+            for r in df.transform(
+                t("text_frequent_terms", min_support=0.02)
+            ).collect()
+        }
     assert shuffled == {w: c for w, c in cnt.items() if c >= math.ceil(0.02 * total)}
     srow = df.transform(t("text_frequent_terms", min_support=0.02)).first()
     assert abs(srow["support"] - srow["n"] / total) < 1e-15
@@ -3068,18 +3096,6 @@ def test_unigram_encode_viterbi_matches_brute_force(spark):
     assert out[1] == ([], 0, 0)
     # "zzz?" contains a char outside the vocab -> whole word UNK
     assert out[2][0] == ["[UNK]", "the"] and out[2][2] == -115000
-    shuf = {
-        r["doc_id"]: r["ug_tokens"]
-        for r in docs.transform(
-            t(
-                "unigram_encode",
-                vocab=vocab,
-                lowercase=True,
-                broadcast_dictionary=False,
-            )
-        ).collect()
-    }
-    assert shuf == {d: v[0] for d, v in out.items()}
     empty_vocab = spark.createDataFrame([], "piece STRING, logp_s LONG")
     ev = {
         r["doc_id"]: r["ug_tokens"]
@@ -3918,41 +3934,40 @@ def test_decontaminate_spans_surgical_removal(spark):
 
 
 def test_materialize_policies_under_dynamic_allocation(spark, monkeypatch):
-    """_materialize must choose a RECOMPUTABLE persist (behind a
+    """iter_materialize must choose a RECOMPUTABLE persist (behind a
     plan-truncating LogicalRDD wrapper with a releasable handle) when
     dynamic allocation can remove the executor holding checkpoint
     blocks, and the GC-friendly eager localCheckpoint otherwise; the
     one-shot probe policy must never persist under dynamic allocation
     (no sound release point) — identical contents on every path."""
-    from lakehouse_engine_spark.datapipes import bpe as bpe_mod
     from lakehouse_engine_spark.datapipes import materialize as mat_mod
 
     df = spark.createDataFrame([(i,) for i in range(10)], "v LONG")
     # static cluster (this container): checkpoint path, no cache entry
-    static = bpe_mod._materialize(df)
+    static = mat_mod.iter_materialize(df)
     # lineage truncated to the checkpointed RDD, no cache-manager entry
     assert "ExistingRDD" in static._jdf.queryExecution().executedPlan().toString()
     assert static.storageLevel.useMemory is False
-    assert bpe_mod._probe_materialize(df) is not df  # probe checkpoints too
+    assert mat_mod.probe_materialize(df) is not df  # probe checkpoints too
     # dynamic allocation: persist path — rebuildable from lineage, plan
     # bounded by the LogicalRDD wrapper, handle released explicitly
     monkeypatch.setattr(mat_mod, "dyn_alloc_enabled", lambda s: True)
-    dyn = bpe_mod._materialize(df)
+    dyn = mat_mod.iter_materialize(df)
     assert "ExistingRDD" in dyn._jdf.queryExecution().executedPlan().toString()
     handle = dyn._lhe_cache_handle
     assert handle.storageLevel.useMemory
     assert sorted(r["v"] for r in dyn.collect()) == list(range(10))
-    bpe_mod._release(dyn)
+    mat_mod.release(dyn)
     assert handle.storageLevel.useMemory is False  # unpersisted
-    bpe_mod._release(static)  # no handle -> no-op
+    mat_mod.release(static)  # no handle -> no-op
     # probe path under dynamic allocation: NO materialization at all
-    assert bpe_mod._probe_materialize(df) is df
+    assert mat_mod.probe_materialize(df) is df
     # with a RELIABLE checkpoint dir configured, dyn-alloc takes the
     # fault-tolerant checkpoint branch (no cache handle to release)
     import tempfile
 
     spark.sparkContext.setCheckpointDir(tempfile.mkdtemp())
-    ck = bpe_mod._materialize(df)
+    ck = mat_mod.iter_materialize(df)
     assert not hasattr(ck, "_lhe_cache_handle")
     assert sorted(r["v"] for r in ck.collect()) == list(range(10))
 

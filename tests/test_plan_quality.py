@@ -632,48 +632,138 @@ def test_json_props_no_inference_scan(spark, sf_dir):
 
 
 def test_bpe_encode_broadcasts_dictionary(spark, sf_dir):
-    """The word→pieces dictionary must never shuffle the corpus: on this
-    corpus the vocabulary fits the r14 literal-map tier, so the WHOLE
-    encode is a shuffle-free projection — no join, no Python stage, no
-    Exchange at all (the trainer's merge table is driver-side rows)."""
-    df = entry.queries()["dp69_bpe_tokenize"](spark, sf_dir)
-    physical, _ = _plans(df)
-    assert "ArrowEvalPython" not in physical, physical[:2000]
-    assert "BatchEvalPython" not in physical
-    assert "Exchange" not in physical, physical[:2000]
-    assert "CartesianProduct" not in physical
-    assert "BroadcastNestedLoopJoin" not in physical
+    """The word→pieces dictionary must never shuffle the corpus: on these
+    corpora the vocabulary fits the literal-map tier, so the WHOLE encode
+    (dp69's BPE, dp125's scored unigram) is a shuffle-free projection —
+    no join, no Python stage, no Exchange at all (the trainer's merge
+    table and the unigram LM are driver-side rows)."""
+    for name in ("dp69_bpe_tokenize", "dp125_unigram_encode"):
+        df = entry.queries()[name](spark, sf_dir)
+        physical, _ = _plans(df)
+        assert "ArrowEvalPython" not in physical, (name, physical[:2000])
+        assert "BatchEvalPython" not in physical
+        assert "Join" not in physical, (name, physical[:2000])
+        assert "Exchange" not in physical, (name, physical[:2000])
+        assert "CartesianProduct" not in physical
 
 
-def test_bpe_encode_fallback_tiers_shapes_and_parity(spark, sf_dir):
-    """Above the literal-map tier the dictionary must BROADCAST back onto
-    the corpus (tier 2: driver-encoded rows, no Python stage; tier 3:
-    pandas encode over DISTINCT words only — one ArrowEvalPython), and
-    all tiers must produce identical rows."""
-    import lakehouse_engine_spark.datapipes.bpe as bpe_mod
+_LADDER_DOCS = [
+    (1, "low lower newest widest"),
+    (2, "lower lowest new wide low"),
+    (3, "widest wide wider zebra"),
+    (4, ""),
+    (5, None),
+    (6, "low low low"),
+]
 
-    fn = entry.queries()["dp69b_bpe_encode"]
-    lit_thr = bpe_mod._LITERAL_MAP_THRESHOLD_ROWS
-    drv_thr = bpe_mod._DRIVER_ENCODE_THRESHOLD_ROWS
+
+@pytest.fixture(scope="module")
+def ladder_encoders(spark):
+    """{encoder: (factory args, output column, Python reference
+    ``word -> pieces`` or ``word -> (pieces, score)``)} over _LADDER_DOCS."""
+    from lakehouse_engine_spark.datapipes import bpe as bpe_mod
+    from lakehouse_engine_spark.datapipes.registry import SIMPLE
+
+    docs = spark.createDataFrame(_LADDER_DOCS, "doc_id LONG, text STRING")
+    merges = docs.transform(SIMPLE["bpe_train"](num_merges=6))
+    byte_merges = docs.transform(SIMPLE["bpe_byte_train"](num_merges=6))
+    mlist = [(r["left"], r["right"]) for r in merges.orderBy("rank").collect()]
+    blist = [
+        (r["left"], r["right"]) for r in byte_merges.orderBy("rank").collect()
+    ]
+    wp_vocab = ["low", "new", "wid", "##er", "##est", "##e", "##s", "##t"]
+    ug_pieces = ["low", "er", "est", "new", "wid", "e", "w", "i", "d", "l", "o"]
+    ug = {p: -1000 * (4 - min(len(p), 3)) for p in ug_pieces}
+    max_piece = max(len(p) for p in ug)
+    wp_df = spark.createDataFrame([(v,) for v in wp_vocab], "piece STRING")
+    ug_df = spark.createDataFrame(list(ug.items()), "piece STRING, logp_s LONG")
+    return {
+        "bpe": (
+            {"merges": merges}, "bpe_tokens",
+            lambda w: bpe_mod.apply_merges_py(w, mlist),
+        ),
+        "bpe_byte": (
+            {"merges": byte_merges}, "bpe_tokens",
+            lambda w: bpe_mod.apply_merges_byte_py(w, blist),
+        ),
+        "wordpiece": (
+            {"vocab": wp_df}, "wp_tokens",
+            lambda w: bpe_mod.wordpiece_py(w, set(wp_vocab)),
+        ),
+        "unigram": (
+            {"vocab": ug_df}, "ug_tokens",
+            lambda w: bpe_mod.unigram_viterbi_py(w, ug, max_piece),
+        ),
+    }
+
+
+@pytest.mark.parametrize("tier", [1, 2, 3, 4])
+@pytest.mark.parametrize("encoder", ["bpe", "bpe_byte", "wordpiece", "unigram"])
+def test_dictionary_encode_tier_ladder(
+    spark, monkeypatch, ladder_encoders, encoder, tier
+):
+    """One dictionary-encode plan, four attach tiers, four encoders. Each
+    tier has its plan shape — 1: literal-map projection (no Join,
+    Exchange or Python stage); 2: driver-encoded rows, broadcast join, no
+    Python stage; 3: ONE pandas encode over distinct words, broadcast
+    join; 4: with auto-broadcast off, a shuffle join and no broadcast
+    hint left — and every tier returns the rows of the Python reference
+    encoder (so all tiers agree, scores included). Session hygiene: the
+    encode leaves no CacheManager entry after ``collect()``."""
+    from lakehouse_engine_spark.datapipes import bpe as bpe_mod
+    from lakehouse_engine_spark.datapipes.registry import SIMPLE
+
+    spark.catalog.clearCache()
+    args, out, ref = ladder_encoders[encoder]
+    if tier >= 2:
+        monkeypatch.setattr(bpe_mod, "_LITERAL_MAP_THRESHOLD_ROWS", 0)
+    if tier >= 3:
+        monkeypatch.setattr(bpe_mod, "_DRIVER_ENCODE_THRESHOLD_ROWS", 0)
+    if tier == 4:
+        monkeypatch.setattr(bpe_mod, "_BROADCAST_THRESHOLD_ROWS", 0)
+    docs = spark.createDataFrame(_LADDER_DOCS, "doc_id LONG, text STRING")
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if tier == 4:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        base = {tuple(r) for r in fn(spark, sf_dir).collect()}  # tier 1
-
-        bpe_mod._LITERAL_MAP_THRESHOLD_ROWS = 0  # tier 2
-        df2 = fn(spark, sf_dir)
-        physical, _ = _plans(df2)
-        assert "BroadcastHashJoin" in physical, physical[:2000]
-        assert "ArrowEvalPython" not in physical
-        assert {tuple(r) for r in df2.collect()} == base
-
-        bpe_mod._DRIVER_ENCODE_THRESHOLD_ROWS = 0  # tier 3 (pre-r14 path)
-        df3 = fn(spark, sf_dir)
-        physical, _ = _plans(df3)
-        assert "BroadcastHashJoin" in physical, physical[:2000]
-        assert physical.count("ArrowEvalPython") == 1
-        assert {tuple(r) for r in df3.collect()} == base
+        encoded = docs.transform(SIMPLE[f"{encoder}_encode"](**args))
+        physical, _ = _plans(encoded)
+        rows = sorted(tuple(r) for r in encoded.collect())
     finally:
-        bpe_mod._LITERAL_MAP_THRESHOLD_ROWS = lit_thr
-        bpe_mod._DRIVER_ENCODE_THRESHOLD_ROWS = drv_thr
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    python_stages = physical.count("ArrowEvalPython")
+    if tier == 1:
+        assert "Join" not in physical, physical[:2000]
+        assert "Exchange" not in physical, physical[:2000]
+        assert python_stages == 0, physical[:2000]
+    elif tier == 2:
+        assert "BroadcastHashJoin" in physical, physical[:2000]
+        assert python_stages == 0, physical[:2000]
+    elif tier == 3:
+        assert "BroadcastHashJoin" in physical, physical[:2000]
+        assert "SortMergeJoin [__w" not in physical, physical[:2000]
+        assert python_stages == 1, physical[:2000]
+    else:
+        assert ("SortMergeJoin" in physical) or ("ShuffledHashJoin" in physical), (
+            physical[:2000]
+        )
+        assert "BroadcastHashJoin" not in physical, physical[:2000]
+
+    want = []
+    for doc_id, text in _LADDER_DOCS:
+        encs = [ref(w) for w in (text or "").split()]
+        if encoder == "unigram":
+            toks = [p for e in encs for p in e[0]]
+            extra = (sum(e[1] for e in encs),)
+        else:
+            toks = [p for e in encs for p in e]
+            extra = ()
+        want.append((doc_id, text, toks, len(toks)) + extra)
+    assert rows == sorted(want)
+    scored = [f"{out}_score_s"] if encoder == "unigram" else []
+    assert encoded.columns == ["doc_id", "text", out, f"{out}_n"] + scored
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_semi_anti_join_shapes(spark, sf_dir):
@@ -687,8 +777,8 @@ def test_semi_anti_join_shapes(spark, sf_dir):
     assert "CartesianProduct" not in physical
 
 
-def test_tfidf_large_vocab_does_not_broadcast(spark):
-    """The df-side broadcast is SIZE-GATED: above broadcast_threshold_rows
+def test_tfidf_large_vocab_does_not_broadcast(spark, monkeypatch):
+    """The df-side broadcast is SIZE-GATED: above _BROADCAST_THRESHOLD_ROWS
     (here forced to 0) the op must NOT plant a broadcast hint — on 100 TB
     of web text min_df=1 makes dfreq the full distinct-term vocabulary and
     a forced broadcast OOMs executors regardless of
@@ -696,6 +786,7 @@ def test_tfidf_large_vocab_does_not_broadcast(spark):
     decide; with auto-broadcast disabled (simulating a too-big-to-estimate
     side) the join degrades to a shuffle join, proving no hint survives."""
     from lakehouse_engine_spark.core.definitions import TransformerSpec
+    from lakehouse_engine_spark.datapipes import text as text_mod
     from lakehouse_engine_spark.transformers.transformer_factory import (
         TransformerFactory,
     )
@@ -705,12 +796,14 @@ def test_tfidf_large_vocab_does_not_broadcast(spark):
         "doc_id LONG, text STRING",
     )
     fn = TransformerFactory.get_transformer(
-        TransformerSpec("text_tfidf_top_terms", {"broadcast_threshold_rows": 0})
+        TransformerSpec("text_tfidf_top_terms", {})
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = df.transform(fn)
+        with monkeypatch.context() as mp:
+            mp.setattr(text_mod, "_BROADCAST_THRESHOLD_ROWS", 0)
+            out = df.transform(fn)
         physical, _ = _plans(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -726,44 +819,6 @@ def test_tfidf_large_vocab_does_not_broadcast(spark):
     assert "BroadcastHashJoin" in physical_auto, physical_auto[:2000]
 
 
-def test_bpe_encode_large_dictionary_does_not_broadcast(spark):
-    """The word→pieces dictionary broadcast is SIZE-GATED: above
-    broadcast_threshold_rows (forced to 0) the encode join must plan as a
-    shuffle join — distinct word TYPES on web-scale corpora (typos, URLs,
-    code) reach 10⁸+ rows and a forced broadcast OOMs executors."""
-    from lakehouse_engine_spark.core.definitions import TransformerSpec
-    from lakehouse_engine_spark.transformers.transformer_factory import (
-        TransformerFactory,
-    )
-
-    def tf(name, **args):
-        return TransformerFactory.get_transformer(TransformerSpec(name, args))
-
-    df = spark.createDataFrame(
-        [(i, f"low lower newest widest word{i}") for i in range(20)],
-        "doc_id LONG, text STRING",
-    )
-    merges = df.transform(tf("bpe_train", num_merges=4))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = df.transform(
-            tf("bpe_encode", merges=merges, broadcast_threshold_rows=0)
-        )
-        physical, _ = _plans(out)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert ("SortMergeJoin" in physical) or ("ShuffledHashJoin" in physical), (
-        physical[:2000]
-    )
-    # results identical either way: the gate changes the plan, not values
-    pinned = df.transform(tf("bpe_encode", merges=merges,
-                             broadcast_dictionary=True))
-    got = {r["doc_id"]: r["bpe_tokens"] for r in out.collect()}
-    want = {r["doc_id"]: r["bpe_tokens"] for r in pinned.collect()}
-    assert got == want
-
-
 def test_bm25_prunes_corpus_by_broadcast_query_vocab(spark, sf_dir):
     """The corpus-side token stream must be pruned by a BROADCAST join on
     the (tiny) query vocabulary BEFORE the only corpus-keyed aggregation —
@@ -775,14 +830,15 @@ def test_bm25_prunes_corpus_by_broadcast_query_vocab(spark, sf_dir):
     assert "SortMergeJoin" not in physical, physical[:2000]
     assert "CartesianProduct" not in physical
 
-def test_bm25_large_query_set_does_not_broadcast(spark):
+def test_bm25_large_query_set_does_not_broadcast(spark, monkeypatch):
     """The three query-derived broadcasts in text_bm25_topk (qterms, query
-    vocab, per-term dfreq) are SIZE-GATED: with broadcast_threshold_rows
+    vocab, per-term dfreq) are SIZE-GATED: with _BROADCAST_THRESHOLD_ROWS
     forced to 0 every query-side join must plan as a shuffle join — the
     docstring pitches eval-set mining, where query sets reach millions and
     a forced broadcast blows the executors. Values must be identical
     either way (the gate changes the plan, not the scores)."""
     from lakehouse_engine_spark.core.definitions import TransformerSpec
+    from lakehouse_engine_spark.datapipes import text as text_mod
     from lakehouse_engine_spark.transformers.transformer_factory import (
         TransformerFactory,
     )
@@ -801,10 +857,9 @@ def test_bm25_large_query_set_does_not_broadcast(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = docs.transform(
-            tf("text_bm25_topk", queries_df=qs, k=3,
-               broadcast_threshold_rows=0)
-        )
+        with monkeypatch.context() as mp:
+            mp.setattr(text_mod, "_BROADCAST_THRESHOLD_ROWS", 0)
+            out = docs.transform(tf("text_bm25_topk", queries_df=qs, k=3))
         physical, _ = _plans(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -1056,54 +1111,6 @@ def test_word_pmi_broadcast_attach_take_ordered(spark, sf_dir):
     assert "SortMergeJoin" not in physical, physical[:2000]
     assert "CartesianProduct" not in physical
     assert "TakeOrderedAndProject" in physical, physical[:2000]
-
-
-def test_unigram_encode_distinct_word_dictionary(spark, sf_dir):
-    """unigram_encode (dp125): the size-tiered dictionary attach. The
-    dp125 corpus vocabulary is ≤256 distinct words, so the default plan
-    is the r14 literal-map tier — pieces AND scores attach as create_map
-    lookups inside a pure projection: no dictionary join, no reassembly
-    shuffle, no Python stage, no exchange at all. Forcing the literal
-    tier off pins tier 2 (driver-encoded rows, broadcast join); forcing
-    the driver tier off too pins the pre-r14 distributed pandas encode
-    (ArrowEvalPython over DISTINCT words only). All three tiers must
-    return row-identical results — the tier gates are a physical choice,
-    never a semantic one."""
-    df = entry.queries()["dp125_unigram_encode"](spark, sf_dir)
-    physical, _ = _plans(df)
-    # tier 1: literal-map projection — nothing but the scan and project
-    assert "ArrowEvalPython" not in physical, physical[:2000]
-    assert "Join" not in physical, physical[:2000]
-    assert "Exchange" not in physical, physical[:2000]
-    assert "CartesianProduct" not in physical
-
-    import lakehouse_engine_spark.datapipes.bpe as bpe_mod
-
-    base = {tuple(r) for r in df.collect()}
-    lit_thr = bpe_mod._LITERAL_MAP_THRESHOLD_ROWS
-    drv = bpe_mod._DRIVER_ENCODE_THRESHOLD_ROWS
-    try:
-        bpe_mod._LITERAL_MAP_THRESHOLD_ROWS = 0  # tier 2: driver rows
-        df2 = entry.queries()["dp125_unigram_encode"](spark, sf_dir)
-        physical, _ = _plans(df2)
-        assert "ArrowEvalPython" not in physical, physical[:2000]
-        assert "BroadcastHashJoin" in physical, physical[:2000]
-        assert "SortMergeJoin [__w" not in physical, physical[:2000]
-        assert physical.count("SortMergeJoin") <= 1, physical[:2000]
-        assert "CartesianProduct" not in physical
-        assert {tuple(r) for r in df2.collect()} == base
-
-        bpe_mod._DRIVER_ENCODE_THRESHOLD_ROWS = 0  # pre-r14 pandas tier
-        df3 = entry.queries()["dp125_unigram_encode"](spark, sf_dir)
-        physical, _ = _plans(df3)
-        assert "ArrowEvalPython" in physical, physical[:2000]
-        assert "BroadcastHashJoin" in physical, physical[:2000]
-        assert "SortMergeJoin [__w" not in physical, physical[:2000]
-        assert "CartesianProduct" not in physical
-        assert {tuple(r) for r in df3.collect()} == base
-    finally:
-        bpe_mod._LITERAL_MAP_THRESHOLD_ROWS = lit_thr
-        bpe_mod._DRIVER_ENCODE_THRESHOLD_ROWS = drv
 
 
 def test_hilbert_layout_single_range_exchange(spark, sf_dir):
