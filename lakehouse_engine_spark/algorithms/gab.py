@@ -29,9 +29,9 @@ Spark-first design notes (vs the reference):
   keeping the whole stage inside whole-stage codegen with no join at all.
 * The calendar join is declared on a one-row-per-day generated dimension and
   is always broadcast — at 100 TB the fact side never shuffles for it.
-* DELETE+INSERT uses real ``DELETE`` on Delta; on plain parquet it degrades
-  to an anti-filter + atomic overwrite of the (small, aggregated) insights
-  table.
+* DELETE+INSERT is :func:`lakehouse_engine_spark.io.merge_writer.replace_where`
+  (real ``DELETE`` + append on Delta, the merge writer's locked rewrite
+  otherwise).
 """
 
 from __future__ import annotations
@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.core.definitions import GABCadence, GABSpec
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.io.merge_writer import replace_where
 from lakehouse_engine_spark.utils.gab_utils import (
     ORDERED_CADENCES,
     cadence_configuration_at_end_date,
@@ -426,10 +427,8 @@ class GAB:
         """DELETE the use-case window then INSERT the fresh rows.
 
         Reference ``core/gab_sql_generator.py:429-545`` (delete bounded by
-        min/max from/to dates of the staged data) + the insert generator.
-        Delta targets get real DELETE+INSERT; parquet targets degrade to an
-        anti-filter + overwrite (the insights table is aggregated, so small
-        relative to the fact data even at 100 TB input).
+        min/max from/to dates of the staged data) + the insert generator,
+        both through :func:`~lakehouse_engine_spark.io.merge_writer.replace_where`.
         """
         spark = self.spark
         fresh = self._insights_select(use_case, cadence, final_view, mappings)
@@ -438,31 +437,25 @@ class GAB:
         )
         target = f"{self.spec.target_database}.{self.spec.target_table}"
 
-        if not spark.catalog.tableExists(target):
-            fmt = "delta" if ExecEnv.delta_available() else "parquet"
-            fresh.write.format(fmt).saveAsTable(target)
-            return
-
-        bounds = fresh.agg(
-            F.min("from_date").alias("f0"),
-            F.max("from_date").alias("f1"),
-            F.min("to_date").alias("t0"),
-            F.max("to_date").alias("t1"),
-        ).first()
-        if bounds["f0"] is None:
-            return
-        delete_pred = (
-            f"query_id = '{use_case['query_id']}' AND cadence = '{cadence}' "
-            f"AND from_date BETWEEN '{bounds['f0']}' AND '{bounds['f1']}' "
-            f"AND to_date BETWEEN '{bounds['t0']}' AND '{bounds['t1']}'"
+        delete_pred = "FALSE"  # a missing target is created from the fresh rows
+        if spark.catalog.tableExists(target):
+            bounds = fresh.agg(
+                F.min("from_date").alias("f0"),
+                F.max("from_date").alias("f1"),
+                F.min("to_date").alias("t0"),
+                F.max("to_date").alias("t1"),
+            ).first()
+            if bounds["f0"] is None:
+                return
+            delete_pred = (
+                f"query_id = '{use_case['query_id']}' AND cadence = '{cadence}' "
+                f"AND from_date BETWEEN '{bounds['f0']}' AND '{bounds['f1']}' "
+                f"AND to_date BETWEEN '{bounds['t0']}' AND '{bounds['t1']}'"
+            )
+        replace_where(
+            spark, delete_pred, fresh, db_table=target,
+            data_format=ExecEnv.default_output_format(),
         )
-        if ExecEnv.delta_available():
-            spark.sql(f"DELETE FROM {target} WHERE {delete_pred}")
-            fresh.write.format("delta").mode("append").saveAsTable(target)
-        else:
-            kept = spark.read.table(target).filter(f"NOT ({delete_pred})")
-            result = kept.unionByName(fresh).localCheckpoint(eager=True)
-            result.write.mode("overwrite").saveAsTable(target)
 
     # ------------------------------------------------- consumption views
     def _create_consumption_views(

@@ -7,9 +7,10 @@ with an explicit filter), optionally preprocesses via SQL over the
 ``sensor_new_data`` view, tests presence with ``first()``, and upserts
 ACQUIRED_NEW_DATA into a control table.
 
-Control-table storage: Delta when available; otherwise a parquet
-read-modify-write keyed by sensor_id (single tiny table — driver-side upsert
-is fine at any scale since the table is O(#sensors)).
+Control-table storage: the upsert is a merge on ``sensor_id`` through
+:func:`lakehouse_engine_spark.io.merge_writer.merge` — a Delta MERGE when
+available, the merge writer's locked rewrite otherwise (the table is
+O(#sensors), so rewriting it is cheap at any scale).
 """
 
 from __future__ import annotations
@@ -22,11 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_engine_spark.core.definitions import (
+    MergeOptions,
     NoNewDataException,
     SensorSpec,
     SensorStatus,
 )
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.io import merge_writer
 from lakehouse_engine_spark.io.reader_factory import ReaderFactory
 from lakehouse_engine_spark.utils.acon_utils import parse_input_spec
 
@@ -61,9 +64,7 @@ class SensorControlTable:
 
             if not path_exists(self.spark, self.target):
                 return self.spark.createDataFrame([], SENSOR_SCHEMA)
-            return self.spark.read.format(
-                "delta" if ExecEnv.delta_available() else "parquet"
-            ).load(self.target)
+            return self.spark.read.format(ExecEnv.default_output_format()).load(self.target)
         if not self.spark.catalog.tableExists(self.target):
             return self.spark.createDataFrame([], SENSOR_SCHEMA)
         return self.spark.read.table(self.target)
@@ -80,52 +81,40 @@ class SensorControlTable:
         # provided — an existing row keeps its values otherwise (a
         # status-only update must not wipe the sensor's identity fields)
         existing = self.status_of(spec.sensor_id)
-        assets = list(spec.assets) if spec.assets else None
-        if assets is None and existing is not None:
-            assets = existing["assets"]
-        ckpt = spec.checkpoint_location
-        if ckpt is None and existing is not None:
-            ckpt = existing["checkpoint_location"]
-        if upstream_key is not None:
-            uk = str(upstream_key)
-        elif existing is not None:
-            uk = existing["upstream_key"]
-        else:
-            # reference insert artifact (_convert_sensor_to_data applies
-            # str() unconditionally): a brand-new row with no upstream
-            # stores the literal "None" strings
-            uk = str(upstream_key)
-        if upstream_value is not None:
-            uv = str(upstream_value)
-        elif existing is not None:
-            uv = existing["upstream_value"]
-        else:
-            uv = str(upstream_value)
+
+        def resolve(value, field, default=None):
+            if value is not None:
+                return value
+            return existing[field] if existing is not None else default
+
+        def text(v):
+            return None if v is None else str(v)
+
+        # reference insert artifact (_convert_sensor_to_data applies str()
+        # unconditionally): a brand-new row with no upstream stores the
+        # literal "None" strings
         new_row = self.spark.createDataFrame(
             [
                 (
                     spec.sensor_id,
-                    assets,
+                    resolve(list(spec.assets) if spec.assets else None, "assets"),
                     status,
                     now,
-                    ckpt,
-                    uk,
-                    uv,
+                    resolve(spec.checkpoint_location, "checkpoint_location"),
+                    resolve(text(upstream_key), "upstream_key", "None"),
+                    resolve(text(upstream_value), "upstream_value", "None"),
                 )
             ],
             SENSOR_SCHEMA,
         )
-        merged = (
-            self._read()
-            .filter(F.col("sensor_id") != spec.sensor_id)
-            .unionByName(new_row)
-            .localCheckpoint(eager=True)
+        merge_writer.merge(
+            self.spark,
+            new_row,
+            MergeOptions(merge_predicate="current.sensor_id = new.sensor_id"),
+            location=self.target if self.is_path else None,
+            db_table=None if self.is_path else self.target,
+            data_format=ExecEnv.default_output_format(),
         )
-        fmt = "delta" if ExecEnv.delta_available() else "parquet"
-        if self.is_path:
-            merged.write.format(fmt).mode("overwrite").save(self.target)
-        else:
-            merged.write.format(fmt).mode("overwrite").saveAsTable(self.target)
 
 
 class Sensor:

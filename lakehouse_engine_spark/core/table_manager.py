@@ -10,6 +10,7 @@ from __future__ import annotations
 from typing import Any, Optional
 
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.io.merge_writer import replace_where
 from lakehouse_engine_spark.utils.sql_parser import split_sql_statements
 
 
@@ -122,25 +123,14 @@ class TableManager:
         self.spark.sql(f"MSCK REPAIR TABLE {self.acon['table_or_view']}")
 
     def delete_where(self) -> None:
-        tgt = self.acon["table_or_view"]
-        cond = self.acon["where_clause"]
-        if ExecEnv.delta_available():
-            self.spark.sql(f"DELETE FROM {tgt} WHERE {cond}")
-            return
-        # parquet tables don't support SQL DELETE — degrade to an
-        # anti-filter + atomic overwrite, preserving an external
-        # table's path (the merge writer's fallback pattern)
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "delta-spark absent: delete_where on %s degrades to "
-            "anti-filter + overwrite", tgt
+        """``DELETE FROM … WHERE`` on Delta, the merge writer's locked
+        rewrite otherwise (parquet tables don't support SQL DELETE)."""
+        replace_where(
+            self.spark,
+            self.acon["where_clause"],
+            db_table=self.acon["table_or_view"],
+            data_format=ExecEnv.default_output_format(),
         )
-        kept = self.spark.table(tgt).filter(f"NOT ({cond})")
-        kept = kept.localCheckpoint(eager=True)
-        from lakehouse_engine_spark.io.merge_writer import _save_table
-
-        _save_table(kept, self.spark, tgt, "parquet")
 
     def vacuum(self) -> None:
         if not ExecEnv.delta_available():

@@ -1,28 +1,35 @@
-"""MERGE writer — Delta Lake when available, generic rewrite fallback otherwise.
+"""Non-Delta table rewrites: MERGE and ``replace_where``.
 
 Reference parity: ``io/writers/delta_merge_writer.py:28-210`` (full
 MergeOptions semantics: delete/update/insert predicates + column sets,
-insert-only mode). On clusters with delta-spark installed this is a real
-``DeltaTable.merge`` (low-shuffle, file-pruned by the merge predicate). In
-environments without Delta the same semantics run as a rewrite: ONE pass
-over a full outer join of target and source (a single filter that applies
-the delete/insert clauses and a single projection that picks each column's
-current, updated or inserted value), then an atomic overwrite — correct,
-but O(target) IO; the Delta path is the 100 TB path.
+insert-only mode) and the reference's ``DELETE … WHERE`` + append
+statements (GAB delete-insert, ``delete_where``, CDF retention). With
+delta-spark installed these are a real ``DeltaTable.merge`` and a real
+``DELETE``. Without Delta every in-place row change here is ONE rewrite
+(:func:`_rewrite`): lock the target's path, build the new contents from
+the target, ``localCheckpoint`` them, then overwrite — keeping an
+EXTERNAL table at its path and the target's partition columns. MERGE
+builds one filter + projection over a full outer join of target and
+source; ``replace_where`` builds ``NOT (predicate)`` plus the new rows.
+Correct, but O(target) IO; the Delta path is the 100 TB path.
 
-Predicates reference the aliases ``current`` (target) and ``new`` (source),
-exactly as in the reference.
+Merge predicates reference the aliases ``current`` (target) and ``new``
+(source), exactly as in the reference.
 """
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from typing import Optional
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.core.definitions import MergeOptions
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.io.table_lock import WriterLock
 
 
 def merge(
@@ -40,11 +47,43 @@ def merge(
         _merge_rewrite(spark, df, merge_opts, location, db_table, data_format)
 
 
+def replace_where(
+    spark: SparkSession,
+    predicate: str,
+    rows: Optional[DataFrame] = None,
+    *,
+    db_table: Optional[str] = None,
+    location: Optional[str] = None,
+    data_format: str = "delta",
+) -> None:
+    """Remove the target's rows matching ``predicate``, then add ``rows``.
+
+    Delta: ``DELETE FROM <target> WHERE <predicate>`` plus an append.
+    Otherwise one :func:`_rewrite` of ``NOT (predicate)`` ∪ ``rows``; a row
+    whose predicate is NULL is kept, as ``DELETE`` keeps it. A missing
+    target is created from ``rows``."""
+    if ExecEnv.delta_available() and data_format == "delta":
+        exists = rows is None or _target_exists(spark, location, db_table)
+        if exists:
+            spark.sql(f"DELETE FROM {db_table or f'delta.`{location}`'} WHERE {predicate}")
+        if rows is not None:
+            writer = rows.write.format("delta").mode("append" if exists else "overwrite")
+            writer.saveAsTable(db_table) if db_table else writer.save(location)
+        return
+
+    def first_load():
+        if rows is None:
+            raise ValueError(f"replace_where: no target at {db_table or location}")
+        return rows
+
+    def kept_plus_rows(target):
+        kept = target.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+        return kept if rows is None else kept.unionByName(rows)
+
+    _rewrite(spark, db_table, location, data_format, "replace_where", kept_plus_rows, first_load)
+
+
 def _target_exists(spark: SparkSession, location: Optional[str], db_table: Optional[str]) -> bool:
-    # A real existence check, not a read wrapped in a bare except: the
-    # "missing" branch OVERWRITES the target as a first load, so treating
-    # a corrupt table or a transient FS error as "missing" would destroy
-    # the target. Only a genuinely absent path/table means first load.
     if db_table:
         return spark.catalog.tableExists(db_table)
     from lakehouse_engine_spark.utils.fs_utils import path_exists
@@ -92,43 +131,27 @@ def _normalize_fs_path(p: str) -> str:
     return os.path.normpath(p)
 
 
-def _table_location(spark, db_table):
-    """The catalog table's Location (None for managed tables we shouldn't
-    pin) — saveAsTable(overwrite) recreates the table, so an EXTERNAL
-    target must be re-pinned to its path or it silently turns managed."""
+def catalog_location(spark, db_table):
+    """``(type, location)`` of a catalog table from its ``DESCRIBE
+    FORMATTED`` — ``("EXTERNAL", "file:/…")``; ``(None, None)`` for a
+    missing table. The one place that parses the catalog's Location."""
     try:
         rows = spark.sql(f"DESCRIBE FORMATTED {db_table}").collect()
-        typ = next((r["data_type"] for r in rows if r["col_name"] == "Type"), "")
-        if str(typ).strip().upper() != "EXTERNAL":
-            return None
-        return next(
-            (r["data_type"] for r in rows if r["col_name"] == "Location"), None
-        )
-    except Exception:
-        return None
+    except AnalysisException:  # no such table
+        return None, None
+    # later rows win: the detailed-information section follows the
+    # column rows, so a column named "Type" or "Location" cannot shadow it
+    info = {r["col_name"]: r["data_type"] for r in rows}
+    typ = str(info.get("Type") or "").strip().upper() or None
+    return typ, info.get("Location")
 
 
-_LOOKUP = object()
-
-
-def _save_table(frame, spark, db_table, fmt, loc=_LOOKUP):
-    """Overwrite ``db_table`` with ``frame``, keeping an EXTERNAL table at
-    its path. ``loc`` is the table's already-resolved
-    :func:`_table_location`; by default it is looked up here."""
-    writer = frame.write.format(fmt).mode("overwrite")
-    if loc is _LOOKUP:
-        loc = _table_location(spark, db_table)
-    if loc:
-        writer = writer.option("path", loc)
-    writer.saveAsTable(db_table)
-    # the overwrite REPLACED the files under the table's path; other
-    # relations cached against that path (a different table object on the
-    # same location, long-lived sessions) would otherwise resolve the
-    # deleted part files — the Delta reference is transactional here, the
-    # parquet fallback must invalidate explicitly
-    spark.catalog.refreshTable(db_table)
-    if loc:
-        spark.catalog.refreshByPath(loc)
+def _table_location(spark, db_table):
+    """The Location of an EXTERNAL table, None for a managed one.
+    saveAsTable(overwrite) recreates the table, so an EXTERNAL target
+    must be re-pinned to its path or it silently turns managed."""
+    typ, loc = catalog_location(spark, db_table)
+    return loc if typ == "EXTERNAL" else None
 
 
 # location -> qualified table name, filled by successful lookups so a
@@ -164,13 +187,7 @@ def _find_table_at_location_in_db(spark, db: str, want: str):
     for t in spark.catalog.listTables(db):
         if t.isTemporary:
             continue
-        try:
-            rows = spark.sql(f"DESCRIBE FORMATTED {db}.{t.name}").collect()
-        except Exception:
-            continue
-        loc = next(
-            (r["data_type"] for r in rows if r["col_name"] == "Location"), None
-        )
+        _, loc = catalog_location(spark, f"{db}.{t.name}")
         if loc and _normalize_fs_path(loc) == want:
             return f"{db}.{t.name}"
     return None
@@ -205,17 +222,10 @@ def _catalog_schema_for_location(spark, location):
         # on one table): a dropped table, or a same-named table re-created
         # at a different path, must fall through to a re-walk instead of
         # serving a stale schema authority
-        try:
-            rows = spark.sql(f"DESCRIBE FORMATTED {hit}").collect()
-            loc = next(
-                (r["data_type"] for r in rows if r["col_name"] == "Location"),
-                None,
-            )
-            if loc and _normalize_fs_path(loc) == want:
-                return spark.table(hit).schema
-            per_session.pop(want, None)
-        except Exception:
-            per_session.pop(want, None)
+        _, loc = catalog_location(spark, hit)
+        if loc and _normalize_fs_path(loc) == want:
+            return spark.table(hit).schema
+        per_session.pop(want, None)
     try:
         for db in spark.catalog.listDatabases():
             name = _find_table_at_location_in_db(spark, db.name, want)
@@ -251,7 +261,7 @@ def _store_assign(df, schema, keep_extra: bool = False):
 
 
 def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_format) -> None:
-    """Join-based merge for non-Delta targets.
+    """Join-based merge for non-Delta targets, through :func:`_rewrite`.
 
     Packs each side into a struct column named after its merge alias so the
     user's ``current.x = new.y`` predicates evaluate unchanged as struct-field
@@ -259,77 +269,115 @@ def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_forma
     (the table itself, or the catalog table registered at a path target)
     casts the incoming frame before merging, so e.g. a CSV batch whose
     inferSchema disagrees with the DDL lands with the declared types.
-
-    Concurrency: the whole read→join→overwrite is guarded by the
-    best-effort :class:`~lakehouse_engine_spark.io.table_lock.WriterLock`
-    — two engine writers racing the same target get ONE winner and one
-    loud ``ConcurrentWriterError`` instead of a silent lost-update (real
-    Delta serializes via atomic log commits, reference
-    ``io/writers/delta_merge_writer.py:28-210``; a raw filesystem can
-    only approximate that with atomic lock-file creation).
     """
-    from lakehouse_engine_spark.io.table_lock import WriterLock
 
+    def first_load():
+        schema = _catalog_schema_for_location(spark, location)
+        return df if schema is None else _store_assign(df, schema)
+
+    def merged(target):
+        target, src, src_cols = _prepare_merge(spark, target, df, opts)
+        return _merged(target, src, opts, src_cols)
+
+    _rewrite(spark, db_table, location, data_format, "merge", merged, first_load)
+
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _rewrite(spark, db_table, location, data_format, op, rebuild, first_load) -> None:
+    """Overwrite a table or path target with ``rebuild(target)``, or with
+    ``first_load()`` when the target does not exist yet.
+
+    Concurrency: the whole read→rebuild→overwrite runs under the
+    best-effort :class:`~lakehouse_engine_spark.io.table_lock.WriterLock`
+    on the target's path — two engine writers racing the same target get
+    ONE winner and one loud ``ConcurrentWriterError`` instead of a silent
+    lost-update (real Delta serializes via atomic log commits). One
+    catalog lookup per rewrite: the same Location anchors the lock and
+    re-pins an EXTERNAL table on the overwrite. The overwrite keeps the
+    partition columns of the relation Spark resolved for the target (the
+    catalog's for a table, the discovered directory layout for a path),
+    and is static whatever the session's partition overwrite mode, so a
+    partition left with no rows is removed.
+    """
     fmt = data_format if data_format != "delta" else "parquet"
-    # one catalog lookup per merge: the same Location anchors the lock
-    # and re-pins an EXTERNAL table on the overwrite
     table_loc = _table_location(spark, db_table) if db_table else None
     lock_loc = location or table_loc
-    if lock_loc is None:
-        # managed table with no resolvable path (embedded single-process
-        # metastore): nothing to anchor a lock file to; proceed under the
-        # documented single-writer assumption
-        _merge_rewrite_locked(spark, df, opts, location, db_table, fmt, None, table_loc)
-        return
-    with WriterLock(spark, lock_loc, op="merge") as lk:
-        _merge_rewrite_locked(spark, df, opts, location, db_table, fmt, lk, table_loc)
-
-
-def _merge_rewrite_locked(
-    spark, df, opts: MergeOptions, location, db_table, fmt, lock, table_loc
-) -> None:
-
-    def _first_load():
-        frame = df
-        schema = (
-            spark.table(db_table).schema
-            if db_table and spark.catalog.tableExists(db_table)
-            else _catalog_schema_for_location(spark, location)
-        )
-        if schema is not None:
-            frame = _store_assign(frame, schema)
-        if lock is not None:
-            lock.verify()  # detect a mid-flight lock steal before writing
-        if db_table:
-            _save_table(frame, spark, db_table, fmt, table_loc)
+    # a managed table with no resolvable path (embedded single-process
+    # metastore) has nothing to anchor a lock file to: it proceeds under
+    # the documented single-writer assumption
+    with (WriterLock(spark, lock_loc, op=op) if lock_loc else nullcontext()) as lock:
+        target = _read_target(spark, db_table, location, fmt)
+        if target is None:
+            result, parts = first_load(), []
         else:
-            frame.write.format(fmt).mode("overwrite").save(location)
+            parts = _partition_columns(target)
+            # materialize before overwriting the table we read from
+            result = rebuild(target).localCheckpoint(eager=True)
+        if lock is not None:
+            # last gate before the destructive overwrite: if another writer
+            # stole the lock (treated ours as stale), our materialized
+            # result no longer includes their update — refuse loudly
+            lock.verify()
+        writer = result.write.format(fmt).mode("overwrite")
+        if parts:
+            writer = writer.partitionBy(*parts)
+        if not db_table:
+            writer.option("partitionOverwriteMode", "static").save(location)
+            return
+        if table_loc:
+            writer = writer.option("path", table_loc)
+        # the files of an EXTERNAL table outlive saveAsTable's drop, so a
+        # partitioned one needs a static overwrite; saveAsTable would keep
+        # the option as a table property, so a dynamic-mode session is
+        # switched to static for this one write instead
+        mode = spark.conf.get(_OVERWRITE_MODE)
+        pin = bool(parts and table_loc) and mode.lower() == "dynamic"
+        if pin:
+            spark.conf.set(_OVERWRITE_MODE, "static")
+        try:
+            writer.saveAsTable(db_table)
+        finally:
+            if pin:
+                spark.conf.set(_OVERWRITE_MODE, mode)
+        # the overwrite REPLACED the files under the table's path; other
+        # relations cached against that path would otherwise resolve the
+        # deleted part files
+        spark.catalog.refreshTable(db_table)
+        if table_loc:
+            spark.catalog.refreshByPath(table_loc)
 
+
+def _read_target(spark, db_table, location, fmt) -> Optional[DataFrame]:
+    """The target, or None when it does not exist yet.
+
+    A real existence check, not a read wrapped in a bare except: the
+    missing branch OVERWRITES the target as a first load, so a corrupt
+    table or a transient FS error must not read as missing. A pre-created
+    EMPTY target dir (DDL, no data) counts as missing."""
     if not _target_exists(spark, location, db_table):
-        _first_load()
-        return
-
+        return None
     try:
         target = spark.read.table(db_table) if db_table else spark.read.format(fmt).load(location)
         target.schema  # force schema resolution now
-    except Exception as exc:  # pre-created EMPTY target dir (DDL, no data)
+    except Exception as exc:
         if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "Unable to infer" in str(exc):
-            _first_load()
-            return
+            return None
         raise
-    target, df, src_cols = _prepare_merge(spark, target, df, opts)
-    result = _merged(target, df, opts, src_cols)
-    # Materialize before overwriting the table we read from.
-    result = result.localCheckpoint(eager=True)
-    if lock is not None:
-        # last gate before the destructive overwrite: if another writer
-        # stole the lock (treated ours as stale), our materialized result
-        # no longer includes their update — refuse loudly
-        lock.verify()
-    if db_table:
-        _save_table(result, spark, db_table, fmt, table_loc)
-    else:
-        result.write.format(fmt).mode("overwrite").save(location)
+    return target
+
+
+def _partition_columns(target: DataFrame) -> list:
+    """Partition columns of the file relation behind ``target`` — the
+    catalog's partition spec for a table read, the discovered layout for a
+    path read. No Spark job and no catalog call (PySpark's
+    ``catalog.listColumns`` runs two jobs through ``toLocalIterator``)."""
+    try:
+        leaf = target._jdf.queryExecution().analyzed().collectLeaves().head()
+        return list(leaf.relation().partitionSchema().fieldNames())
+    except (AttributeError, Py4JError):  # not a file relation, or Spark Connect
+        return []
 
 
 def _prepare_merge(spark, target, df, opts: MergeOptions):

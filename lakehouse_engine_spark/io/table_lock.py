@@ -2,10 +2,17 @@
 
 Real Delta serializes writers through ATOMIC log commits (reference
 ``io/writers/delta_merge_writer.py:28-210`` inherits that safety for
-free). The parquet fallbacks cannot: the merge rewrite and the CDF
-sidecar commit log (``io/cdf_commit_log.py``) both do read-modify-write
-against plain files, which under two concurrent writers silently loses
-one writer's work. This module narrows that window with the strongest
+free). The parquet fallbacks cannot; they read-modify-write plain files,
+which under two concurrent writers silently loses one writer's work.
+The writers that hold this lock:
+
+- ``io/merge_writer._rewrite``, the one non-Delta table rewrite, for a
+  path target or an EXTERNAL table: ``merge`` (merge writes, the sensor
+  upsert, the heartbeat control merge) and ``replace_where`` (GAB
+  delete-insert, ``TableManager.delete_where``, the CDF retention clean);
+- ``io/cdf_commit_log.record_commit``, the CDF sidecar commit log.
+
+This module narrows that window with the strongest
 primitive each filesystem offers: on a LOCAL path, a true ``O_EXCL``
 claim (payload staged to a temp file, then hard-linked into place —
 the lock appears atomically WITH its payload); elsewhere,

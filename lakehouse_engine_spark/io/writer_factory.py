@@ -122,14 +122,7 @@ def _record_degraded_delta_commit(
         return
     location = spec.location
     if not location and spec.db_table:
-        try:
-            rows = spark.sql(f"DESCRIBE FORMATTED {spec.db_table}").collect()
-            location = next(
-                (r["data_type"] for r in rows if r["col_name"] == "Location"),
-                None,
-            )
-        except Exception:
-            location = None
+        _, location = merge_writer.catalog_location(spark, spec.db_table)
     if location:
         from lakehouse_engine_spark.io import cdf_commit_log
 

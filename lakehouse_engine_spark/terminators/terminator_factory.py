@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_engine_spark.core.definitions import TerminatorSpec
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.io.merge_writer import catalog_location, replace_where
 
 _LOGGER = logging.getLogger(__name__)
 
@@ -111,7 +112,7 @@ def expose_cdf(
 
     if materialized_cdf_location is None:
         raise ValueError("expose_cdf needs materialized_cdf_location")
-    fmt = data_format or ("delta" if ExecEnv.delta_available() else "parquet")
+    fmt = data_format or ExecEnv.default_output_format()
 
     if read_cdf is None:
         if not ExecEnv.delta_available():
@@ -189,32 +190,15 @@ def expose_cdf(
             "%Y%m%d%H%M%S"
         )
         # retention must follow the MATERIALIZATION format — a parquet
-        # materialization on a delta-enabled runtime is not a Delta table
-        if fmt == "delta" and ExecEnv.delta_available():
-            from delta.tables import DeltaTable
-
-            DeltaTable.forPath(spark, materialized_cdf_location).delete(
-                F.col("_commit_timestamp") < limit
-            )
-        else:
-            # parquet fallback: read survivors, then rewrite. localCheckpoint
-            # (eager) cuts lineage BEFORE the overwrite truncates the source —
-            # a persist could still recompute evicted partitions from the
-            # truncated files.
-            kept = (
-                spark.read.format(fmt)
-                .load(materialized_cdf_location)
-                # cast: partition-value inference may have read the stamp as
-                # a long; the comparison must stay lexicographic-on-string
-                .filter(F.col("_commit_timestamp").cast("string") >= limit)
-                .localCheckpoint(eager=True)
-            )
-            (
-                kept.write.format(fmt)
-                .mode("overwrite")
-                .partitionBy("_commit_timestamp")
-                .save(materialized_cdf_location)
-            )
+        # materialization on a delta-enabled runtime is not a Delta table;
+        # the cast keeps the comparison lexicographic-on-string when
+        # partition-value inference read the stamp as a long
+        replace_where(
+            spark,
+            f"CAST(_commit_timestamp AS STRING) < '{limit}'",
+            location=materialized_cdf_location,
+            data_format=fmt,
+        )
 
     if vacuum_cdf:
         _LOGGER.info("Vacuuming CDF table...")
@@ -263,10 +247,7 @@ def _emulated_cdf_stream(
 
     if db_table:
         schema = spark.table(db_table).schema
-        rows = spark.sql(f"DESCRIBE FORMATTED {db_table}").collect()
-        src_loc = next(
-            (r["data_type"] for r in rows if r["col_name"] == "Location"), None
-        )
+        _, src_loc = catalog_location(spark, db_table)
         if not src_loc:
             raise ValueError(
                 f"expose_cdf emulation: no storage location for {db_table}"

@@ -5,6 +5,7 @@ same MergeOptions drive DeltaTable.merge when delta-spark is present)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -857,3 +858,219 @@ def test_table_merge_resolves_catalog_location_once(spark, tmp_dir, monkeypatch)
         assert merge_writer._table_location(spark, "merge_once_ext") is not None
     finally:
         spark.sql("DROP TABLE IF EXISTS merge_once_ext")
+
+
+# ---------------------------------------------------------------------------
+# rewrite contract: every non-Delta in-place row change (GAB delete-insert,
+# delete_where, the sensor upsert, the CDF clean, merge) is the merge
+# writer's one locked rewrite
+# ---------------------------------------------------------------------------
+
+_SENSOR_DDL = (
+    "sensor_id STRING, assets ARRAY<STRING>, status STRING, "
+    "status_change_timestamp TIMESTAMP, checkpoint_location STRING, "
+    "upstream_key STRING, upstream_value STRING"
+)
+
+
+def _run_gab(spark, table, path):
+    from types import SimpleNamespace
+
+    from lakehouse_engine_spark.algorithms.gab import GAB
+
+    fresh = spark.createDataFrame(
+        [("q1", dt.date(2024, 1, 1), dt.date(2024, 1, 1), 10.0, "DAY")],
+        "query_id STRING, from_date DATE, to_date DATE, m1 DOUBLE, cadence STRING",
+    )
+    gab = GAB.__new__(GAB)  # only the delete-insert step is under test
+    gab.spark = spark
+    gab.spec = SimpleNamespace(target_database="default", target_table=table)
+    gab._insights_select = lambda *_: fresh
+    gab._delete_insert({"query_id": "q1"}, "DAY", None, {})
+
+
+def _run_delete_where(spark, table, path):
+    from lakehouse_engine_spark.core.table_manager import TableManager
+
+    TableManager(
+        {"function": "delete_where", "table_or_view": table, "where_clause": "id = 2"}
+    ).execute()
+
+
+def _run_sensor(spark, table, path):
+    from lakehouse_engine_spark.algorithms.sensor import update_sensor_status
+
+    update_sensor_status("s1", table)
+
+
+def _run_cdf(spark, table, path):
+    from lakehouse_engine_spark.terminators.terminator_factory import expose_cdf
+
+    expose_cdf(
+        spark,
+        materialized_cdf_location=path,
+        read_cdf=lambda: spark.createDataFrame(
+            [], "id INT, _change_type STRING, _commit_timestamp TIMESTAMP"
+        ),
+        write_cdf=lambda _df: None,  # only the retention clean is under test
+        data_format="parquet",
+        clean_cdf=True,
+        days_to_keep=30,
+        now=dt.datetime(2024, 6, 15, 12, 0, 0),
+    )
+
+
+def _run_merge(spark, table, path):
+    from lakehouse_engine_spark.io import merge_writer
+
+    merge_writer.merge(
+        spark,
+        spark.createDataFrame([(2, "B", 1), (3, "c", 3)], "id INT, v STRING, p INT"),
+        merge_writer.MergeOptions(merge_predicate="current.id = new.id"),
+        db_table=table,
+        data_format="parquet",
+    )
+
+
+_TS = dt.datetime(2024, 6, 1)
+_IDS = "id INT, v STRING, p INT"
+# caller -> (ddl, partition column, rows, run, compared columns, want)
+_REWRITE_CASES = {
+    "gab": (
+        "query_id STRING, from_date DATE, to_date DATE, m1 DOUBLE, cadence STRING",
+        "cadence",
+        [("q1", dt.date(2024, 1, 1), dt.date(2024, 1, 1), 1.0, "DAY"),
+         ("q1", dt.date(2024, 1, 1), dt.date(2024, 1, 31), 5.0, "MONTH")],
+        _run_gab, ["cadence", "m1"], [("DAY", 10.0), ("MONTH", 5.0)],
+    ),
+    "delete_where": (
+        _IDS, "p", [(1, "a", 1), (2, "b", 2)],
+        _run_delete_where, ["id", "v", "p"], [(1, "a", 1)],
+    ),
+    "sensor": (
+        _SENSOR_DDL, "status",
+        [("s1", ["a"], "ACQUIRED_NEW_DATA", _TS, None, "None", "None"),
+         ("s2", ["b"], "ACQUIRED_NEW_DATA", _TS, None, "None", "None")],
+        _run_sensor, ["sensor_id", "status", "assets"],
+        [("s1", "PROCESSED_NEW_DATA", ["a"]), ("s2", "ACQUIRED_NEW_DATA", ["b"])],
+    ),
+    "cdf": (
+        "id INT, _change_type STRING, _commit_timestamp STRING", "_commit_timestamp",
+        [(1, "insert", "20240614103000"), (2, "delete", "20240401080000")],
+        _run_cdf, ["id"], [(1,)],
+    ),
+    "merge": (
+        _IDS, "p", [(1, "a", 1), (2, "b", 2)],
+        _run_merge, ["id", "v", "p"], [(1, "a", 1), (2, "B", 1), (3, "c", 3)],
+    ),
+}
+
+
+def _data_files(path):
+    """``relative path -> (size, mtime)`` of the target's files, lock excluded."""
+    out = {}
+    for root, _, files in os.walk(path):
+        for name in files:
+            if name != "_lhe_writer.lock":
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                out[os.path.relpath(full, path)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+@pytest.mark.parametrize("caller", list(_REWRITE_CASES))
+def test_rewrite_contract(spark, tmp_dir, caller):
+    """(b) under a held WriterLock the caller raises and leaves the files
+    alone; (a) an EXTERNAL target stays EXTERNAL at its path, which holds
+    the new rows; (c) the partition column survives — also under a
+    dynamic partition-overwrite session, where a partition left with no
+    rows must still disappear."""
+    from lakehouse_engine_spark.io.merge_writer import catalog_location
+    from lakehouse_engine_spark.io.table_lock import ConcurrentWriterError, WriterLock
+
+    ddl, part, rows, run, cols, want = _REWRITE_CASES[caller]
+    table = f"rewrite_{caller}"
+    path = os.path.join(tmp_dir, table)
+    spark.createDataFrame(rows, ddl).write.partitionBy(part).parquet(path)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(
+        f"CREATE TABLE {table} ({ddl}) USING parquet PARTITIONED BY ({part}) "
+        f"LOCATION '{path}'"
+    )
+    spark.sql(f"MSCK REPAIR TABLE {table}")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    try:
+        before = _data_files(path)
+        with WriterLock(spark, path, op="other writer"):
+            with pytest.raises(ConcurrentWriterError):
+                run(spark, table, path)
+        assert _data_files(path) == before  # (b)
+
+        spark.conf.set(key, "dynamic")
+        run(spark, table, path)
+        assert spark.conf.get(key) == "dynamic"  # restored after the write
+        typ, loc = catalog_location(spark, table)
+        assert typ == "EXTERNAL" and os.path.normpath(loc.replace("file:", "")) == path
+        assert_df_equal(spark.read.parquet(path), want, cols)  # (a)
+        assert [c.name for c in spark.catalog.listColumns(table) if c.isPartition] == [part]
+        entries = [n for n in os.listdir(path) if not n.startswith((".", "_")) or "=" in n]
+        assert entries and all(n.startswith(f"{part}=") for n in entries), entries  # (c)
+    finally:
+        spark.conf.unset(key)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_rewrites_only_through_merge_writer():
+    """Spark-free guard: algorithms/, core/ and terminators/ change rows in
+    place only through ``io.merge_writer``'s public functions — no
+    overwrite, no saveAsTable, no private merge_writer name of their own."""
+    import ast
+    import pathlib
+
+    import lakehouse_engine_spark
+
+    root = pathlib.Path(lakehouse_engine_spark.__file__).parent
+    hits = []
+    for sub in ("algorithms", "core", "terminators"):
+        for path in sorted((root / sub).rglob("*.py")):
+            where = path.relative_to(root)
+            for node in ast.walk(ast.parse(path.read_text(), str(path))):
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                    # .mode("overwrite"), or mode="overwrite" on save/parquet/…
+                    modes = node.args if node.func.attr == "mode" else [
+                        k.value for k in node.keywords if k.arg == "mode"
+                    ]
+                    if node.func.attr == "saveAsTable" or any(
+                        isinstance(m, ast.Constant) and m.value == "overwrite" for m in modes
+                    ):
+                        hits.append(f"{where}:{node.lineno} .{node.func.attr}(...)")
+                elif isinstance(node, ast.ImportFrom) and (node.module or "").endswith(
+                    "merge_writer"
+                ):
+                    hits += [
+                        f"{where}:{node.lineno} imports {a.name}"
+                        for a in node.names
+                        if a.name.startswith("_")
+                    ]
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "merge_writer"
+                    and node.attr.startswith("_")
+                ):
+                    hits.append(f"{where}:{node.lineno} merge_writer.{node.attr}")
+    assert not hits, hits
+
+
+def test_replace_where_keeps_rows_whose_predicate_is_null(spark, tmp_dir):
+    """``DELETE … WHERE p`` removes the rows where ``p`` is TRUE; a row where
+    it is NULL stays, and the non-Delta rewrite must agree."""
+    from lakehouse_engine_spark.io.merge_writer import replace_where
+
+    path = os.path.join(tmp_dir, "rw_null")
+    spark.createDataFrame([(1, "a"), (2, None), (3, "c")], "id INT, v STRING").write.parquet(path)
+    replace_where(
+        spark, "v = 'a'", spark.createDataFrame([(4, "d")], "id INT, v STRING"),
+        location=path, data_format="parquet",
+    )
+    assert_df_equal(spark.read.parquet(path), [(2, None), (3, "c"), (4, "d")])
