@@ -73,23 +73,20 @@ class SensorControlTable:
         return self._read().filter(F.col("sensor_id") == sensor_id).first()
 
     def upsert(self, spec: SensorSpec, status: str, upstream_key=None, upstream_value=None) -> None:
+        """Reference merge-set semantics (core/definitions.py
+        SENSOR_UPDATE_SET + _get_sensor_update_set): only sensor_id/status/
+        status_change_timestamp always update; assets, checkpoint_location
+        and upstream key/value update ONLY when provided — an existing row
+        keeps its values otherwise (a status-only update must not wipe the
+        sensor's identity fields). One merge with column sets, so the kept
+        values are read inside the merge, under its writer lock."""
         now = datetime.datetime.now(datetime.timezone.utc)
-        # reference merge-set semantics (core/definitions.py
-        # SENSOR_UPDATE_SET + _get_sensor_update_set): only sensor_id/
-        # status/status_change_timestamp always update; assets,
-        # checkpoint_location and upstream key/value update ONLY when
-        # provided — an existing row keeps its values otherwise (a
-        # status-only update must not wipe the sensor's identity fields)
-        existing = self.status_of(spec.sensor_id)
-
-        def resolve(value, field, default=None):
-            if value is not None:
-                return value
-            return existing[field] if existing is not None else default
-
-        def text(v):
-            return None if v is None else str(v)
-
+        given = {
+            "assets": list(spec.assets) if spec.assets else None,
+            "checkpoint_location": spec.checkpoint_location,
+            "upstream_key": None if upstream_key is None else str(upstream_key),
+            "upstream_value": None if upstream_value is None else str(upstream_value),
+        }
         # reference insert artifact (_convert_sensor_to_data applies str()
         # unconditionally): a brand-new row with no upstream stores the
         # literal "None" strings
@@ -97,20 +94,27 @@ class SensorControlTable:
             [
                 (
                     spec.sensor_id,
-                    resolve(list(spec.assets) if spec.assets else None, "assets"),
+                    given["assets"],
                     status,
                     now,
-                    resolve(spec.checkpoint_location, "checkpoint_location"),
-                    resolve(text(upstream_key), "upstream_key", "None"),
-                    resolve(text(upstream_value), "upstream_value", "None"),
+                    given["checkpoint_location"],
+                    str(given["upstream_key"]),
+                    str(given["upstream_value"]),
                 )
             ],
             SENSOR_SCHEMA,
         )
+        cols = SENSOR_SCHEMA.fieldNames()
         merge_writer.merge(
             self.spark,
             new_row,
-            MergeOptions(merge_predicate="current.sensor_id = new.sensor_id"),
+            MergeOptions(
+                merge_predicate="current.sensor_id = new.sensor_id",
+                update_column_set={
+                    c: f"new.{c}" for c in cols if c not in given or given[c] is not None
+                },
+                insert_column_set={c: f"new.{c}" for c in cols},
+            ),
             location=self.target if self.is_path else None,
             db_table=None if self.is_path else self.target,
             data_format=ExecEnv.default_output_format(),

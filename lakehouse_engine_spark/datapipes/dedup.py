@@ -50,6 +50,7 @@ from lakehouse_engine_spark.datapipes.materialize import (
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 from lakehouse_engine_spark.datapipes.registry import register, register_with
 from lakehouse_engine_spark.datapipes.text import shingles, tokens_lower, winnow_fingerprint
+from lakehouse_engine_spark.utils import fs_utils
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -1698,102 +1699,26 @@ def dedup_semantic_hier(
     return _dedup
 
 
-def _state_fs(spark, location: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(location)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, jpath
-
-
-def _state_path_exists(spark, location: str) -> bool:
-    """True iff the digest-state path exists, AFTER recovering any
-    interrupted compaction swap. Only the genuinely-missing case may be
-    treated as 'first run' — a corrupt state file or a transient
-    FS/permission error must propagate, otherwise cross-run dedup
-    silently disables itself and re-emits previously-seen rows."""
-    from lakehouse_engine_spark.utils.fs_utils import path_exists
-
-    _recover_state(spark, location)
-    return path_exists(spark, location)
-
-
-def _recover_state(spark, location: str) -> None:
-    """Heal an interrupted ``_compact_state`` swap. The swap window is
-    rename(live -> __old); rename(staging -> live); delete(__old) — a
-    crash inside it leaves either (a) no live dir + a complete ``__old``
-    (restore it: the backup holds the full pre-compaction state, and
-    compaction never changes content) or (b) both live and ``__old``
-    (the second rename landed: drop the stale backup). Without this, a
-    crash in window (a) makes the next run see 'no state' and silently
-    re-emit every previously-seen row."""
-    jvm, fs, jpath = _state_fs(spark, location)
-    backup = jvm.org.apache.hadoop.fs.Path(location + "__old")
-    if not fs.exists(backup):
-        return
-    if fs.exists(jpath):
-        fs.delete(backup, True)
-        return
-    if not fs.rename(backup, jpath):
-        raise RuntimeError(
-            f"dedup state recovery: could not restore {location}__old to "
-            f"{location}; the digest state is intact at the backup path — "
-            "restore it manually before rerunning"
-        )
-
-
 def _compact_state(spark, location: str, max_files: int) -> None:
     """Rewrite the digest state as a small number of files once the
     accumulated per-run appends exceed ``max_files`` parquet parts. At
     daily-ingest cadence the state otherwise becomes thousands of tiny
-    files and every anti-join pays their open/footer cost. The rewrite
-    stages into a sibling ``<location>__compacting`` dir and swaps via
-    two FileSystem renames with a ``__old`` backup. Every rename's
-    return value is checked (HDFS renames report failure by returning
-    false — an unchecked first rename would make the second one move the
-    staging dir INSIDE the live state), and ``_recover_state`` heals the
-    one non-atomic window (live dir absent, backup present) on the next
-    access. On object stores without atomic dir rename (S3A), renames are
-    slow copies — prefer ``compact_after_files=0`` there and compact
-    offline, as the docstring window is longer though still recoverable."""
-    jvm, fs, jpath = _state_fs(spark, location)
-    _recover_state(spark, location)
-    part_files = [
-        f
-        for f in fs.listStatus(jpath)
-        if f.getPath().getName().startswith("part-")
-    ]
-    if len(part_files) <= max_files:
+    files and every anti-join pays their open/footer cost. The rewrite is
+    the ``fs_utils`` commit (stage into ``<location>__staging``, swap with
+    a ``__old`` backup); the ``fs_utils.heal`` every incremental op runs
+    before reading the state repairs a crash inside the swap, so no later
+    run can mistake it for a first run. On object stores without atomic
+    dir rename (S3A), renames are slow copies — prefer
+    ``compact_after_files=0`` there and compact offline."""
+    parts = [n for n in fs_utils.list_names(spark, location) if n.startswith("part-")]
+    if len(parts) <= max_files:
         return
-    staging = jvm.org.apache.hadoop.fs.Path(location + "__compacting")
-    if fs.exists(staging):
-        fs.delete(staging, True)
     state = spark.read.parquet(location).select("digest").distinct()
     # ~1M md5 digests per file keeps files in the tens of MB
     n_rows = state.count()
     n_files = max(1, (n_rows + 999_999) // 1_000_000)
-    state.coalesce(n_files).write.mode("overwrite").parquet(str(staging))
-    backup = jvm.org.apache.hadoop.fs.Path(location + "__old")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if not fs.rename(jpath, backup):
-        raise RuntimeError(
-            f"dedup state compaction: rename {location} -> {location}__old "
-            "failed; state left untouched"
-        )
-    if not fs.rename(staging, jpath):
-        # live dir is momentarily absent; put the backup straight back so
-        # no later run can mistake this for a first run
-        if not fs.rename(backup, jpath):
-            raise RuntimeError(
-                f"dedup state compaction: swap failed AND restore failed; "
-                f"full state preserved at {location}__old — restore it "
-                "manually before rerunning"
-            )
-        raise RuntimeError(
-            f"dedup state compaction: rename {location}__compacting -> "
-            f"{location} failed; original state restored"
-        )
-    fs.delete(backup, True)
+    fs_utils.stage(spark, location, state.coalesce(n_files))
+    fs_utils.swap(spark, location)
 
 
 @register("dedup_incremental_exact")
@@ -1826,9 +1751,13 @@ def dedup_incremental_exact(
     pick is the same min-id aggregation as ``dedup_exact``; the append
     writes only NEW digests. State grows by unique-new keys per run; when
     the accumulated appends exceed ``compact_after_files`` parquet parts
-    the state is rewritten in place (distinct digests, ~1M rows/file) so
-    a daily-cadence pipeline never degrades into a thousands-of-small-
-    files anti-join scan. Set ``compact_after_files=0`` to disable.
+    the state is rewritten (distinct digests, ~1M rows/file) so a
+    daily-cadence pipeline never degrades into a thousands-of-small-files
+    anti-join scan. The rewrite is crash-safe: stage into
+    ``<state_location>__staging``, swap with two renames through a
+    ``__old`` backup, and heal an interrupted swap on the next access —
+    between the renames a reader outside the engine briefly sees no state
+    (``utils/fs_utils``). Set ``compact_after_files=0`` to disable.
     """
     if not key_cols:
         raise ValueError("dedup_incremental_exact: key_cols must be non-empty")
@@ -1851,7 +1780,7 @@ def dedup_incremental_exact(
         # state file or transient FS error must fail the batch loudly —
         # treating it as "first run" would re-emit previously-seen rows and
         # append duplicate digests to the state.
-        have_state = _state_path_exists(spark, state_location)
+        have_state = fs_utils.heal(spark, state_location)
         seen = (
             spark.read.parquet(state_location).select("digest")
             if have_state
@@ -1937,7 +1866,7 @@ def dedup_incremental_minhash(
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
         exploded = _band_exploded(sig, bands, rows).persist()
         try:
-            have_state = _state_path_exists(spark, state_location)
+            have_state = fs_utils.heal(spark, state_location)
             fresh_exploded = exploded
             if have_state:
                 seen = spark.read.parquet(state_location).select(
@@ -2086,7 +2015,7 @@ def dedup_incremental_embedding(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            have_state = _state_path_exists(spark, state_location)
+            have_state = fs_utils.heal(spark, state_location)
             fresh_sigs = sigs
             hist_ids = None
             if have_state:
@@ -2559,7 +2488,7 @@ def text_winnow_incremental(
             .select(F.col(id_col).alias("__id"), "fp")
             .distinct()
         )
-        have_state = _state_path_exists(spark, state_location)
+        have_state = fs_utils.heal(spark, state_location)
         if have_state:
             # state column named `digest` (a BIGINT fp here) so the
             # family-shared _compact_state rewrite applies unchanged

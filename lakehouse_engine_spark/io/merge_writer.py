@@ -6,12 +6,17 @@ insert-only mode) and the reference's ``DELETE … WHERE`` + append
 statements (GAB delete-insert, ``delete_where``, CDF retention). With
 delta-spark installed these are a real ``DeltaTable.merge`` and a real
 ``DELETE``. Without Delta every in-place row change here is ONE rewrite
-(:func:`_rewrite`): lock the target's path, build the new contents from
-the target, ``localCheckpoint`` them, then overwrite — keeping an
-EXTERNAL table at its path and the target's partition columns. MERGE
-builds one filter + projection over a full outer join of target and
-source; ``replace_where`` builds ``NOT (predicate)`` plus the new rows.
-Correct, but O(target) IO; the Delta path is the 100 TB path.
+(:func:`_rewrite`) committed like a Delta log entry would be, stage →
+verify → swap → heal: lock the target's path, heal an interrupted swap,
+build the new contents from the target into ``<loc>__staging`` (keeping
+the target's partition columns), verify the lock, then swap the staged dir
+in with two renames (``utils/fs_utils``). A failed write job leaves
+the old table whole; readers outside the engine can briefly see no table
+between the two renames, and the next engine access heals a crash there.
+A catalog table keeps its entry (managed or EXTERNAL). MERGE builds one
+filter + projection over a full outer join of target and source;
+``replace_where`` builds ``NOT (predicate)`` plus the new rows. Correct,
+but O(target) IO; the Delta path is the 100 TB path.
 
 Merge predicates reference the aliases ``current`` (target) and ``new``
 (source), exactly as in the reference.
@@ -19,17 +24,18 @@ Merge predicates reference the aliases ``current`` (target) and ``new``
 
 from __future__ import annotations
 
-from contextlib import nullcontext
 from typing import Optional
 
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lakehouse_engine_spark.core.definitions import MergeOptions
 from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io.table_lock import WriterLock
+from lakehouse_engine_spark.utils import fs_utils
 
 
 def merge(
@@ -86,9 +92,7 @@ def replace_where(
 def _target_exists(spark: SparkSession, location: Optional[str], db_table: Optional[str]) -> bool:
     if db_table:
         return spark.catalog.tableExists(db_table)
-    from lakehouse_engine_spark.utils.fs_utils import path_exists
-
-    return path_exists(spark, location)
+    return fs_utils.path_exists(spark, location)
 
 
 def _merge_delta(spark, df, opts: MergeOptions, location, db_table) -> None:
@@ -144,14 +148,6 @@ def catalog_location(spark, db_table):
     info = {r["col_name"]: r["data_type"] for r in rows}
     typ = str(info.get("Type") or "").strip().upper() or None
     return typ, info.get("Location")
-
-
-def _table_location(spark, db_table):
-    """The Location of an EXTERNAL table, None for a managed one.
-    saveAsTable(overwrite) recreates the table, so an EXTERNAL target
-    must be re-pinned to its path or it silently turns managed."""
-    typ, loc = catalog_location(spark, db_table)
-    return loc if typ == "EXTERNAL" else None
 
 
 # location -> qualified table name, filled by successful lookups so a
@@ -282,90 +278,94 @@ def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_forma
     _rewrite(spark, db_table, location, data_format, "merge", merged, first_load)
 
 
-_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
-
-
 def _rewrite(spark, db_table, location, data_format, op, rebuild, first_load) -> None:
-    """Overwrite a table or path target with ``rebuild(target)``, or with
+    """Replace a table or path target with ``rebuild(target)``, or with
     ``first_load()`` when the target does not exist yet.
 
-    Concurrency: the whole read→rebuild→overwrite runs under the
-    best-effort :class:`~lakehouse_engine_spark.io.table_lock.WriterLock`
-    on the target's path — two engine writers racing the same target get
-    ONE winner and one loud ``ConcurrentWriterError`` instead of a silent
-    lost-update (real Delta serializes via atomic log commits). One
-    catalog lookup per rewrite: the same Location anchors the lock and
-    re-pins an EXTERNAL table on the overwrite. The overwrite keeps the
-    partition columns of the relation Spark resolved for the target (the
-    catalog's for a table, the discovered directory layout for a path),
-    and is static whatever the session's partition overwrite mode, so a
-    partition left with no rows is removed.
+    Stage → verify → swap → heal (``utils/fs_utils``): under the best-effort
+    :class:`~lakehouse_engine_spark.io.table_lock.WriterLock` on the
+    target's path, heal an interrupted swap, read the target, stage the
+    result in ``<loc>__staging``, ``lock.verify()``, then swap it in with
+    two renames. Two engine writers racing the same target get ONE winner
+    and one loud ``ConcurrentWriterError`` instead of a silent lost-update
+    (real Delta serializes via atomic log commits). A failure before the
+    second rename keeps the old table (a crash between the renames is
+    healed back to it); after it, the new one stands.
+
+    A catalog table, managed or EXTERNAL, is resolved to its Location by
+    one catalog lookup and keeps its catalog entry; only a missing table is
+    created, by ``saveAsTable``. Columns that autoMerge adds reach the
+    catalog before the swap, so no crash can leave files whose columns the
+    catalog does not know (a failed swap leaves them all null); partitions
+    and statistics follow the swap (:func:`_sync_catalog`). The staged write keeps the partition columns
+    of the relation Spark resolved for the target (the catalog's for a
+    table, the discovered directory layout for a path) and is static
+    whatever the session's partition overwrite mode, so a partition left
+    with no rows is removed.
     """
     fmt = data_format if data_format != "delta" else "parquet"
-    table_loc = _table_location(spark, db_table) if db_table else None
-    lock_loc = location or table_loc
-    # a managed table with no resolvable path (embedded single-process
-    # metastore) has nothing to anchor a lock file to: it proceeds under
-    # the documented single-writer assumption
-    with (WriterLock(spark, lock_loc, op=op) if lock_loc else nullcontext()) as lock:
+    if db_table:
+        _, location = catalog_location(spark, db_table)
+        if location is None:
+            first_load().write.format(fmt).mode("overwrite").saveAsTable(db_table)
+            return
+    with WriterLock(spark, location, op=op) as lock:
         target = _read_target(spark, db_table, location, fmt)
         if target is None:
             result, parts = first_load(), []
         else:
-            parts = _partition_columns(target)
-            # materialize before overwriting the table we read from
-            result = rebuild(target).localCheckpoint(eager=True)
-        if lock is not None:
-            # last gate before the destructive overwrite: if another writer
-            # stole the lock (treated ours as stale), our materialized
-            # result no longer includes their update — refuse loudly
-            lock.verify()
-        writer = result.write.format(fmt).mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        if not db_table:
-            writer.option("partitionOverwriteMode", "static").save(location)
-            return
-        if table_loc:
-            writer = writer.option("path", table_loc)
-        # the files of an EXTERNAL table outlive saveAsTable's drop, so a
-        # partitioned one needs a static overwrite; saveAsTable would keep
-        # the option as a table property, so a dynamic-mode session is
-        # switched to static for this one write instead
-        mode = spark.conf.get(_OVERWRITE_MODE)
-        pin = bool(parts and table_loc) and mode.lower() == "dynamic"
-        if pin:
-            spark.conf.set(_OVERWRITE_MODE, "static")
-        try:
-            writer.saveAsTable(db_table)
-        finally:
-            if pin:
-                spark.conf.set(_OVERWRITE_MODE, mode)
-        # the overwrite REPLACED the files under the table's path; other
-        # relations cached against that path would otherwise resolve the
-        # deleted part files
-        spark.catalog.refreshTable(db_table)
-        if table_loc:
-            spark.catalog.refreshByPath(table_loc)
+            result, parts = rebuild(target), _partition_columns(target)
+        fs_utils.stage(spark, location, result, fmt, parts)
+        lock.verify()
+        if db_table:
+            known = {c.lower() for c in target.columns}
+            added = [f_ for f_ in result.schema.fields if f_.name.lower() not in known]
+            if added:
+                spark.sql(f"ALTER TABLE {db_table} ADD COLUMNS ({StructType(added).toDDL()})")
+        fs_utils.swap(spark, location)
+        if db_table:
+            _sync_catalog(spark, db_table, parts)
 
 
 def _read_target(spark, db_table, location, fmt) -> Optional[DataFrame]:
-    """The target, or None when it does not exist yet.
+    """The target after healing an interrupted swap, or None when it does
+    not exist yet.
 
     A real existence check, not a read wrapped in a bare except: the
     missing branch OVERWRITES the target as a first load, so a corrupt
-    table or a transient FS error must not read as missing. A pre-created
-    EMPTY target dir (DDL, no data) counts as missing."""
-    if not _target_exists(spark, location, db_table):
+    table or a transient FS error must not read as missing. A catalog
+    table always exists (an empty or missing dir reads as its declared
+    schema); for a path, a pre-created EMPTY dir (DDL, no data) counts as
+    missing."""
+    exists = fs_utils.heal(spark, location)
+    if db_table:
+        # a swap that landed just before a crash left the catalog behind
+        # the files: sync it before resolving the read
+        _sync_catalog(spark, db_table, _partition_columns(spark.read.table(db_table)))
+        return spark.read.table(db_table)
+    if not exists:
         return None
     try:
-        target = spark.read.table(db_table) if db_table else spark.read.format(fmt).load(location)
+        target = spark.read.format(fmt).load(location)
         target.schema  # force schema resolution now
     except Exception as exc:
         if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "Unable to infer" in str(exc):
             return None
         raise
     return target
+
+
+def _sync_catalog(spark, db_table, parts) -> None:
+    """Bring a kept catalog entry in line with the files a swap put in place:
+    the partition values on disk, no statistics of the swapped-out files (as
+    after Spark's own overwrite), and a relation Spark lists afresh."""
+    if parts:
+        spark.sql(f"MSCK REPAIR TABLE {db_table} SYNC PARTITIONS")
+    state = spark._jsparkSession.sessionState()
+    state.catalog().alterTableStats(
+        state.sqlParser().parseTableIdentifier(db_table), spark._jvm.scala.Option.empty()
+    )
+    spark.catalog.refreshTable(db_table)
 
 
 def _partition_columns(target: DataFrame) -> list:

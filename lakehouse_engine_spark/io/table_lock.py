@@ -7,12 +7,21 @@ which under two concurrent writers silently loses one writer's work.
 The writers that hold this lock:
 
 - ``io/merge_writer._rewrite``, the one non-Delta table rewrite, for a
-  path target or an EXTERNAL table: ``merge`` (merge writes, the sensor
-  upsert, the heartbeat control merge) and ``replace_where`` (GAB
-  delete-insert, ``TableManager.delete_where``, the CDF retention clean);
+  path target or a catalog table (managed or EXTERNAL, at its catalog
+  Location): ``merge`` (merge writes, the sensor upsert, the heartbeat
+  control merge) and ``replace_where`` (GAB delete-insert,
+  ``TableManager.delete_where``, the CDF retention clean). It holds the
+  lock across heal → read → stage → ``verify()`` → swap
+  (``utils/fs_utils`` stage and swap);
 - ``io/cdf_commit_log.record_commit``, the CDF sidecar commit log.
 
-This module narrows that window with the strongest
+The lock file is ``<location>._lhe_writer.lock`` (:func:`lock_path`),
+BESIDE the table dir rather than inside it: the commit swap renames the
+live dir away, and a Spark overwrite of the dir would delete anything in
+it, so a lock inside would vanish mid-rewrite and let a second writer
+claim the table — or heal it — while the first is between its renames.
+
+This module narrows the lost-update window with the strongest
 primitive each filesystem offers: on a LOCAL path, a true ``O_EXCL``
 claim (payload staged to a temp file, then hard-linked into place —
 the lock appears atomically WITH its payload); elsewhere,
@@ -33,7 +42,7 @@ documented single-writer assumption):
   strictly narrower than no lock at all, never a serializability proof.
 - a writer whose lock was stolen mid-flight (a second writer treated it
   as stale, or deleted it manually) detects the foreign token at commit
-  time via :meth:`WriterLock.verify` and raises BEFORE overwriting.
+  time via :meth:`WriterLock.verify` and raises BEFORE its swap.
 - a crashed writer's lock auto-expires after ``stale_after_s`` (the next
   writer logs a warning and replaces it), so the guard cannot deadlock
   an unattended pipeline.
@@ -63,18 +72,24 @@ class ConcurrentWriterError(RuntimeError):
     silently drop the other writer's update. Remediation: serialize the
     writers (one engine job per degraded-delta table at a time — the
     documented contract), or, after a confirmed crash, delete the stale
-    ``_lhe_writer.lock`` / wait out ``stale_after_s``.
+    ``<location>._lhe_writer.lock`` / wait out ``stale_after_s``.
     """
 
 
-def _fs_path(spark: SparkSession, location: str, name: str):
+def lock_path(location: str) -> str:
+    """``<location>._lhe_writer.lock``: beside the table dir, not inside it,
+    so the lock survives the commit swap that replaces the dir."""
+    return f"{location.rstrip('/')}.{LOCK_NAME}"
+
+
+def _fs_path(spark: SparkSession, location: str):
     jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(location.rstrip("/") + "/" + name)
+    path = jvm.org.apache.hadoop.fs.Path(lock_path(location))
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path, jvm
 
 
 def _read_lock(spark: SparkSession, location: str) -> Optional[dict]:
-    fs, path, jvm = _fs_path(spark, location, LOCK_NAME)
+    fs, path, jvm = _fs_path(spark, location)
     try:
         if not fs.exists(path):
             return None
@@ -109,7 +124,7 @@ class WriterLock:
     >>> with WriterLock(spark, location, op="merge"):
     ...     ...read-modify-write...
 
-    ``verify()`` may be called immediately before the final overwrite to
+    ``verify()`` may be called immediately before the destructive step to
     assert the lock still carries OUR token (detects mid-flight steals).
     The context exit releases the lock only when the token is still ours
     — a stolen lock belongs to the thief and is left alone.
@@ -180,9 +195,9 @@ class WriterLock:
             out.close()
 
     def __enter__(self) -> "WriterLock":
-        fs, path, _ = _fs_path(self._spark, self._location, LOCK_NAME)
-        # parent must exist for create(); the data write that follows
-        # creates it anyway, so make it eagerly
+        fs, path, _ = _fs_path(self._spark, self._location)
+        # the lock sits beside the table dir: its parent must exist for
+        # create(), and the data write that follows needs it anyway
         fs.mkdirs(path.getParent())
         payload = json.dumps(
             {
@@ -249,7 +264,7 @@ class WriterLock:
                     continue
                 raise ConcurrentWriterError(
                     f"concurrent writer detected at {self._location}: lock "
-                    f"{LOCK_NAME} held by pid {holder.get('pid')} "
+                    f"{lock_path(self._location)} held by pid {holder.get('pid')} "
                     f"(op={holder.get('op')!r}, {age:.0f}s old). Degraded-"
                     "delta targets support ONE writer at a time (real Delta "
                     "serializes via atomic log commits); serialize the jobs, "
@@ -262,14 +277,15 @@ class WriterLock:
 
     def verify(self) -> None:
         """Assert the lock still carries our token (call right before the
-        destructive overwrite). A foreign token means another writer
+        destructive step: the commit swap, the log overwrite). A foreign
+        token means another writer
         treated ours as stale and claimed the table mid-flight."""
         holder = _read_lock(self._spark, self._location)
         if holder is None or holder.get("token") != self._token:
             raise ConcurrentWriterError(
                 f"writer lock at {self._location} was taken over mid-write "
                 f"(now held by pid {(holder or {}).get('pid')!r}) — refusing "
-                "to overwrite: the other writer's view of the table no "
+                "to commit: the other writer's view of the table no "
                 "longer includes this writer's base state."
             )
 
@@ -277,7 +293,7 @@ class WriterLock:
         try:
             holder = _read_lock(self._spark, self._location)
             if holder is not None and holder.get("token") == self._token:
-                fs, path, _ = _fs_path(self._spark, self._location, LOCK_NAME)
+                fs, path, _ = _fs_path(self._spark, self._location)
                 fs.delete(path, False)
         except Exception:  # pragma: no cover - release is best-effort
             _LOGGER.warning(

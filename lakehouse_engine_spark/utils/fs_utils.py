@@ -1,4 +1,4 @@
-"""Filesystem existence checks that distinguish 'missing' from 'broken'.
+"""Filesystem existence checks, and the one crash-safe directory commit.
 
 Several stateful flows (delta-merge first load, sensor control table,
 cross-run dedup state) branch on "does the target exist yet?". Wrapping
@@ -8,11 +8,48 @@ fallback for "missing" is destructive in every one of those flows
 (overwrite the target, treat all sensors as never-fired, re-emit
 previously-ingested rows). These helpers ask the filesystem the actual
 question, so real failures propagate.
+
+The commit replaces a whole directory without Delta's log. The non-Delta
+table rewrite (``io/merge_writer._rewrite``) and the incremental-dedup state
+compaction (``datapipes/dedup._compact_state``) both run it:
+
+1. **stage** (:func:`stage`) — write the new contents to the sibling
+   ``<location>__staging`` (a static overwrite, so a leftover staging dir
+   from a crash is cleared); nothing touches the live dir, so a failed
+   write job leaves it as it was;
+2. **verify** — the caller's last check (the writer lock's token);
+3. **swap** (:func:`swap`) — rename live → ``<location>__old``, staging →
+   live, then delete ``__old``. Each rename's return value is checked (HDFS
+   reports failure by returning false; an unchecked first rename would move
+   staging INSIDE the live dir), and a failed second rename puts the backup
+   straight back;
+4. **heal** — :func:`heal`, run before every read of the location, finishes
+   what a crash inside the swap left: no live dir plus a complete ``__old``
+   is restored (the commit point is the second rename, so the old contents
+   win); a live dir beside a leftover ``__old`` means the swap landed, and
+   the backup is dropped.
+
+Readers outside the engine (a plain ``spark.read`` of the path, another
+engine) can briefly see no directory between the two renames. On object
+stores without atomic directory rename (S3A) each rename is a copy, so that
+window is as long as copying the table — still recoverable by :func:`heal`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+
+STAGING = "__staging"
+BACKUP = "__old"
+_MANUAL = "the full previous state is at the backup path; restore it manually before rerunning"
+
+
+def _fs(spark: SparkSession, location: str):
+    """``(FileSystem, Path)`` of ``location`` — the one Hadoop accessor here."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(location)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
 def path_exists(spark: SparkSession, location: str) -> bool:
@@ -21,10 +58,8 @@ def path_exists(spark: SparkSession, location: str) -> bool:
     read probe narrowly matched on path-not-found under Spark Connect
     (no ``_jvm``); any other read error propagates."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(location)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
+        fs, path = _fs(spark, location)
+        return bool(fs.exists(path))
     except AttributeError:  # Spark Connect: no _jvm
         from pyspark.errors import AnalysisException
 
@@ -35,3 +70,58 @@ def path_exists(spark: SparkSession, location: str) -> bool:
             if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
                 return False
             raise
+
+
+def list_names(spark: SparkSession, location: str) -> list:
+    """Names of the entries directly under ``location``."""
+    fs, path = _fs(spark, location)
+    return [st.getPath().getName() for st in fs.listStatus(path)]
+
+
+def heal(spark: SparkSession, location: str) -> bool:
+    """Finish an interrupted :func:`swap` at ``location``; True iff
+    the live dir exists afterwards. Without the restore, a crash between
+    the two renames would read as "no table" — a first load that
+    overwrites, or a dedup run that re-emits every previously-seen row.
+    Run it only where no other writer can be mid-swap — under the table's
+    writer lock, or under the dedup state's one-writer contract — or it
+    would restore the backup under a live swap."""
+    fs, live = _fs(spark, location)
+    backup = live.suffix(BACKUP)
+    if fs.exists(backup):
+        if fs.exists(live):
+            fs.delete(backup, True)
+        elif not fs.rename(backup, live):
+            raise RuntimeError(f"{location}: could not restore {BACKUP}; {_MANUAL}")
+        spark.catalog.refreshByPath(location)
+    return bool(fs.exists(live))
+
+
+def stage(
+    spark: SparkSession,
+    location: str,
+    df: DataFrame,
+    data_format: str = "parquet",
+    partition_by: Sequence[str] = (),
+) -> None:
+    """Write ``df`` to ``<location>__staging`` as a static overwrite. ``df``
+    may read ``location`` itself: the live dir is not touched."""
+    writer = df.write.format(data_format).mode("overwrite").partitionBy(*partition_by)
+    writer.option("partitionOverwriteMode", "static").save(location.rstrip("/") + STAGING)
+
+
+def swap(spark: SparkSession, location: str) -> None:
+    """Move the staged dir into place: live → ``__old``, staging → live,
+    delete ``__old`` (module docstring)."""
+    fs, live = _fs(spark, location)
+    staged, backup = live.suffix(STAGING), live.suffix(BACKUP)
+    # a first load has no live dir to back up
+    if heal(spark, location) and not fs.rename(live, backup):
+        raise RuntimeError(f"{location}: rename to {BACKUP} failed; state left untouched")
+    if not fs.rename(staged, live):
+        # the live dir is momentarily absent: put the backup straight back
+        if fs.exists(backup) and not fs.rename(backup, live):
+            raise RuntimeError(f"{location}: swap failed AND restore failed; {_MANUAL}")
+        raise RuntimeError(f"{location}: rename of {STAGING} failed; original state restored")
+    fs.delete(backup, True)
+    spark.catalog.refreshByPath(location)

@@ -3468,10 +3468,10 @@ def test_dedup_incremental_compaction_rename_failure_both_legs(
     restore rename also fails. Every leg must raise loudly, never lose
     the live state, and never let a later run silently re-emit
     previously-seen rows."""
-    from lakehouse_engine_spark.datapipes import dedup as dedup_mod
+    from lakehouse_engine_spark.utils import fs_utils
 
     state = tmp_path / "digests"
-    real_state_fs = dedup_mod._state_fs
+    real_fs = fs_utils._fs
 
     def run(keys, compact_after=99):
         df = spark.createDataFrame(
@@ -3486,10 +3486,10 @@ def test_dedup_incremental_compaction_rename_failure_both_legs(
 
     def inject(fail_when):
         def patched(spark_, location):
-            jvm, fs, jpath = real_state_fs(spark_, location)
-            return jvm, _RenameFailFS(fs, fail_when), jpath
+            fs, path = real_fs(spark_, location)
+            return _RenameFailFS(fs, fail_when), path
 
-        monkeypatch.setattr(dedup_mod, "_state_fs", patched)
+        monkeypatch.setattr(fs_utils, "_fs", patched)
 
     # seed three runs without compaction -> 3+ part files, 3 known keys
     assert run(["alpha"]) == {"alpha"}
@@ -3500,28 +3500,28 @@ def test_dedup_incremental_compaction_rename_failure_both_legs(
     inject(lambda s, d: d.endswith("__old"))
     with pytest.raises(RuntimeError, match="state left untouched"):
         run(["delta"], compact_after=1)
-    monkeypatch.setattr(dedup_mod, "_state_fs", real_state_fs)
+    monkeypatch.setattr(fs_utils, "_fs", real_fs)
     assert state.exists() and not (tmp_path / "digests__old").exists()
     # no silent re-emit of ANY previously-seen key (incl. the failing
     # run's batch — its digests were appended before the compaction)
     assert run(["alpha", "beta", "gamma", "delta", "eps1"]) == {"eps1"}
 
     # leg 2: rename(staging -> live) fails -> backup restored in place
-    inject(lambda s, d: s.endswith("__compacting"))
+    inject(lambda s, d: s.endswith("__staging"))
     with pytest.raises(RuntimeError, match="original state restored"):
         run(["zeta"], compact_after=1)
-    monkeypatch.setattr(dedup_mod, "_state_fs", real_state_fs)
+    monkeypatch.setattr(fs_utils, "_fs", real_fs)
     assert state.exists() and not (tmp_path / "digests__old").exists()
     assert run(["alpha", "delta", "zeta", "eps2"]) == {"eps2"}
 
     # leg 3: swap fails AND restore fails -> full state preserved at the
     # __old backup, error says so, and the NEXT access heals it
-    inject(lambda s, d: s.endswith("__compacting") or s.endswith("__old"))
+    inject(lambda s, d: s.endswith("__staging") or s.endswith("__old"))
     with pytest.raises(RuntimeError, match="restore it manually"):
         run(["eta"], compact_after=1)
-    monkeypatch.setattr(dedup_mod, "_state_fs", real_state_fs)
+    monkeypatch.setattr(fs_utils, "_fs", real_fs)
     assert (tmp_path / "digests__old").exists() and not state.exists()
-    # next run recovers via _recover_state and still dedups history
+    # next run recovers via fs_utils.heal and still dedups history
     assert run(["beta", "zeta", "eta", "eps3"]) == {"eps3"}
     assert state.exists() and not (tmp_path / "digests__old").exists()
 
@@ -3556,7 +3556,7 @@ def test_dedup_incremental_state_compaction(spark, tmp_path):
     parts = [p for p in state.iterdir() if p.name.startswith("part-")]
     assert len(parts) <= 5, [p.name for p in parts]
     # no staging/backup leftovers
-    assert not (tmp_path / "digests__compacting").exists()
+    assert not (tmp_path / "digests__staging").exists()
     assert not (tmp_path / "digests__old").exists()
 
 
