@@ -317,7 +317,6 @@ class Heartbeat:
         self._merge_control(feed.select(*cast_cols))
 
     def _merge_control(self, updates: DataFrame) -> None:
-        updates = updates.localCheckpoint(eager=True)
         merge_writer.merge(
             self.spark,
             updates,

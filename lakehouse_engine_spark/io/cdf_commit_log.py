@@ -4,11 +4,35 @@ Runtimes without delta-spark degrade ``delta`` writes to parquet, so
 there is no ``_delta_log`` for ``expose_cdf`` to read commit versions
 from (reference ``terminators/cdf_processor.py:59-87`` gets true
 versions from the Delta log). This module is the emulation's stand-in:
-every engine APPEND to a degraded-delta location records one commit
-entry — ``{version, ts, files added}`` — in ``_cdf_commits.json`` next
-to the data (underscore-prefixed: Spark scans ignore it). Two appends
-between materializations therefore yield two ``_commit_version``s, per
-Delta semantics, instead of collapsing into one per materialization.
+every engine write to a degraded-delta location records one commit
+entry — ``{version, ts, files added}``. Two appends between
+materializations therefore yield two ``_commit_version``s, per Delta
+semantics, instead of collapsing into one per materialization.
+
+Placement: the log is ``<location>._lhe_cdf_commits.json``
+(:func:`log_path`), BESIDE the table dir like the writer lock, not inside
+it — a Spark overwrite deletes everything in the dir and the merge
+writer's commit swap replaces the dir, so a log inside lost the version
+history on every overwrite or merge and the next append restarted at 1.
+Logs that older versions kept inside the dir are not migrated: every
+overwrite or merge already deleted them.
+
+The version counter is monotone: an overwrite restarts the file history
+(the old files are gone) but continues the numbering, matching Delta's;
+a merge swap records nothing, and the next append's entry claims the
+files it left. The log is read and committed through ``utils/fs_utils``
+(:func:`~lakehouse_engine_spark.utils.fs_utils.read_text`,
+:func:`~lakehouse_engine_spark.utils.fs_utils.write_text`): a write
+stages the new log and swaps it in, so a failure at any point leaves
+the old log or the new one, never a truncated one.
+
+File identity: entries name each data file by the URI that Hadoop's
+``Path.toUri()`` gives — percent-encoded, as Spark's
+``_metadata.file_path`` reports it (``…/my%20tbl/part-…``; the decoded
+``Path.toString()`` never matched a location with a space in it). A local
+file's ``file:`` prefix differs between the two (Hadoop lists
+``file:///…``, Spark reports ``file:/…``), so both sides drop it
+(:data:`LOCAL_SCHEME`, :func:`file_id`); other schemes keep theirs.
 
 Cost model (why this scales): the log is written per COMMIT, not per
 row — one recursive file listing plus one small JSON read-modify-write,
@@ -22,9 +46,9 @@ file identity), only writes that go THROUGH the engine's writers are
 logged — foreign appends fall back to the materialization-counter
 versioning in ``terminator_factory`` — and the log's
 read-modify-write targets ONE writer per table (the same contract as
-the parquet merge fallback's overwrite; real Delta gets multi-writer
+the parquet merge fallback's rewrite; real Delta gets multi-writer
 safety from atomic log commits, which raw object stores cannot
-provide). Since round 13 that contract is ENFORCED best-effort by
+provide). That contract is ENFORCED best-effort by
 ``io/table_lock.WriterLock``: two engine writers racing the log
 SERIALIZE through a short retry budget; persistent contention skips
 the entry with a warning (never failing the already-landed data write
@@ -36,36 +60,36 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 from typing import List, Optional
 
 from pyspark.sql import SparkSession
 
+from lakehouse_engine_spark.utils import fs_utils
+
 _LOGGER = logging.getLogger(__name__)
 
-LOG_NAME = "_cdf_commits.json"
+LOG_NAME = "_lhe_cdf_commits.json"
+LOCAL_SCHEME = "^file:/+"
 
 
-def _fs_and_path(spark: SparkSession, location: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(location)
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path, jvm
+def log_path(location: str) -> str:
+    """``<location>._lhe_cdf_commits.json``: beside the table dir, so
+    overwrites and commit swaps of the dir keep it."""
+    return f"{location.rstrip('/')}.{LOG_NAME}"
 
 
-def _normalize(p: str) -> str:
-    """Scheme-insensitive path identity: ``file:/x``, ``file:///x`` and
-    ``/x`` all name the same local file."""
-    if p.startswith("file:"):
-        p = p[len("file:") :]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
+def file_id(uri: str) -> str:
+    """A data file's name in the log: its URI, without a local ``file:``
+    prefix (module docstring)."""
+    return re.sub(LOCAL_SCHEME, "/", uri)
 
 
 def _list_data_files(spark: SparkSession, location: str) -> List[str]:
     """Recursive listing of data files under ``location``, skipping
     underscore/dot-prefixed names at every level (Spark's own ignore
     rule) — one control-plane walk per commit."""
-    fs, root, _ = _fs_and_path(spark, location)
+    fs, root = fs_utils._fs(spark, location)
     if not fs.exists(root):
         return []
     out: List[str] = []
@@ -79,23 +103,15 @@ def _list_data_files(spark: SparkSession, location: str) -> List[str]:
             if st.isDirectory():
                 stack.append(st.getPath())
             else:
-                out.append(_normalize(st.getPath().toString()))
+                out.append(file_id(st.getPath().toUri().toString()))
     return out
 
 
 def read_log(spark: SparkSession, location: str) -> Optional[list]:
     """The commit entries at ``location``, or None when no log exists."""
-    fs, _, jvm = _fs_and_path(spark, location)
-    log_path = jvm.org.apache.hadoop.fs.Path(
-        location.rstrip("/") + "/" + LOG_NAME
-    )
-    if not fs.exists(log_path):
+    raw = fs_utils.read_text(spark, log_path(location))
+    if raw is None:
         return None
-    stream = fs.open(log_path)
-    try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
     try:
         entries = json.loads(raw)
     except ValueError:
@@ -104,23 +120,11 @@ def read_log(spark: SparkSession, location: str) -> Optional[list]:
     return entries if isinstance(entries, list) else None
 
 
-def _write_log(spark: SparkSession, location: str, entries: list) -> None:
-    fs, _, jvm = _fs_and_path(spark, location)
-    log_path = jvm.org.apache.hadoop.fs.Path(
-        location.rstrip("/") + "/" + LOG_NAME
-    )
-    out = fs.create(log_path, True)
-    try:
-        out.write(json.dumps(entries).encode("utf-8"))
-    finally:
-        out.close()
-
-
 def record_commit(spark: SparkSession, location: str, mode: str) -> None:
     """Record one commit at ``location``: the data files present now that
     no earlier entry claims. ``mode=='overwrite'`` restarts file history
     (the old files are gone) but keeps the version counter monotone,
-    matching Delta's numbering across overwrites.
+    matching Delta's numbering across overwrites (module docstring).
 
     Concurrency: the read-modify-write runs under the best-effort
     :class:`~lakehouse_engine_spark.io.table_lock.WriterLock` with a
@@ -171,13 +175,10 @@ def _record_commit_locked(spark, location: str, mode: str, lock) -> None:
     import datetime as _dt
 
     entries = read_log(spark, location) or []
+    prev_max = max((e.get("version", 0) for e in entries), default=0)
     if mode == "overwrite":
-        known: set = set()
-        prev_max = max((e.get("version", 0) for e in entries), default=0)
-        entries = []
-    else:
-        known = {f for e in entries for f in e.get("files", [])}
-        prev_max = max((e.get("version", 0) for e in entries), default=0)
+        entries = []  # the old files are gone; the numbering continues
+    known = {f for e in entries for f in e.get("files", [])}
     current = _list_data_files(spark, location)
     new = sorted(f for f in current if f not in known)
     if not new:
@@ -196,5 +197,5 @@ def _record_commit_locked(spark, location: str, mode: str, lock) -> None:
             "files": new,
         }
     )
-    lock.verify()  # detect a mid-flight lock steal before the overwrite
-    _write_log(spark, location, entries)
+    lock.verify()  # detect a mid-flight lock steal before the commit
+    fs_utils.write_text(spark, log_path(location), json.dumps(entries))

@@ -174,7 +174,8 @@ def _find_table_at_location_in_db(spark, db: str, want: str):
         for r in rows:
             if r["isTemporary"]:
                 continue
-            m = _re.search(r"Location: (\S+)", r["information"] or "")
+            # to the end of the line: a location may hold spaces
+            m = _re.search(r"Location: (.+)", r["information"] or "")
             if m and _normalize_fs_path(m.group(1)) == want:
                 return f"{db}.{r['tableName']}"
         return None

@@ -13,13 +13,17 @@ The writers that hold this lock:
   ``TableManager.delete_where``, the CDF retention clean). It holds the
   lock across heal → read → stage → ``verify()`` → swap
   (``utils/fs_utils`` stage and swap);
-- ``io/cdf_commit_log.record_commit``, the CDF sidecar commit log.
+- ``io/cdf_commit_log.record_commit``, the CDF sidecar commit log
+  ``<location>._lhe_cdf_commits.json``: it holds the lock across read →
+  list → ``verify()`` → ``fs_utils.write_text`` (stage, then swap).
 
 The lock file is ``<location>._lhe_writer.lock`` (:func:`lock_path`),
 BESIDE the table dir rather than inside it: the commit swap renames the
 live dir away, and a Spark overwrite of the dir would delete anything in
 it, so a lock inside would vanish mid-rewrite and let a second writer
 claim the table — or heal it — while the first is between its renames.
+It reaches the file through ``utils/fs_utils`` (``_fs``, ``read_text``)
+like every other sidecar; only its claim, below, is its own.
 
 This module narrows the lost-update window with the strongest
 primitive each filesystem offers: on a LOCAL path, a true ``O_EXCL``
@@ -59,6 +63,8 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from lakehouse_engine_spark.utils import fs_utils
+
 _LOGGER = logging.getLogger(__name__)
 
 LOCK_NAME = "_lhe_writer.lock"
@@ -82,22 +88,11 @@ def lock_path(location: str) -> str:
     return f"{location.rstrip('/')}.{LOCK_NAME}"
 
 
-def _fs_path(spark: SparkSession, location: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(lock_path(location))
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path, jvm
-
-
 def _read_lock(spark: SparkSession, location: str) -> Optional[dict]:
-    fs, path, jvm = _fs_path(spark, location)
     try:
-        if not fs.exists(path):
+        raw = fs_utils.read_text(spark, lock_path(location))
+        if raw is None:
             return None
-        stream = fs.open(path)
-        try:
-            raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
         info = json.loads(raw) if raw.strip() else {}
         if not isinstance(info, dict):
             info = {}
@@ -110,6 +105,7 @@ def _read_lock(spark: SparkSession, location: str) -> Optional[dict]:
         # mtime instead — a fresh racer's lock reads young, a crashed
         # writer's empty file still expires via stale_after_s.
         try:
+            fs, path = fs_utils._fs(spark, lock_path(location))
             info["acquired_unix"] = (
                 fs.getFileStatus(path).getModificationTime() / 1000.0
             )
@@ -195,7 +191,7 @@ class WriterLock:
             out.close()
 
     def __enter__(self) -> "WriterLock":
-        fs, path, _ = _fs_path(self._spark, self._location)
+        fs, path = fs_utils._fs(self._spark, lock_path(self._location))
         # the lock sits beside the table dir: its parent must exist for
         # create(), and the data write that follows needs it anyway
         fs.mkdirs(path.getParent())
@@ -293,7 +289,7 @@ class WriterLock:
         try:
             holder = _read_lock(self._spark, self._location)
             if holder is not None and holder.get("token") == self._token:
-                fs, path, _ = _fs_path(self._spark, self._location)
+                fs, path = fs_utils._fs(self._spark, lock_path(self._location))
                 fs.delete(path, False)
         except Exception:  # pragma: no cover - release is best-effort
             _LOGGER.warning(

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from lakehouse_engine_spark.core.definitions import TerminatorSpec
 from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io.merge_writer import catalog_location, replace_where
+from lakehouse_engine_spark.utils import fs_utils
 
 _LOGGER = logging.getLogger(__name__)
 
@@ -278,30 +279,19 @@ def _emulated_cdf_stream(
         # appends between materializations get two _commit_versions —
         # Delta-log semantics (reference cdf_processor.py:59-87). The
         # file→version map is a small static frame broadcast against the
-        # stream's _metadata.file_path; files no entry claims (foreign
+        # stream's _metadata.file_path — both URI-encoded, compared in one
+        # form (cdf_commit_log.file_id); files no entry claims (foreign
         # writes, pre-log history) stamp version 0 = table creation.
         rows = [
-            (
-                cdf_commit_log._normalize(f),
-                int(e["version"]),
-                # zone-free epoch millis preferred; legacy logs carried a
-                # naive local string whose re-parse skews with the session
-                # timezone — kept only as a fallback for pre-existing logs
-                int(e["ts_ms"]) if e.get("ts_ms") is not None else None,
-                e.get("ts"),
-            )
+            (f, int(e["version"]), int(e["ts_ms"]))
             for e in entries
             for f in e.get("files", [])
         ]
-        vmap = spark.createDataFrame(
-            rows, "__fp STRING, __ver LONG, __vms LONG, __vts STRING"
-        )
+        vmap = spark.createDataFrame(rows, "__fp STRING, __ver LONG, __vms LONG")
         return (
             stream.withColumn(
                 "__fp",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ),
+                F.regexp_replace("_metadata.file_path", cdf_commit_log.LOCAL_SCHEME, "/"),
             )
             .join(F.broadcast(vmap), "__fp", "left")
             .withColumn(
@@ -309,13 +299,9 @@ def _emulated_cdf_stream(
             )
             .withColumn(
                 "_commit_timestamp",
-                F.coalesce(
-                    F.timestamp_millis("__vms"),
-                    F.to_timestamp("__vts"),
-                    F.current_timestamp(),
-                ),
+                F.coalesce(F.timestamp_millis("__vms"), F.current_timestamp()),
             )
-            .drop("__fp", "__ver", "__vms", "__vts")
+            .drop("__fp", "__ver", "__vms")
         )
 
     version = _bump_cdf_version(spark, materialized_cdf_location)
@@ -330,9 +316,7 @@ def _partition_glob(spark: SparkSession, src_loc: str) -> str:
     shares its root with non-data directories (streaming checkpoints,
     exports — a root listing would feed those to partition inference);
     else the location itself. One control-plane listing."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(src_loc)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = fs_utils._fs(spark, src_loc)
     try:
         statuses = fs.listStatus(p)
     except Exception:
@@ -374,35 +358,19 @@ def _partition_glob(spark: SparkSession, src_loc: str) -> str:
 
 
 def _bump_cdf_version(spark: SparkSession, materialized_cdf_location: str) -> int:
-    """Read-increment-write the emulated commit counter. Sidecar file
-    NEXT TO the materialization (inside it, the clean rewrite's overwrite
-    would drop it). Hadoop FS API so file:// and object stores both work.
+    """Read-increment-write the emulated commit counter: the sidecar file
+    ``<materialization>__cdf_version``, NEXT TO the materialization (inside
+    it, the clean rewrite's swap would drop it), committed through
+    ``fs_utils.write_text`` so a failed write leaves the old count or the
+    new one, never an empty file.
 
     Unlike the writer-side control files (commit log, merge fallback —
-    both WriterLock-guarded since r13), this counter is bumped by the
+    both WriterLock-guarded), this counter is bumped by the
     CDF *materialization* consumer: one stream per materialized
     location is the documented contract (two concurrent expose_cdf
     materializations of one location already race the data rewrite
     itself, which no sidecar lock can repair — serialize the consumers)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(
-        materialized_cdf_location.rstrip("/") + "__cdf_version"
-    )
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    current = 0
-    if fs.exists(path):
-        stream = fs.open(path)
-        try:
-            current = int(
-                jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                ).strip()
-            )
-        finally:
-            stream.close()
-    out = fs.create(path, True)
-    try:
-        out.write(str(current + 1).encode("utf-8"))
-    finally:
-        out.close()
-    return current + 1
+    path = materialized_cdf_location.rstrip("/") + "__cdf_version"
+    version = int(fs_utils.read_text(spark, path) or 0) + 1
+    fs_utils.write_text(spark, path, str(version))
+    return version

@@ -20,6 +20,8 @@ from datetime import datetime
 from typing import Optional
 from urllib.parse import urlparse
 
+from lakehouse_engine_spark.utils import fs_utils
+
 _LOGGER = logging.getLogger(__name__)
 
 ENGINE_VERSION = "0.11.0"
@@ -132,14 +134,7 @@ def store_engine_usage(
         else:
             # object-store targets go through the Hadoop FS API so s3a://
             # etc. work on a real cluster without extra deps
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(target)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            out = fs.create(jpath, True)
-            try:
-                out.write(payload.encode("utf-8"))
-            finally:
-                out.close()
+            fs_utils.write_text(spark, target, payload)
         _LOGGER.info("Storing Lakehouse Engine usage statistics")
     except Exception as e:  # noqa: BLE001 — telemetry must never fail a load
         _LOGGER.error(

@@ -1,4 +1,5 @@
-"""Filesystem existence checks, and the one crash-safe directory commit.
+"""The one module that touches Hadoop files: existence checks, the one
+crash-safe commit, and the sidecar text files read and written through it.
 
 Several stateful flows (delta-merge first load, sensor control table,
 cross-run dedup state) branch on "does the target exist yet?". Wrapping
@@ -9,9 +10,13 @@ fallback for "missing" is destructive in every one of those flows
 previously-ingested rows). These helpers ask the filesystem the actual
 question, so real failures propagate.
 
-The commit replaces a whole directory without Delta's log. The non-Delta
-table rewrite (``io/merge_writer._rewrite``) and the incremental-dedup state
-compaction (``datapipes/dedup._compact_state``) both run it:
+The commit replaces a whole directory — or one small file — without
+Delta's log. The non-Delta table rewrite (``io/merge_writer._rewrite``) and
+the incremental-dedup state compaction (``datapipes/dedup._compact_state``)
+run it on directories; :func:`write_text` runs it on the sidecar files that
+stand in for the Delta log (``io/cdf_commit_log``'s commit log,
+``terminators/terminator_factory._bump_cdf_version``'s counter) and on
+object-store usage records (``utils/engine_usage``):
 
 1. **stage** (:func:`stage`) — write the new contents to the sibling
    ``<location>__staging`` (a static overwrite, so a leftover staging dir
@@ -23,11 +28,19 @@ compaction (``datapipes/dedup._compact_state``) both run it:
    reports failure by returning false; an unchecked first rename would move
    staging INSIDE the live dir), and a failed second rename puts the backup
    straight back;
-4. **heal** — :func:`heal`, run before every read of the location, finishes
+4. **heal** — :func:`heal`, run before every read of a directory and at the
+   start of every swap, finishes
    what a crash inside the swap left: no live dir plus a complete ``__old``
    is restored (the commit point is the second rename, so the old contents
    win); a live dir beside a leftover ``__old`` means the swap landed, and
    the backup is dropped.
+
+Readers never heal: :func:`read_text` runs without a lock (``expose_cdf``
+reads the commit log while an append may be committing it), so it reads the
+live file, or the ``__old`` backup while a swap is between its renames, and
+renames nothing — a heal there could restore the backup under a live swap.
+The writer lock (``io/table_lock``) claims its file with its own ``O_EXCL``
+primitive and reads it with :func:`read_text`.
 
 Readers outside the engine (a plain ``spark.read`` of the path, another
 engine) can briefly see no directory between the two renames. On object
@@ -37,8 +50,9 @@ window is as long as copying the table — still recoverable by :func:`heal`.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Optional, Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 STAGING = "__staging"
@@ -125,3 +139,37 @@ def swap(spark: SparkSession, location: str) -> None:
         raise RuntimeError(f"{location}: rename of {STAGING} failed; original state restored")
     fs.delete(backup, True)
     spark.catalog.refreshByPath(location)
+
+
+def read_text(spark: SparkSession, path: str) -> Optional[str]:
+    """The text of the file at ``path``, or None when there is none. Mid-swap
+    (no live file) it reads the ``__old`` backup, so a reader sees the old
+    or the new contents, never a missing or partial file. Any error other
+    than the file being absent propagates."""
+    fs, live = _fs(spark, path)
+    # live, backup, live: a swap that lands between the first two probes has
+    # deleted the backup by the time the third one runs
+    for p in (live, live.suffix(BACKUP), live):
+        try:
+            stream = fs.open(p)
+        except Py4JJavaError:
+            if fs.exists(p):
+                raise
+            continue
+        try:
+            return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+    return None
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Replace the file at ``path`` with ``text``: write ``<path>__staging``,
+    then :func:`swap` it into place."""
+    fs, staged = _fs(spark, path + STAGING)
+    out = fs.create(staged, True)
+    try:
+        out.write(text.encode("utf-8"))
+    finally:
+        out.close()
+    swap(spark, path)

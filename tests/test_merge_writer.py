@@ -222,7 +222,8 @@ def test_catalog_schema_lookup_is_bulk_and_memoized(spark, tmp_dir):
     per table: the walk is one bulk SHOW TABLE EXTENDED per database
     (zero per-table DESCRIBEs on catalogs that support it), and a second
     lookup for the same location hits the per-location memo — no catalog
-    walk at all."""
+    walk at all. The locations hold a space, which the bulk listing's
+    ``Location:`` line keeps."""
     from unittest.mock import patch
 
     from lakehouse_engine_spark.io import merge_writer as mw
@@ -230,7 +231,7 @@ def test_catalog_schema_lookup_is_bulk_and_memoized(spark, tmp_dir):
     spark.sql("CREATE DATABASE IF NOT EXISTS lookup_db")
     locs = []
     for i in range(5):
-        loc = os.path.join(tmp_dir, f"lk{i}")
+        loc = os.path.join(tmp_dir, f"lk {i}")
         spark.createDataFrame([(i, f"v{i}")], "id INT, val STRING").write.mode(
             "overwrite"
         ).parquet(loc)
@@ -1002,7 +1003,11 @@ _REWRITE_CASES = {
 
 
 def _data_files(path):
-    """``relative path -> (size, mtime)`` of the files under ``path``."""
+    """``relative path -> (size, mtime)`` of the files under ``path``, or of
+    ``path`` itself when it is a file."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return {".": (st.st_size, st.st_mtime_ns)}
     out = {}
     for root, _, files in os.walk(path):
         for name in files:
@@ -1030,11 +1035,21 @@ def _rewrite_table(spark, tmp_dir, caller):
 
 class _FaultFS:
     """FileSystem proxy that calls ``hook(op, src, dst)`` before each rename
-    and delete; everything else goes to the real FileSystem."""
+    and delete, and after each create; everything else goes to the real
+    FileSystem."""
 
     def __init__(self, real, hook):
         self._real = real
         self._hook = hook
+
+    def create(self, path, overwrite):
+        out = self._real.create(path, overwrite)
+        try:
+            self._hook("create", str(path), None)
+        except Exception:
+            out.close()  # leaves the empty file a write that died mid-way leaves
+            raise
+        return out
 
     def rename(self, src, dst):
         self._hook("rename", str(src), str(dst))
@@ -1128,7 +1143,8 @@ _FAULTS = ("row in the staged write", "after staging", "between the renames",
 
 def _inject(monkeypatch, fault, seen):
     """Make the next commit fail at ``fault``; ``seen`` gets the live dir's
-    files and rows as the commit starts staging."""
+    files and rows as a directory commit starts staging. A sidecar file's
+    staged write fails right after its create."""
     from pyspark.sql import functions as F
 
     from lakehouse_engine_spark.utils import fs_utils
@@ -1145,7 +1161,8 @@ def _inject(monkeypatch, fault, seen):
 
     def hook(op, src, dst):
         if (
-            (fault == _FAULTS[1] and op == "rename" and dst.endswith("__old"))
+            (fault == _FAULTS[0] and op == "create" and src.endswith("__staging"))
+            or (fault == _FAULTS[1] and op == "rename" and dst.endswith("__old"))
             or (fault == _FAULTS[2] and op == "rename" and src.endswith("__staging"))
             or (fault == _FAULTS[3] and op == "delete" and src.endswith("__old"))
         ):
@@ -1166,14 +1183,23 @@ def _dedup_state_run(spark, state, keys, compact_after):
     return {r["text"] for r in df.transform(op).collect()}
 
 
+_SIDECARS = ("cdf_log", "cdf_version")
+
+
 @pytest.mark.parametrize("fault", _FAULTS)
-@pytest.mark.parametrize("caller", [*_REWRITE_CASES, "dedup_state"])
+@pytest.mark.parametrize("caller", [*_REWRITE_CASES, "dedup_state", *_SIDECARS])
 def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller, fault):
     """A rewrite or a dedup-state compaction that fails at any point of
     stage → swap leaves, at the next access (which heals first), exactly the
     old rows (a failure before the second rename) or exactly the new ones
     (after it); a failure before the swap also leaves the live files as they
-    were. The next run then commits normally."""
+    were. The next run then commits normally. A sidecar file (the CDF commit
+    log, the CDF version counter) reads, without a heal, as the old or the
+    new contents — never missing, never truncated — and the next commit
+    continues its numbering."""
+    from lakehouse_engine_spark.io import cdf_commit_log
+    from lakehouse_engine_spark.io.table_lock import WriterLock
+    from lakehouse_engine_spark.terminators.terminator_factory import _bump_cdf_version
     from lakehouse_engine_spark.utils import fs_utils
 
     table = None
@@ -1193,6 +1219,45 @@ def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller
             assert _dedup_state_run(spark, path, ["alpha", "delta", "eps"], 1) == {"eps"}
             assert len([n for n in os.listdir(path) if n.startswith("part-")]) == 1
             assert spark.read.parquet(path).distinct().count() == 5
+    elif caller == "cdf_log":
+        data = os.path.join(tmp_dir, "logged")
+        path = cdf_commit_log.log_path(data)
+        spark.range(2).write.parquet(data)
+        cdf_commit_log.record_commit(spark, data, "append")
+
+        def run_once():  # record_commit itself logs a failure and carries on
+            spark.range(1).write.mode("append").parquet(data)
+            with WriterLock(spark, data, op="cdf_commit") as lock:
+                cdf_commit_log._record_commit_locked(spark, data, "append", lock)
+
+        def read():
+            return [e["version"] for e in cdf_commit_log.read_log(spark, data)]
+
+        def grown(versions):  # one commit later
+            return versions + [versions[-1] + 1]
+
+        def rerun():
+            before = read()
+            spark.range(1).write.mode("append").parquet(data)
+            cdf_commit_log.record_commit(spark, data, "append")
+            assert read() == grown(before)
+    elif caller == "cdf_version":
+        materialized = os.path.join(tmp_dir, "materialized")
+        path = materialized + "__cdf_version"
+        assert _bump_cdf_version(spark, materialized) == 1
+
+        def run_once():
+            _bump_cdf_version(spark, materialized)
+
+        def read():
+            return int(fs_utils.read_text(spark, path))
+
+        def grown(version):
+            return version + 1
+
+        def rerun():
+            before = read()
+            assert _bump_cdf_version(spark, materialized) == grown(before) == read()
     else:
         run, cols, want = (_REWRITE_CASES[caller][i] for i in (3, 4, 5))
         table, path = _rewrite_table(spark, tmp_dir, caller)
@@ -1207,7 +1272,9 @@ def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller
             run(spark, table, path)
             check_new()
 
-    seen = {}
+    seen = {"files": _data_files(path)}
+    if caller in _SIDECARS:
+        old = read()
     try:
         with monkeypatch.context() as m:
             _inject(m, fault, seen)
@@ -1215,11 +1282,14 @@ def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller
                 run_once()
         if fault in _FAULTS[:2]:
             assert _data_files(path) == seen["files"]
-        assert fs_utils.heal(spark, path)  # what the next engine access runs first
-        if fault == _FAULTS[3]:
-            check_new()
+        if caller in _SIDECARS:  # readers never heal
+            assert read() == (grown(old) if fault == _FAULTS[3] else old)
         else:
-            assert_df_equal(spark.read.parquet(path), seen["rows"])
+            assert fs_utils.heal(spark, path)  # what the next engine access runs first
+            if fault == _FAULTS[3]:
+                check_new()
+            else:
+                assert_df_equal(spark.read.parquet(path), seen["rows"])
         rerun()
         assert not os.path.exists(path + "__old") and not os.path.exists(path + "__staging")
     finally:
@@ -1227,12 +1297,34 @@ def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller
             spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_read_text_between_the_renames_reads_the_backup(spark, tmp_dir):
+    """Between a swap's two renames a sidecar file has no live copy: a
+    reader gets the backup's text and renames nothing (it runs without the
+    lock, so a heal could restore the backup under the writer's swap); the
+    next write heals, then commits."""
+    from lakehouse_engine_spark.utils import fs_utils
+
+    path = os.path.join(tmp_dir, "sidecar.json")
+    assert fs_utils.read_text(spark, path) is None
+    fs_utils.write_text(spark, path, "old")
+    fs, live = fs_utils._fs(spark, path)
+    assert fs.rename(live, live.suffix("__old"))  # a writer stopped mid-swap
+    assert fs_utils.read_text(spark, path) == "old"
+    assert not os.path.exists(path) and os.path.exists(path + "__old")
+    fs_utils.write_text(spark, path, "new")
+    assert fs_utils.read_text(spark, path) == "new"
+    assert not os.path.exists(path + "__old") and not os.path.exists(path + "__staging")
+
+
 def test_rewrites_only_through_merge_writer():
     """Spark-free guard: algorithms/, core/ and terminators/ change rows in
     place only through ``io.merge_writer``'s public functions — no
     overwrite, no saveAsTable, no private merge_writer name of their own;
-    the merge writer calls neither ``localCheckpoint`` nor ``conf.set``; and
-    no module but the commit helper's swap and heal renames a path."""
+    the merge writer calls neither ``localCheckpoint`` nor ``conf.set``; no
+    module but the commit helper's swap and heal renames a path; and no
+    module but ``utils/fs_utils`` builds a Hadoop ``Path``, asks for a
+    ``FileSystem``, reads a file with ``IOUtils`` or calls ``.create(``
+    (the writer lock's ``_claim`` excepted: its claim-or-fail is the lock)."""
     import ast
     import pathlib
 
@@ -1282,24 +1374,41 @@ def test_rewrites_only_through_merge_writer():
             or (node.func.attr == "set" and ast.unparse(node.func.value).endswith("conf"))
         )
     ]
-    # a directory rename happens only in the commit helper's swap and heal
+    # a directory rename happens only in the commit helper's swap and heal;
+    # a Hadoop file is reached, read or created only through the helper,
+    # but for the writer lock's own atomic claim
+    def lines(body, names):
+        return {
+            line
+            for fn in body
+            if isinstance(fn, ast.FunctionDef) and fn.name in names
+            for line in range(fn.lineno, fn.end_lineno + 1)
+        }
+
     helper = root / "utils" / "fs_utils.py"
     for path in sorted(root.rglob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
-        allowed = {
+        where = path.relative_to(root)
+        renames = lines(tree.body, ("swap", "heal")) if path == helper else set()
+        claim = {
             line
-            for fn in (tree.body if path == helper else [])
-            if isinstance(fn, ast.FunctionDef) and fn.name in ("swap", "heal")
-            for line in range(fn.lineno, fn.end_lineno + 1)
-        }
-        hits += [
-            f"{path.relative_to(root)}:{node.lineno} .rename(...)"
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "rename"
-            and node.lineno not in allowed
-        ]
+            for cls in tree.body
+            if isinstance(cls, ast.ClassDef) and cls.name == "WriterLock"
+            for line in lines(cls.body, ("_claim",))
+        } if str(where) == "io/table_lock.py" else set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                attr = node.func.attr
+                if (attr == "rename" and node.lineno not in renames) or (
+                    attr == "create" and path != helper and node.lineno not in claim
+                ):
+                    hits.append(f"{where}:{node.lineno} .{attr}(...)")
+            elif isinstance(node, ast.Attribute) and path != helper:
+                dotted = ast.unparse(node)
+                if node.attr == "getFileSystem" or dotted.endswith(
+                    ("hadoop.fs.Path", "IOUtils.toString")
+                ):
+                    hits.append(f"{where}:{node.lineno} {dotted}")
     assert not hits, hits
 
 

@@ -138,20 +138,23 @@ def test_expose_cdf_without_delta_emulates_append_only_cdf(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS test_db.cdf_emu")
 
 
-def test_expose_cdf_per_append_versions_from_commit_log(spark, tmp_path):
+@pytest.mark.parametrize("name", ["tbl", "my tbl"])
+def test_expose_cdf_per_append_versions_from_commit_log(spark, tmp_path, name):
     """TWO engine appends between materializations yield TWO
     _commit_versions (Delta-log semantics, reference
     cdf_processor.py:59-87): degraded-delta writes record a sidecar
     commit entry per append, and the emulation stamps each file with
     its append's version and timestamp instead of collapsing the whole
-    increment into one materialization-counter version."""
+    increment into one materialization-counter version. A location with a
+    space in it names its files percent-encoded on both sides of the
+    join."""
     from lakehouse_engine_spark.core.definitions import OutputSpec
     from lakehouse_engine_spark.core.exec_env import ExecEnv
     from lakehouse_engine_spark.io.writer_factory import WriterFactory
 
     if ExecEnv.delta_available():
         pytest.skip("delta present: the real readChangeFeed path applies")
-    loc = str(tmp_path / "tbl")
+    loc = str(tmp_path / name)
     cdf = str(tmp_path / "cdf")
     ckpt = str(tmp_path / "ckpt")
 
@@ -193,6 +196,43 @@ def test_expose_cdf_per_append_versions_from_commit_log(spark, tmp_path):
     spark.catalog.refreshByPath(cdf)
     after = {r["id"]: r["_commit_version"] for r in spark.read.parquet(cdf).collect()}
     assert after == {1: 1, 2: 1, 3: 2, 4: 3}
+
+
+def test_cdf_commit_log_numbering_survives_overwrite_and_merge(spark, tmp_path):
+    """The commit log sits beside the table dir, so neither an overwrite
+    (which deletes what the dir holds) nor a merge (whose commit swap
+    replaces the dir) resets the version counter: append, append,
+    overwrite, merge, append leave the entries of versions 3 and 4 — the
+    overwrite restarted the file history, the merge recorded nothing, and
+    the last append's entry claims the files the merge left."""
+    from lakehouse_engine_spark.core.definitions import MergeOptions, OutputSpec
+    from lakehouse_engine_spark.core.exec_env import ExecEnv
+    from lakehouse_engine_spark.io import cdf_commit_log
+    from lakehouse_engine_spark.io.writer_factory import WriterFactory
+
+    if ExecEnv.delta_available():
+        pytest.skip("delta present: the Delta log numbers the commits")
+    loc = str(tmp_path / "tbl")
+
+    def write(rows, write_type, **kwargs):
+        WriterFactory.write(
+            spark,
+            spark.createDataFrame(rows, "id INT, v STRING"),
+            OutputSpec(
+                spec_id="o", input_id="i", data_format="delta", location=loc,
+                write_type=write_type, **kwargs,
+            ),
+        )
+
+    write([(1, "a")], "append")
+    write([(2, "b")], "append")
+    write([(3, "c")], "overwrite")
+    write([(3, "C"), (4, "d")], "merge",
+          merge_opts=MergeOptions(merge_predicate="current.id = new.id"))
+    write([(5, "e")], "append")
+    entries = cdf_commit_log.read_log(spark, loc)
+    assert [e["version"] for e in entries] == [3, 4]
+    assert sorted(entries[1]["files"]) == sorted(cdf_commit_log._list_data_files(spark, loc))
 
 
 def test_partition_glob_isolates_data_from_stray_dirs(spark, tmp_path):
