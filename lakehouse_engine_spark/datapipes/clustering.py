@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from lakehouse_engine_spark.datapipes.colbuild import vector_width
 from lakehouse_engine_spark.datapipes.driver_tier import (
     bounded_collect,
     driver_safe_ids,
@@ -358,10 +359,7 @@ def embedding_kmeans(
         )
 
     def _kmeans(df: DataFrame) -> DataFrame:
-        # width probe over non-null embeddings only (a null first row must
-        # not crash the dim inference — the dp97 review lesson)
-        probe = df.select(F.max(F.size(input_col)).alias("d")).first()
-        dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
+        dim = vector_width(df, input_col)
         if dim == 0:
             # empty corpus, or every embedding null/zero-width: every
             # point is distance 0 from every (empty) centroid -> cluster
@@ -613,8 +611,7 @@ def embedding_kmeans_hier(
         raise ValueError("embedding_kmeans_hier: iterations must be >= 0")
 
     def _hier(df: DataFrame) -> DataFrame:
-        probe = df.select(F.max(F.size(input_col)).alias("d")).first()
-        dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
+        dim = vector_width(df, input_col)
         null_cols = [
             F.lit(None).cast("int").alias(f"{output_col}_coarse"),
             F.lit(None).cast("int").alias(f"{output_col}_fine"),
@@ -880,8 +877,7 @@ def embedding_pq_encode(
         )
 
     def _encode(df: DataFrame) -> DataFrame:
-        probe = df.select(F.max(F.size(input_col)).alias("d")).first()
-        dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
+        dim = vector_width(df, input_col)
         if dim == 0:
             return df.select(
                 "*",
@@ -1013,8 +1009,7 @@ def knn_pq(
             StructType,
         )
 
-        probe = df.select(F.max(F.size(embedding_col)).alias("d")).first()
-        dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
+        dim = vector_width(df, embedding_col)
         # the empty/degenerate result must carry the SAME id dtype the
         # populated path casts to — a string-id corpus previously flipped
         # schema depending on whether any results existed

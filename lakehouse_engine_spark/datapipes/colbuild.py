@@ -15,13 +15,15 @@ tree the Column-chain form produced — in particular the SAME
 left-associative fold order, because float summation order is pinned
 by the SQL oracles (`a + b + c` parses as `(a + b) + c`, exactly the
 order `sum(generator, start)` chained).
+
+:func:`vector_width` is the one width probe those builders size from.
 """
 
 from __future__ import annotations
 
-from typing import List
+from typing import List, Union
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -55,3 +57,12 @@ def element_aliases(src: str, dim: int, prefix: str) -> List[Column]:
         F.expr(f"element_at({src}, {i + 1}) as {prefix}{i}")
         for i in range(dim)
     ]
+
+
+def vector_width(df: DataFrame, col: Union[str, Column]) -> int:
+    """Width of the widest vector in ``col``: one aggregate job over the
+    non-null rows, so a NULL or short FIRST row cannot leave the width
+    None or truncate it. 0 when no non-null vector exists; each caller
+    picks its own empty-corpus branch."""
+    d = df.select(F.max(F.size(col)).alias("d")).first()["d"]
+    return max(int(d or 0), 0)

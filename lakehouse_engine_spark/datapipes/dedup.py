@@ -21,6 +21,32 @@ folded to a 60-bit int, then ``num_hashes`` universal-family linear
 permutations ``(a*x + b) mod P`` — integer ops that cost ~nothing next to
 the digest. The naive alternative (one md5 per shingle *per seed*) is
 ``num_hashes``× more digest work for identical statistical behavior.
+
+Cross-run digest state — the contract of the incremental family
+(``dedup_incremental_exact``/``_minhash``/``_embedding``,
+``text_winnow_incremental``), implemented once by :func:`_read_state`,
+:func:`_commit_state` and :func:`_compact_state`:
+
+* The state at ``state_location`` is parquet with ONE column,
+  ``digest``: an md5 key digest, a band/bucket hash or a winnowing
+  fingerprint — bytes per kept row, never the corpus itself.
+* The ops are batch-only (a streaming ACON re-plans them into
+  ``foreachBatch``). Every read first runs ``fs_utils.heal``, which
+  repairs a compaction swap that crashed between its renames; a state
+  that exists but cannot be read fails the batch loudly. Treating it as
+  a first run would re-emit every previously-seen row.
+* The result is ``localCheckpoint``ed BEFORE its new digests are
+  appended. Its lineage reads the state the append is about to mutate,
+  so a recomputable persist would, after executor loss, re-read the
+  appended digests and silently drop the whole batch; checkpointed
+  blocks fail loudly instead. The append is an EAGER side effect at
+  transform time, so the returned frame and the state never disagree;
+  ``update_state=False`` is the dry run that leaves the state untouched.
+* Past ``compact_after_files`` parquet parts (0 disables) the state is
+  rewritten as distinct digests, ~1M per file, through the ``fs_utils``
+  commit: stage into ``<state_location>__staging``, then swap through a
+  ``__old`` backup. Between the two renames a reader outside the engine
+  briefly sees no state.
 """
 
 from __future__ import annotations
@@ -36,6 +62,7 @@ from lakehouse_engine_spark.datapipes.colbuild import (
     dot_cols,
     dot_elements,
     element_aliases,
+    vector_width,
 )
 from lakehouse_engine_spark.datapipes.driver_tier import (
     bounded_collect,
@@ -318,81 +345,16 @@ def dedup_cross_embedding(
     """
 
     def _dedup(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.similarity import hyperplane_signatures
-
-        o_emb = other_embedding_col or embedding_col
-        o_id = other_id_col or id_col
-        if dim is not None:
-            d = dim
-        else:
-            # MAX over the corpus with a null guard (the LSH-arm fix
-            # applied here too): a NULL/ragged FIRST row must not poison
-            # the width — first()'s d could be None (TypeError at
-            # range()) or short (cosine over a prefix)
-            probe = df.select(
-                F.max(F.size(F.col(embedding_col).cast("array<double>"))).alias("d")
-            ).first()
-            d = (
-                probe["d"]
-                if probe is not None and probe["d"] is not None
-                else 1
-            )
+        d = dim if dim is not None else vector_width(df, embedding_col) or 1
 
         def _sigs(sdf: DataFrame, emb: str, idc: str) -> DataFrame:
-            s = _cap_buckets(
-                hyperplane_signatures(sdf, emb, idc, num_planes, num_tables, dim=d),
-                ["__t", "__sig"],
-                max_bucket_size,
-                pair_budget,
+            return _cosine_sigs(
+                sdf, emb, idc, num_planes, num_tables, d, max_bucket_size, pair_budget
             )
-            return s.withColumn(
-                "__norm",
-                F.sqrt(F.aggregate(F.col("__bv"), F.lit(0.0), lambda a, v: a + v * v)),
-            # zero-norm vectors have no cosine direction and all land in
-            # the SAME all-zero-dots bucket on both sides; 0/0 = NaN and
-            # Spark orders NaN ABOVE the threshold, so without this
-            # filter one zero vector in the reference wrongly drops
-            # every zero-norm main row (the dedup_embedding_cosine /
-            # dedup_incremental_embedding convention: zero-norm rows
-            # never pair, and therefore always survive)
-            ).filter(F.col("__norm") > 0)
 
-        main = _sigs(df, embedding_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
-        ref = _sigs(other_df, o_emb, o_id).persist(StorageLevel.MEMORY_AND_DISK)
-        pairs = (
-            main.alias("l")
-            .join(
-                ref.alias("r"),
-                (F.col("l.__t") == F.col("r.__t"))
-                & (F.col("l.__sig") == F.col("r.__sig")),
-            )
-            .select(F.col("l.__bid").alias("__id"), F.col("r.__bid").alias("__cand"))
-            .dropDuplicates(["__id", "__cand"])
-        )
-        mvecs = main.select("__bid", "__bv", "__norm").dropDuplicates(["__bid"])
-        rvecs = ref.select("__bid", "__bv", "__norm").dropDuplicates(["__bid"])
-        cands = (
-            pairs.join(
-                mvecs.select(
-                    "__bid", F.col("__bv").alias("__v1"), F.col("__norm").alias("__n1")
-                ),
-                pairs["__id"] == F.col("__bid"),
-            )
-            .drop("__bid")
-            .join(
-                rvecs.select(
-                    "__bid", F.col("__bv").alias("__v2"), F.col("__norm").alias("__n2")
-                ),
-                F.col("__cand") == F.col("__bid"),
-            )
-            .drop("__bid")
-        )
-        dot = dot_elements("__v1", "__v2", d)
-        hits = (
-            cands.filter(dot / (F.col("__n1") * F.col("__n2")) >= threshold)
-            .select("__id")
-            .distinct()
-        )
+        main = _sigs(df, embedding_col, id_col)
+        ref = _sigs(other_df, other_embedding_col or embedding_col, other_id_col or id_col)
+        hits = _cosine_lsh_pairs(main, ref, d, threshold).select("__id").distinct()
         if mode == "drop":
             return df.join(hits, df[id_col] == hits["__id"], "left_anti")
         flagged = hits.withColumn(flag_col, F.lit(True))
@@ -816,6 +778,91 @@ def _cap_buckets(
     )
 
 
+def _l2_norm(vec: Column) -> Column:
+    """Euclidean norm of a float array (one higher-order pass per row)."""
+    return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda s, v: s + v * v))
+
+
+def _cosine_sigs(
+    df: DataFrame,
+    embedding_col: str,
+    id_col: str,
+    num_planes: int,
+    num_tables: int,
+    dim: int,
+    max_bucket_size: Optional[int],
+    pair_budget: Optional[int],
+) -> DataFrame:
+    """The cosine-LSH candidate space of one corpus, persisted: its
+    capped hyperplane bucket rows (``__t``, ``__sig``, ``__bid``,
+    ``__bv``; ``similarity.hyperplane_signatures``) with the vector norm
+    ``__norm`` computed ONCE per row, so the pair verify runs entirely
+    inside whole-stage codegen. Zero-norm vectors have no cosine
+    direction and all share the all-zero-dots bucket; 0/0 is NaN, which
+    Spark orders ABOVE any threshold. They are dropped here, so they
+    never pair and always survive."""
+    from lakehouse_engine_spark.datapipes.similarity import hyperplane_signatures
+
+    sigs = hyperplane_signatures(df, embedding_col, id_col, num_planes, num_tables, dim=dim)
+    return (
+        _cap_buckets(sigs, ["__t", "__sig"], max_bucket_size, pair_budget)
+        .withColumn("__norm", _l2_norm(F.col("__bv")))
+        .filter(F.col("__norm") > 0)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _cosine_lsh_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    dim: int,
+    threshold: float,
+    vectors: Optional[DataFrame] = None,
+) -> DataFrame:
+    """The cosine-LSH filter-and-verify join: ``(__id, __cand)`` pairs of a
+    ``left`` and a ``right`` bucket frame (the :func:`_cosine_sigs` columns)
+    that share a (table, signature) bucket and whose exact cosine is
+    ``>= threshold``. Passing one frame as both sides is the self-join,
+    which keeps each unordered pair once, as ``__id > __cand``.
+
+    Candidate pairs carry ONLY ids through the bucket join and the
+    cross-table dedup (a pair colliding in all ``num_tables`` tables would
+    otherwise shuffle its 2×dim vectors that many times); the vectors
+    re-attach once per UNIQUE pair, from each side's own frame or, when
+    given, from ``vectors``: a persisted frame holding every id of both
+    sides, which spares recomputing an unpersisted side's plan. The
+    verify is a left-associative ``element_at`` chain: the summation
+    order of the SQL oracle, codegen'd."""
+    on = (F.col("l.__t") == F.col("r.__t")) & (F.col("l.__sig") == F.col("r.__sig"))
+    if right is left:
+        on = on & (F.col("l.__bid") > F.col("r.__bid"))
+    pairs = (
+        left.alias("l")
+        .join(right.alias("r"), on)
+        .select(F.col("l.__bid").alias("__id"), F.col("r.__bid").alias("__cand"))
+        .dropDuplicates(["__id", "__cand"])
+    )
+
+    def _vecs(side: DataFrame, i: int) -> DataFrame:
+        return (
+            (side if vectors is None else vectors)
+            .select("__bid", "__bv", "__norm")
+            .dropDuplicates(["__bid"])
+            .select("__bid", F.col("__bv").alias(f"__v{i}"), F.col("__norm").alias(f"__n{i}"))
+        )
+
+    cands = (
+        pairs.join(_vecs(left, 1), pairs["__id"] == F.col("__bid"))
+        .drop("__bid")
+        .join(_vecs(right, 2), F.col("__cand") == F.col("__bid"))
+        .drop("__bid")
+    )
+    dot = dot_elements("__v1", "__v2", dim)
+    return cands.filter(dot / (F.col("__n1") * F.col("__n2")) >= threshold).select(
+        "__id", "__cand"
+    )
+
+
 @register("dedup_simhash")
 def dedup_simhash(
     text_col: str = "text",
@@ -1143,9 +1190,7 @@ def cosine(a: Column, b: Column) -> Column:
     ANSI divide-by-zero error, so ANN ranking and dedup verify treat
     them as similar to nothing."""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
-    denom = na * nb
+    denom = _l2_norm(a) * _l2_norm(b)
     return F.when(denom > 0, dot / denom).otherwise(F.lit(0.0))
 
 
@@ -1187,86 +1232,21 @@ def dedup_embedding_cosine(
         raise ValueError(f"dedup_embedding_cosine: unknown method {method}")
     dim_arg = dim  # closures probe lazily into a local also named dim
 
-    def _dedup_lsh(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.similarity import hyperplane_signatures
+    def _width(df: DataFrame) -> int:
+        # a caller-supplied dim skips the width-probe scan job
+        return dim_arg if dim_arg is not None else vector_width(df, embedding_col) or 1
 
-        # caller-supplied dim skips the width-probe scan job (a full action
-        # on a large corpus); probed once and forwarded otherwise
-        if dim_arg is not None:
-            dim = dim_arg
-        else:
-            # aggregate over non-null embeddings: a null FIRST row must
-            # not poison the width (range(None) raises); vectors are
-            # assumed uniform-width, with the widest width winning so
-            # narrower stragglers surface as nulls in the expansion
-            # rather than silently truncating everyone else
-            probe = df.select(
-                F.max(
-                    F.size(F.col(embedding_col).cast("array<double>"))
-                ).alias("d")
-            ).first()
-            dim = (
-                probe["d"]
-                if probe is not None and probe["d"] is not None
-                else 1
-            )  # empty corpus
-        # per-vector norm computed ONCE per signature row (O(n·tables)); the
-        # pair verify then runs entirely inside whole-stage codegen — an
-        # interpreted cosine() HOF per candidate pair was the bottleneck on
-        # dense-bucket corpora (millions of verifies)
-        sigs = _cap_buckets(
-            hyperplane_signatures(
-                df, embedding_col, id_col, num_planes, num_tables, dim=dim
-            ),
-            ["__t", "__sig"],
-            max_bucket_size,
-            pair_budget,
-        ).withColumn(
-            "__norm",
-            F.sqrt(F.aggregate(F.col("__bv"), F.lit(0.0), lambda s, v: s + v * v)),
-        ).filter(
-            # zero-norm vectors have no cosine direction: drop them from
-            # the candidate space (two colliding zero vectors would make
-            # the verify divide 0/0) — they survive via the left join
-            F.col("__norm") > 0
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # candidate pairs carry ONLY ids through the bucket join + cross-table
-        # dedup (a doc pair colliding in all num_tables tables would otherwise
-        # shuffle its 2×dim vectors num_tables times); the vectors re-attach
-        # once per UNIQUE pair — the same slim-join design as ngram_jaccard
-        pairs = (
-            sigs.alias("l")
-            .join(
-                sigs.alias("r"),
-                (F.col("l.__t") == F.col("r.__t"))
-                & (F.col("l.__sig") == F.col("r.__sig"))
-                & (F.col("l.__bid") > F.col("r.__bid")),
-            )
-            .select(F.col("l.__bid").alias("__id"), F.col("r.__bid").alias("__cand"))
-            .dropDuplicates(["__id", "__cand"])
+    def _dedup_lsh(df: DataFrame) -> DataFrame:
+        dim = _width(df)
+        sigs = _cosine_sigs(
+            df, embedding_col, id_col, num_planes, num_tables, dim,
+            max_bucket_size, pair_budget,
         )
-        vecs = sigs.select("__bid", "__bv", "__norm").dropDuplicates(["__bid"])
-        cands = (
-            pairs.join(
-                vecs.select(
-                    "__bid", F.col("__bv").alias("__v1"), F.col("__norm").alias("__n1")
-                ),
-                pairs["__id"] == F.col("__bid"),
-            )
-            .drop("__bid")
-            .join(
-                vecs.select(
-                    "__bid", F.col("__bv").alias("__v2"), F.col("__norm").alias("__n2")
-                ),
-                F.col("__cand") == F.col("__bid"),
-            )
-            .drop("__bid")
+        heads = (
+            _cosine_lsh_pairs(sigs, sigs, dim, threshold)
+            .groupBy("__id")
+            .agg(F.min("__cand").alias("dup_group_id"))
         )
-        # left-assoc element_at chain: same summation order as the HOF fold
-        # (and the SQL oracle), but codegen'd
-        dot = dot_elements("__v1", "__v2", dim)
-        verified = cands.filter(dot / (F.col("__n1") * F.col("__n2")) >= threshold)
-        heads = verified.groupBy("__id").agg(F.min("__cand").alias("dup_group_id"))
         out = df.join(heads, df[id_col] == heads["__id"], "left").drop("__id")
         out = out.withColumn(
             "is_duplicate",
@@ -1277,27 +1257,8 @@ def dedup_embedding_cosine(
         return out
 
     def _dedup(df: DataFrame) -> DataFrame:
-        if dim_arg is not None:
-            dim = dim_arg
-        else:
-            # MAX with a null guard, same as the LSH arm above: first()
-            # on a NULL/ragged first row yields None (range(None) →
-            # TypeError) or a truncated width
-            probe = df.select(
-                F.max(F.size(F.col(embedding_col).cast("array<double>"))).alias("d")
-            ).first()
-            dim = (
-                probe["d"]
-                if probe is not None and probe["d"] is not None
-                else 1
-            )  # empty corpus
-        norm = F.sqrt(
-            F.aggregate(
-                F.col(embedding_col).cast("array<double>"),
-                F.lit(0.0),
-                lambda s, v: s + v * v,
-            )
-        )
+        dim = _width(df)
+        norm = _l2_norm(F.col(embedding_col).cast("array<double>"))
         unit = F.transform(F.col(embedding_col).cast("array<double>"), lambda v: v / norm)
         # normalize once, persist: both the spread stream side and the
         # broadcast build side read the same tiny normalized table instead of
@@ -1393,32 +1354,15 @@ def dedup_semantic_centroid(
     dim_arg = dim
 
     def _dedup(df: DataFrame) -> DataFrame:
-        if dim_arg is not None:
-            dim = dim_arg
-        else:
-            # aggregate over non-null embeddings: a null FIRST row must
-            # not poison the width (range(None) raises); vectors are
-            # assumed uniform-width, with the widest width winning so
-            # narrower stragglers surface as nulls in the expansion
-            # rather than silently truncating everyone else
-            probe = df.select(
-                F.max(
-                    F.size(F.col(embedding_col).cast("array<double>"))
-                ).alias("d")
-            ).first()
-            dim = (
-                probe["d"]
-                if probe is not None and probe["d"] is not None
-                else 1
-            )  # empty corpus
+        # the widest width wins, so narrower stragglers surface as nulls
+        # in the expansion rather than truncating everyone else
+        dim = dim_arg if dim_arg is not None else vector_width(df, embedding_col) or 1
 
         vec = F.col(embedding_col).cast("array<double>")
         base = ensure_parallelism(df).select(
             F.col(id_col).alias("__sid"),
             vec.alias("__sv"),
-            F.sqrt(
-                F.aggregate(vec, F.lit(0.0), lambda s, v: s + v * v)
-            ).alias("__norm"),
+            _l2_norm(vec).alias("__norm"),
         )
         # zero-norm vectors (e.g. empty documents through
         # text_hash_embedding) have no cosine direction: they skip
@@ -1612,19 +1556,7 @@ def dedup_semantic_hier(
                 output_col="__sdh",
             )
         ).drop("__sdh_coarse", "__sdh_fine", "__sdh_dist")
-        if dim_arg is not None:
-            dim = dim_arg
-        else:
-            probe = cells.select(
-                F.max(
-                    F.size(F.col(embedding_col).cast("array<double>"))
-                ).alias("d")
-            ).first()
-            dim = (
-                probe["d"]
-                if probe is not None and probe["d"] is not None
-                else 0
-            )
+        dim = dim_arg if dim_arg is not None else vector_width(cells, embedding_col)
         if dim == 0:
             out = cells.drop("__sdh").withColumn(
                 "dup_group_id", F.lit(None).cast(df.schema[id_col].dataType)
@@ -1636,9 +1568,7 @@ def dedup_semantic_hier(
         base = ensure_parallelism(cells).select(
             F.col(id_col).alias("__sid"),
             F.col("__sdh").alias("__cid"),
-            F.sqrt(
-                F.aggregate(vec, F.lit(0.0), lambda s, v: s + v * v)
-            ).alias("__norm"),
+            _l2_norm(vec).alias("__norm"),
             *[F.element_at(vec, i + 1).alias(f"__e{i}") for i in range(dim)],
         )
         # zero-norm / null-cell rows skip pairing (they can never reach
@@ -1721,6 +1651,44 @@ def _compact_state(spark, location: str, max_files: int) -> None:
     fs_utils.swap(spark, location)
 
 
+def _read_state(op: str, df: DataFrame, location: str) -> Optional[DataFrame]:
+    """Open the digest state for one batch (the module docstring's state
+    contract): refuse a stream, heal, then the ``digest`` column, or None
+    when no state exists yet (a first run)."""
+    if df.isStreaming:
+        raise ValueError(
+            f"{op} is batch-only (cross-RUN state); in a streaming ACON it "
+            "is re-planned into foreachBatch automatically"
+        )
+    if not fs_utils.heal(df.sparkSession, location):
+        return None
+    return df.sparkSession.read.parquet(location).select("digest")
+
+
+def _commit_state(
+    result: DataFrame,
+    location: str,
+    new_digests: Callable[[DataFrame], DataFrame],
+    seen: Optional[DataFrame],
+    update_state: bool,
+    compact_after_files: int,
+) -> DataFrame:
+    """``localCheckpoint`` the op's ``result``, then (unless
+    ``update_state=False``) append ``new_digests(result)`` to the state
+    and compact it past ``compact_after_files`` parts. The digests are
+    anti-joined against ``seen`` first; pass None when they are fresh
+    already. Returns the checkpointed result."""
+    result = result.localCheckpoint(eager=True)
+    if update_state:
+        digests = new_digests(result)
+        if seen is not None:
+            digests = digests.join(seen, "digest", "left_anti")
+        digests.write.mode("append").parquet(location)
+        if compact_after_files:
+            _compact_state(result.sparkSession, location, compact_after_files)
+    return result
+
+
 @register("dedup_incremental_exact")
 def dedup_incremental_exact(
     state_location: str,
@@ -1737,82 +1705,46 @@ def dedup_incremental_exact(
     digests to the state for the next run. This is the production shape
     of corpus ingestion — each crawl/delivery dedupes against everything
     already ingested without re-reading the corpus, only its digests.
+    The state (one md5 per unique key ever seen) follows the module
+    docstring's contract.
 
-    Semantics note: the state append is an EAGER side effect at transform
-    time (like ``bpe_train``'s driver-side merge table) — the survivors
-    are localCheckpointed once, their digests appended, and the
-    checkpointed result returned, so the returned DataFrame and the state
-    can never disagree. Pass ``update_state=False`` for a dry-run probe.
-
-    Scale design: the state is digests ONLY (one md5 string per unique
-    key ever seen — bytes per corpus row, not the corpus). The
-    previously-seen drop is a digest-keyed LEFT ANTI join (shuffle on the
-    digest, no broadcast of anything unbounded); the in-batch survivor
-    pick is the same min-id aggregation as ``dedup_exact``; the append
-    writes only NEW digests. State grows by unique-new keys per run; when
-    the accumulated appends exceed ``compact_after_files`` parquet parts
-    the state is rewritten (distinct digests, ~1M rows/file) so a
-    daily-cadence pipeline never degrades into a thousands-of-small-files
-    anti-join scan. The rewrite is crash-safe: stage into
-    ``<state_location>__staging``, swap with two renames through a
-    ``__old`` backup, and heal an interrupted swap on the next access —
-    between the renames a reader outside the engine briefly sees no state
-    (``utils/fs_utils``). Set ``compact_after_files=0`` to disable.
+    Scale design: the previously-seen drop is a digest-keyed LEFT ANTI
+    join (shuffle on the digest, no broadcast of anything unbounded); the
+    in-batch survivor pick is the same min-id aggregation as
+    ``dedup_exact``; the survivors' digests are new and distinct, so the
+    append needs no second anti-join.
     """
     if not key_cols:
         raise ValueError("dedup_incremental_exact: key_cols must be non-empty")
 
     def _dedup(df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            raise ValueError(
-                "dedup_incremental_exact is batch-only (cross-RUN state); "
-                "use dedup_exact with a watermark for within-stream dedup"
-            )
-        spark = df.sparkSession
+        seen = _read_state("dedup_incremental_exact", df, state_location)
         keys = [F.col(c) for c in key_cols]
         if normalize:
             keys = [
                 F.regexp_replace(F.lower(F.trim(k)), r"\s+", " ") for k in keys
             ]
         digest = F.md5(F.concat_ws("\x1f", *[k.cast("string") for k in keys]))
-        with_digest = df.withColumn("__digest", digest)
-        # Existence check, NOT a bare try/except around the read: a corrupt
-        # state file or transient FS error must fail the batch loudly —
-        # treating it as "first run" would re-emit previously-seen rows and
-        # append duplicate digests to the state.
-        have_state = fs_utils.heal(spark, state_location)
-        seen = (
-            spark.read.parquet(state_location).select("digest")
-            if have_state
-            else None
-        )
-        fresh = with_digest
-        if have_state:
-            fresh = with_digest.join(
-                seen.withColumnRenamed("digest", "__digest"),
-                "__digest",
-                "left_anti",
+        fresh = df.withColumn("__digest", digest)
+        if seen is not None:
+            fresh = fresh.join(
+                seen.withColumnRenamed("digest", "__digest"), "__digest", "left_anti"
             )
         w_best = Window.partitionBy("__digest").orderBy(F.col(id_col).asc())
         survivors = (
             fresh.withColumn("__rn", F.row_number().over(w_best))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
-            # MUST stay localCheckpoint (not iter_materialize): the
-            # lineage reads the state this function is about to MUTATE —
-            # a recomputable persist would, after executor loss, re-read
-            # the already-appended digests and silently drop every row of
-            # this batch. Non-recomputable blocks fail LOUDLY instead,
-            # which is the correct behavior here.
-            .localCheckpoint(eager=True)
         )
-        if update_state:
-            survivors.select(
-                F.col("__digest").alias("digest")
-            ).write.mode("append").parquet(state_location)
-            if compact_after_files:
-                _compact_state(spark, state_location, compact_after_files)
-        return survivors.drop("__digest")
+        # the survivors' digests are fresh and distinct already: no anti-join
+        return _commit_state(
+            survivors,
+            state_location,
+            lambda kept: kept.select(F.col("__digest").alias("digest")),
+            None,
+            update_state,
+            compact_after_files,
+        ).drop("__digest")
 
     return _dedup
 
@@ -1840,12 +1772,9 @@ def dedup_incremental_minhash(
     Order of rules matters: history first (a doc colliding with history is
     gone regardless of in-batch standing), THEN the in-batch bucket-min
     among the remaining docs — so a history-dup can never claim a bucket
-    minimum and drag down a legitimate newcomer.
-
-    Same eager-state contract as the exact variant: survivors are
-    localCheckpointed once, new bucket hashes (distinct, anti-joined
-    against the state) appended, and the state compacts past
-    ``compact_after_files`` parts. ``update_state=False`` dry-runs.
+    minimum and drag down a legitimate newcomer. The state follows the
+    module docstring's contract; the appended bucket hashes are distinct
+    and anti-joined against it.
 
     Scale: the signature pipeline (the md5-heavy part) runs ONCE into a
     persisted ids+buckets frame; every join after that is ids/hashes only
@@ -1857,23 +1786,14 @@ def dedup_incremental_minhash(
     rows = num_hashes // bands
 
     def _dedup(df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            raise ValueError(
-                "dedup_incremental_minhash is batch-only (cross-RUN state); "
-                "use streaming_dedup_exact for in-flight streams"
-            )
-        spark = df.sparkSession
+        seen = _read_state("dedup_incremental_minhash", df, state_location)
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
         exploded = _band_exploded(sig, bands, rows).persist()
         try:
-            have_state = fs_utils.heal(spark, state_location)
             fresh_exploded = exploded
-            if have_state:
-                seen = spark.read.parquet(state_location).select(
-                    F.col("digest").alias("__h")
-                )
+            if seen is not None:
                 hist_ids = (
-                    exploded.join(seen, "__h", "left_semi")
+                    exploded.join(seen.select(F.col("digest").alias("__h")), "__h", "left_semi")
                     .select("__id")
                     .distinct()
                 )
@@ -1887,29 +1807,18 @@ def dedup_incremental_minhash(
                 .filter(F.col("__head") == F.col("__id"))
                 .select("__id")
             )
-            # MUST stay localCheckpoint — same read-then-mutate-state
-            # rationale as dedup_incremental_exact above
-            survivors = df.join(
-                head, df[id_col] == head["__id"], "left_semi"
-            ).localCheckpoint(eager=True)
-            if update_state:
-                new_hashes = (
-                    exploded.join(
-                        survivors.select(F.col(id_col).alias("__id")), "__id"
-                    )
+            return _commit_state(
+                df.join(head, df[id_col] == head["__id"], "left_semi"),
+                state_location,
+                lambda kept: (
+                    exploded.join(kept.select(F.col(id_col).alias("__id")), "__id")
                     .select(F.col("__h").alias("digest"))
                     .distinct()
-                )
-                if have_state:
-                    new_hashes = new_hashes.join(
-                        spark.read.parquet(state_location).select("digest"),
-                        "digest",
-                        "left_anti",
-                    )
-                new_hashes.write.mode("append").parquet(state_location)
-                if compact_after_files:
-                    _compact_state(spark, state_location, compact_after_files)
-            return survivors
+                ),
+                seen,
+                update_state,
+                compact_after_files,
+            )
         finally:
             exploded.unpersist()
 
@@ -1936,9 +1845,9 @@ def dedup_incremental_embedding(
     itself with ``dedup_embedding_cosine``'s LSH+exact-verify rule, and
     append the survivors' bucket hashes to the state.
 
-    State contract (same as the MinHash arm): BUCKET HASHES ONLY —
-    ``num_tables`` md5 strings per kept vector, bytes per corpus row;
-    the embeddings themselves never persist. The hyperplanes are seeded
+    The state follows the module docstring's contract and holds BUCKET
+    HASHES ONLY — ``num_tables`` md5 strings per kept vector; the
+    embeddings themselves never persist. The hyperplanes are seeded
     literals (``similarity.hyperplane_signatures``), so signatures are
     re-derivable across runs/restarts and the state stays meaningful.
     Consequence, documented: the HISTORY drop is bucket-collision only
@@ -1949,12 +1858,8 @@ def dedup_incremental_embedding(
     verify. Order of rules matches the MinHash arm: history first, then
     in-batch — a history-dup can never suppress a legitimate newcomer.
 
-    Crash-safety: same eager-state contract (survivors localCheckpointed
-    BEFORE the state append — the lineage reads files this function
-    mutates), same interrupted-compaction recovery + parts compaction
-    (:func:`_compact_state`); ``update_state=False`` dry-runs. Zero-norm
-    and null embeddings have no cosine direction: they skip buckets and
-    pairing and always survive (and never enter the state).
+    Zero-norm and null embeddings have no cosine direction: they skip
+    buckets and pairing and always survive (and never enter the state).
 
     Scale: history flagging is one bucket-hash semi-join + an id
     anti-join (ids/hashes only); the in-batch verify re-attaches vectors
@@ -1965,30 +1870,12 @@ def dedup_incremental_embedding(
     dim_arg = dim
 
     def _dedup(df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            raise ValueError(
-                "dedup_incremental_embedding is batch-only (cross-RUN "
-                "state); in a streaming ACON it is re-planned into "
-                "foreachBatch automatically"
-            )
         from lakehouse_engine_spark.datapipes.similarity import (
             hyperplane_signatures,
         )
 
-        spark = df.sparkSession
-        if dim_arg is not None:
-            dim = dim_arg
-        else:
-            probe = df.select(
-                F.max(
-                    F.size(F.col(embedding_col).cast("array<double>"))
-                ).alias("d")
-            ).first()
-            dim = (
-                probe["d"]
-                if probe is not None and probe["d"] is not None
-                else 1
-            )
+        seen = _read_state("dedup_incremental_embedding", df, state_location)
+        dim = dim_arg if dim_arg is not None else vector_width(df, embedding_col) or 1
         sigs = (
             hyperplane_signatures(
                 df, embedding_col, id_col, num_planes, num_tables, dim=dim
@@ -2003,77 +1890,25 @@ def dedup_incremental_embedding(
                     )
                 ),
             )
-            .withColumn(
-                "__norm",
-                F.sqrt(
-                    F.aggregate(
-                        F.col("__bv"), F.lit(0.0), lambda s, v: s + v * v
-                    )
-                ),
-            )
+            .withColumn("__norm", _l2_norm(F.col("__bv")))
             .filter(F.col("__norm") > 0)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            have_state = fs_utils.heal(spark, state_location)
             fresh_sigs = sigs
             hist_ids = None
-            if have_state:
-                seen = spark.read.parquet(state_location).select(
-                    F.col("digest").alias("__h")
-                )
+            if seen is not None:
                 hist_ids = (
-                    sigs.join(seen, "__h", "left_semi")
+                    sigs.join(seen.select(F.col("digest").alias("__h")), "__h", "left_semi")
                     .select("__bid")
                     .distinct()
                 )
                 fresh_sigs = sigs.join(hist_ids, "__bid", "left_anti")
             # in-batch rule among fresh vectors: the batch arm's capped
-            # bucket join + exact-cosine verify, min-id survivor
-            capped = _cap_buckets(
-                fresh_sigs, ["__t", "__sig"], max_bucket_size,
-                pair_budget,
-            )
-            pairs = (
-                capped.alias("l")
-                .join(
-                    capped.alias("r"),
-                    (F.col("l.__t") == F.col("r.__t"))
-                    & (F.col("l.__sig") == F.col("r.__sig"))
-                    & (F.col("l.__bid") > F.col("r.__bid")),
-                )
-                .select(
-                    F.col("l.__bid").alias("__id"),
-                    F.col("r.__bid").alias("__cand"),
-                )
-                .dropDuplicates(["__id", "__cand"])
-            )
-            vecs = fresh_sigs.select(
-                "__bid", "__bv", "__norm"
-            ).dropDuplicates(["__bid"])
-            cands = (
-                pairs.join(
-                    vecs.select(
-                        "__bid",
-                        F.col("__bv").alias("__v1"),
-                        F.col("__norm").alias("__n1"),
-                    ),
-                    pairs["__id"] == F.col("__bid"),
-                )
-                .drop("__bid")
-                .join(
-                    vecs.select(
-                        "__bid",
-                        F.col("__bv").alias("__v2"),
-                        F.col("__norm").alias("__n2"),
-                    ),
-                    F.col("__cand") == F.col("__bid"),
-                )
-                .drop("__bid")
-            )
-            dot = dot_elements("__v1", "__v2", dim)
+            # bucket join + exact-cosine verify
+            capped = _cap_buckets(fresh_sigs, ["__t", "__sig"], max_bucket_size, pair_budget)
             dup_ids = (
-                cands.filter(dot / (F.col("__n1") * F.col("__n2")) >= threshold)
+                _cosine_lsh_pairs(capped, capped, dim, threshold, vectors=sigs)
                 .select("__id")
                 .distinct()
             )
@@ -2082,30 +1917,18 @@ def dedup_incremental_embedding(
                 if hist_ids is not None
                 else dup_ids
             )
-            # MUST stay localCheckpoint — same read-then-mutate-state
-            # rationale as the exact/minhash arms
-            survivors = df.join(
-                dropped, df[id_col] == dropped["__id"], "left_anti"
-            ).localCheckpoint(eager=True)
-            if update_state:
-                new_hashes = (
-                    sigs.join(
-                        survivors.select(F.col(id_col).alias("__bid")),
-                        "__bid",
-                    )
+            return _commit_state(
+                df.join(dropped, df[id_col] == dropped["__id"], "left_anti"),
+                state_location,
+                lambda kept: (
+                    sigs.join(kept.select(F.col(id_col).alias("__bid")), "__bid")
                     .select(F.col("__h").alias("digest"))
                     .distinct()
-                )
-                if have_state:
-                    new_hashes = new_hashes.join(
-                        spark.read.parquet(state_location).select("digest"),
-                        "digest",
-                        "left_anti",
-                    )
-                new_hashes.write.mode("append").parquet(state_location)
-                if compact_after_files:
-                    _compact_state(spark, state_location, compact_after_files)
-            return survivors
+                ),
+                seen,
+                update_state,
+                compact_after_files,
+            )
         finally:
             sigs.unpersist()
 
@@ -2457,15 +2280,12 @@ def text_winnow_incremental(
     must not poison the state with text it merely copied), by all docs
     under ``flag``. ``update_state=False`` is the dry-run probe.
 
-    State discipline mirrors the family: fingerprints ONLY (one BIGINT
-    per distinct selected gram, ~1/window of the corpus grams), eager
-    append AFTER a localCheckpoint of the screened result (the returned
-    frame and the state can never disagree; a recomputable lineage would
-    re-read the mutated state after executor loss), loud failure on a
-    corrupt state, in-place compaction after ``compact_after_files``
-    parts. The screen is one fp-keyed semi-join-shaped count — no pair
-    joins; ubiquitous-boilerplate control is ``min_shared`` (a doc must
-    share that many DISTINCT fingerprints with history).
+    The state follows the module docstring's contract; its ``digest``
+    column holds fingerprints (one BIGINT per distinct selected gram,
+    ~1/window of the corpus grams). The screen is one fp-keyed
+    semi-join-shaped count — no pair joins; ubiquitous-boilerplate
+    control is ``min_shared`` (a doc must share that many DISTINCT
+    fingerprints with history).
     """
     if mode not in ("flag", "drop"):
         raise ValueError(f"text_winnow_incremental: mode must be flag|drop, got {mode!r}")
@@ -2477,63 +2297,39 @@ def text_winnow_incremental(
     from lakehouse_engine_spark.datapipes.text import winnow_fingerprint
 
     def _fn(df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            raise ValueError(
-                "text_winnow_incremental is batch-only (cross-RUN state); "
-                "relocate into foreachBatch for streaming deliveries"
-            )
-        spark = df.sparkSession
+        seen = _read_state("text_winnow_incremental", df, state_location)
         fps = (
             winnow_fingerprint(input_col=text_col, id_col=id_col, k=k, window=window)(df)
             .select(F.col(id_col).alias("__id"), "fp")
             .distinct()
         )
-        have_state = fs_utils.heal(spark, state_location)
-        if have_state:
-            # state column named `digest` (a BIGINT fp here) so the
-            # family-shared _compact_state rewrite applies unchanged
-            seen = (
-                spark.read.parquet(state_location)
-                .select(F.col("digest").alias("fp"))
-                .distinct()
-            )
+        if seen is None:
+            out = df.withColumn("hist_shared_fps", F.lit(0).cast("long"))
+        else:
             hits = (
-                fps.join(seen, "fp")
+                fps.join(seen.select(F.col("digest").alias("fp")).distinct(), "fp")
                 .groupBy("__id")
                 .agg(F.count(F.lit(1)).cast("long").alias("hist_shared_fps"))
             )
-        else:
-            hits = None
-        out = df
-        if hits is not None:
             out = df.join(hits, df[id_col] == hits["__id"], "left").drop("__id")
             out = out.withColumn(
                 "hist_shared_fps", F.coalesce("hist_shared_fps", F.lit(0))
             )
-        else:
-            out = out.withColumn("hist_shared_fps", F.lit(0).cast("long"))
         out = out.withColumn("is_seen", F.col("hist_shared_fps") >= min_shared)
         if mode == "drop":
             out = out.filter(~F.col("is_seen")).drop("hist_shared_fps", "is_seen")
-        out = out.localCheckpoint(eager=True)
-        if update_state:
-            contributors = (
-                out.select(F.col(id_col).alias("__kid"))
-                if mode == "drop"
-                else df.select(F.col(id_col).alias("__kid"))
+
+        def _new_fps(kept: DataFrame) -> DataFrame:
+            # a doc dropped as seen must not add the text it copied
+            ids = (kept if mode == "drop" else df).select(F.col(id_col).alias("__kid"))
+            return (
+                fps.join(ids, fps["__id"] == ids["__kid"], "left_semi")
+                .select(F.col("fp").alias("digest"))
+                .distinct()
             )
-            new_fps = fps.join(
-                contributors, fps["__id"] == contributors["__kid"], "left_semi"
-            ).select(F.col("fp").alias("digest"))
-            if have_state:
-                new_fps = new_fps.join(
-                    spark.read.parquet(state_location).select("digest"),
-                    "digest",
-                    "left_anti",
-                )
-            new_fps.distinct().write.mode("append").parquet(state_location)
-            if compact_after_files:
-                _compact_state(spark, state_location, compact_after_files)
-        return out
+
+        return _commit_state(
+            out, state_location, _new_fps, seen, update_state, compact_after_files
+        )
 
     return _fn

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_engine_spark.datapipes.colbuild import vector_width
 from lakehouse_engine_spark.datapipes.registry import register
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -553,10 +554,7 @@ def embedding_random_projection(
             raise ValueError(
                 f"embedding_random_projection: {input_col} must be an array"
             )
-        # embedding width from the data: one aggregate probe over
-        # non-null embeddings (a null first row must not zero the width)
-        first = df.select(F.max(F.size(input_col)).alias("d")).first()
-        d_in = int(first["d"]) if first and first["d"] is not None else 0
+        d_in = vector_width(df, input_col)
         if d_in < 1:
             return df.withColumn(
                 output_col,

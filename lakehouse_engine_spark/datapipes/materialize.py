@@ -29,11 +29,13 @@ scale-in, spot kill) fails every downstream stage unrecoverably.
 
 NOT for every localCheckpoint site: operators whose returned (lazy) plan
 must read a snapshot of state the operator itself then MUTATES — the
-``dedup_incremental_*`` family checkpoints the survivors BEFORE
-appending their digests to the state the anti-join reads — must keep
-``localCheckpoint`` unconditionally: a lineage recompute after executor
-loss would re-read the already-updated state and silently drop rows,
-so failing loudly is the correct behavior there.
+cross-run digest-state ops (``dedup_incremental_*`` and
+``text_winnow_incremental``) checkpoint their result in
+``dedup._commit_state`` BEFORE appending its digests to the state the
+anti-join reads — must keep ``localCheckpoint`` unconditionally: a
+lineage recompute after executor loss would re-read the
+already-updated state and silently drop rows, so failing loudly is the
+correct behavior there.
 
 One-shot size probes (count now, reuse in a lazily-returned plan) use
 :func:`probe_materialize`: checkpoint on static clusters, NO

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_engine_spark.datapipes.colbuild import vector_width
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 
 from lakehouse_engine_spark.datapipes.dedup import cosine
@@ -337,14 +338,7 @@ def knn_ivf(
             .select(F.col("__vid").alias("centroid_id"), F.col("__v").alias("__cv"))
         )
         if iters > 0:
-            # aggregate width probe over non-null embeddings — a null
-            # FIRST row must not zero the width (the dp97 review lesson)
-            probe = df.select(F.max(F.size(vec)).alias("d")).first()
-            dim = (
-                int(probe["d"])
-                if probe is not None and probe["d"] is not None and probe["d"] > 0
-                else 1  # empty corpus
-            )
+            dim = vector_width(df, vec) or 1  # 1: empty corpus
             for _ in range(iters):
                 # Lloyd round: broadcast-assign, then per-cluster mean. The
                 # element-wise mean is dim scalar AVG aggregates (codegen,
@@ -476,8 +470,7 @@ def knn_ivf_hier(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            probe = base.select(F.max(F.size("__qv")).alias("d")).first()
-            dim = int(probe["d"]) if probe and probe["d"] is not None else 0
+            dim = vector_width(base, "__qv")
             if dim == 0:
                 # degenerate-corpus schema must MATCH the populated
                 # path's (ids keep the caller's id_col type — the

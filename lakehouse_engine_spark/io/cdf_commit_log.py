@@ -86,9 +86,9 @@ def file_id(uri: str) -> str:
 
 
 def _list_data_files(spark: SparkSession, location: str) -> List[str]:
-    """Recursive listing of data files under ``location``, skipping
-    underscore/dot-prefixed names at every level (Spark's own ignore
-    rule) — one control-plane walk per commit."""
+    """Recursive listing of data files under ``location``, skipping the
+    names Spark's readers skip at every level (``fs_utils.is_hidden``) —
+    one control-plane walk per commit."""
     fs, root = fs_utils._fs(spark, location)
     if not fs.exists(root):
         return []
@@ -98,7 +98,7 @@ def _list_data_files(spark: SparkSession, location: str) -> List[str]:
         cur = stack.pop()
         for st in fs.listStatus(cur):
             name = st.getPath().getName()
-            if name.startswith(("_", ".")):
+            if fs_utils.is_hidden(name):
                 continue
             if st.isDirectory():
                 stack.append(st.getPath())

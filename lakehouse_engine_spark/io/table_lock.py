@@ -47,7 +47,7 @@ documented single-writer assumption):
 - a writer whose lock was stolen mid-flight (a second writer treated it
   as stale, or deleted it manually) detects the foreign token at commit
   time via :meth:`WriterLock.verify` and raises BEFORE its swap.
-- a crashed writer's lock auto-expires after ``stale_after_s`` (the next
+- a crashed writer's lock auto-expires after ``STALE_AFTER_S`` (the next
   writer logs a warning and replaces it), so the guard cannot deadlock
   an unattended pipeline.
 """
@@ -68,7 +68,10 @@ from lakehouse_engine_spark.utils import fs_utils
 _LOGGER = logging.getLogger(__name__)
 
 LOCK_NAME = "_lhe_writer.lock"
-DEFAULT_STALE_S = 3600.0
+# a lock older than this belongs to a crashed writer and is replaced
+STALE_AFTER_S = 3600.0
+# pause between the acquire retries a caller asks for
+RETRY_WAIT_S = 0.05
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -78,7 +81,7 @@ class ConcurrentWriterError(RuntimeError):
     silently drop the other writer's update. Remediation: serialize the
     writers (one engine job per degraded-delta table at a time — the
     documented contract), or, after a confirmed crash, delete the stale
-    ``<location>._lhe_writer.lock`` / wait out ``stale_after_s``.
+    ``<location>._lhe_writer.lock`` / wait out ``STALE_AFTER_S``.
     """
 
 
@@ -103,7 +106,7 @@ def _read_lock(spark: SparkSession, location: str) -> Optional[dict]:
         # (that classified a milliseconds-old lock mid-payload-write as
         # stale and let it be stolen instantly). Age it by the file's
         # mtime instead — a fresh racer's lock reads young, a crashed
-        # writer's empty file still expires via stale_after_s.
+        # writer's empty file still expires via STALE_AFTER_S.
         try:
             fs, path = fs_utils._fs(spark, lock_path(location))
             info["acquired_unix"] = (
@@ -131,12 +134,10 @@ class WriterLock:
         spark: SparkSession,
         location: str,
         op: str = "write",
-        stale_after_s: float = DEFAULT_STALE_S,
         acquire_retries: int = 0,
-        retry_wait_s: float = 0.05,
     ):
-        """``acquire_retries``/``retry_wait_s``: how long to WAIT for a
-        live holder before declaring contention. Control-plane-only
+        """``acquire_retries``: how many ``RETRY_WAIT_S`` pauses to WAIT
+        for a live holder before declaring contention. Control-plane-only
         mutations whose hold time is milliseconds (the CDF commit log)
         pass a short retry budget so two back-to-back appends serialize
         instead of erroring; data-overwrite mutations (merge) keep the
@@ -144,9 +145,7 @@ class WriterLock:
         self._spark = spark
         self._location = location
         self._op = op
-        self._stale_after_s = stale_after_s
         self._acquire_retries = max(0, int(acquire_retries))
-        self._retry_wait_s = retry_wait_s
         self._token = uuid.uuid4().hex
 
     @staticmethod
@@ -240,9 +239,9 @@ class WriterLock:
                     continue  # holder released between create() and read
                 age = time.time() - float(holder.get("acquired_unix", 0) or 0)
                 if attempt <= self._acquire_retries:
-                    time.sleep(self._retry_wait_s)
+                    time.sleep(RETRY_WAIT_S)
                     continue
-                if not stale_takeover_done and age > self._stale_after_s:
+                if not stale_takeover_done and age > STALE_AFTER_S:
                     stale_takeover_done = True
                     _LOGGER.warning(
                         "writer lock at %s is stale (%.0fs old, holder pid "

@@ -329,7 +329,7 @@ def _partition_glob(spark: SparkSession, src_loc: str) -> str:
         if not st.isDirectory():
             root_parquet = root_parquet or name.endswith(".parquet")
             continue
-        if name.startswith(("_", ".")):
+        if fs_utils.is_hidden(name):
             continue  # Spark-ignored metadata/hidden dirs
         if "=" in name:
             keys.add(name.split("=", 1)[0])

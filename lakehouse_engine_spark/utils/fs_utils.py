@@ -86,6 +86,13 @@ def path_exists(spark: SparkSession, location: str) -> bool:
             raise
 
 
+def is_hidden(name: str) -> bool:
+    """Spark's rule for the file and directory names its readers skip: a
+    ``.`` prefix, or a ``_`` prefix without ``=`` (``_SUCCESS`` and
+    ``_delta_log`` are hidden; a ``_col=value`` partition dir is data)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def list_names(spark: SparkSession, location: str) -> list:
     """Names of the entries directly under ``location``."""
     fs, path = _fs(spark, location)

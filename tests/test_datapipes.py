@@ -3386,7 +3386,41 @@ def test_html_strip_rules(spark):
     assert got[7] == "multiline tag"
 
 
-def test_dedup_incremental_corrupt_state_fails_loudly(spark, tmp_path):
+# The cross-run digest-state contract (dedup.py's module docstring) holds
+# for every op built on it: each case runs over all four.
+_INCREMENTAL = {
+    "exact": ("dedup_incremental_exact", {"key_cols": ["text"]}),
+    "minhash": ("dedup_incremental_minhash", {}),
+    "embedding": ("dedup_incremental_embedding", {"dim": 4}),
+    "winnow": ("text_winnow_incremental", {}),
+}
+_INCREMENTAL_DOCS = {
+    "alpha": ("the alpha passage on query engines and their shuffles at scale",
+              [1.0, 0.0, 0.0, 0.0]),
+    "beta": ("a beta document about storage layouts compaction and small files",
+             [0.0, 1.0, 0.0, 0.0]),
+    "gamma": ("gamma covers stream processing with watermarks and late data",
+              [0.0, 0.0, 1.0, 0.0]),
+    "delta": ("delta text on vector search with inverted lists and codebooks",
+              [0.0, 0.0, 0.0, 1.0]),
+}
+
+
+def _incremental_run(spark, kind, state, docs, **kw):
+    """Run one incremental op over ``docs`` ((doc_id, key) pairs); the ids
+    it keeps (winnow: the ones it does not flag as seen) and the row count."""
+    name, args = _INCREMENTAL[kind]
+    df = spark.createDataFrame(
+        [(i, *_INCREMENTAL_DOCS[k]) for i, k in docs],
+        "doc_id LONG, text STRING, embedding ARRAY<DOUBLE>",
+    )
+    op = t(name, state_location=str(state), id_col="doc_id", **args, **kw)
+    rows = df.transform(op).collect()
+    return {r["doc_id"] for r in rows if not r.asDict().get("is_seen")}, len(rows)
+
+
+@pytest.mark.parametrize("kind", list(_INCREMENTAL))
+def test_dedup_incremental_corrupt_state_fails_loudly(spark, tmp_path, kind):
     """A corrupt/unreadable state must PROPAGATE, not be silently treated
     as 'first run' — the old bare except disabled cross-run dedup on any
     read failure, re-emitting previously-seen rows and appending duplicate
@@ -3395,17 +3429,15 @@ def test_dedup_incremental_corrupt_state_fails_loudly(spark, tmp_path):
     state.mkdir()
     # a parquet footer that isn't: existing path, unreadable content
     (state / "part-00000.parquet").write_bytes(b"not a parquet file")
-    df = spark.createDataFrame([(1, "alpha")], "doc_id LONG, text STRING")
-    op = t("dedup_incremental_exact", state_location=str(state),
-           key_cols=["text"], id_col="doc_id")
     with pytest.raises(Exception) as exc:
-        df.transform(op).collect()
+        _incremental_run(spark, kind, state, [(1, "alpha")])
     # and the state was NOT polluted with this batch's digests
     assert sorted(p.name for p in state.iterdir()) == ["part-00000.parquet"]
     assert "first run" not in str(exc.value)
 
 
-def test_dedup_incremental_crash_mid_compaction_recovers(spark, tmp_path):
+@pytest.mark.parametrize("kind", list(_INCREMENTAL))
+def test_dedup_incremental_crash_mid_compaction_recovers(spark, tmp_path, kind):
     """The compaction swap has a window where the live state dir does not
     exist (rename(live -> __old) landed, rename(staging -> live) did
     not). A run starting inside that window must RESTORE the backup and
@@ -3415,28 +3447,38 @@ def test_dedup_incremental_crash_mid_compaction_recovers(spark, tmp_path):
     import shutil
 
     state = tmp_path / "digests"
-    df1 = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id LONG, text STRING"
-    )
-    op = t("dedup_incremental_exact", state_location=str(state),
-           key_cols=["text"], id_col="doc_id")
-    assert len(df1.transform(op).collect()) == 2
+    assert _incremental_run(spark, kind, state, [(1, "alpha"), (2, "beta")])[0] == {1, 2}
     # crash window (a): live dir gone, __old holds the full state
     shutil.move(str(state), str(state) + "__old")
-    df2 = spark.createDataFrame(
-        [(3, "alpha"), (4, "gamma")], "doc_id LONG, text STRING"
-    )
-    out = {r["text"] for r in df2.transform(op).collect()}
-    assert out == {"gamma"}  # alpha still deduped -> state was recovered
+    kept, _ = _incremental_run(spark, kind, state, [(3, "alpha"), (4, "gamma")])
+    assert kept == {4}  # alpha still deduped -> state was recovered
     assert state.exists() and not (tmp_path / "digests__old").exists()
     # crash window (b): swap completed but the backup delete did not
     shutil.copytree(str(state), str(state) + "__old")
-    df3 = spark.createDataFrame(
-        [(5, "beta"), (6, "delta")], "doc_id LONG, text STRING"
-    )
-    out = {r["text"] for r in df3.transform(op).collect()}
-    assert out == {"delta"}
+    kept, _ = _incremental_run(spark, kind, state, [(5, "beta"), (6, "delta")])
+    assert kept == {6}
     assert not (tmp_path / "digests__old").exists()  # stale backup dropped
+
+
+@pytest.mark.parametrize("update_state", [False, True], ids=["dry_run", "rerun"])
+@pytest.mark.parametrize("kind", list(_INCREMENTAL))
+def test_dedup_incremental_second_run_of_a_batch(spark, tmp_path, kind, update_state):
+    """A second run of the same batch keeps no row (winnow: flags every
+    doc), whether or not it may update the state; with
+    ``update_state=False`` the state files stay byte-identical."""
+    state = tmp_path / "digests"
+    docs = [(1, "alpha"), (2, "beta"), (3, "gamma")]
+    assert _incremental_run(spark, kind, state, docs)[0] == {1, 2, 3}
+
+    def snapshot():
+        return {p.relative_to(state): p.read_bytes() for p in state.rglob("*") if p.is_file()}
+
+    before = snapshot()
+    kept, n_rows = _incremental_run(spark, kind, state, docs, update_state=update_state)
+    assert kept == set()
+    assert n_rows == (3 if kind == "winnow" else 0)
+    if not update_state:
+        assert snapshot() == before
 
 
 class _RenameFailFS:

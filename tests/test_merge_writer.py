@@ -463,7 +463,7 @@ def test_empty_lock_payload_is_young_not_stolen(spark, tmp_dir):
     with pytest.raises(ConcurrentWriterError, match="concurrent writer"):
         with WriterLock(spark, loc, op="merge"):
             pass
-    # ...but a crashed writer's empty lock still expires via stale_after_s
+    # ...but a crashed writer's empty lock still expires via STALE_AFTER_S
     _os.utime(lock_path(loc), (1.0, 1.0))
     with WriterLock(spark, loc, op="merge") as lk:
         lk.verify()

@@ -198,6 +198,42 @@ def test_expose_cdf_per_append_versions_from_commit_log(spark, tmp_path, name):
     assert after == {1: 1, 2: 1, 3: 2, 4: 3}
 
 
+def test_cdf_commit_log_records_underscore_partition_dirs(spark, tmp_path):
+    """A ``_col=value`` directory is a partition, not a hidden name (Spark
+    skips ``_`` names only when they hold no ``=``): two appends to a
+    degraded-delta table partitioned by ``_p`` record two commit entries,
+    and expose_cdf stamps each append with its own version."""
+    from lakehouse_engine_spark.core.definitions import OutputSpec
+    from lakehouse_engine_spark.core.exec_env import ExecEnv
+    from lakehouse_engine_spark.io import cdf_commit_log
+    from lakehouse_engine_spark.io.writer_factory import WriterFactory
+
+    if ExecEnv.delta_available():
+        pytest.skip("delta present: the Delta log numbers the commits")
+    loc = str(tmp_path / "tbl")
+    cdf = str(tmp_path / "cdf")
+
+    for rows in ([(1, "a"), (2, "b")], [(3, "a")]):
+        WriterFactory.write(
+            spark,
+            spark.createDataFrame(rows, "id INT, _p STRING"),
+            OutputSpec(
+                spec_id="o", input_id="i", data_format="delta", location=loc,
+                write_type="append", partitions=["_p"],
+            ),
+        )
+    assert [e["version"] for e in cdf_commit_log.read_log(spark, loc)] == [1, 2]
+    expose_cdf(
+        spark,
+        location=loc,
+        materialized_cdf_location=cdf,
+        materialized_cdf_options={"checkpointLocation": str(tmp_path / "ckpt")},
+        clean_cdf=False,
+    )
+    got = {r["id"]: r["_commit_version"] for r in spark.read.parquet(cdf).collect()}
+    assert got == {1: 1, 2: 1, 3: 2}
+
+
 def test_cdf_commit_log_numbering_survives_overwrite_and_merge(spark, tmp_path):
     """The commit log sits beside the table dir, so neither an overwrite
     (which deletes what the dir holds) nor a merge (whose commit swap
