@@ -7,13 +7,49 @@ reweighting. ``dedup_semantic_centroid`` (similarity.py) consumes
 externally-supplied centroids; this module TRAINS them, Spark-first and
 bit-exactly replayable by an external SQL engine.
 
-Numeric design (the same discipline as ``graph_pagerank``): embeddings
-quantize to an integer grid (default scale 1024 — a power of two, so
-``float -> double * 1024 + 0.5 -> floor`` is EXACT in IEEE arithmetic and
-any engine reproduces identical grid points), distances are exact int64
-sums of squared integer diffs, and centroid updates use explicit floor
-division — no floating-point accumulation anywhere, so iteration K's
-centroids are bit-identical across Spark, DuckDB, and a Python reference.
+The exact contract
+------------------
+Every trainer and coder here runs the same integer-grid arithmetic (the
+discipline of ``graph_pagerank``): no floating-point accumulation
+anywhere, so iteration K's centroids are bit-identical across Spark,
+DuckDB, and a Python reference.
+
+* **Quantization.** Each component maps to the integer grid
+  ``floor(double(x) * quant_scale + 0.5)`` as a bigint. The default scale
+  1024 is a power of two, so the product is EXACT in IEEE arithmetic and
+  any engine reproduces identical grid points.
+* **Init draw.** Initial centroids, and PQ codebook rows, are the
+  quantized vectors of the ``k`` USABLE rows with the smallest
+  ``(md5(cast(id as string)), id)`` — a seedless, engine-portable
+  pseudo-random draw; cluster (code) ids 0..k-1 follow that order. A row
+  is usable when its vector is non-null and carries no null element
+  (:func:`_usable_sample`); no other row seeds a centroid or enters a
+  Lloyd sum.
+* **Distance and tie-break.** Distances are exact int64 squared L2 via
+  the expansion ``x.x - 2 x.c + c.c`` (int64 matmul, exact while
+  quantized components stay below ~2^25 at 1024 dims), and the nearest
+  centroid is the FIRST minimum: ties go to the smallest cluster id,
+  matching the SQL oracle's ``row_number() ... ORDER BY d, c`` replay.
+  :func:`_nearest` is the one whole-vector kernel, :func:`_pq_dists` the
+  one per-subspace kernel.
+* **Update.** A Lloyd round assigns every usable row, then sets each
+  centroid to the per-dimension FLOOR division of its members' sum by
+  their count (:func:`_floordiv`); a cluster with no members keeps its
+  centroid.
+* **Null contract.** A row that is not usable is still assigned: cluster
+  0 with a null distance (PQ: a null code and a null distance). A corpus
+  whose vectors are all zero-width puts every non-null row in cluster 0
+  at distance 0.
+
+The hierarchical trainer runs the same rounds inside cells: a row moves
+only among its coarse cell's sub-centroids. The flat trainer is the
+one-cell case, so one assignment UDF (:func:`_assign_udf`), one Lloyd
+round per tier and one update serve both.
+
+Two tiers: a corpus of at most :data:`DRIVER_KMEANS_MAX_ELEMS` quantized
+components trains on the driver from one bounded collect; a larger one
+trains with one Spark aggregate per round. Both run the kernels above on
+the same rows, so the tier never changes the result.
 
 Scale design — the assignment is an Arrow-batched vectorized kernel, and
 that choice is MEASURED, not assumed. Three JVM-side formulations were
@@ -38,31 +74,28 @@ Per-row Python is still banned from hot paths everywhere in this repo;
 this is the sanctioned exception class (same as the media codecs): an
 Arrow-batched kernel for semantics the built-in operators cannot express
 without either a shuffle per iteration or a super-linear plan. All exact
-integer math survives the detour: the distance expansion
-``x.x - 2 x.c + c.c`` is int64 matmul (exact while quantized components
-stay below ~2^25 at 1024 dims), and ``argmin`` resolves ties to the
-first (= smallest) cluster id, matching the SQL oracle's
-``row_number() ... ORDER BY d, c`` replay.
+integer math survives the detour.
 
 Per Lloyd iteration: one joinless assignment projection (centroids ride
 the closure — KBs) feeding ONE map-side-combined aggregation keyed on
-(cluster, dim) whose post-combine shuffle volume is k*dim rows
+(cell, cluster, dim) whose post-combine shuffle volume is k*dim rows
 regardless of corpus size. Driver traffic is k initial rows and k*dim
 partial sums per iteration (the bpe_train control-decision class).
 """
 
 from __future__ import annotations
 
-from typing import Callable, List
+from contextlib import contextmanager
+from typing import Callable, Dict, List
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from lakehouse_engine_spark.datapipes.colbuild import vector_width
+from lakehouse_engine_spark.datapipes.colbuild import grid_sq_dist, vector_width
 from lakehouse_engine_spark.datapipes.driver_tier import (
     bounded_collect,
     driver_safe_ids,
@@ -70,90 +103,34 @@ from lakehouse_engine_spark.datapipes.driver_tier import (
 from lakehouse_engine_spark.datapipes.registry import register
 
 TransformerFn = Callable[[DataFrame], DataFrame]
+# cell id -> int64 [k_cell x dim] centroid matrix; the flat trainer is {0: C}
+Cells = Dict[int, np.ndarray]
 
 # Arrow batches default to 10k rows; the per-batch distance matrix is
 # rows x k int64. Cap k so one batch's matrix stays well under a GiB.
 MAX_K = 4096
-
-
-def _floordiv(s: int, n: int) -> int:
-    """Exact floor division replayable as portable SQL (`s//n` with the
-    negative-numerator case rewritten so truncating engines agree)."""
-    if s >= 0:
-        return s // n
-    return -((-s + n - 1) // n)
-
 
 # Driver tier budget of the k-means trainers: rows x dim of the quantized
 # corpus, ~120 MB of collected rows at the default (see driver_tier.py).
 DRIVER_KMEANS_MAX_ELEMS = 4_000_000
 
 
-def _py_id_hash(x) -> str:
-    """Driver replica of ``F.md5(F.col(id).cast("string"))`` for the
-    int/string ids the trainers see (a bigint casts to its decimal
-    string in both engines; strings pass through)."""
-    import hashlib
-
-    s = x if isinstance(x, str) else str(x)
-    return hashlib.md5(s.encode("utf-8")).hexdigest()
+# ----- the grid, the init draw and the driver tier's corpus -------------------
 
 
-def _driver_collect(df: DataFrame, id_col: str, input_col: str,
-                    quant_scale: int, dim: int):
-    """The quantized ``(__km_id, __km_v)`` rows when the corpus fits
-    :data:`DRIVER_KMEANS_MAX_ELEMS` and every id is driver-hashable
-    (matching the md5-cast replica); None otherwise."""
-    rows = bounded_collect(
-        df.select(
-            F.col(id_col).alias("__km_id"),
-            _quantize_expr(input_col, quant_scale).alias("__km_v"),
-        ),
-        DRIVER_KMEANS_MAX_ELEMS // dim,
+def _quantize_expr(input_col: str, scale: int):
+    return F.transform(
+        F.col(input_col),
+        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
     )
-    if rows is None or not driver_safe_ids(rows, "__km_id", allow_null=False):
-        return None
-    return rows
 
 
-def _driver_usable(rows):
-    """Split collected rows into (ids, vectors) of USABLE samples — the
-    driver replica of :func:`_usable_sample` + ``_clean_int_rows`` row
-    routing (non-null vector, no null element)."""
-    ids, vecs = [], []
-    for r in rows:
-        v = r["__km_v"]
-        if v is None or any(x is None for x in v):
-            continue
-        ids.append(r["__km_id"])
-        vecs.append(v)
-    return ids, vecs
-
-
-def _driver_init_order(ids) -> List[int]:
-    """Indices of ``ids`` in the trainers' init order — smallest
-    ``(md5(cast(id as string)), id)`` first. Python str compare equals
-    UTF8String binary compare for valid Unicode (the bpe.py tie-break
-    argument), and the hex digest is ASCII."""
-    return sorted(range(len(ids)), key=lambda i: (_py_id_hash(ids[i]), ids[i]))
-
-
-def _driver_lloyd(X: np.ndarray, cents: np.ndarray, iterations: int) -> np.ndarray:
-    """Exact int64 Lloyd rounds on the driver — the same distance
-    expansion, first-min tie-break and floor-div update as
-    ``_iteration_sums`` + the caller's update loop; empty clusters keep
-    their previous centroid."""
-    for _ in range(iterations):
-        cnorm = (cents * cents).sum(axis=1)
-        dist = (X * X).sum(axis=1)[:, None] - 2 * (X @ cents.T) + cnorm[None, :]
-        c = dist.argmin(axis=1)
-        for j in range(len(cents)):
-            m = c == j
-            n = int(m.sum())
-            if n:
-                s = X[m].sum(axis=0)
-                cents[j] = [_floordiv(int(sv), n) for sv in s]
-    return cents
+def _quantized(df: DataFrame, id_col: str, input_col: str, scale: int) -> DataFrame:
+    """``(__km_id, __km_v)``: each row's id and quantized vector."""
+    return df.select(
+        F.col(id_col).alias("__km_id"),
+        _quantize_expr(input_col, scale).alias("__km_v"),
+    )
 
 
 def _usable_sample(col_name: str):
@@ -166,11 +143,79 @@ def _usable_sample(col_name: str):
     return c.isNotNull() & ~F.exists(c, lambda x: x.isNull())
 
 
-def _quantize_expr(input_col: str, scale: int):
-    return F.transform(
-        F.col(input_col),
-        lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
+def _init_draw(q: DataFrame, k: int) -> List[list]:
+    """The init draw over a :func:`_quantized` frame: the vectors of its
+    ``k`` usable rows with the smallest ``(md5(cast(id as string)), id)``,
+    in that order."""
+    rows = (
+        q.filter(_usable_sample("__km_v"))
+        .select(
+            "__km_v",
+            F.md5(F.col("__km_id").cast("string")).alias("__h"),
+            "__km_id",
+        )
+        .orderBy("__h", "__km_id")
+        .limit(k)
+        .collect()
+    )  # driver control decision: k rows
+    return [r["__km_v"] for r in rows]
+
+
+def _py_id_hash(x) -> str:
+    """Driver replica of ``F.md5(F.col(id).cast("string"))`` for the
+    int/string ids the trainers see (a bigint casts to its decimal
+    string in both engines; strings pass through)."""
+    import hashlib
+
+    s = x if isinstance(x, str) else str(x)
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def _driver_init_order(ids) -> List[int]:
+    """Indices of ``ids`` in the trainers' init order — smallest
+    ``(md5(cast(id as string)), id)`` first. Python str compare equals
+    UTF8String binary compare for valid Unicode (the bpe.py tie-break
+    argument), and the hex digest is ASCII."""
+    return sorted(range(len(ids)), key=lambda i: (_py_id_hash(ids[i]), ids[i]))
+
+
+def _driver_corpus(df: DataFrame, id_col: str, input_col: str,
+                   quant_scale: int, dim: int):
+    """The driver tier's ``(ids, X)`` — ids and int64 vectors of the
+    usable rows — from one bounded collect, when the corpus fits
+    :data:`DRIVER_KMEANS_MAX_ELEMS` and every id is driver-hashable
+    (matching the md5-cast replica); None otherwise."""
+    rows = bounded_collect(
+        _quantized(df, id_col, input_col, quant_scale),
+        DRIVER_KMEANS_MAX_ELEMS // dim,
     )
+    if rows is None or not driver_safe_ids(rows, "__km_id", allow_null=False):
+        return None
+    usable = [r for r in rows if r["__km_v"] is not None and None not in r["__km_v"]]
+    return (
+        [r["__km_id"] for r in usable],
+        np.array([r["__km_v"] for r in usable], dtype=np.int64),
+    )
+
+
+@contextmanager
+def _corpus(df: DataFrame, id_col: str, input_col: str, quant_scale: int, dim: int):
+    """The k-means trainers' corpus: the driver tier's ``(ids, X)`` or,
+    above its budget, the persisted :func:`_quantized` frame."""
+    corpus = _driver_corpus(df, id_col, input_col, quant_scale, dim)
+    if corpus is not None:
+        yield corpus
+        return
+    q = _quantized(df, id_col, input_col, quant_scale).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        yield q
+    finally:
+        q.unpersist()
+
+
+# ----- the kernels --------------------------------------------------------------
 
 
 def _clean_int_rows(rows: np.ndarray):
@@ -200,113 +245,287 @@ def _clean_int_rows(rows: np.ndarray):
     return (X.astype(np.int64, copy=False) if len(X) else X), good
 
 
-def _assign_udf(centroids: List[List[int]]):
-    """Arrow-batched exact argmin: returns a struct<c:int, d:bigint>
-    column (nearest cluster id, exact squared grid distance). Ties go to
-    the SMALLEST cluster id (numpy argmin keeps the first minimum), and
-    a null/invalid vector keeps the legacy contract (cluster 0, null
-    distance — what the all-null CASE chain of the first formulation
-    produced)."""
-    carr = np.array(centroids, dtype=np.int64)
-    cnorm = (carr * carr).sum(axis=1)
+def _usable_rows(v: pd.Series, g: pd.Series = None):
+    """``(positions, X)`` of an Arrow batch's usable rows — a non-null
+    vector (and a non-null cell ``g`` when given) with no null element —
+    and their exact int64 matrix. The np.stack inside
+    :func:`_clean_int_rows` runs over the Arrow-delivered ndarray
+    elements: a per-element ``list()`` conversion measured ~0.35 s per
+    10k x 256 batch, 18x the stack."""
+    mask = v.notna().to_numpy()
+    if g is not None:
+        mask &= g.notna().to_numpy()
+    pos = np.flatnonzero(mask)
+    if not len(pos):
+        return pos, None
+    X, good = _clean_int_rows(v[mask].to_numpy())
+    return (pos if good is None else pos[good]), X
+
+
+def _nearest(X: np.ndarray, C: np.ndarray):
+    """``(index, squared distance)`` of each row of ``X``'s nearest row of
+    ``C`` (both int64): the exact expansion, ties to the first index."""
+    dist = (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
+    return dist.argmin(axis=1), dist.min(axis=1)
+
+
+def _by_cell(X: np.ndarray, gv, cells: Cells):
+    """``(cell, row mask, rows)`` for each cell of ``cells`` that ``gv``
+    (the cell of each row of ``X``) names; ``gv`` None puts every row in
+    cell 0 — the flat trainer."""
+    if gv is None:
+        gv = np.zeros(len(X), dtype=np.int64)
+    for cell in np.unique(gv):
+        if int(cell) in cells:
+            rows = gv == cell
+            yield int(cell), rows, X[rows]
+
+
+def _batch_cells(cells: Cells, v: pd.Series, g: pd.Series = None):
+    """:func:`_by_cell` over an Arrow batch's usable rows, yielding batch
+    positions instead of a mask."""
+    pos, X = _usable_rows(v, g)
+    if len(pos):
+        gv = None if g is None else g.to_numpy()[pos]
+        for cell, rows, Xc in _by_cell(X, gv, cells):
+            yield cell, pos[rows], Xc
+
+
+def _assign_udf(cells: Cells):
+    """Arrow-batched nearest centroid over ``(__km_v)`` or, per cell,
+    ``(__km_g, __km_v)``: struct<c:int, d:bigint> (cluster id within the
+    row's cell, exact squared grid distance). A row outside the usable
+    rows, or in a cell ``cells`` lacks, keeps the null contract."""
 
     @F.pandas_udf("struct<c: int, d: bigint>")
-    def assign(v: pd.Series) -> pd.DataFrame:
-        n = len(v)
-        out_c = np.zeros(n, dtype=np.int32)
-        out_d = np.full(n, None, dtype=object)
-        mask = v.notna().to_numpy()
-        if mask.any():
-            # np.stack (inside _clean_int_rows) over the Arrow-delivered
-            # ndarray elements — the per-element list() conversion this
-            # replaces measured ~0.35 s per 10k x 256 batch, 18x the
-            # stack, and dominated the whole kernel. Rows with a null
-            # ELEMENT route to the null contract (cluster 0, null
-            # distance) instead of letting astype(int64) throw / wrap
-            # NaN to INT64_MIN.
-            X, good = _clean_int_rows(v[mask].to_numpy())
-            if good is not None:
-                idx = np.flatnonzero(mask)
-                mask[idx[~good]] = False
-            if len(X):
-                # exact int64 expansion of ||x - c||^2; ties -> first
-                # index
-                dist = (
-                    (X * X).sum(axis=1)[:, None]
-                    - 2 * (X @ carr.T)
-                    + cnorm[None, :]
-                )
-                out_c[mask] = dist.argmin(axis=1)
-                out_d[mask] = dist.min(axis=1)
-        return pd.DataFrame(
-            {"c": out_c, "d": pd.array(out_d, dtype="Int64")}
-        )
+    def assign(*cols: pd.Series) -> pd.DataFrame:
+        *g, v = cols
+        out_c = np.zeros(len(v), dtype=np.int32)
+        out_d = np.full(len(v), None, dtype=object)
+        for cell, pos, X in _batch_cells(cells, v, *g):
+            # object-dtype fancy assignment is elementwise — no per-row
+            # Python loop in the kernel
+            out_c[pos], out_d[pos] = _nearest(X, cells[cell])
+        return pd.DataFrame({"c": out_c, "d": pd.array(out_d, dtype="Int64")})
 
     return assign
 
 
-def _assign_frame(q: DataFrame, centroids: List[List[int]]) -> DataFrame:
-    """Project ``__km_c`` (argmin cluster) and ``__km_d`` (exact squared
-    distance) onto a frame carrying the quantized ``__km_v`` column."""
-    a = _assign_udf(centroids)(F.col("__km_v"))
-    return q.select(
-        "*", a["c"].alias("__km_c"), a["d"].alias("__km_d")
-    )
+def _assign_frame(q: DataFrame, cells: Cells, grouped: bool = False) -> DataFrame:
+    """Project ``__km_c`` (nearest centroid) and ``__km_d`` (exact squared
+    distance) onto a frame carrying the quantized ``__km_v`` and, when
+    ``grouped``, the cell ``__km_g``."""
+    a = _assign_udf(cells)(*(["__km_g"] if grouped else []), "__km_v")
+    return q.select("*", a["c"].alias("__km_c"), a["d"].alias("__km_d"))
 
 
-def _iteration_sums(q: DataFrame, centroids: List[List[int]], dim: int):
-    """One Lloyd iteration's (cluster, dim) -> (sum, count) table, as an
-    Arrow-batched partial aggregation: each batch assigns its rows with
-    the same exact int64 kernel and scatter-adds into a local k x dim
-    accumulator, emitting at most k*dim partial rows per PARTITION. The
-    first formulation posexploded rows x dim skinny rows into the
-    aggregate (256M intermediate rows per iteration on the 1M x 256
-    probe, ~23 s/iteration); the partials keep the same exact integer
-    semantics (int64 scatter-adds are order-free) at one Arrow scan.
-    """
-    carr = np.array(centroids, dtype=np.int64)
-    cnorm = (carr * carr).sum(axis=1)
-    k = len(centroids)
+# ----- Lloyd rounds on either tier ---------------------------------------------
+
+
+def _lloyd_sums(cells: Cells, parts):
+    """One round's per-cell ``(sums, counts)``: each ``(cell, _, rows)``
+    part scatter-adds its rows into their nearest centroid's accumulator
+    (int64 scatter-adds are order-free, so partials combine exactly)."""
+    S = {g: np.zeros_like(m) for g, m in cells.items()}
+    N = {g: np.zeros(len(m), dtype=np.int64) for g, m in cells.items()}
+    for cell, _, X in parts:
+        c, _ = _nearest(X, cells[cell])
+        np.add.at(N[cell], c, 1)
+        np.add.at(S[cell], c, X)
+    return S, N
+
+
+def _floordiv(cells: Cells, S, N) -> Cells:
+    """The Lloyd update: a centroid with members becomes the
+    per-dimension floor division of their sum by their count (numpy's
+    int64 ``//`` floors, like the SQL replay's ``CASE WHEN s >= 0 THEN s
+    DIV n ELSE -((-s + n - 1) DIV n) END``); one without keeps its
+    value."""
+    out = {}
+    for g, m in cells.items():
+        live = N[g] > 0
+        out[g] = m.copy()
+        out[g][live] = S[g][live] // N[g][live, None]
+    return out
+
+
+def _lloyd(cells: Cells, sums, iterations: int) -> Cells:
+    """``iterations`` Lloyd rounds; ``sums(cells)`` is one round's
+    ``(sums, counts)`` on the driver or on Spark."""
+    for _ in range(iterations):
+        cells = _floordiv(cells, *sums(cells))
+    return cells
+
+
+def _iteration_sums(q: DataFrame, cells: Cells, dim: int, grouped: bool = False):
+    """One distributed Lloyd round's ``(sums, counts)`` as an Arrow-batched
+    partial aggregation: each partition scatter-adds its batches into
+    local accumulators (:func:`_lloyd_sums`) and emits at most
+    ``sum(k_cell) * dim`` partial rows. The first formulation posexploded
+    rows x dim skinny rows into the aggregate (256M intermediate rows per
+    iteration on the 1M x 256 probe, ~23 s/iteration)."""
+    keys = ["__km_g"] if grouped else []
 
     def part(batches):
-        S = np.zeros((k, dim), dtype=np.int64)
-        N = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            v = pdf["__km_v"]
-            mask = v.notna().to_numpy()
-            if not mask.any():
-                continue
-            # same null-ELEMENT routing as _assign_udf (shared helper):
-            # dirty rows drop out of the iteration sums
-            X, _ = _clean_int_rows(v[mask].to_numpy())
-            if not len(X):
-                continue
-            dist = (
-                (X * X).sum(axis=1)[:, None]
-                - 2 * (X @ carr.T)
-                + cnorm[None, :]
-            )
-            c = dist.argmin(axis=1)
-            np.add.at(N, c, 1)
-            np.add.at(S, c, X)
-        live = np.nonzero(N)[0]
-        if len(live):
-            yield pd.DataFrame(
-                {
-                    "__km_c": np.repeat(live, dim).astype("int32"),
-                    "__i": np.tile(np.arange(dim, dtype="int32"), len(live)),
-                    "__s": S[live].reshape(-1),
-                    "__n": np.repeat(N[live], dim),
-                }
-            )
+        parts = (
+            p
+            for b in batches
+            for p in _batch_cells(cells, b["__km_v"], *[b[c] for c in keys])
+        )
+        S, N = _lloyd_sums(cells, parts)
+        frames = []
+        for cell in cells:
+            live = np.nonzero(N[cell])[0]
+            if len(live):
+                frame = pd.DataFrame(
+                    {
+                        "__km_c": np.repeat(live, dim).astype("int32"),
+                        "__i": np.tile(np.arange(dim, dtype="int32"), len(live)),
+                        "__s": S[cell][live].reshape(-1),
+                        "__n": np.repeat(N[cell][live], dim),
+                    }
+                )
+                if grouped:
+                    frame.insert(0, "__km_g", np.int32(cell))
+                frames.append(frame)
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
 
-    return (
-        q.select("__km_v")
-        .mapInPandas(part, "__km_c int, __i int, __s long, __n long")
-        .groupBy("__km_c", "__i")
+    rows = (
+        q.select(*keys, "__km_v")
+        .mapInPandas(
+            part,
+            "".join(f"{c} int, " for c in keys)
+            + "__km_c int, __i int, __s long, __n long",
+        )
+        .groupBy(*keys, "__km_c", "__i")
         .agg(F.sum("__s").alias("__s"), F.sum("__n").alias("__n"))
         .collect()
-    )  # k*dim rows after the partial combine
+    )  # sum(k_cell) * dim rows after the partial combine
+    S, N = _lloyd_sums(cells, ())
+    for r in rows:
+        cell = r["__km_g"] if grouped else 0
+        S[cell][r["__km_c"], r["__i"]] = r["__s"]
+        N[cell][r["__km_c"]] = r["__n"]
+    return S, N
+
+
+def _flat_centroids(corpus, k: int, iterations: int, dim: int):
+    """The flat trainer on either tier: the init draw, then ``iterations``
+    Lloyd rounds; the int64 centroid matrix, or None when no row is
+    usable."""
+    if isinstance(corpus, DataFrame):
+        init = _init_draw(corpus, k)
+
+        def sums(c):
+            return _iteration_sums(corpus, c, dim)
+
+    else:
+        ids, X = corpus
+        init = X[_driver_init_order(ids)[:k]]
+
+        def sums(c):
+            return _lloyd_sums(c, _by_cell(X, None, c))
+
+    if not len(init):
+        return None
+    return _lloyd({0: np.array(init, dtype=np.int64)}, sums, iterations)[0]
+
+
+def _fine_centroids(corpus, coarse: np.ndarray, k_fine: int,
+                    iterations: int, dim: int) -> Cells:
+    """Level 2 of the hierarchical trainer on either tier: each coarse
+    cell's sub-centroids init from its ``k_fine`` members first in the
+    init order (sub ids in that order; a smaller cell gets its size),
+    then ``iterations`` Lloyd rounds confined to the cell."""
+    if not isinstance(corpus, DataFrame):
+        ids, X = corpus
+        gv, _ = _nearest(X, coarse)
+        cells = {}
+        for i in _driver_init_order(ids):
+            members = cells.setdefault(int(gv[i]), [])
+            if len(members) < k_fine:
+                members.append(X[i])
+        return _lloyd(
+            {c: np.array(v) for c, v in cells.items()},
+            lambda c: _lloyd_sums(c, _by_cell(X, gv, c)),
+            iterations,
+        )
+    g = _assign_frame(corpus, {0: coarse}).select(
+        "__km_id", "__km_v", F.col("__km_c").alias("__km_g")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        w = Window.partitionBy("__km_g").orderBy(
+            F.md5(F.col("__km_id").cast("string")), "__km_id"
+        )
+        sub_init = (
+            g.filter(_usable_sample("__km_v"))
+            .select("__km_g", "__km_v", (F.row_number().over(w) - 1).alias("__r"))
+            .filter(F.col("__r") < k_fine)
+            .collect()
+        )  # driver control decision: <= k_coarse*k_fine rows
+        cells = {}
+        for r in sorted(sub_init, key=lambda r: (r["__km_g"], r["__r"])):
+            cells.setdefault(r["__km_g"], []).append(r["__km_v"])
+        return _lloyd(
+            {c: np.array(v, dtype=np.int64) for c, v in cells.items()},
+            lambda c: _iteration_sums(g, c, dim, grouped=True),
+            iterations,
+        )
+    finally:
+        g.unpersist()
+
+
+def _train(df: DataFrame, id_col: str, input_col: str, quant_scale: int,
+           output_col: str, k: int, iterations: int, fine=None) -> DataFrame:
+    """Both k-means ops: the flat trainer's ``k`` centroids and, given
+    ``fine = (k_fine, fine_iterations)``, the hierarchical level 2 over
+    the same corpus; then one projection onto the caller's frame (one
+    joinless Arrow assignment per level). The hierarchical output leads
+    with ``<out>_coarse``/``<out>_fine`` and its ``<out>`` is
+    ``coarse * k_fine + fine``."""
+    levels = [f"{output_col}_coarse", f"{output_col}_fine"] if fine else []
+
+    def constant(cluster, dist):
+        return df.select(
+            "*",
+            *[cluster.cast("int").alias(c) for c in levels + [output_col]],
+            dist.cast("long").alias(f"{output_col}_dist"),
+        )
+
+    dim = vector_width(df, input_col)
+    if dim == 0:
+        if df.isEmpty():
+            return constant(F.lit(None), F.lit(None)).limit(0)
+        # zero dimensions: every non-null row is distance 0 from cluster 0
+        return constant(F.lit(0), F.when(F.col(input_col).isNotNull(), F.lit(0)))
+    with _corpus(df, id_col, input_col, quant_scale, dim) as corpus:
+        coarse = _flat_centroids(corpus, k, iterations, dim)
+        if coarse is None:
+            return constant(F.lit(None), F.lit(None)).limit(0)
+        out = _assign_frame(
+            df.select("*", _quantize_expr(input_col, quant_scale).alias("__km_v")),
+            {0: coarse},
+        )
+        cols, cluster = [], F.col("__km_c")
+        if fine:
+            cells = _fine_centroids(corpus, coarse, *fine, dim)
+            out = _assign_frame(
+                out.withColumnRenamed("__km_c", "__km_g").drop("__km_d"),
+                cells,
+                grouped=True,
+            )
+            cols = [
+                F.col("__km_g").cast("int").alias(levels[0]),
+                F.col("__km_c").cast("int").alias(levels[1]),
+            ]
+            cluster = (F.col("__km_g") * fine[0] + F.col("__km_c")).cast("int")
+        return out.select(
+            *[F.col(c) for c in df.columns],
+            *cols,
+            cluster.alias(output_col),
+            F.col("__km_d").alias(f"{output_col}_dist"),
+        )
 
 
 @register("embedding_kmeans")
@@ -318,29 +537,17 @@ def embedding_kmeans(
     quant_scale: int = 1024,
     output_col: str = "cluster",
 ) -> TransformerFn:
-    """Deterministic Lloyd k-means on an ``array<float>`` column.
+    """Deterministic Lloyd k-means on an ``array<float>`` column, under
+    the exact contract of this module's docstring: ``k`` centroids from
+    the init draw, then ``iterations`` full Lloyd rounds.
 
-    Semantics (stated exactly so an external oracle replays them):
-
-    * quantize each component to ``floor(double(x)*quant_scale + 0.5)``
-      (exact for power-of-two scales);
-    * initial centroids are the quantized vectors of the ``k`` rows with
-      the smallest ``(md5(cast(id as string)), id)`` — a seedless,
-      engine-portable pseudo-random draw (the corpus-wide md5 convention);
-      cluster ids 0..k-1 follow that order;
-    * ``iterations`` full Lloyd rounds: assign every point to the nearest
-      centroid by exact squared L2 (ties -> smallest cluster id), then
-      recompute each centroid as the per-dimension FLOOR-division of the
-      assigned sums by the assigned count; empty clusters keep their
-      previous centroid;
-    * output = the input rows plus ``<output_col>`` (int, assignment
-      against the final centroids) and ``<output_col>_dist`` (bigint,
-      exact squared grid distance to that centroid).
+    Output = the input rows plus ``<output_col>`` (int, assignment
+    against the final centroids) and ``<output_col>_dist`` (bigint,
+    exact squared grid distance to that centroid).
 
     Vectors are assumed uniform-width (the width of the widest non-null
     embedding); a ragged corpus should be run through a validation
-    filter first. Null embeddings assign to cluster 0 with a null
-    distance.
+    filter first.
 
     Downstream: feed ``<output_col>`` to ``cluster_sample`` /
     ``dedup_semantic_centroid`` for SemDeDup-style pruning, or group on
@@ -359,207 +566,9 @@ def embedding_kmeans(
         )
 
     def _kmeans(df: DataFrame) -> DataFrame:
-        dim = vector_width(df, input_col)
-        if dim == 0:
-            # empty corpus, or every embedding null/zero-width: every
-            # point is distance 0 from every (empty) centroid -> cluster
-            # 0, matching the squared-L2 algebra over zero dimensions
-            if df.isEmpty():
-                return df.select(
-                    "*",
-                    F.lit(None).cast("int").alias(output_col),
-                    F.lit(None).cast("long").alias(f"{output_col}_dist"),
-                ).limit(0)
-            # non-null rows: distance 0 over zero dimensions; NULL
-            # embeddings keep the documented cluster-0/null-dist
-            # contract even here (r14 review finding)
-            zdist = F.when(
-                F.col(input_col).isNotNull(), F.lit(0).cast("long")
-            )
-            return df.select(
-                "*",
-                F.lit(0).cast("int").alias(output_col),
-                zdist.alias(f"{output_col}_dist"),
-            )
-        # ----- driver tier (r15): whole-corpus local Lloyd when small -----
-        rows = _driver_collect(df, id_col, input_col, quant_scale, dim)
-        if rows is not None:
-            ids, vecs = _driver_usable(rows)
-            if not ids:
-                return df.select(
-                    "*",
-                    F.lit(None).cast("int").alias(output_col),
-                    F.lit(None).cast("long").alias(f"{output_col}_dist"),
-                ).limit(0)
-            order = _driver_init_order(ids)[:k]
-            cents = np.array([vecs[i] for i in order], dtype=np.int64)
-            X = np.array(vecs, dtype=np.int64)
-            cents = _driver_lloyd(X, cents, iterations)
-            centroids = [[int(x) for x in row] for row in cents]
-            out = df.select(
-                "*", _quantize_expr(input_col, quant_scale).alias("__km_v")
-            )
-            expanded = _assign_frame(out, centroids)
-            return expanded.select(
-                *[F.col(c) for c in df.columns],
-                F.col("__km_c").alias(output_col),
-                F.col("__km_d").alias(f"{output_col}_dist"),
-            )
-        q = df.select(
-            F.col(id_col).alias("__km_id"),
-            _quantize_expr(input_col, quant_scale).alias("__km_v"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # init from NON-NULL vectors only: a null embedding can win the
-            # md5 order but is no usable centroid (assignment still gives
-            # null rows the cluster-0/null-dist contract)
-            init = (
-                q.filter(_usable_sample("__km_v"))
-                .select(
-                    "__km_v",
-                    F.md5(F.col("__km_id").cast("string")).alias("__h"),
-                    "__km_id",
-                )
-                .orderBy("__h", "__km_id")
-                .limit(k)
-                .collect()
-            )  # driver control decision: k rows
-            if not init:
-                schema_cols = [
-                    F.lit(None).cast("int").alias(output_col),
-                    F.lit(None).cast("long").alias(f"{output_col}_dist"),
-                ]
-                return df.select("*", *schema_cols).limit(0)
-            centroids = [list(r["__km_v"]) for r in init]
-            for _ in range(iterations):
-                sums = _iteration_sums(q, centroids, dim)
-                nxt = [list(c) for c in centroids]
-                for r in sums:
-                    nxt[r["__km_c"]][r["__i"]] = _floordiv(
-                        int(r["__s"]), int(r["__n"])
-                    )
-                centroids = nxt
-            # final assignment projects straight onto the caller's frame —
-            # still one joinless Arrow-batched projection
-            out = df.select(
-                "*", _quantize_expr(input_col, quant_scale).alias("__km_v")
-            )
-            expanded = _assign_frame(out, centroids)
-            return expanded.select(
-                *[F.col(c) for c in df.columns],
-                F.col("__km_c").alias(output_col),
-                F.col("__km_d").alias(f"{output_col}_dist"),
-            )
-        finally:
-            q.unpersist()
+        return _train(df, id_col, input_col, quant_scale, output_col, k, iterations)
 
     return _kmeans
-
-
-def _grouped_assign_udf(cmap):
-    """Arrow-batched exact argmin WITHIN each point's coarse cluster:
-    input (coarse id, quantized vector) -> struct<c:int, d:bigint> (fine
-    cluster id within the coarse cell, exact squared grid distance).
-    ``cmap`` maps coarse id -> int64 [k_fine_c x dim] sub-centroid matrix
-    (a cell with fewer points than k_fine has a shorter matrix). Same
-    tie-break and null contract as :func:`_assign_udf`."""
-    norms = {g: (m * m).sum(axis=1) for g, m in cmap.items()}
-
-    @F.pandas_udf("struct<c: int, d: bigint>")
-    def assign(g: pd.Series, v: pd.Series) -> pd.DataFrame:
-        n = len(v)
-        out_c = np.zeros(n, dtype=np.int32)
-        out_d = np.full(n, None, dtype=object)
-        mask = (v.notna() & g.notna()).to_numpy()
-        if mask.any():
-            X, good = _clean_int_rows(v[mask].to_numpy())
-            if good is not None:
-                idx = np.flatnonzero(mask)
-                mask[idx[~good]] = False
-            if len(X):
-                gv = g.to_numpy()[mask]
-                pos = np.flatnonzero(mask)
-                for cell in np.unique(gv):
-                    m = cmap.get(int(cell))
-                    if m is None:
-                        continue  # null-contract rows stay (0, null)
-                    rows = gv == cell
-                    Xi = X[rows]
-                    dist = (
-                        (Xi * Xi).sum(axis=1)[:, None]
-                        - 2 * (Xi @ m.T)
-                        + norms[int(cell)][None, :]
-                    )
-                    out_c[pos[rows]] = dist.argmin(axis=1)
-                    # object-dtype fancy assignment is elementwise — no
-                    # per-row Python loop in the kernel
-                    out_d[pos[rows]] = dist.min(axis=1)
-        return pd.DataFrame({"c": out_c, "d": pd.array(out_d, dtype="Int64")})
-
-    return assign
-
-
-def _grouped_iteration_sums(q: DataFrame, cmap, dim: int):
-    """One per-cell Lloyd iteration's (coarse, fine, dim) -> (sum, count)
-    table — the grouped twin of :func:`_iteration_sums`: each Arrow batch
-    assigns its rows against THEIR cell's sub-centroids and scatter-adds
-    into per-cell accumulators; at most sum(k_fine_c)*dim partial rows
-    leave each partition."""
-    norms = {g: (m * m).sum(axis=1) for g, m in cmap.items()}
-
-    def part(batches):
-        S = {g: np.zeros((len(m), dim), dtype=np.int64) for g, m in cmap.items()}
-        N = {g: np.zeros(len(m), dtype=np.int64) for g, m in cmap.items()}
-        for pdf in batches:
-            v, g = pdf["__km_v"], pdf["__km_g"]
-            mask = (v.notna() & g.notna()).to_numpy()
-            if not mask.any():
-                continue
-            X, good = _clean_int_rows(v[mask].to_numpy())
-            if good is not None:
-                idx = np.flatnonzero(mask)
-                mask[idx[~good]] = False
-            if not len(X):
-                continue
-            gv = g.to_numpy()[mask]
-            for cell in np.unique(gv):
-                m = cmap.get(int(cell))
-                if m is None:
-                    continue
-                Xi = X[gv == cell]
-                dist = (
-                    (Xi * Xi).sum(axis=1)[:, None]
-                    - 2 * (Xi @ m.T)
-                    + norms[int(cell)][None, :]
-                )
-                c = dist.argmin(axis=1)
-                np.add.at(N[int(cell)], c, 1)
-                np.add.at(S[int(cell)], c, Xi)
-        frames = []
-        for cell in cmap:
-            live = np.nonzero(N[cell])[0]
-            if len(live):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "__km_g": np.full(len(live) * dim, cell, dtype="int32"),
-                            "__km_c": np.repeat(live, dim).astype("int32"),
-                            "__i": np.tile(np.arange(dim, dtype="int32"), len(live)),
-                            "__s": S[cell][live].reshape(-1),
-                            "__n": np.repeat(N[cell][live], dim),
-                        }
-                    )
-                )
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-    return (
-        q.select("__km_g", "__km_v")
-        .mapInPandas(part, "__km_g int, __km_c int, __i int, __s long, __n long")
-        .groupBy("__km_g", "__km_c", "__i")
-        .agg(F.sum("__s").alias("__s"), F.sum("__n").alias("__n"))
-        .collect()
-    )  # sum(k_fine_c) * dim rows after the partial combine
 
 
 @register("embedding_kmeans_hier")
@@ -578,19 +587,18 @@ def embedding_kmeans_hier(
     the per-batch distance-matrix cap (SemDeDup at 100M+ vectors wants
     k ~ 1e5; here k_eff = k_coarse * k_fine with each level <= MAX_K).
 
-    Semantics (deterministic, oracle-replayable): level 1 IS
-    :func:`embedding_kmeans` on (k_coarse, coarse_iterations). Level 2,
-    within each coarse cell: sub-centroids init from the k_fine cell
-    members with the smallest ``(md5(id), id)`` (sub ids 0..k_fine-1 in
-    that order; a smaller cell gets its size), then ``fine_iterations``
-    exact Lloyd rounds confined to the cell (same floor-div update, ties
-    to the smallest sub id, empty sub-cluster keeps its centroid).
+    Semantics, under the exact contract of this module's docstring:
+    level 1 IS :func:`embedding_kmeans` on (k_coarse, coarse_iterations)
+    — the same trainer runs it. Level 2, within each coarse cell:
+    sub-centroids init from the k_fine cell members first in the init
+    order (sub ids 0..k_fine-1 in that order; a smaller cell gets its
+    size), then ``fine_iterations`` Lloyd rounds confined to the cell.
 
     Output adds ``<output_col>_coarse`` (int), ``<output_col>_fine``
     (int), ``<output_col>`` (int, the global id
     ``coarse * k_fine + fine``) and ``<output_col>_dist`` (bigint, exact
-    squared grid distance to the final sub-centroid). Null embeddings
-    keep the flat trainer's contract (coarse 0 / fine 0 / null distance).
+    squared grid distance to the final sub-centroid). Rows under the null
+    contract get coarse 0 / fine 0 / a null distance.
 
     Scale: every per-round job ships only (sum of cell sub-centroids) x
     dim int64 to the driver — at k_eff = 32k x 256 dims that is ~67 MB
@@ -611,178 +619,10 @@ def embedding_kmeans_hier(
         raise ValueError("embedding_kmeans_hier: iterations must be >= 0")
 
     def _hier(df: DataFrame) -> DataFrame:
-        dim = vector_width(df, input_col)
-        null_cols = [
-            F.lit(None).cast("int").alias(f"{output_col}_coarse"),
-            F.lit(None).cast("int").alias(f"{output_col}_fine"),
-            F.lit(None).cast("int").alias(output_col),
-            F.lit(None).cast("long").alias(f"{output_col}_dist"),
-        ]
-        if dim == 0:
-            if df.isEmpty():
-                return df.select("*", *null_cols).limit(0)
-            zdist = F.when(
-                F.col(input_col).isNotNull(), F.lit(0).cast("long")
-            )  # null embeddings keep the null-dist contract (r14 review)
-            return df.select(
-                "*",
-                F.lit(0).cast("int").alias(f"{output_col}_coarse"),
-                F.lit(0).cast("int").alias(f"{output_col}_fine"),
-                F.lit(0).cast("int").alias(output_col),
-                zdist.alias(f"{output_col}_dist"),
-            )
-        # ----- driver tier (r15): both levels local when the corpus fits --
-        rows = _driver_collect(df, id_col, input_col, quant_scale, dim)
-        if rows is not None:
-            ids, vecs = _driver_usable(rows)
-            if not ids:
-                return df.select("*", *null_cols).limit(0)
-            order = _driver_init_order(ids)[:k_coarse]
-            cents = np.array([vecs[i] for i in order], dtype=np.int64)
-            X = np.array(vecs, dtype=np.int64)
-            cents = _driver_lloyd(X, cents, coarse_iterations)
-            coarse = [[int(x) for x in row] for row in cents]
-            # fixed coarse assignment of every usable row (argmin, ties ->
-            # first = smallest id — the _assign_udf kernel's rule)
-            cnorm = (cents * cents).sum(axis=1)
-            gdist = (
-                (X * X).sum(axis=1)[:, None] - 2 * (X @ cents.T) + cnorm[None, :]
-            )
-            gv = gdist.argmin(axis=1)
-            # per-cell init: the k_fine cell members with the smallest
-            # (md5(id), id) — sub ids 0..k_fine-1 in that order
-            full_order = _driver_init_order(ids)
-            cells: dict = {}
-            for i in full_order:
-                c = int(gv[i])
-                lst = cells.setdefault(c, [])
-                if len(lst) < k_fine:
-                    lst.append(list(vecs[i]))
-            cmap = {c: np.array(v, dtype=np.int64) for c, v in cells.items()}
-            # confined fine Lloyd rounds (same update rule per cell)
-            for _ in range(fine_iterations):
-                nxt = {c: m.copy() for c, m in cmap.items()}
-                for c, m in cmap.items():
-                    Xi = X[gv == c]
-                    if not len(Xi):
-                        continue
-                    mn = (m * m).sum(axis=1)
-                    d = (
-                        (Xi * Xi).sum(axis=1)[:, None]
-                        - 2 * (Xi @ m.T)
-                        + mn[None, :]
-                    )
-                    a = d.argmin(axis=1)
-                    for j in range(len(m)):
-                        mm = a == j
-                        n = int(mm.sum())
-                        if n:
-                            s = Xi[mm].sum(axis=0)
-                            nxt[c][j] = [_floordiv(int(sv), n) for sv in s]
-                cmap = nxt
-            out = df.select(
-                "*", _quantize_expr(input_col, quant_scale).alias("__km_v")
-            )
-            out = _assign_frame(out, coarse).withColumnRenamed(
-                "__km_c", "__km_g"
-            ).drop("__km_d")
-            a = _grouped_assign_udf(cmap)(F.col("__km_g"), F.col("__km_v"))
-            out = out.select(
-                "*", a["c"].alias("__km_f"), a["d"].alias("__km_fd")
-            )
-            return out.select(
-                *[F.col(c) for c in df.columns],
-                F.col("__km_g").cast("int").alias(f"{output_col}_coarse"),
-                F.col("__km_f").cast("int").alias(f"{output_col}_fine"),
-                (F.col("__km_g") * k_fine + F.col("__km_f"))
-                .cast("int")
-                .alias(output_col),
-                F.col("__km_fd").alias(f"{output_col}_dist"),
-            )
-        q = df.select(
-            F.col(id_col).alias("__km_id"),
-            _quantize_expr(input_col, quant_scale).alias("__km_v"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # ----- level 1: the flat trainer, verbatim semantics -----
-            # (incl. its non-null init filter — see embedding_kmeans)
-            init = (
-                q.filter(_usable_sample("__km_v"))
-                .select(
-                    "__km_v",
-                    F.md5(F.col("__km_id").cast("string")).alias("__h"),
-                    "__km_id",
-                )
-                .orderBy("__h", "__km_id")
-                .limit(k_coarse)
-                .collect()
-            )
-            if not init:
-                return df.select("*", *null_cols).limit(0)
-            coarse = [list(r["__km_v"]) for r in init]
-            for _ in range(coarse_iterations):
-                sums = _iteration_sums(q, coarse, dim)
-                nxt = [list(c) for c in coarse]
-                for r in sums:
-                    nxt[r["__km_c"]][r["__i"]] = _floordiv(
-                        int(r["__s"]), int(r["__n"])
-                    )
-                coarse = nxt
-            g = _assign_frame(q, coarse).select(
-                "__km_id", "__km_v", F.col("__km_c").alias("__km_g")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # ----- level 2: per-cell init + confined Lloyd rounds -----
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("__km_g").orderBy(
-                F.md5(F.col("__km_id").cast("string")), "__km_id"
-            )
-            sub_init = (
-                g.filter(_usable_sample("__km_v"))
-                .select(
-                    "__km_g", "__km_v", (F.row_number().over(w) - 1).alias("__r")
-                )
-                .filter(F.col("__r") < k_fine)
-                .collect()
-            )  # driver control decision: <= k_coarse*k_fine rows
-            cells: dict = {}
-            for r in sorted(sub_init, key=lambda r: (r["__km_g"], r["__r"])):
-                cells.setdefault(int(r["__km_g"]), []).append(list(r["__km_v"]))
-            cmap = {
-                c: np.array(v, dtype=np.int64) for c, v in cells.items()
-            }
-            for _ in range(fine_iterations):
-                sums = _grouped_iteration_sums(g, cmap, dim)
-                nxt = {c: m.copy() for c, m in cmap.items()}
-                for r in sums:
-                    nxt[int(r["__km_g"])][int(r["__km_c"]), int(r["__i"])] = (
-                        _floordiv(int(r["__s"]), int(r["__n"]))
-                    )
-                cmap = nxt
-            # ----- final assignment projected onto the caller's frame -----
-            out = df.select(
-                "*", _quantize_expr(input_col, quant_scale).alias("__km_v")
-            )
-            out = _assign_frame(out, coarse).withColumnRenamed(
-                "__km_c", "__km_g"
-            ).drop("__km_d")
-            a = _grouped_assign_udf(cmap)(F.col("__km_g"), F.col("__km_v"))
-            out = out.select("*", a["c"].alias("__km_f"), a["d"].alias("__km_fd"))
-            return out.select(
-                *[F.col(c) for c in df.columns],
-                F.col("__km_g").cast("int").alias(f"{output_col}_coarse"),
-                F.col("__km_f").cast("int").alias(f"{output_col}_fine"),
-                (F.col("__km_g") * k_fine + F.col("__km_f"))
-                .cast("int")
-                .alias(output_col),
-                F.col("__km_fd").alias(f"{output_col}_dist"),
-            )
-        finally:
-            q.unpersist()
-            try:
-                g.unpersist()
-            except Exception:
-                pass
+        return _train(
+            df, id_col, input_col, quant_scale, output_col,
+            k_coarse, coarse_iterations, fine=(k_fine, fine_iterations),
+        )
 
     return _hier
 
@@ -827,6 +667,39 @@ def cluster_stats(
     return _stats
 
 
+# ----- product quantization -----------------------------------------------------
+
+
+def _pq_books(q: DataFrame, m: int, sub: int, k: int):
+    """``(m, k, sub)`` per-subspace codebooks from the init draw over a
+    :func:`_quantized` frame — codeword j of subspace s is the j-th drawn
+    row's s-th subvector; None when no row is usable."""
+    draw = _init_draw(q, k)
+    if not draw:
+        return None
+    return np.array(draw, dtype=np.int64).reshape(len(draw), m, sub).transpose(1, 0, 2)
+
+
+def _pq_dists(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """``(n, m, k)`` exact int64 squared distances from each row's ``m``
+    subvectors to every codeword of their subspace."""
+    m, _, sub = books.shape
+    Xs = X.reshape(len(X), m, sub)
+    return (
+        (Xs * Xs).sum(axis=2)[:, :, None]
+        - 2 * np.einsum("nms,mks->nmk", Xs, books)
+        + (books * books).sum(axis=2)[None, :, :]
+    )
+
+
+def _pq_encode(X: np.ndarray, books: np.ndarray):
+    """``(codes (n, m), residual (n,))``: each subspace's nearest codeword
+    (ties to the smallest code) and the summed per-subspace distance —
+    the exact squared grid distance to the reconstruction."""
+    dist = _pq_dists(X, books)
+    return dist.argmin(axis=2), dist.min(axis=2).sum(axis=1)
+
+
 @register("embedding_pq_encode")
 def embedding_pq_encode(
     id_col: str = "vec_id",
@@ -843,23 +716,21 @@ def embedding_pq_encode(
     layers store instead of raw vectors (a dim=64 float vector becomes
     ``m=4`` bytes at ``k<=256``).
 
-    Codebooks here are SAMPLED, not trained: the ``k`` rows with the
-    smallest ``(md5(cast(id as string)), id)`` (the corpus-wide md5
-    draw shared with ``embedding_kmeans``/``knn_ivf``) contribute their
-    quantized subvectors, codeword j of every subspace coming from the
-    j-th sampled row. That keeps the whole operator a deterministic
-    closed form an external SQL engine replays bit-for-bit; for trained
-    codebooks run ``embedding_kmeans`` per subspace and feed its
-    centroids through ``dedup_semantic_centroid``-style composition.
+    Codebooks here are SAMPLED, not trained: the ``k`` rows of the
+    module's init draw (shared with ``embedding_kmeans``/``knn_ivf``)
+    contribute their quantized subvectors, codeword j of every subspace
+    coming from the j-th drawn row. That keeps the whole operator a
+    deterministic closed form an external SQL engine replays
+    bit-for-bit; for trained codebooks run ``embedding_kmeans`` per
+    subspace and feed its centroids through
+    ``dedup_semantic_centroid``-style composition.
 
-    Exact semantics: components quantize to the integer grid
-    (``floor(double(x)*quant_scale + 0.5)``); the code of subspace s is
-    the argmin over exact int64 squared L2 (ties -> smallest code id);
-    output adds ``<output_col>`` (array<int>, length m) and
-    ``<output_col>_dist`` (bigint — the summed per-subspace residual,
-    i.e. the exact squared grid distance to the reconstruction). Null
-    embeddings produce null code/dist. The embedding width must divide
-    evenly by ``m``.
+    Semantics follow the module's exact contract per subspace: the code
+    of subspace s is its nearest codeword. Output adds ``<output_col>``
+    (array<int>, length m) and ``<output_col>_dist`` (bigint — the
+    summed per-subspace residual, i.e. the exact squared grid distance
+    to the reconstruction). The embedding width must divide evenly by
+    ``m``.
 
     Scale: one Arrow-batched projection (the measured kmeans-assignment
     kernel rationale — JVM formulations either blow Janino's 64 KB
@@ -877,76 +748,33 @@ def embedding_pq_encode(
         )
 
     def _encode(df: DataFrame) -> DataFrame:
+        nulls = [
+            F.lit(None).cast("array<int>").alias(output_col),
+            F.lit(None).cast("long").alias(f"{output_col}_dist"),
+        ]
         dim = vector_width(df, input_col)
         if dim == 0:
-            return df.select(
-                "*",
-                F.lit(None).cast("array<int>").alias(output_col),
-                F.lit(None).cast("long").alias(f"{output_col}_dist"),
-            )
+            return df.select("*", *nulls)
         if dim % m != 0:
             raise ValueError(
                 f"embedding_pq_encode: embedding width {dim} is not "
                 f"divisible by m={m} subspaces"
             )
-        sub = dim // m
-        q = df.select(
-            F.col(id_col).alias("__pq_id"),
-            _quantize_expr(input_col, quant_scale).alias("__pq_v"),
-        )
-        init = (
-            q.filter(_usable_sample("__pq_v")).select(
-                "__pq_v",
-                F.md5(F.col("__pq_id").cast("string")).alias("__h"),
-                "__pq_id",
-            )
-            .orderBy("__h", "__pq_id")
-            .limit(k)
-            .collect()
-        )  # driver control decision: k rows
-        if not init:
-            return df.select(
-                "*",
-                F.lit(None).cast("array<int>").alias(output_col),
-                F.lit(None).cast("long").alias(f"{output_col}_dist"),
-            ).limit(0)
-        # codebooks[s][j] = j-th sampled row's s-th subvector
-        C = np.array([list(r["__pq_v"]) for r in init], dtype=np.int64)
-        kk = C.shape[0]
-        books = C.reshape(kk, m, sub).transpose(1, 0, 2)  # (m, k, sub)
-        bnorm = (books * books).sum(axis=2)  # (m, k)
+        q = _quantized(df, id_col, input_col, quant_scale)
+        books = _pq_books(q, m, dim // m, k)
+        if books is None:
+            return df.select("*", *nulls).limit(0)
 
         @F.pandas_udf("struct<c: array<int>, d: bigint>")
         def encode(v: pd.Series) -> pd.DataFrame:
-            n = len(v)
-            out_c = [None] * n
-            out_d = np.full(n, None, dtype=object)
-            mask = v.notna().to_numpy()
-            if mask.any():
-                # route null-ELEMENT rows out like every other kernel in
-                # this file (astype over an object/NaN batch either
-                # crashes or INT64_MIN-poisons the codes — r14 review);
-                # they keep the null-code contract of null embeddings
-                X, good = _clean_int_rows(v[mask].to_numpy())
-                if good is not None:
-                    mask[np.flatnonzero(mask)] = good
-            if mask.any():
-                Xs = X.reshape(len(X), m, sub)
-                xnorm = (Xs * Xs).sum(axis=2)  # (n, m)
-                # (n, m, k) exact int64 distance expansion per subspace
-                cross = np.einsum("nms,mks->nmk", Xs, books)
-                dist = xnorm[:, :, None] - 2 * cross + bnorm[None, :, :]
-                codes = dist.argmin(axis=2).astype(np.int32)  # (n, m)
-                dmin = dist.min(axis=2).sum(axis=1)  # (n,)
-                ci = 0
-                for i in range(n):
-                    if mask[i]:
-                        out_c[i] = codes[ci].tolist()
-                        out_d[i] = int(dmin[ci])
-                        ci += 1
-            return pd.DataFrame(
-                {"c": out_c, "d": pd.array(out_d, dtype="Int64")}
-            )
+            out_c = [None] * len(v)
+            out_d = np.full(len(v), None, dtype=object)
+            pos, X = _usable_rows(v)
+            if len(pos):
+                codes, out_d[pos] = _pq_encode(X, books)
+                for i, c in zip(pos, codes.tolist()):
+                    out_c[i] = c
+            return pd.DataFrame({"c": out_c, "d": pd.array(out_d, dtype="Int64")})
 
         a = encode(_quantize_expr(input_col, quant_scale))
         return df.select(
@@ -975,7 +803,8 @@ def knn_pq(
     and a document's approximate distance is the m-term LUT sum over its
     codes. The serving-side complement of ``embedding_pq_encode`` — the
     memory-bound ANN shape where the corpus no longer fits as raw
-    vectors.
+    vectors. Codebooks, codes and LUT entries follow the module's exact
+    contract.
 
     Output: ``(query_id, neighbor_id, adc_dist, rank)`` — rank 1 =
     smallest ADC distance, ties -> smallest neighbor id; self-matches
@@ -1001,10 +830,11 @@ def knn_pq(
         )
 
     def _knn(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
         from pyspark.sql.types import (
+            ByteType,
             IntegerType,
             LongType,
+            ShortType,
             StructField,
             StructType,
         )
@@ -1032,32 +862,17 @@ def knn_pq(
                 f"knn_pq: embedding width {dim} is not divisible by "
                 f"m={m} subspaces"
             )
-        sub = dim // m
-        q = df.select(
-            F.col(id_col).alias("__pq_id"),
-            _quantize_expr(embedding_col, quant_scale).alias("__pq_v"),
-        )
-        init = (
-            q.filter(_usable_sample("__pq_v"))
-            .select(
-                "__pq_v",
-                F.md5(F.col("__pq_id").cast("string")).alias("__h"),
-                "__pq_id",
-            )
-            .orderBy("__h", "__pq_id")
-            .limit(num_codes)
-            .collect()
-        )  # driver control decision: num_codes rows
+        q = _quantized(df, id_col, embedding_col, quant_scale)
+        books = _pq_books(q, m, dim // m, num_codes)
         # filter on the CALLER's frame (before the rename) so the
         # predicate sees the user's column names; a null predicate row is
         # simply not selected (filter semantics)
         qsrc = df.filter(query_filter) if query_filter else df
         max_q = 100_000
         qrows = bounded_collect(
-            qsrc.select(
-                F.col(id_col).alias("__pq_id"),
-                _quantize_expr(embedding_col, quant_scale).alias("__pq_v"),
-            ).filter(_usable_sample("__pq_v")),
+            _quantized(qsrc, id_col, embedding_col, quant_scale).filter(
+                _usable_sample("__km_v")
+            ),
             max_q,
         )
         if qrows is None:
@@ -1067,47 +882,24 @@ def knn_pq(
                 "corpus-scale query set is an all-pairs problem (use the "
                 "LSH machinery instead)"
             )
-        if not init or not qrows:
+        if books is None or not qrows:
             return empty_out
-        books = (
-            np.array([list(r["__pq_v"]) for r in init], dtype=np.int64)
-            .reshape(len(init), m, sub)
-            .transpose(1, 0, 2)
-        )  # (m, k, sub)
-        bnorm = (books * books).sum(axis=2)  # (m, k)
-        Q = np.array([list(r["__pq_v"]) for r in qrows], dtype=np.int64)
-        qids = [r["__pq_id"] for r in qrows]
-        Qs = Q.reshape(len(Q), m, sub)
+        qids = [r["__km_id"] for r in qrows]
         # exact int64 LUT: (nq, m, k) squared distances query-sub x code
-        lut = (
-            (Qs * Qs).sum(axis=2)[:, :, None]
-            - 2 * np.einsum("qms,mks->qmk", Qs, books)
-            + bnorm[None, :, :]
-        )
+        lut = _pq_dists(np.array([r["__km_v"] for r in qrows], dtype=np.int64), books)
         nq = len(qids)
 
         def _batch_dists(v):
-            """(docs-in-batch, nq) exact int64 ADC matrix for a batch's
-            non-null vectors (mask returned alongside)."""
-            mask = v.notna().to_numpy()
-            if not mask.any():
-                return None, mask
-            X, good = _clean_int_rows(v[mask].to_numpy())
-            if good is not None:  # null-element rows drop out (r14 review)
-                mask[np.flatnonzero(mask)] = good
-            if not mask.any():
-                return None, mask
-            Xs = X.reshape(len(X), m, sub)
-            xnorm = (Xs * Xs).sum(axis=2)
-            cross = np.einsum("nms,mks->nmk", Xs, books)
-            dist = xnorm[:, :, None] - 2 * cross + bnorm[None, :, :]
-            codes = dist.argmin(axis=2)  # (n, m)
-            d = np.zeros((len(X), nq), dtype=np.int64)
+            """(positions, (rows, nq) exact int64 ADC matrix) of a batch's
+            usable rows; the matrix is None when there are none."""
+            pos, X = _usable_rows(v)
+            if not len(pos):
+                return pos, None
+            codes, _ = _pq_encode(X, books)
+            d = np.zeros((len(pos), nq), dtype=np.int64)
             for s in range(m):
                 d += lut[:, s, :][:, codes[:, s]].T
-            return d, mask
-
-        from pyspark.sql.types import ByteType, ShortType
+            return pos, d
 
         if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
             # FAST PATH (integral ids): partition-local top-k INSIDE the
@@ -1123,12 +915,10 @@ def knn_pq(
                 cand_d = [np.empty(0, np.int64) for _ in range(nq)]
                 cand_i = [np.empty(0, np.int64) for _ in range(nq)]
                 for pdf in batches:
-                    d, mask = _batch_dists(pdf["__pq_v"])
+                    pos, d = _batch_dists(pdf["__km_v"])
                     if d is None:
                         continue
-                    ids_m = (
-                        pdf["__pq_id"].to_numpy()[mask].astype(np.int64)
-                    )
+                    ids_m = pdf["__km_id"].to_numpy()[pos].astype(np.int64)
                     for qi in range(nq):
                         excl = ids_m != qid_arr[qi]
                         dd = np.concatenate([cand_d[qi], d[excl, qi]])
@@ -1168,12 +958,10 @@ def knn_pq(
             @F.pandas_udf("array<bigint>")
             def adc(v: pd.Series) -> pd.Series:
                 out = [None] * len(v)
-                d, mask = _batch_dists(v)
+                pos, d = _batch_dists(v)
                 if d is not None:
-                    di = iter(d)
-                    for i in range(len(v)):
-                        if mask[i]:
-                            out[i] = next(di).tolist()
+                    for i, row in zip(pos, d):
+                        out[i] = row.tolist()
                 return pd.Series(out)
 
             # (qi -> query_id) as a tiny BROADCAST lookup frame: a
@@ -1181,24 +969,22 @@ def knn_pq(
             # the literal-table pattern this module's header bans —
             # O(|queries|) plan nodes re-evaluated per exploded corpus
             # row (r14 review finding)
-            from pyspark.sql import types as _T
-
             qmap = F.broadcast(
                 df.sparkSession.createDataFrame(
                     list(enumerate(qids)),
-                    _T.StructType(
+                    StructType(
                         [
-                            _T.StructField("__qi", _T.IntegerType()),
-                            _T.StructField("query_id", id_type),
+                            StructField("__qi", IntegerType()),
+                            StructField("query_id", id_type),
                         ]
                     ),
                 )
             )
             scored = (
-                q.select("__pq_id", adc(F.col("__pq_v")).alias("__ds"))
+                q.select("__km_id", adc(F.col("__km_v")).alias("__ds"))
                 .filter(F.col("__ds").isNotNull())
                 .select(
-                    F.col("__pq_id").alias("neighbor_id"),
+                    F.col("__km_id").alias("neighbor_id"),
                     F.posexplode("__ds").alias("__qi", "adc_dist"),
                 )
                 .join(qmap, "__qi")
@@ -1262,8 +1048,6 @@ def knn_pq_refine(
         )
 
     def _refine(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         cand = df.transform(
             knn_pq(
                 embedding_col=embedding_col,
@@ -1285,16 +1069,11 @@ def knn_pq_refine(
         ).filter(F.col("__qv").isNotNull())
         gathered = corpus.join(F.broadcast(cand), "neighbor_id")
         both = gathered.join(F.broadcast(queries), "query_id")
-        exact = F.aggregate(
-            F.zip_with("__qv", "__nv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
         w = Window.partitionBy("query_id").orderBy(
             F.asc("__ed"), F.asc("neighbor_id")
         )
         return (
-            both.withColumn("__ed", exact.cast("long"))
+            both.withColumn("__ed", grid_sq_dist("__qv", "__nv").cast("long"))
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(

@@ -16,7 +16,9 @@ left-associative fold order, because float summation order is pinned
 by the SQL oracles (`a + b + c` parses as `(a + b) + c`, exactly the
 order `sum(generator, start)` chained).
 
-:func:`vector_width` is the one width probe those builders size from.
+:func:`vector_width` is the one width probe those builders size from;
+:func:`md5_fold` and :func:`grid_sq_dist` are the one form of the
+datapipes' md5 hash and of the exact integer-grid squared distance.
 """
 
 from __future__ import annotations
@@ -66,3 +68,20 @@ def vector_width(df: DataFrame, col: Union[str, Column]) -> int:
     picks its own empty-corpus branch."""
     d = df.select(F.max(F.size(col)).alias("d")).first()["d"]
     return max(int(d or 0), 0)
+
+
+def md5_fold(col: Union[str, Column]) -> Column:
+    """The datapipes' md5 hash: the first 15 hex digits (60 bits) of
+    ``md5(col)`` as a non-negative bigint —
+    ``cast(conv(substring(md5(col), 1, 15), 16, 10) as bigint)``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def grid_sq_dist(a: Union[str, Column], b: Union[str, Column]) -> Column:
+    """Exact squared L2 between two integer-grid vector columns:
+    ``aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0L, +)``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )

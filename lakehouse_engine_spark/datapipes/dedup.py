@@ -62,6 +62,7 @@ from lakehouse_engine_spark.datapipes.colbuild import (
     dot_cols,
     dot_elements,
     element_aliases,
+    md5_fold,
     vector_width,
 )
 from lakehouse_engine_spark.datapipes.driver_tier import (
@@ -481,7 +482,7 @@ def minhash_signature(col: Column, num_hashes: int = 12, shingle_size: int = 3) 
     ab = MINHASH_AB[:num_hashes]
     bases = F.transform(
         shingles(col, shingle_size),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % P,
+        lambda s: md5_fold(s) % P,
     )
 
     def fold(acc: Column, x: Column) -> Column:
@@ -511,7 +512,7 @@ def _minhash_sig_df(
         F.explode(F.array_distinct(shingles(F.col(text_col), shingle_size))).alias("__s"),
     ).select(
         "__id",
-        (F.conv(F.substring(F.md5("__s"), 1, 15), 16, 10).cast("long") % P).alias("__x"),
+        (md5_fold("__s") % P).alias("__x"),
     )
     # one parser round-trip per permutation (colbuild rationale); a and b
     # are < P = 2^31-1, so the SQL int literals type exactly like the
@@ -658,7 +659,7 @@ def simhash60(col: Column, shingle_size: int = 2) -> Column:
 
     def bit_votes(s: Column) -> Column:
         # ±1 vote per bit of the shingle hash (shift amounts must be literals)
-        h = F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+        h = md5_fold(s)
         return F.array(
             *[
                 F.when(
@@ -704,7 +705,7 @@ def _simhash_sig_df(
         F.explode(shingles(F.col(text_col), shingle_size)).alias("__s"),
     ).select(
         "__id",
-        F.conv(F.substring(F.md5("__s"), 1, 15), 16, 10).cast("long").alias("__h"),
+        md5_fold("__s").alias("__h"),
     )
     # expressions as SQL strings, one parser round-trip each: the Column
     # form made ~8 py4j calls per bit (x60 votes + a 60-deep bitwiseOR
@@ -1371,9 +1372,7 @@ def dedup_semantic_centroid(
         # them. They are also excluded from centroid selection (a
         # zero-vector centroid would make every assignment 0/0).
         nonzero = base.filter(F.col("__norm") > 0)
-        chash = F.conv(
-            F.substring(F.md5(F.col("__sid").cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        chash = md5_fold(F.col("__sid").cast("string"))
         # centroids collect to the driver (num_centroids × dim doubles —
         # KBs, the bpe_train merge-table convention) so the assignment is
         # a PURE CODEGEN PROJECTION: per row, one fused dot-product chain

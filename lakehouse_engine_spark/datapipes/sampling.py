@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_engine_spark.datapipes.colbuild import md5_fold
 from lakehouse_engine_spark.datapipes.driver_tier import bounded_collect
 from lakehouse_engine_spark.datapipes.registry import register
 
@@ -68,7 +69,7 @@ def _bucket_raw(id_col: str, seed: str) -> Column:
     only over rows with a non-NULL id; assign ids (``with_row_id``)
     before sampling if NULL-id rows must participate."""
     key = F.concat(F.col(id_col).cast("string"), F.lit(seed))
-    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+    return md5_fold(key)
 
 
 def _bucket(id_col: str, seed: str) -> Column:

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lakehouse_engine_spark.datapipes.colbuild import vector_width
+from lakehouse_engine_spark.datapipes.colbuild import (
+    grid_sq_dist,
+    md5_fold,
+    vector_width,
+)
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 
 from lakehouse_engine_spark.datapipes.dedup import cosine
@@ -324,9 +328,7 @@ def knn_ivf(
         # per-partition partial top-k + driver merge of k rows, NOT a
         # global sort funnel. The md5-fold hash is the datapipes
         # convention, so the oracle replays the choice exactly.
-        chash = F.conv(
-            F.substring(F.md5(F.col("__vid").cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        chash = md5_fold(F.col("__vid").cast("string"))
         centroids = (
             # null/empty embeddings can win the md5 order but are no
             # usable centroid (cosine(x, null)=0 makes a dead list that
@@ -428,12 +430,12 @@ def knn_ivf_hier(
     pattern for list counts past the flat trainer's per-batch cap).
 
     Deterministic, oracle-replayable semantics: cells come from
-    ``embedding_kmeans_hier`` (exact integer-grid Lloyd at both levels);
-    each cell's probing centroid is the exact FLOOR-DIV mean of its
-    members' quantized vectors; queries rank cells by exact squared grid
-    distance (ties -> smaller global cell id), probe ``nprobe`` cells,
-    and re-rank in-list by exact cosine on the RAW embeddings (ties ->
-    smaller neighbor id).
+    ``embedding_kmeans_hier``; each cell's probing centroid is the
+    floor-div mean of its members' quantized vectors, and queries rank
+    cells by exact squared grid distance (ties -> smaller global cell
+    id) — the exact contract of the ``datapipes/clustering.py`` module
+    docstring. Queries probe ``nprobe`` cells and re-rank in-list by
+    exact cosine on the RAW embeddings (ties -> smaller neighbor id).
 
     Scale: the cell table is k_eff rows (broadcast); assignment work per
     Arrow batch is rows x k_fine; search touches ~nprobe/k_eff of the
@@ -518,20 +520,12 @@ def knn_ivf_hier(
                 F.col("__v").alias("__queryv"),
                 F.col("__qv").alias("__queryq"),
             )
-            grid_dist = F.aggregate(
-                F.zip_with(
-                    F.col("__queryq"), F.col("__cv"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
             probe_w = Window.partitionBy("query_id").orderBy(
                 F.asc("__d"), F.asc("__cell")
             )
             probes = (
                 q.join(F.broadcast(cents))
-                .withColumn("__d", grid_dist)
+                .withColumn("__d", grid_sq_dist("__queryq", "__cv"))
                 .withColumn("__r", F.row_number().over(probe_w))
                 .filter(F.col("__r") <= nprobe)
                 .select("query_id", "__queryv", "__cell")

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_engine_spark.datapipes.colbuild import md5_fold
 from lakehouse_engine_spark.datapipes.registry import register
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -493,11 +494,7 @@ def streaming_approx_distinct(
                 # path: Spark's double→string rendering ('1.0E-4') is not
                 # Python's str() ('0.0001'), so their hashes differ.
                 width = 60 - precision
-                h = F.conv(
-                    F.substring(F.md5(F.col(value_col).cast("string")), 1, 15),
-                    16,
-                    10,
-                ).cast("long")
+                h = md5_fold(F.col(value_col).cast("string"))
                 slots = (
                     df.filter(F.col(value_col).isNotNull())
                     .select(*on, h.alias("__h"))
@@ -673,15 +670,7 @@ def streaming_reservoir_quantiles(
         # int(nan) / hash the literal 'None', and the batch arm's NULL
         # priority would sort FIRST and squat in the sample's top-k
         df = df.filter(F.col(id_col).isNotNull())
-        pri = F.conv(
-            F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(seed))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        pri = md5_fold(F.concat(F.col(id_col).cast("string"), F.lit(seed)))
 
         if not df.isStreaming:
             from functools import reduce as _reduce

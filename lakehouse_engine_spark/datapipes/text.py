@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_engine_spark.datapipes.colbuild import md5_fold
+from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 from lakehouse_engine_spark.datapipes.registry import register, register_with
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -54,26 +56,6 @@ def ws_line_trim(c):
     return F.regexp_replace(
         c, f"^{LINE_WS_CLASS}+|{LINE_WS_CLASS}+$", ""
     )
-
-
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Raise a starved scan to the session's parallelism before
-    per-row-heavy work (gram construction, Misra-Gries summaries, Arrow
-    kernels). A corpus that arrives as one small file is one input
-    split, so a 32-core session would run the whole pass on ONE task —
-    measured 8.7 s -> 0.8 s for the dsir gram explode at sf0.1. The
-    repartition is GATED on the deficit: at production scale (hundreds
-    of ~128 MB splits per executor wave) the input already has >=
-    defaultParallelism partitions and this is a no-op — the corpus is
-    never shuffled just-in-case. Round-robin, so skewless regardless of
-    upstream keying."""
-    # one copy of the gate: datapipes/parallel.py ensure_parallelism is
-    # the same gated round-robin repartition — delegating keeps the two
-    # callsite families (spread_scan vs ensure_parallelism) from
-    # drifting (r14 review finding)
-    from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
-    return ensure_parallelism(df)
 
 
 # BPE-ish lexer: word pieces OR runs of non-word/non-space punctuation —
@@ -267,8 +249,6 @@ def repetition_signals(
     """
 
     def _rep(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
         base = ensure_parallelism(df).select(
             F.col(id_col).alias("__id"), tokens_lower(F.col(input_col)).alias("__t")
         )
@@ -345,8 +325,6 @@ def decontaminate(
         )
 
     def _decon(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
         bench = (
             benchmark_df.select(
                 F.explode(shingles(F.col(benchmark_text_col), ngram)).alias("__g")
@@ -443,7 +421,7 @@ def decontaminate_bloom(
 
     def _h(col: Column, salt: str = "") -> Column:
         c = F.concat(col, F.lit(salt)) if salt else col
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+        return md5_fold(c)
 
     def _positions(gram: Column) -> List[Column]:
         # (h1 + i*h2) % m computed as (h1%m + i*(h2%m)) % m: identical
@@ -470,8 +448,6 @@ def decontaminate_bloom(
     )
 
     def _bloom(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
         bench_pos = (
             benchmark_df.select(
                 F.explode(shingles(F.col(benchmark_text_col), ngram)).alias("__g")
@@ -663,7 +639,7 @@ def frequent_terms(
         # per-row-heavy pass a starved scan serializes (8.9 s -> 2.2 s
         # for the bigram query at sf0.1); a unigram whitespace split is
         # IO-bound, so the extra text shuffle would only add work
-        sdf = spread_scan(df) if ngram > 1 else df
+        sdf = ensure_parallelism(df) if ngram > 1 else df
         toks = sdf.select(_stream().alias("__ft_toks"))
 
         def part(batches):
@@ -775,7 +751,7 @@ def ngram_counts(
         # n-gram construction is per-row-heavy, a unigram split is not)
         base = df.select(F.col(input_col).alias("__txt"))
         if n > 1:
-            base = spread_scan(base)
+            base = ensure_parallelism(base)
         with_id = base.withColumn("__doc", F.monotonically_increasing_id())
         exploded = with_id.select(
             "__doc", F.explode(shingles(F.col("__txt"), n)).alias("ngram")
@@ -830,7 +806,7 @@ def hash_embedding(
             F.col(id_col).alias("__hid"),
             F.explode(tokens_lower(F.col(input_col))).alias("__w"),
         )
-        hv = F.conv(F.substring(F.md5("__w"), 1, 15), 16, 10).cast("long")
+        hv = md5_fold("__w")
         hashed = toks.select("__hid", hv.alias("__hv"))
         cells = (
             hashed.select(
@@ -1952,13 +1928,13 @@ def corpus_overlap_stats(
         # 8-gram shingle construction is the per-row-heavy pass — spread
         # a starved scan first (no-op at production split counts)
         a = (
-            spread_scan(df)
+            ensure_parallelism(df)
             .select(F.explode(shingles(F.col(input_col), ngram)).alias("__g"))
             .select(F.md5("__g").alias("__gh"))
             .distinct()
         )
         b = (
-            spread_scan(other_df)
+            ensure_parallelism(other_df)
             .select(
                 F.explode(shingles(F.col(other_text_col), ngram)).alias("__g")
             )
@@ -2510,7 +2486,7 @@ def dsir_score(
         # here the two (doc, bucket) aggregate subplans stop
         # canonicalizing identically and AQE re-runs the gram explode
         # instead of reusing the exchange.
-        src = spread_scan(df.filter(F.col(id_col).isNotNull())).select(
+        src = ensure_parallelism(df.filter(F.col(id_col).isNotNull())).select(
             F.col(id_col).alias("__id"),
             F.expr(f"explode({_grams_sql(input_col)}) as __g"),
         ).select("__id", F.expr(f"{_bucket_sql} as __b"))
@@ -2521,7 +2497,7 @@ def dsir_score(
         doc_buckets = src.groupBy("__id", "__b").agg(
             F.count(F.lit(1)).alias("__c")
         )
-        tgt = spread_scan(target_df).select(
+        tgt = ensure_parallelism(target_df).select(
             F.expr(f"explode({_grams_sql(target_text_col)}) as __g")
         ).select(F.expr(f"{_bucket_sql} as __b"))
         s_counts = doc_buckets.groupBy("__b").agg(
@@ -2631,8 +2607,6 @@ def decontaminate_spans(
 
     def _decon(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
-
-        from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 
         bench = (
             benchmark_df.select(
@@ -2806,8 +2780,6 @@ def char_entropy(
     """
 
     def _ent(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
         pairs = (
             ensure_parallelism(df)
             .select(
@@ -2870,8 +2842,6 @@ def dup_line_stats(
     """
 
     def _stats(df: DataFrame) -> DataFrame:
-        from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
         base = (
             ensure_parallelism(df)
             .select(
@@ -3115,7 +3085,7 @@ def winnow_fingerprint(
         # inlined subtree would re-derive every gram value at every slice
         # site (O(m²·window) work per doc; measured pathological).
         # Behind a bound column reference the values compute once per doc.
-        base = spread_scan(df.filter(F.col(input_col).isNotNull() & (m >= 1)))
+        base = ensure_parallelism(df.filter(F.col(input_col).isNotNull() & (m >= 1)))
         if k <= 12:
             # packed base-36 gram codes: one ascii map per CHAR (staged
             # behind its own projection), then k integer ops per gram
@@ -3152,9 +3122,7 @@ def winnow_fingerprint(
         else:
             hs = F.transform(
                 F.sequence(F.lit(1), m),
-                lambda i: F.conv(
-                    F.substring(F.md5(F.substring(norm, i, k)), 1, 15), 16, 10
-                ).cast("long"),
+                lambda i: md5_fold(F.substring(norm, i, k)),
             )
             staged = base.select(F.col(id_col).alias("__id"), hs.alias("__hs"))
         # full windows only (i <= m-w+1): pure scalar least over w

@@ -226,6 +226,29 @@ def test_driver_tier_parity(spark, both_tiers, op, ids):
         assert driver == [(1, 1), (2, 1), (3_000_000_000, 1)]
 
 
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_kmeans_hier_level_one_is_the_flat_trainer(spark, both_tiers, monkeypatch, ids):
+    """embedding_kmeans_hier's coarse level is embedding_kmeans on
+    (k_coarse, coarse_iterations): the same cluster for every row, on
+    each tier."""
+    frame = _vectors(spark, ids)
+    gate = "DRIVER_KMEANS_MAX_ELEMS"
+    default = getattr(clustering, gate)
+    fns = [
+        t("embedding_kmeans", k=3, iterations=2),
+        t("embedding_kmeans_hier", k_coarse=3, k_fine=2, coarse_iterations=2,
+          fine_iterations=1),
+    ]
+    runs = []
+    for fn in fns:
+        monkeypatch.setattr(clustering, gate, default)  # both_tiers leaves 0
+        runs.append(both_tiers(frame, fn, clustering, gate))
+    for flat, hier in zip(*runs):  # driver tier, then distributed
+        assert [(r[0], r[2]) for r in flat] == [(r[0], r[2]) for r in hier]
+        assert len({r[2] for r in flat}) == 3
+
+
 # ----- per-operator drift fixes -----------------------------------------------
 
 

@@ -1347,7 +1347,7 @@ def test_winnow_fingerprint_projection_until_distinct(spark, sf_dir):
     """The gram/hash/winnow pipeline is one codegen projection per doc —
     the ONLY data exchange is the final distinct on the selected
     fingerprints (~1/window of the grams); no join, no global sort. A
-    deficit-gated spread_scan round-robin may precede the heavy
+    deficit-gated ensure_parallelism round-robin may precede the heavy
     projection on starved local inputs (no-op at production split
     counts)."""
     df = entry.queries()["dp138_winnow_fingerprint"](spark, sf_dir)
