@@ -982,7 +982,7 @@ def q28_gab_weekly_sunday_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
 def q29_gab_day_recon_recompute(spark: SparkSession, sf: str) -> DataFrame:
     """GAB reconciliation-window recompute — the recon path of
-    algorithms/gab.py (_run_cadence → _delete_insert), the one GAB
+    algorithms/gab.py (_run_cadence → _flush), the one GAB
     behavior previously pytest-only: late-arriving facts are folded in by
     re-running the cadence over the reconciliation window and
     DELETE+INSERTing exactly that window's insights rows, leaving older
@@ -1036,7 +1036,7 @@ def q29_gab_day_recon_recompute(spark: SparkSession, sf: str) -> DataFrame:
     )
     recomputed = day_rollup(orders, f0.date(), f1.date())
     # delete+insert: drop the recompute window's buckets from the initial
-    # load, append the fresh ones (the parquet arm of _delete_insert)
+    # load, append the fresh ones (the parquet arm of GAB._flush)
     kept = initial.filter(
         ~F.col("from_date").between(
             b0.strftime("%Y-%m-%d"),

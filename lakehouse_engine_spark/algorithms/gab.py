@@ -13,8 +13,11 @@ snapshots, GAB:
    ``{{ project_date_column }}``, ``{{ joins }}``, ``{{ filter_date_column }}``
    … — reference ``algorithms/gab.py:686-732``) against a calendar dimension;
 3. materializes each stage as a temp view (optional repartition/cache);
-4. DELETE+INSERTs the final stage into a fixed-width 40-dimension/40-metric
-   insights table (reference ``core/gab_sql_generator.py:87-184, 429-545``);
+4. queues the final stage's rows, padded to a fixed-width
+   40-dimension/40-metric insights table, and after the last run writes the
+   whole queue as ONE DELETE+INSERT (:meth:`GAB._flush`); the table ends as
+   the reference's DELETE+INSERT per run leaves it (reference
+   ``core/gab_sql_generator.py:87-184, 429-545``);
 5. creates a consumption view re-aliasing dims/metrics and computing
    configured calculated metrics (reference ``core/gab_sql_generator.py:187-426``).
 
@@ -31,13 +34,19 @@ Spark-first design notes (vs the reference):
   is always broadcast — at 100 TB the fact side never shuffles for it.
 * DELETE+INSERT is :func:`lakehouse_engine_spark.io.merge_writer.replace_where`
   (real ``DELETE`` + append on Delta, the merge writer's locked rewrite
-  otherwise).
+  otherwise), called once per refresh rather than once per cadence run: a
+  refresh of five cadences rewrites the insights table once, not five
+  times.
 """
 
 from __future__ import annotations
 
 import ast
+import logging
+import math
+import re
 from datetime import datetime, timedelta
+from functools import reduce
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -55,6 +64,8 @@ from lakehouse_engine_spark.utils.gab_utils import (
     reconciliation_cadences,
     render_template,
 )
+
+logger = logging.getLogger(__name__)
 
 N_DIMENSIONS = 40  # d1..d40 + from_date/to_date (reference gab_sql_generator.py:159-184)
 N_METRICS = 40  # m1..m40
@@ -186,7 +197,7 @@ class GAB:
             F.col("query_label").isin(self.spec.query_label_filter)
             & F.col("queue").isin(self.spec.queue_filter)
             & (F.col("is_active") != F.lit("N"))
-        ).cache()
+        )
 
         create_calendar_view(
             spark,
@@ -197,7 +208,6 @@ class GAB:
 
         for use_case in lookup.collect():
             self._process_use_case(use_case)
-        lookup.unpersist()
 
     def _read_lookup(self) -> DataFrame:
         name = self.spec.lookup_table
@@ -222,10 +232,8 @@ class GAB:
             )
         )
         if not cadences or not stages:
-            import logging
-
             # reference skip message (its tests assert this exact text)
-            logging.getLogger(__name__).info(
+            logger.info(
                 "Skipping use case %s. No cadence processed for the use case.",
                 use_case["query_label"],
             )
@@ -237,16 +245,26 @@ class GAB:
         )
 
         processed = False
-        for cadence in cadences:
-            window = (recon.get(cadence) or {}).get("recon_window", {})
-            to_run = reconciliation_cadences(
-                cadence, window, end_conf, self.spec.rerun_flag
-            )
-            for recon_cadence, snapshot_flag in to_run.items():
-                self._run_cadence(
-                    cadence, recon_cadence, snapshot_flag, use_case, stages, mappings
+        queue: List[Tuple[str, DataFrame]] = []
+        cached: List[DataFrame] = []
+        try:
+            for cadence in cadences:
+                window = (recon.get(cadence) or {}).get("recon_window", {})
+                to_run = reconciliation_cadences(
+                    cadence, window, end_conf, self.spec.rerun_flag
                 )
-                processed = True
+                for recon_cadence, snapshot_flag in to_run.items():
+                    queue.append(
+                        self._run_cadence(
+                            cadence, recon_cadence, snapshot_flag, use_case,
+                            stages, mappings, queue, cached,
+                        )
+                    )
+                    processed = True
+            self._flush(use_case, queue)
+        finally:
+            for df in cached:
+                df.unpersist()
         if processed:
             self._create_consumption_views(use_case, mappings, recon)
 
@@ -270,7 +288,16 @@ class GAB:
         use_case: Row,
         stages: dict,
         mappings: dict,
-    ) -> None:
+        queue: List[Tuple[str, DataFrame]],
+        cached: List[DataFrame],
+    ) -> Tuple[str, DataFrame]:
+        """Build one cadence run's insights rows as ``(cadence, fresh)``.
+
+        Writes nothing, unless a rendered stage names the insights table: the
+        queued runs are then flushed first, so the stage reads what each
+        earlier run wrote, as when every run was written on its own. Stage
+        frames the run caches are appended to ``cached``; the caller
+        unpersists them."""
         spark = self.spark
         (
             bucket_start,
@@ -292,16 +319,13 @@ class GAB:
             filter_start += timedelta(hours=offset)
             filter_end += timedelta(hours=offset)
         fmt = "%Y-%m-%d"
-        bucket_start_s, bucket_end_s = bucket_start.strftime(fmt), bucket_end.strftime(fmt)
+        bucket_start_s = bucket_start.strftime(fmt)
         partition_end_s = (bucket_end - timedelta(days=1)).strftime(fmt)
         filter_start_s, filter_end_s = filter_start.strftime(fmt), filter_end.strftime(fmt)
 
-        final_view = ""
-        cached: List[str] = []
-        for i in range(1, len(stages) + 1):
-            stage = stages[str(i)]
-            rendered = self._render_stage(
-                stage,
+        rendered = [
+            self._render_stage(
+                stages[str(i)],
                 use_case,
                 cadence,
                 recon_cadence,
@@ -311,13 +335,21 @@ class GAB:
                 filter_start_s,
                 filter_end_s,
             )
+            for i in range(1, len(stages) + 1)
+        ]
+        if any(self._reads_target(sql) for sql in rendered):
+            self._flush(use_case, queue)
+
+        final_view = ""
+        for i, sql in enumerate(rendered, start=1):
+            stage = stages[str(i)]
             # stages reference EACH OTHER by their configured table_alias
             # (reference _create_stage_view registers the view under it)
             final_view = (
                 stage.get("table_alias")
                 or f"gab_{use_case['query_label']}_stage_{i}"
             )
-            df = spark.sql(rendered)
+            df = spark.sql(sql)
             rep = stage.get("repartition") or {}
             if rep.get("keys"):
                 df = df.repartition(
@@ -328,12 +360,22 @@ class GAB:
                 df = df.repartition(int(rep["numPartitions"]))
             if stage.get("storage_level"):
                 df = df.cache()
-                cached.append(final_view)
+                cached.append(df)
+            # the next stage's SQL is analyzed against this registration, so
+            # a later run re-registering the name leaves queued frames as built
             df.createOrReplaceTempView(final_view)
 
-        self._delete_insert(use_case, cadence, final_view, mappings)
-        for view in cached:
-            self.spark.catalog.uncacheTable(view)
+        fresh = self._insights_select(use_case, cadence, final_view, mappings)
+        fresh = fresh.withColumn("from_date", F.col("from_date").cast("date")).withColumn(
+            "to_date", F.col("to_date").cast("date")
+        )
+        return cadence, fresh
+
+    def _reads_target(self, sql: str) -> bool:
+        """Whether a rendered stage names the insights table (``{{ target_table }}``
+        is a template variable)."""
+        name = re.escape(self.spec.target_table)
+        return re.search(rf"\b{name}\b", sql, re.IGNORECASE) is not None
 
     def _render_stage(
         self,
@@ -421,41 +463,79 @@ class GAB:
         cols.append("current_timestamp() as lh_created_on")
         return self.spark.sql(f"SELECT {', '.join(cols)} FROM {final_view}")
 
-    def _delete_insert(
-        self, use_case: Row, cadence: str, final_view: str, mappings: dict
-    ) -> None:
-        """DELETE the use-case window then INSERT the fresh rows.
+    def _flush(self, use_case: Row, queue: List[Tuple[str, DataFrame]]) -> None:
+        """Write the queued ``(cadence, fresh)`` runs as ONE DELETE+INSERT
+        into the insights table, and empty the queue.
 
-        Reference ``core/gab_sql_generator.py:429-545`` (delete bounded by
-        min/max from/to dates of the staged data) + the insert generator,
-        both through :func:`~lakehouse_engine_spark.io.merge_writer.replace_where`.
+        The table ends as a DELETE+INSERT per run, in queue order, leaves
+        it. Run ``k``'s delete predicate is its ``query_id`` and cadence
+        with the min/max bounds of its rows' from/to dates (reference
+        ``core/gab_sql_generator.py:429-545``): one aggregate, grouped by
+        run, gives every run's bounds. The target loses the rows that any
+        run's predicate matches; a queued row survives only if no LATER
+        run's predicate matches it, so overlapping windows (snapshot runs
+        of one cadence, WEEK recomputed at MONTH end) keep the last run's
+        rows. A run without bounds (no rows, or only NULL from dates) was
+        skipped, rows and all, once the table existed, and is here too; a
+        missing table is created from the queued rows.
+
+        The queued rows are cached while the bounds and the write read
+        them. They are written in as many partitions as their estimated
+        size needs at ``spark.sql.files.maxPartitionBytes`` (at least one),
+        not one per partition of the union. One query computes every row,
+        so every row a flush writes carries the same ``lh_created_on``.
         """
+        if not queue:
+            return
         spark = self.spark
-        fresh = self._insights_select(use_case, cadence, final_view, mappings)
-        fresh = fresh.withColumn("from_date", F.col("from_date").cast("date")).withColumn(
-            "to_date", F.col("to_date").cast("date")
-        )
         target = f"{self.spec.target_database}.{self.spec.target_table}"
-
-        delete_pred = "FALSE"  # a missing target is created from the fresh rows
-        if spark.catalog.tableExists(target):
-            bounds = fresh.agg(
-                F.min("from_date").alias("f0"),
-                F.max("from_date").alias("f1"),
-                F.min("to_date").alias("t0"),
-                F.max("to_date").alias("t1"),
-            ).first()
-            if bounds["f0"] is None:
+        union = reduce(
+            DataFrame.unionByName,
+            [fresh.withColumn("__run", F.lit(k)) for k, (_, fresh) in enumerate(queue)],
+        ).cache()
+        try:
+            exists = spark.catalog.tableExists(target)
+            bounds = {
+                r["__run"]: r
+                for r in union.groupBy("__run")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.min("from_date").alias("f0"),
+                    F.max("from_date").alias("f1"),
+                    F.min("to_date").alias("t0"),
+                    F.max("to_date").alias("t1"),
+                )
+                .collect()
+            }
+            preds: List[Tuple[int, str]] = []
+            dropped: List[str] = []  # when a queued row is not written
+            for k, (cadence, _) in enumerate(queue):
+                b = bounds.get(k)
+                if b is None or b["f0"] is None:
+                    if exists or k:  # run 0 alone creates a missing table
+                        dropped.append(f"__run = {k}")
+                    continue
+                preds.append((k, (
+                    f"(query_id = '{use_case['query_id']}' AND cadence = '{cadence}' "
+                    f"AND from_date BETWEEN '{b['f0']}' AND '{b['f1']}' "
+                    f"AND to_date BETWEEN '{b['t0']}' AND '{b['t1']}')"
+                )))
+            if exists and not preds:
                 return
-            delete_pred = (
-                f"query_id = '{use_case['query_id']}' AND cadence = '{cadence}' "
-                f"AND from_date BETWEEN '{bounds['f0']}' AND '{bounds['f1']}' "
-                f"AND to_date BETWEEN '{bounds['t0']}' AND '{bounds['t1']}'"
+            delete_pred = " OR ".join(p for _, p in preds) if exists else "FALSE"
+            dropped += [f"(__run < {k} AND {p})" for k, p in preds if k]
+            rows = union.filter(f"NOT coalesce({' OR '.join(['FALSE'] + dropped)}, FALSE)")
+            n_rows = sum(b["n"] for b in bounds.values())
+            row_bytes = union._jdf.schema().defaultSize()
+            max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+            rows = rows.drop("__run").coalesce(max(1, math.ceil(n_rows * row_bytes / max_bytes)))
+            replace_where(
+                spark, delete_pred, rows, db_table=target,
+                data_format=ExecEnv.default_output_format(),
             )
-        replace_where(
-            spark, delete_pred, fresh, db_table=target,
-            data_format=ExecEnv.default_output_format(),
-        )
+        finally:
+            union.unpersist()
+            queue.clear()
 
     # ------------------------------------------------- consumption views
     def _create_consumption_views(

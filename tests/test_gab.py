@@ -8,12 +8,18 @@ a lookup config row + a staged SQL template, executed through the public
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+from types import SimpleNamespace
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from lakehouse_engine_spark import execute_gab
+from lakehouse_engine_spark.algorithms.gab import GAB
+from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.io.merge_writer import replace_where
 from lakehouse_engine_spark.utils.gab_utils import (
     cadence_configuration_at_end_date,
     cadence_end,
@@ -57,43 +63,82 @@ MAPPINGS = {
 }
 
 
+LOOKUP_DDL = (
+    "query_id string, query_label string, query_type string, mappings string, "
+    "intermediate_stages string, recon_window string, timezone_offset int, "
+    "start_of_the_week string, is_active string, queue string"
+)
+
+# a stage that also reads the insights table it feeds
+BARRIER_SQL = """
+SELECT
+    {{ to_date }} AS to_date,
+    {{ project_date_column }} AS order_date,
+    o_orderpriority,
+    COUNT(*) AS orders,
+    MAX(seen.n) AS total_price
+FROM {{ database }}.gab_orders {{ joins }}
+CROSS JOIN (SELECT CAST(count(*) AS DOUBLE) AS n FROM {{ database }}.{{ target_table }}) seen
+WHERE {{ filter_date_column }} >= '{{ start_date }}'
+  AND {{ filter_date_column }} < '{{ end_date }}'
+GROUP BY ALL
+"""
+
+CADENCES = ["DAY", "WEEK", "MONTH", "QUARTER", "YEAR"]
+
+
+def _lookup_row(query_id, label, recon, stage_file="1_orders.sql", storage_level=""):
+    stages = {
+        "1": {
+            "file_path": stage_file,
+            "table_alias": label,
+            "storage_level": storage_level,
+            "project_date_column": "o_orderdate",
+            "filter_date_column": "o_orderdate",
+            "repartition": {},
+        }
+    }
+    return (
+        query_id, label, "GLOBAL", str(MAPPINGS), str(stages), str(recon),
+        0, "MONDAY", "Y", "Low",
+    )
+
+
 @pytest.fixture(scope="module")
 def gab_env(spark, sf_dir, tmp_path_factory):
     base = tmp_path_factory.mktemp("gab")
     (base / "1_orders.sql").write_text(STAGE_SQL)
+    (base / "2_barrier.sql").write_text(BARRIER_SQL)
     spark.sql("CREATE DATABASE IF NOT EXISTS gab_db")
+    spark.sql("CREATE DATABASE IF NOT EXISTS gab_par_db")
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     orders.write.mode("overwrite").saveAsTable("gab_db.gab_orders")
 
     lookup = spark.createDataFrame(
         [
-            (
-                "9001",
-                "orders_kpi",
-                "GLOBAL",
-                str(MAPPINGS),
-                str(
-                    {
-                        "1": {
-                            "file_path": "1_orders.sql",
-                            "table_alias": "orders_kpi",
-                            "storage_level": "",
-                            "project_date_column": "o_orderdate",
-                            "filter_date_column": "o_orderdate",
-                            "repartition": {},
-                        }
-                    }
-                ),
-                str({"MONTH": {}, "WEEK": {}}),
-                0,
-                "MONDAY",
-                "Y",
-                "Low",
-            )
+            _lookup_row("9001", "orders_kpi", {"MONTH": {}, "WEEK": {}}),
+            _lookup_row(
+                "9002", "orders_day_recon",
+                {"DAY": {"recon_window": {"MONTH": {"snapshot": "N"}}}},
+            ),
+            # the gold refresh: five cadences, WEEK recomputed at MONTH end
+            _lookup_row(
+                "9003", "orders_all",
+                {c: {} for c in CADENCES}
+                | {"WEEK": {"recon_window": {"MONTH": {"snapshot": "N"}}}},
+            ),
+            # three MONTH runs per month-end refresh, the snapshot windows
+            # overlapping the full-month run
+            _lookup_row(
+                "9004", "orders_snap",
+                {"MONTH": {"recon_window": {"WEEK": {"snapshot": "Y"},
+                                            "DAY": {"snapshot": "Y"}}}},
+            ),
+            _lookup_row("9005", "orders_barrier", {"DAY": {}, "MONTH": {}}, "2_barrier.sql"),
+            _lookup_row("9006", "orders_cached", {"DAY": {}, "MONTH": {}},
+                        storage_level="MEMORY_ONLY"),
         ],
-        "query_id string, query_label string, query_type string, mappings string, "
-        "intermediate_stages string, recon_window string, timezone_offset int, "
-        "start_of_the_week string, is_active string, queue string",
+        LOOKUP_DDL,
     )
     lookup.write.mode("overwrite").saveAsTable("gab_db.lkp_query_builder")
     yield {"base": str(base), "sf_dir": sf_dir}
@@ -101,25 +146,29 @@ def gab_env(spark, sf_dir, tmp_path_factory):
     spark.sql("DROP TABLE IF EXISTS gab_db.gab_insights")
     spark.sql("DROP TABLE IF EXISTS gab_db.gab_orders")
     spark.sql("DROP TABLE IF EXISTS gab_db.lkp_query_builder")
+    spark.sql("DROP DATABASE IF EXISTS gab_par_db CASCADE")
+
+
+def _acon(env, label, start, end, cadences, rerun="N", target="gab_insights",
+          target_db="gab_db", current="2026-01-01"):
+    return {
+        "query_label_filter": [label],
+        "queue_filter": ["Low"],
+        "cadence_filter": cadences,
+        "target_database": target_db,
+        "source_database": "gab_db",
+        "start_date": start,
+        "end_date": end,
+        "current_date": current,
+        "rerun_flag": rerun,
+        "target_table": target,
+        "gab_base_path": env["base"],
+        "lookup_table": "gab_db.lkp_query_builder",
+    }
 
 
 def test_gab_monthly_rollup_matches_duckdb(spark, gab_env):
-    execute_gab(
-        {
-            "query_label_filter": ["orders_kpi"],
-            "queue_filter": ["Low"],
-            "cadence_filter": ["MONTH"],
-            "target_database": "gab_db",
-            "source_database": "gab_db",
-            "start_date": "1995-01-01",
-            "end_date": "1995-03-31",
-            "current_date": "2026-01-01",
-            "rerun_flag": "N",
-            "target_table": "gab_insights",
-            "gab_base_path": gab_env["base"],
-            "lookup_table": "gab_db.lkp_query_builder",
-        }
-    )
+    execute_gab(_acon(gab_env, "orders_kpi", "1995-01-01", "1995-03-31", ["MONTH"]))
     got = (
         spark.table("gab_db.gab_insights")
         .filter("cadence = 'MONTH'")
@@ -152,20 +201,7 @@ def test_gab_monthly_rollup_matches_duckdb(spark, gab_env):
 
 
 def test_gab_rerun_is_idempotent(spark, gab_env):
-    acon = {
-        "query_label_filter": ["orders_kpi"],
-        "queue_filter": ["Low"],
-        "cadence_filter": ["MONTH"],
-        "target_database": "gab_db",
-        "source_database": "gab_db",
-        "start_date": "1995-01-01",
-        "end_date": "1995-03-31",
-        "current_date": "2026-01-01",
-        "rerun_flag": "Y",
-        "target_table": "gab_insights",
-        "gab_base_path": gab_env["base"],
-        "lookup_table": "gab_db.lkp_query_builder",
-    }
+    acon = _acon(gab_env, "orders_kpi", "1995-01-01", "1995-03-31", ["MONTH"], "Y")
     execute_gab(acon)
     first = spark.table("gab_db.gab_insights").count()
     execute_gab(acon)  # DELETE+INSERT of the same window must not duplicate
@@ -173,22 +209,8 @@ def test_gab_rerun_is_idempotent(spark, gab_env):
 
 
 def test_gab_week_cadence_uses_calendar_join(spark, gab_env):
-    execute_gab(
-        {
-            "query_label_filter": ["orders_kpi"],
-            "queue_filter": ["Low"],
-            "cadence_filter": ["WEEK"],
-            "target_database": "gab_db",
-            "source_database": "gab_db",
-            "start_date": "1995-01-02",
-            "end_date": "1995-01-29",  # a Sunday → week end (Monday weeks)
-            "current_date": "2026-01-01",
-            "rerun_flag": "N",
-            "target_table": "gab_insights",
-            "gab_base_path": gab_env["base"],
-            "lookup_table": "gab_db.lkp_query_builder",
-        }
-    )
+    # 1995-01-29 is a Sunday → week end (Monday weeks)
+    execute_gab(_acon(gab_env, "orders_kpi", "1995-01-02", "1995-01-29", ["WEEK"]))
     weeks = (
         spark.table("gab_db.gab_insights")
         .filter("cadence = 'WEEK'")
@@ -258,25 +280,12 @@ def test_gab_recon_window_recompute_folds_in_late_data(spark, sf_dir, tmp_path):
     )
     lookup = spark.createDataFrame(
         [
-            (
-                "9002", "orders_recon", "GLOBAL", str(MAPPINGS),
-                str({
-                    "1": {
-                        "file_path": "1_orders.sql",
-                        "table_alias": "orders_recon",
-                        "storage_level": "",
-                        "project_date_column": "o_orderdate",
-                        "filter_date_column": "o_orderdate",
-                        "repartition": {},
-                    }
-                }),
-                str({"DAY": {"recon_window": {"MONTH": {"snapshot": "N"}}}}),
-                0, "MONDAY", "Y", "Low",
+            _lookup_row(
+                "9002", "orders_recon",
+                {"DAY": {"recon_window": {"MONTH": {"snapshot": "N"}}}},
             )
         ],
-        "query_id string, query_label string, query_type string, mappings string, "
-        "intermediate_stages string, recon_window string, timezone_offset int, "
-        "start_of_the_week string, is_active string, queue string",
+        LOOKUP_DDL,
     )
     lookup.write.mode("overwrite").saveAsTable("gab_db.lkp_recon_builder")
     acon = {
@@ -327,3 +336,210 @@ def test_gab_recon_window_recompute_folds_in_late_data(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS gab_db.gab_recon_insights")
         spark.sql("DROP TABLE IF EXISTS gab_db.gab_recon_orders")
         spark.sql("DROP TABLE IF EXISTS gab_db.lkp_recon_builder")
+
+
+# ---------------------------------------------------------------------------
+# one flush per refresh vs the per-run DELETE+INSERT it replaced
+# ---------------------------------------------------------------------------
+
+
+def _delete_insert(gab, use_case, cadence, fresh):
+    """One cadence run's DELETE+INSERT on its own: the write every run made
+    before runs were queued and flushed together."""
+    spark = gab.spark
+    target = f"{gab.spec.target_database}.{gab.spec.target_table}"
+    delete_pred = "FALSE"
+    if spark.catalog.tableExists(target):
+        bounds = fresh.agg(
+            F.min("from_date").alias("f0"),
+            F.max("from_date").alias("f1"),
+            F.min("to_date").alias("t0"),
+            F.max("to_date").alias("t1"),
+        ).first()
+        if bounds["f0"] is None:
+            return
+        delete_pred = (
+            f"query_id = '{use_case['query_id']}' AND cadence = '{cadence}' "
+            f"AND from_date BETWEEN '{bounds['f0']}' AND '{bounds['f1']}' "
+            f"AND to_date BETWEEN '{bounds['t0']}' AND '{bounds['t1']}'"
+        )
+    replace_where(
+        spark, delete_pred, fresh, db_table=target,
+        data_format=ExecEnv.default_output_format(),
+    )
+
+
+class _PerRunGAB(GAB):
+    """GAB on the per-run path, the parity oracle: every run is a flush
+    barrier, so it is written before the next run is built, and a flush
+    delete-inserts each run on its own."""
+
+    def _reads_target(self, sql):
+        return True
+
+    def _flush(self, use_case, queue):
+        for cadence, fresh in queue:
+            _delete_insert(self, use_case, cadence, fresh)
+        queue.clear()
+
+
+def _per_run_gab(acon):
+    _PerRunGAB(acon).execute()
+
+
+def _insights(spark, table):
+    return spark.table(table).drop("lh_created_on")
+
+
+def _assert_same_table(spark, got, want):
+    g, w = _insights(spark, got), _insights(spark, want)
+    assert g.count() == w.count() > 0
+    assert g.exceptAll(w).count() == 0 and w.exceptAll(g).count() == 0
+
+
+def test_flush_matches_per_run_path(spark, gab_env):
+    """The fixtures' refreshes plus two overlapping cases, each run in
+    order through the flush and through the per-run oracle into its own
+    table: the tables match on every column but ``lh_created_on``."""
+    refreshes = [
+        # the module's fixtures: MONTH, its rerun, the WEEK calendar join
+        ("orders_kpi", "1995-01-01", "1995-03-31", ["MONTH"], "N", "2026-01-01"),
+        ("orders_kpi", "1995-01-01", "1995-03-31", ["MONTH"], "Y", "2026-01-01"),
+        ("orders_kpi", "1995-01-02", "1995-01-29", ["WEEK"], "N", "2026-01-01"),
+        # DAY reconciled at MONTH end: the recompute of February
+        ("orders_day_recon", "1995-01-01", "1995-02-28", ["DAY"], "N", "1995-03-05"),
+        ("orders_day_recon", "1995-02-28", "1995-02-28", ["DAY"], "N", "1995-03-05"),
+        # WEEK reconciled at MONTH end among five cadences: June's refresh
+        # recomputes weeks that the year's refresh already wrote
+        ("orders_all", "1995-01-01", "1995-12-31", CADENCES, "Y", "2026-01-01"),
+        ("orders_all", "1995-06-01", "1995-06-30", CADENCES, "N", "2026-01-01"),
+        # MONTH with WEEK and DAY snapshots: three MONTH runs per refresh
+        ("orders_snap", "1995-01-01", "1995-03-31", ["MONTH"], "Y", "2026-01-01"),
+        ("orders_snap", "1995-02-01", "1995-02-28", ["MONTH"], "N", "2026-01-01"),
+    ]
+    for label, start, end, cadences, rerun, current in refreshes:
+        for run, table in ((execute_gab, "par_flush"), (_per_run_gab, "par_per_run")):
+            run(_acon(gab_env, label, start, end, cadences, rerun, table,
+                      "gab_par_db", current))
+    _assert_same_table(spark, "gab_par_db.par_flush", "gab_par_db.par_per_run")
+    snaps = spark.table("gab_par_db.par_flush").filter("query_id = '9004'")
+    # the snapshot runs left several to_date versions of one month bucket
+    assert snaps.groupBy("from_date").count().filter("count > 5").count() > 0
+
+
+_EDGE_DDL = "query_id STRING, cadence STRING, from_date DATE, to_date DATE, m1 DOUBLE"
+
+
+def _edge_rows(cadence, days, m1, from_null=False):
+    return [
+        ("q", cadence, None if from_null else dt.date(1995, 1, d), dt.date(1995, 1, d), m1)
+        for d in days
+    ]
+
+
+# cadence runs whose windows overlap, one with no rows, one whose rows
+# have no from_date (the per-run path skipped it once the table existed)
+_EDGE_RUNS = [
+    ("DAY", _edge_rows("DAY", [1, 2, 3], 1.0)),
+    ("DAY", _edge_rows("DAY", [2, 3, 4], 2.0)),
+    ("MONTH", []),
+    ("MONTH", _edge_rows("MONTH", [5], 3.0, from_null=True)),
+    ("WEEK", _edge_rows("WEEK", [2, 9], 4.0)),
+]
+
+
+@pytest.mark.parametrize("order", [[0, 1, 2, 3, 4], [3, 0, 2, 1], [2, 3, 0]])
+@pytest.mark.parametrize("seeded", [False, True])
+def test_flush_matches_per_run_chain_on_edge_runs(spark, order, seeded):
+    """The flush against the per-run chain on crafted runs, into a missing
+    and into an existing table."""
+    got = {}
+    for path in ("flush", "per_run"):
+        table = f"flush_edge_{path}"
+        spark.sql(f"DROP TABLE IF EXISTS default.{table}")
+        if seeded:
+            seed = _edge_rows("DAY", [1, 4, 7], 9.0) + _edge_rows("WEEK", [2], 9.0)
+            spark.createDataFrame(seed, _EDGE_DDL).write.saveAsTable(f"default.{table}")
+        gab = GAB.__new__(GAB)
+        gab.spark = spark
+        gab.spec = SimpleNamespace(target_database="default", target_table=table)
+        queue = [
+            (_EDGE_RUNS[k][0], spark.createDataFrame(_EDGE_RUNS[k][1], _EDGE_DDL))
+            for k in order
+        ]
+        if path == "flush":
+            gab._flush({"query_id": "q"}, queue)
+        else:
+            for cadence, fresh in queue:
+                _delete_insert(gab, {"query_id": "q"}, cadence, fresh)
+        got[path] = sorted((tuple(r) for r in spark.table(table).collect()), key=repr)
+        spark.sql(f"DROP TABLE default.{table}")
+    assert got["flush"] == got["per_run"]
+
+
+def test_stage_reading_the_target_sees_earlier_runs(spark, gab_env):
+    """A stage that reads ``{{ database }}.{{ target_table }}`` is a flush
+    barrier: the MONTH run counts the DAY run's rows, as on the per-run
+    path."""
+    tables = {"gab_barrier_flush": execute_gab, "gab_barrier_per_run": _per_run_gab}
+    try:
+        for table, run in tables.items():
+            # the barrier stage can only read a table that exists
+            execute_gab(_acon(gab_env, "orders_kpi", "1995-01-01", "1995-03-31",
+                              ["MONTH"], target=table))
+            seeded = spark.table(f"gab_db.{table}").count()
+            run(_acon(gab_env, "orders_barrier", "1995-01-01", "1995-01-31",
+                      ["DAY", "MONTH"], target=table))
+        _assert_same_table(spark, "gab_db.gab_barrier_flush", "gab_db.gab_barrier_per_run")
+        got = spark.table("gab_db.gab_barrier_flush").filter("query_id = '9005'")
+        n_day = got.filter("cadence = 'DAY'").count()
+        seen = {r["cadence"]: r["m2"] for r in got.select("cadence", "m2").distinct().collect()}
+        assert seen == {"DAY": seeded, "MONTH": seeded + n_day}
+    finally:
+        for table in tables:
+            spark.sql(f"DROP TABLE IF EXISTS gab_db.{table}")
+        spark.sql("DROP VIEW IF EXISTS gab_db.vw_orders_kpi")
+
+
+def test_failed_flush_leaks_no_cache_and_keeps_target(spark, gab_env, monkeypatch):
+    """A flush that raises unpersists its union and every cached stage
+    frame, and leaves the insights table as it was."""
+    from lakehouse_engine_spark.algorithms import gab as gab_module
+
+    acon = _acon(gab_env, "orders_cached", "1995-01-01", "1995-01-31",
+                 ["DAY", "MONTH"], target="gab_cached", target_db="gab_par_db")
+    execute_gab(acon)
+    before = sorted(tuple(r) for r in spark.table("gab_par_db.gab_cached").collect())
+    spark.catalog.clearCache()
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("injected flush failure")
+
+    monkeypatch.setattr(gab_module, "replace_where", fail)
+    with pytest.raises(RuntimeError, match="injected flush failure"):
+        execute_gab({**acon, "rerun_flag": "Y"})
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    after = sorted(tuple(r) for r in spark.table("gab_par_db.gab_cached").collect())
+    assert after == before
+
+
+# jobs a warm five-cadence refresh of the fixture fires with one flush: the
+# lookup collect, the bounds aggregate (adaptive execution runs each
+# shuffle stage of the six runs' rows as its own job) and one rewrite. A
+# DELETE+INSERT per cadence run fires 25
+FLUSH_REFRESH_JOBS = 12
+
+
+def test_refresh_rewrites_insights_once(spark, gab_env):
+    """A guard on the job count: a second five-cadence refresh fires no
+    more jobs than one flush does. The flush sizes its own output: the
+    refreshed rows take one file, not one per partition of the runs' union
+    (20 here), beside at most one file of the rows the refresh kept."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    acon = _acon(gab_env, "orders_all", "1995-01-01", "1995-12-31", CADENCES, "Y",
+                 target="gab_jobs", target_db="gab_par_db")
+    execute_gab(acon)
+    first = dag.nextJobId()
+    execute_gab(acon)
+    assert dag.nextJobId() - first <= FLUSH_REFRESH_JOBS
+    assert len(spark.table("gab_par_db.gab_jobs").inputFiles()) <= 2

@@ -921,8 +921,7 @@ def _run_gab(spark, table, path):
     gab = GAB.__new__(GAB)  # only the delete-insert step is under test
     gab.spark = spark
     gab.spec = SimpleNamespace(target_database="default", target_table=table)
-    gab._insights_select = lambda *_: fresh
-    gab._delete_insert({"query_id": "q1"}, "DAY", None, {})
+    gab._flush({"query_id": "q1"}, [("DAY", fresh)])
 
 
 def _run_delete_where(spark, table, path):
