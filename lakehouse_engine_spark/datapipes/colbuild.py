@@ -17,8 +17,9 @@ by the SQL oracles (`a + b + c` parses as `(a + b) + c`, exactly the
 order `sum(generator, start)` chained).
 
 :func:`vector_width` is the one width probe those builders size from;
-:func:`md5_fold` and :func:`grid_sq_dist` are the one form of the
-datapipes' md5 hash and of the exact integer-grid squared distance.
+:func:`md5_fold`, :func:`grid_sq_dist` and :func:`log_grid` are the one
+form of the datapipes' md5 hash, of the exact integer-grid squared
+distance and of the scaled-log grid.
 """
 
 from __future__ import annotations
@@ -85,3 +86,12 @@ def grid_sq_dist(a: Union[str, Column], b: Union[str, Column]) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
+
+
+def log_grid(col: Union[str, Column], base: int = 10) -> Column:
+    """The datapipes' scaled-log grid: ``log_base(col)`` snapped half-up
+    to 4 decimal places as a bigint, ``floor(log(col) · 10⁴ + 0.5)``, so
+    sums and differences of logs stay exact integers. ``base`` is 10 or
+    2."""
+    log = {10: F.log10, 2: F.log2}[base]
+    return F.floor(log(col) * 10_000 + 0.5).cast("long")

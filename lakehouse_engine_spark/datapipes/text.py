@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_engine_spark.datapipes.colbuild import md5_fold
+from lakehouse_engine_spark.datapipes.colbuild import log_grid, md5_fold
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 from lakehouse_engine_spark.datapipes.registry import register, register_with
 
@@ -1075,7 +1075,7 @@ def lm_score(
                 "__lp",
                 F.when(
                     F.col("__c").isNotNull(),
-                    F.floor(F.log10(F.col("__c")) * 10_000 + 0.5).cast("long"),
+                    log_grid("__c"),
                 ).otherwise(F.lit(oov_scaled).cast("long")),
             )
             .groupBy("__id")
@@ -1084,7 +1084,7 @@ def lm_score(
                 F.sum("__lp").alias("__slp"),
             )
         )
-        lg_n = F.floor(F.log10(F.col("__n")) * 10_000 + 0.5).cast("double")
+        lg_n = log_grid("__n").cast("double")
         out = (
             df.join(scored, df[id_col] == scored["__id"], "left")
             .crossJoin(F.broadcast(total))
@@ -1170,8 +1170,7 @@ def lm_score_bigram(
         oov_scaled = int(round(oov_logp * 10_000))
         lp = F.when(
             F.col("__cb").isNotNull() & F.col("__cu").isNotNull(),
-            F.floor(F.log10(F.col("__cb")) * 10_000 + 0.5).cast("long")
-            - F.floor(F.log10(F.col("__cu")) * 10_000 + 0.5).cast("long"),
+            log_grid("__cb") - log_grid("__cu"),
         ).otherwise(F.lit(oov_scaled).cast("long"))
         scored = (
             pairs.join(F.broadcast(vocab), "__bg", "left")
@@ -1229,9 +1228,6 @@ def word_pmi(
     if min_count < 1:
         raise ValueError("text_word_pmi: min_count must be >= 1")
 
-    def _L(col: Column) -> Column:
-        return F.floor(F.log10(col.cast("double")) * 10_000 + 0.5).cast("long")
-
     def _pmi(df: DataFrame) -> DataFrame:
         toks = tokens_lower(F.col(input_col))
         base = df.select(toks.alias("__t"))
@@ -1283,11 +1279,11 @@ def word_pmi(
             "w2",
             "n_ab",
             (
-                _L(F.col("n_ab"))
-                + F.lit(2) * _L(F.col("__nu"))
-                - _L(F.col("__nb"))
-                - _L(F.col("__c1"))
-                - _L(F.col("__c2"))
+                log_grid("n_ab")
+                + F.lit(2) * log_grid("__nu")
+                - log_grid("__nb")
+                - log_grid("__c1")
+                - log_grid("__c2")
             ).alias("pmi_s"),
         ).withColumn("pmi", F.col("pmi_s").cast("double") / 10_000.0)
         return scored.orderBy(
@@ -1361,11 +1357,7 @@ def tfidf_top_terms(
             .crossJoin(F.broadcast(n_docs))
             .withColumn(
                 "__idf_s",
-                F.floor(
-                    F.log10((F.col("__nd") + 1).cast("double") / (F.col("df") + 1))
-                    * 10_000
-                    + 0.5
-                ).cast("long"),
+                log_grid((F.col("__nd") + 1).cast("double") / (F.col("df") + 1)),
             )
             .withColumn("__tfidf_s", F.col("tf") * F.col("__idf_s"))
             .withColumn("term_rank", F.row_number().over(w))
@@ -1783,11 +1775,10 @@ def bm25_topk(
             F.count(F.lit(1)).cast("long").alias("__df")
         )
 
-        def S(x):  # half-up 1e-4 grid of log10(integer) — see lm_score
-            return F.floor(F.log10(x.cast("double")) * 10_000 + 0.5).cast("long")
-
         avgdl_r = F.expr("(2 * __T + __D) div (2 * __D)")
-        idf_s = S(F.lit(2) * F.col("__D") + 2) - S(F.lit(2) * F.col("__df") + 1)
+        idf_s = log_grid(F.lit(2) * F.col("__D") + 2) - log_grid(
+            F.lit(2) * F.col("__df") + 1
+        )
         num = idf_s * 44 * F.col("__tf") * F.col("__avgdl")
         den = (
             F.lit(20) * F.col("__tf") * F.col("__avgdl")
@@ -2441,9 +2432,6 @@ def dsir_score(
             f"the target frame (have {target_df.columns})"
         )
 
-    def _S(x: Column) -> Column:
-        return F.floor(F.log10(x.cast("double")) * 10_000 + 0.5).cast("long")
-
     # SQL-string builders (r15, the colbuild de-chatter convention):
     # the Column-chain form of the gram pipeline cost ~2,100 py4j
     # round-trips per query construction; these produce the IDENTICAL
@@ -2508,18 +2496,18 @@ def dsir_score(
             s_counts.join(t_counts, "__b", "full_outer")
             .select(
                 "__b",
-                _S(F.coalesce(F.col("__ct"), F.lit(0)) + 1).alias("__lt"),
-                _S(F.coalesce(F.col("__cs"), F.lit(0)) + 1).alias("__ls"),
+                log_grid(F.coalesce(F.col("__ct"), F.lit(0)) + 1).alias("__lt"),
+                log_grid(F.coalesce(F.col("__cs"), F.lit(0)) + 1).alias("__ls"),
             )
         )
         stats = (
             s_counts.agg(F.sum("__cs").alias("__ts"))
             .crossJoin(t_counts.agg(F.sum("__ct").alias("__tt")))
             .select(
-                _S(F.coalesce(F.col("__ts"), F.lit(0)) + num_buckets).alias(
+                log_grid(F.coalesce(F.col("__ts"), F.lit(0)) + num_buckets).alias(
                     "__sts"
                 ),
-                _S(F.coalesce(F.col("__tt"), F.lit(0)) + num_buckets).alias(
+                log_grid(F.coalesce(F.col("__tt"), F.lit(0)) + num_buckets).alias(
                     "__stt"
                 ),
             )
@@ -2792,13 +2780,13 @@ def char_entropy(
             .groupBy("__id", "__ch")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        lg = F.floor(F.log2(F.col("__c")) * 10_000 + 0.5).cast("long")
+        lg = log_grid("__c", base=2)
         per_doc = pairs.groupBy("__id").agg(
             F.sum("__c").cast("long").alias("__n"),
             F.sum(F.col("__c") * lg).alias("__sclc"),
         )
         ent = (
-            F.floor(F.log2(F.col("__n")) * 10_000 + 0.5).cast("double")
+            log_grid("__n", base=2).cast("double")
             - F.col("__sclc").cast("double") / F.col("__n")
         ) / 10_000.0
         return (
@@ -2939,9 +2927,6 @@ def source_unigram_divergence(
     def _div(df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
 
-        def L(c) -> Column:
-            return F.floor(F.log10(c) * 10_000 + 0.5).cast("long")
-
         toks = df.select(
             F.col(group_col).alias("__g"),
             F.explode(tokens_lower(F.col(input_col))).alias("__w"),
@@ -2957,10 +2942,10 @@ def source_unigram_divergence(
             .agg(
                 F.sum("__c").alias("n_tokens"),
                 F.count(F.lit(1)).alias("n_distinct_tokens"),
-                F.sum(F.col("__c") * (L(F.col("__c")) - L(F.col("__cw")))).alias("__s"),
+                F.sum(F.col("__c") * (log_grid("__c") - log_grid("__cw"))).alias("__s"),
             )
         )
-        num = F.col("__s") + F.col("n_tokens") * (L(F.col("__n")) - L(F.col("n_tokens")))
+        num = F.col("__s") + F.col("n_tokens") * (log_grid("__n") - log_grid("n_tokens"))
         return (
             agg.crossJoin(F.broadcast(tot))
             .select(
@@ -3217,9 +3202,6 @@ def seed_classifier_score(
     def _score(df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
 
-        def S(c) -> Column:
-            return F.floor(F.log10(c) * 10_000 + 0.5).cast("long")
-
         cn = (
             df.select(F.explode(tokens_lower(F.col(input_col))).alias("__w"))
             .groupBy("__w")
@@ -3253,12 +3235,15 @@ def seed_classifier_score(
             toks.join(F.broadcast(vocab), "__w", "left")
             .withColumn(
                 "__lp",
-                S(F.coalesce("__cp", F.lit(0)) + 1) - S(F.coalesce("__cn", F.lit(0)) + 1),
+                log_grid(F.coalesce("__cp", F.lit(0)) + 1)
+                - log_grid(F.coalesce("__cn", F.lit(0)) + 1),
             )
             .groupBy("__id")
             .agg(F.count(F.lit(1)).alias("__nt"), F.sum("__lp").alias("__slp"))
         )
-        const = S(F.col("__nn") + F.col("__v")) - S(F.col("__np") + F.col("__v"))
+        const = log_grid(F.col("__nn") + F.col("__v")) - log_grid(
+            F.col("__np") + F.col("__v")
+        )
         return (
             df.join(scored, df[id_col] == scored["__id"], "left")
             .crossJoin(F.broadcast(masses))

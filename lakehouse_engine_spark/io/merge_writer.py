@@ -138,10 +138,16 @@ def _normalize_fs_path(p: str) -> str:
 def catalog_location(spark, db_table):
     """``(type, location)`` of a catalog table from its ``DESCRIBE
     FORMATTED`` — ``("EXTERNAL", "file:/…")``; ``(None, None)`` for a
-    missing table. The one place that parses the catalog's Location."""
+    missing table. The one place that parses the catalog's Location.
+
+    A missing table is found by ``tableExists``, not by a failed
+    ``DESCRIBE``: PySpark logs every AnalysisException with a query
+    context at ERROR, with its JVM stack trace, even when it is caught."""
+    if not spark.catalog.tableExists(db_table):
+        return None, None
     try:
         rows = spark.sql(f"DESCRIBE FORMATTED {db_table}").collect()
-    except AnalysisException:  # no such table
+    except AnalysisException:  # dropped since the check
         return None, None
     # later rows win: the detailed-information section follows the
     # column rows, so a column named "Type" or "Location" cannot shadow it

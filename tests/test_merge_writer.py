@@ -863,6 +863,34 @@ def test_table_merge_resolves_catalog_location_once(spark, tmp_dir, monkeypatch)
         spark.sql("DROP TABLE IF EXISTS merge_once_ext")
 
 
+def test_missing_table_lookup_logs_no_error(spark, caplog):
+    """A first load through ``_rewrite`` looks up a table that does not
+    exist yet: that lookup must not make PySpark log an ERROR (its query
+    context logger does not propagate, so its handler is attached
+    directly), and the load still creates the table."""
+    import logging
+
+    from lakehouse_engine_spark.io.merge_writer import catalog_location, replace_where
+
+    spark.sql("DROP TABLE IF EXISTS first_load_quiet")
+    context_logger = logging.getLogger("SQLQueryContextLogger")
+    context_logger.addHandler(caplog.handler)
+    try:
+        with caplog.at_level(logging.ERROR):
+            assert catalog_location(spark, "first_load_quiet") == (None, None)
+            assert catalog_location(spark, "no_such_db.first_load_quiet") == (None, None)
+            replace_where(
+                spark, "id = 1",
+                spark.createDataFrame([(1, "a"), (2, "b")], "id INT, v STRING"),
+                db_table="first_load_quiet", data_format="parquet",
+            )
+        assert not [r for r in caplog.records if r.levelno >= logging.ERROR]
+        assert_df_equal(spark.table("first_load_quiet"), [(1, "a"), (2, "b")])
+    finally:
+        context_logger.removeHandler(caplog.handler)
+        spark.sql("DROP TABLE IF EXISTS first_load_quiet")
+
+
 def test_automerge_adds_column_to_external_catalog_table(spark, tmp_dir):
     """autoMerge schema evolution into an EXTERNAL parquet catalog table: the
     swap keeps the catalog entry, so the added column must reach it through
