@@ -44,7 +44,6 @@ from __future__ import annotations
 import ast
 import logging
 import math
-import re
 from datetime import datetime, timedelta
 from functools import reduce
 from typing import Dict, List, Optional, Tuple
@@ -293,11 +292,12 @@ class GAB:
     ) -> Tuple[str, DataFrame]:
         """Build one cadence run's insights rows as ``(cadence, fresh)``.
 
-        Writes nothing, unless a rendered stage names the insights table: the
-        queued runs are then flushed first, so the stage reads what each
-        earlier run wrote, as when every run was written on its own. Stage
-        frames the run caches are appended to ``cached``; the caller
-        unpersists them."""
+        Writes nothing, unless a stage reads the insights table, directly or
+        through a view: the queued runs are then flushed and the stage is
+        analyzed again (the frame analyzed before the flush lists the old
+        files), so it reads what each earlier run wrote, as when every run
+        was written on its own. Stage frames the run caches are appended to
+        ``cached``; the caller unpersists them."""
         spark = self.spark
         (
             bucket_start,
@@ -323,9 +323,11 @@ class GAB:
         partition_end_s = (bucket_end - timedelta(days=1)).strftime(fmt)
         filter_start_s, filter_end_s = filter_start.strftime(fmt), filter_end.strftime(fmt)
 
-        rendered = [
-            self._render_stage(
-                stages[str(i)],
+        final_view = ""
+        for i in range(1, len(stages) + 1):
+            stage = stages[str(i)]
+            sql = self._render_stage(
+                stage,
                 use_case,
                 cadence,
                 recon_cadence,
@@ -335,14 +337,6 @@ class GAB:
                 filter_start_s,
                 filter_end_s,
             )
-            for i in range(1, len(stages) + 1)
-        ]
-        if any(self._reads_target(sql) for sql in rendered):
-            self._flush(use_case, queue)
-
-        final_view = ""
-        for i, sql in enumerate(rendered, start=1):
-            stage = stages[str(i)]
             # stages reference EACH OTHER by their configured table_alias
             # (reference _create_stage_view registers the view under it)
             final_view = (
@@ -350,6 +344,9 @@ class GAB:
                 or f"gab_{use_case['query_label']}_stage_{i}"
             )
             df = spark.sql(sql)
+            if queue and self._reads_target(df):
+                self._flush(use_case, queue)
+                df = spark.sql(sql)
             rep = stage.get("repartition") or {}
             if rep.get("keys"):
                 df = df.repartition(
@@ -371,11 +368,25 @@ class GAB:
         )
         return cadence, fresh
 
-    def _reads_target(self, sql: str) -> bool:
-        """Whether a rendered stage names the insights table (``{{ target_table }}``
-        is a template variable)."""
-        name = re.escape(self.spec.target_table)
-        return re.search(rf"\b{name}\b", sql, re.IGNORECASE) is not None
+    def _reads_target(self, stage: DataFrame) -> bool:
+        """Whether a stage frame reads the insights table: a relation on it
+        sits in the frame's analyzed plan, where views and subqueries are
+        expanded. Walking the plan fires no job."""
+        target = (self.spec.target_database.lower(), self.spec.target_table.lower())
+        nodes = [stage._jdf.queryExecution().analyzed()]
+        while nodes:
+            node = nodes.pop()
+            if node.getClass().getSimpleName() == "LogicalRelation":
+                table = node.catalogTable()
+                if table.isDefined():
+                    ident = table.get().identifier()
+                    if (ident.database().get().lower(), ident.table().lower()) == target:
+                        return True
+            for plans in (node.children(), node.innerChildren()):
+                it = plans.iterator()
+                while it.hasNext():
+                    nodes.append(it.next())
+        return False
 
     def _render_stage(
         self,

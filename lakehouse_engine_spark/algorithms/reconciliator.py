@@ -6,17 +6,26 @@ division-by-zero counts as a 100% difference, and a null on exactly one side
 counts as 1.0, never 0), one aggregation of every metric named
 ``{metric}_{type}_diff_{aggregation}``, threshold walk on the driver
 (``yellow <= diff < red`` -> yellow, ``diff >= red`` -> red, red wins).
-The whole comparison is one Spark job; both sides are cached by default
-(``*_preprocess_query_args`` override with cache/persist, ``[]`` disables).
+
+The comparison is one aggregate over one full join, so it reads each side
+once. The emptiness guard rides that aggregate: each side projects a marker
+column and the aggregate counts it. Adaptive execution runs each shuffle
+stage of the aggregate as its own Spark job (4 on the gold_gab benchmark
+refresh). No side is cached by default; a cache or persist asked for in
+``*_preprocess_query_args`` is applied and released once the aggregate
+returns or raises. The ``truth``/``current`` temp views that the preprocess
+queries read are dropped once the frames are built.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Iterable, List, Optional, Tuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import FloatType
+from pyspark.storagelevel import StorageLevel
 
 from lakehouse_engine_spark.core.definitions import (
     InputSpec,
@@ -41,6 +50,15 @@ class ReconciliationType:
     ABS_ALIAS = "abs"
 
 
+def _free_name(base: str, taken: Iterable[str]) -> str:
+    """``base``, prefixed with underscores until no name in ``taken``
+    equals it case-insensitively."""
+    lowered = {c.lower() for c in taken}
+    while base.lower() in lowered:
+        base = "_" + base
+    return base
+
+
 class Reconciliator:
     """Executes a reconciliation ACON."""
 
@@ -55,35 +73,45 @@ class Reconciliator:
         self.current_preprocess_query_args = acon.get("current_preprocess_query_args")
         self.ignore_empty_df = acon.get("ignore_empty_df", False)
 
+    def _read(self, spec: InputSpec, query: Optional[str], view: str) -> DataFrame:
+        """Read one side; a preprocess query reads it as the temp view
+        ``view``, which is dropped once the query's frame is analyzed (the
+        frame holds the view's plan, not its name). The session catalog
+        drops it: ``spark.catalog.dropTempView`` would also uncache every
+        entry with the view's plan, which may be the caller's."""
+        df = ReaderFactory.get_data(self.spark, spec)
+        if not query:
+            return df
+        df.createOrReplaceTempView(view)
+        try:
+            return self.spark.sql(query)
+        finally:
+            self.spark._jsparkSession.sessionState().catalog().dropTempView(view)
+
     def get_source_of_truth(self) -> DataFrame:
-        df = ReaderFactory.get_data(self.spark, self.truth_spec)
-        if self.truth_preprocess_query:
-            df.createOrReplaceTempView("truth")
-            df = self.spark.sql(self.truth_preprocess_query)
-        return df
+        return self._read(self.truth_spec, self.truth_preprocess_query, "truth")
 
     def get_current_results(self) -> DataFrame:
-        df = ReaderFactory.get_data(self.spark, self.current_spec)
-        if self.current_preprocess_query:
-            df.createOrReplaceTempView("current")
-            df = self.spark.sql(self.current_preprocess_query)
-        return df
+        return self._read(self.current_spec, self.current_preprocess_query, "current")
 
     @staticmethod
     def _apply_preprocess_query_args(
-        df: DataFrame, args: Optional[List[dict]]
+        df: DataFrame, args: Optional[List[dict]], cached: List[DataFrame]
     ) -> DataFrame:
-        """cache/persist knobs (reference ReconciliationTransformers):
-        None -> default cache; [] -> no-op; else apply each function."""
+        """cache/persist knobs (reference ReconciliationTransformers): each
+        function of ``args`` in order; None and [] apply nothing. A frame
+        cached here is appended to ``cached`` for the caller to release; a
+        frame the caller had cached already is left cached."""
         from lakehouse_engine_spark.transformers.optimizers import cache, persist
 
+        if not args:
+            return df
+        if df.storageLevel == StorageLevel.NONE:
+            cached.append(df)
         allowed = {"cache": cache, "persist": persist}
-        if args is None:
-            return df.transform(cache())
-        out = df
         for t in args:
-            out = out.transform(allowed[t["function"]](**t.get("args", {})))
-        return out
+            df = df.transform(allowed[t["function"]](**t.get("args", {})))
+        return df
 
     def _diff_col(self, m: dict) -> F.Column:
         c = F.col(f"current_{m['metric']}")
@@ -104,38 +132,66 @@ class Reconciliator:
             )
         return diff.cast(FloatType())
 
+    def _aggregate(self, truth: DataFrame, current: DataFrame) -> Tuple[dict, int, int]:
+        """Every metric's aggregated diff and each side's row count, from one
+        aggregate over the full join of the two sides."""
+        metric_cols = list(dict.fromkeys(m["metric"] for m in self.metrics))
+        diff_names = [
+            f"{m['metric']}_{m['type']}_diff_{m['aggregation']}" for m in self.metrics
+        ]
+        join_cols = [c for c in current.columns if c not in metric_cols]
+        taken = [*join_cols, *diff_names] + [
+            f"{side}_{c}" for side in ("truth", "current") for c in metric_cols
+        ]
+        truth_rows, current_rows = (
+            _free_name(n, taken) for n in ("__truth_rows", "__current_rows")
+        )
+
+        def project(df: DataFrame, side: str, rows: str) -> DataFrame:
+            metrics = [F.col(c).alias(f"{side}_{c}") for c in metric_cols]
+            return df.select(*join_cols, *metrics, F.lit(1).alias(rows))
+
+        try:
+            truth_r = project(truth, "truth", truth_rows)
+            current_r = project(current, "current", current_rows)
+        except AnalysisException:
+            # a side with no rows can lack the columns (an empty JSON file
+            # infers no schema): the emptiness decision still comes first
+            n_truth, n_current = int(not truth.isEmpty()), int(not current.isEmpty())
+            if n_truth and n_current:
+                raise
+            return {}, n_truth, n_current
+        joined = truth_r.join(current_r, on=join_cols, how="full")
+        diff_aggs = [
+            getattr(F, m["aggregation"])(self._diff_col(m)).alias(name)
+            for m, name in zip(self.metrics, diff_names)
+        ]
+        row = joined.agg(
+            *diff_aggs,
+            F.count(truth_rows).alias(truth_rows),
+            F.count(current_rows).alias(current_rows),
+        ).first().asDict()
+        return {k: row[k] for k in diff_names}, row[truth_rows], row[current_rows]
+
     def execute(self) -> dict:
-        truth = self._apply_preprocess_query_args(
-            self.get_source_of_truth(), self.truth_preprocess_query_args
-        )
-        current = self._apply_preprocess_query_args(
-            self.get_current_results(), self.current_preprocess_query_args
-        )
+        cached: List[DataFrame] = []
+        try:
+            truth = self._apply_preprocess_query_args(
+                self.get_source_of_truth(), self.truth_preprocess_query_args, cached
+            )
+            current = self._apply_preprocess_query_args(
+                self.get_current_results(), self.current_preprocess_query_args, cached
+            )
+            recon_results, truth_rows, current_rows = self._aggregate(truth, current)
+        finally:
+            for df in cached:
+                df.unpersist()
 
         # reference: ignore only when BOTH sides are empty (green exit)
-        if self.ignore_empty_df and truth.isEmpty() and current.isEmpty():
+        if self.ignore_empty_df and not truth_rows and not current_rows:
             return {"overall": "green", "metrics": {}, "ignored_empty": True}
-
-        if len(truth.head(1)) == 0 or len(current.head(1)) == 0:
+        if not truth_rows or not current_rows:
             raise ReconciliationFailedException(EMPTY_DF_MSG)
-
-        metric_cols = {m["metric"] for m in self.metrics}
-        join_cols = [c for c in current.columns if c not in metric_cols]
-        truth_r = truth.select(
-            *join_cols, *[F.col(c).alias(f"truth_{c}") for c in metric_cols]
-        )
-        current_r = current.select(
-            *join_cols, *[F.col(c).alias(f"current_{c}") for c in metric_cols]
-        )
-        joined = truth_r.join(current_r, on=join_cols, how="full")
-
-        diff_aggs = [
-            getattr(F, m["aggregation"])(self._diff_col(m)).alias(
-                f"{m['metric']}_{m['type']}_diff_{m['aggregation']}"
-            )
-            for m in self.metrics
-        ]
-        recon_results = joined.agg(*diff_aggs).first().asDict()
 
         status = "green"
         for m in self.metrics:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -12,6 +13,7 @@ from lakehouse_engine_spark import (
     manage_files,
     manage_table,
 )
+from lakehouse_engine_spark.algorithms.reconciliator import EMPTY_DF_MSG
 from lakehouse_engine_spark.algorithms.sensor import update_sensor_status
 from lakehouse_engine_spark.core.definitions import (
     NoNewDataException,
@@ -83,6 +85,109 @@ def test_reconciliation_preprocess_query(spark, truth_current):
         current_preprocess_query="SELECT k, amount FROM current WHERE k <> 'c'",
     )
     assert status["overall"] == "green"
+
+
+AMOUNT_PCT_AVG = {"metric": "amount", "type": "percentage", "aggregation": "avg",
+                  "yellow": 0.01, "red": 0.1}
+
+
+@pytest.mark.parametrize(
+    "truth_empty, current_empty, ignore_empty_df",
+    [(True, False, False), (False, True, False), (True, True, False),
+     (True, False, True), (False, True, True)],
+)
+def test_reconciliation_empty_side_fails(spark, truth_current, tmp_dir,
+                                         truth_empty, current_empty, ignore_empty_df):
+    """Either side empty fails with the reference's message, unless both
+    are and ``ignore_empty_df`` is set."""
+    empty = os.path.join(tmp_dir, "empty")
+    spark.read.parquet(truth_current).limit(0).write.parquet(empty)
+    current = spark.read.parquet(empty if current_empty else truth_current)
+    with pytest.raises(ReconciliationFailedException, match=re.escape(EMPTY_DF_MSG)):
+        _recon(empty if truth_empty else truth_current, current, [AMOUNT_PCT_AVG],
+               ignore_empty_df=ignore_empty_df)
+
+
+def test_reconciliation_both_empty_ignored(spark, truth_current, tmp_dir):
+    empty = os.path.join(tmp_dir, "empty")
+    spark.read.parquet(truth_current).limit(0).write.parquet(empty)
+    status = _recon(empty, spark.read.parquet(empty), [AMOUNT_PCT_AVG], ignore_empty_df=True)
+    assert status == {"overall": "green", "metrics": {}, "ignored_empty": True}
+
+
+def test_reconciliation_schemaless_empty_side_fails(spark, truth_current, tmp_dir):
+    """An empty JSON file infers no columns, so the diff aggregate cannot be
+    planned; the emptiness decision still comes first."""
+    empty = os.path.join(tmp_dir, "empty.json")
+    with open(empty, "w") as f:
+        f.write("[]")
+    with pytest.raises(ReconciliationFailedException, match=re.escape(EMPTY_DF_MSG)):
+        execute_reconciliation({
+            "truth_input_spec": {"spec_id": "t", "data_format": "json",
+                                 "options": {"multiline": "true"}, "location": empty},
+            "current_input_spec": {"spec_id": "c", "data_format": "dataframe",
+                                   "df_name": spark.read.parquet(truth_current)},
+            "metrics": [AMOUNT_PCT_AVG],
+        })
+
+
+def test_reconciliation_metrics_sharing_a_column(spark, truth_current):
+    """Two metrics on one column project it once and report one diff each;
+    the row counts that guard emptiness are not among them."""
+    shifted = spark.read.parquet(truth_current).selectExpr("k", "amount + 1 AS amount")
+    status = _recon(
+        truth_current,
+        shifted,
+        [AMOUNT_PCT_AVG | {"yellow": 0.5, "red": 0.9},
+         {"metric": "amount", "type": "absolute", "aggregation": "sum", "yellow": 4.0, "red": 5.0}],
+    )
+    assert status["metrics"] == {
+        "amount_percentage_diff_avg": pytest.approx((1 / 100 + 1 / 200 + 1 / 300) / 3),
+        "amount_absolute_diff_sum": 3.0,
+    }
+
+
+# jobs a reconciliation of the fixture fires: the truth read's parquet
+# schema inference, then the one aggregate, whose join shuffles and final
+# stage adaptive execution runs as 3 jobs. Probing each side for emptiness
+# and caching both sides by default fired 9
+RECON_JOBS = 4
+
+
+def test_reconciliation_reads_each_side_once(spark, truth_current):
+    sc = spark.sparkContext
+    current = spark.read.parquet(truth_current)
+    sc.setJobGroup("recon_jobs", "one reconciliation")
+    try:
+        _recon(truth_current, current, [AMOUNT_PCT_AVG])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("recon_jobs")) == RECON_JOBS
+
+
+def test_reconciliation_leaves_no_cache_and_no_views(spark, truth_current):
+    """An explicit persist is released once the aggregate ran, a frame the
+    caller had cached stays cached, and the preprocess queries' temp views
+    are dropped."""
+    spark.catalog.clearCache()
+    current = spark.read.parquet(truth_current).cache()
+    status = _recon(
+        truth_current,
+        current,
+        [AMOUNT_PCT_AVG],
+        truth_preprocess_query="SELECT k, amount FROM truth WHERE k <> 'z'",
+        truth_preprocess_query_args=[{"function": "persist",
+                                      "args": {"storage_level": "MEMORY_AND_DISK"}}],
+        current_preprocess_query="SELECT k, amount FROM current",
+        current_preprocess_query_args=[{"function": "cache"}],
+    )
+    assert status["overall"] == "green"
+    assert not spark.catalog.tableExists("truth")
+    assert not spark.catalog.tableExists("current")
+    assert current.storageLevel.useMemory
+    current.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # ------------------------------------------------------------------ sensor

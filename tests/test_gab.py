@@ -84,6 +84,9 @@ WHERE {{ filter_date_column }} >= '{{ start_date }}'
 GROUP BY ALL
 """
 
+# the same stage reading the insights table through a view over it
+VIEW_BARRIER_SQL = BARRIER_SQL.replace("{{ target_table }}", "seen_{{ target_table }}")
+
 CADENCES = ["DAY", "WEEK", "MONTH", "QUARTER", "YEAR"]
 
 
@@ -109,6 +112,7 @@ def gab_env(spark, sf_dir, tmp_path_factory):
     base = tmp_path_factory.mktemp("gab")
     (base / "1_orders.sql").write_text(STAGE_SQL)
     (base / "2_barrier.sql").write_text(BARRIER_SQL)
+    (base / "3_view_barrier.sql").write_text(VIEW_BARRIER_SQL)
     spark.sql("CREATE DATABASE IF NOT EXISTS gab_db")
     spark.sql("CREATE DATABASE IF NOT EXISTS gab_par_db")
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
@@ -135,6 +139,8 @@ def gab_env(spark, sf_dir, tmp_path_factory):
                                             "DAY": {"snapshot": "Y"}}}},
             ),
             _lookup_row("9005", "orders_barrier", {"DAY": {}, "MONTH": {}}, "2_barrier.sql"),
+            _lookup_row("9007", "orders_view_barrier", {"DAY": {}, "MONTH": {}},
+                        "3_view_barrier.sql"),
             _lookup_row("9006", "orders_cached", {"DAY": {}, "MONTH": {}},
                         storage_level="MEMORY_ONLY"),
         ],
@@ -477,28 +483,42 @@ def test_flush_matches_per_run_chain_on_edge_runs(spark, order, seeded):
     assert got["flush"] == got["per_run"]
 
 
-def test_stage_reading_the_target_sees_earlier_runs(spark, gab_env):
-    """A stage that reads ``{{ database }}.{{ target_table }}`` is a flush
-    barrier: the MONTH run counts the DAY run's rows, as on the per-run
-    path."""
+def _assert_barrier_sees_earlier_runs(spark, gab_env, label, query_id):
+    """The MONTH run of ``label`` counts the DAY run's rows, as on the
+    per-run path."""
     tables = {"gab_barrier_flush": execute_gab, "gab_barrier_per_run": _per_run_gab}
     try:
         for table, run in tables.items():
             # the barrier stage can only read a table that exists
             execute_gab(_acon(gab_env, "orders_kpi", "1995-01-01", "1995-03-31",
                               ["MONTH"], target=table))
+            spark.sql(f"CREATE OR REPLACE VIEW gab_db.seen_{table} AS "
+                      f"SELECT * FROM gab_db.{table}")
             seeded = spark.table(f"gab_db.{table}").count()
-            run(_acon(gab_env, "orders_barrier", "1995-01-01", "1995-01-31",
+            run(_acon(gab_env, label, "1995-01-01", "1995-01-31",
                       ["DAY", "MONTH"], target=table))
         _assert_same_table(spark, "gab_db.gab_barrier_flush", "gab_db.gab_barrier_per_run")
-        got = spark.table("gab_db.gab_barrier_flush").filter("query_id = '9005'")
+        got = spark.table("gab_db.gab_barrier_flush").filter(f"query_id = '{query_id}'")
         n_day = got.filter("cadence = 'DAY'").count()
         seen = {r["cadence"]: r["m2"] for r in got.select("cadence", "m2").distinct().collect()}
         assert seen == {"DAY": seeded, "MONTH": seeded + n_day}
     finally:
         for table in tables:
+            spark.sql(f"DROP VIEW IF EXISTS gab_db.seen_{table}")
             spark.sql(f"DROP TABLE IF EXISTS gab_db.{table}")
         spark.sql("DROP VIEW IF EXISTS gab_db.vw_orders_kpi")
+
+
+def test_stage_reading_the_target_sees_earlier_runs(spark, gab_env):
+    """A stage that reads ``{{ database }}.{{ target_table }}`` is a flush
+    barrier."""
+    _assert_barrier_sees_earlier_runs(spark, gab_env, "orders_barrier", "9005")
+
+
+def test_stage_reading_the_target_through_a_view_sees_earlier_runs(spark, gab_env):
+    """A stage that reads a view over the insights table is a flush
+    barrier too: the barrier is found in the analyzed plan."""
+    _assert_barrier_sees_earlier_runs(spark, gab_env, "orders_view_barrier", "9007")
 
 
 def test_failed_flush_leaks_no_cache_and_keeps_target(spark, gab_env, monkeypatch):
