@@ -14,12 +14,24 @@ Everything else is lazy DataFrame composition — Catalyst sees the whole
 read→transform→write plan and optimizes it end-to-end (filter pushdown into
 the source scan, column pruning across transformer chains, broadcast
 selection inside ``join`` transformers).
+
+In-motion DQ takes one of two paths per spec (``dq/dq_factory``). A suite
+whose frame feeds the ACON's first output spec, a non-Delta ``merge``, and
+nothing else, rides that merge's staged write as one ``observe`` and is
+decided between staging and swap, so it costs no pass of its own. Every
+other suite runs its pass before the writes, as the reference does; its
+``cache_df`` cache is released once the writes are done. ``execute`` logs
+each phase's wall time (read, transform, dq, write, terminate) in one INFO
+line.
 """
 
 from __future__ import annotations
 
+import logging
+import time
 from collections import OrderedDict
-from typing import Dict, List, Optional
+from contextlib import ExitStack, contextmanager
+from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame
 
@@ -29,9 +41,12 @@ from lakehouse_engine_spark.core.definitions import (
     OutputSpec,
     ReadType,
     TransformSpec,
+    WriteType,
     WrongArgumentsError,
 )
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.dq.dq_factory import DQFactory
+from lakehouse_engine_spark.io import merge_writer
 from lakehouse_engine_spark.io.reader_factory import ReaderFactory
 from lakehouse_engine_spark.io.writer_factory import WriterFactory
 from lakehouse_engine_spark.transformers.transformer_factory import (
@@ -39,6 +54,9 @@ from lakehouse_engine_spark.transformers.transformer_factory import (
     unsupported_streaming_transformers,
 )
 from lakehouse_engine_spark.utils.acon_utils import parse_acon_lists
+
+_LOGGER = logging.getLogger(__name__)
+PHASES = ("read", "transform", "dq", "write", "terminate")
 
 
 class DataLoader:
@@ -57,6 +75,8 @@ class DataLoader:
             s.spec_id for s in self.input_specs if s.read_type == ReadType.STREAMING.value
         }
         self._replan_streaming_micro_batches()
+        # output spec id -> the decision of the suite observed on its frame
+        self._checks: Dict[str, Callable[[bool], None]] = {}
 
     # ---------------------------------------------------------------- planning
 
@@ -137,13 +157,34 @@ class DataLoader:
             data[spec.spec_id] = df
         return data
 
-    def process_dq(self, data: "OrderedDict[str, DataFrame]") -> "OrderedDict[str, DataFrame]":
-        from lakehouse_engine_spark.dq.dq_factory import DQFactory
+    def _observing_output(self, spec: DQSpec) -> Optional[str]:
+        """The output spec whose staged merge decides ``spec``'s suite, or
+        None when the suite runs before the writes: the spec must be
+        observable, and its only reader the first output spec, a non-Delta
+        merge (``dq/dq_factory``)."""
+        readers = [o for o in self.output_specs if o.input_id == spec.spec_id]
+        readers += [d for d in self.dq_specs if d.input_id == spec.spec_id]
+        if len(readers) != 1 or readers[0] is not self.output_specs[0]:
+            return None
+        out = readers[0]
+        if out.write_type != WriteType.MERGE.value or not merge_writer.rewrites(out.data_format):
+            return None
+        return out.spec_id if DQFactory.observable(spec) else None
 
+    def process_dq(
+        self, data: "OrderedDict[str, DataFrame]", held: ExitStack
+    ) -> "OrderedDict[str, DataFrame]":
+        """Run or attach each batch suite; ``held`` keeps the ``cache_df``
+        caches until the caller closes it after the writes."""
         for spec in self.dq_specs:
             df = data[spec.input_id]
             if df.isStreaming:
                 continue  # re-planned into foreachBatch
+            output = self._observing_output(spec)
+            if output is not None:
+                data[spec.spec_id], self._checks[output] = DQFactory.observe(self.spark, spec, df)
+                continue
+            held.enter_context(DQFactory.cached(spec, df))
             data[spec.spec_id] = DQFactory.run_dq_process(self.spark, spec, df)
         return data
 
@@ -152,15 +193,15 @@ class DataLoader:
         if not spec.streaming_micro_batch_transformers and not spec.streaming_micro_batch_dq_processors:
             return None
 
-        def _apply(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            from lakehouse_engine_spark.dq.dq_factory import DQFactory
-
+        def _apply(batch_df: DataFrame, batch_id: int, sink) -> Optional[DataFrame]:
             out = batch_df
             for t in spec.streaming_micro_batch_transformers:
                 out = out.transform(TransformerFactory.get_transformer(t, data))
-            for d in spec.streaming_micro_batch_dq_processors:
-                out = DQFactory.run_dq_process(out.sparkSession, d, out)
-            return out
+            with ExitStack() as held:  # cache_df: released once the batch is written
+                for d in spec.streaming_micro_batch_dq_processors:
+                    held.enter_context(DQFactory.cached(d, out))
+                    out = DQFactory.run_dq_process(out.sparkSession, d, out)
+                return sink(out)
 
         return _apply
 
@@ -172,7 +213,11 @@ class DataLoader:
                     f"OutputSpec {spec.spec_id}: unknown input_id {spec.input_id}"
                 )
             result = WriterFactory.write(
-                self.spark, data[spec.input_id], spec, self._micro_batch_fn(spec, data)
+                self.spark,
+                data[spec.input_id],
+                spec,
+                self._micro_batch_fn(spec, data),
+                self._checks.get(spec.spec_id),
             )
             if result is not None:
                 written[spec.spec_id] = result
@@ -184,13 +229,29 @@ class DataLoader:
         for spec in self.terminate_specs:
             TerminatorFactory.execute(self.spark, spec, data)
 
-    def execute(self) -> Optional[Dict[str, DataFrame]]:
+    @staticmethod
+    @contextmanager
+    def _phase(times: Dict[str, float], name: str):
+        start = time.perf_counter()
         try:
-            data = self.read()
-            data = self.transform(data)
-            data = self.process_dq(data)
-            written = self.write(data)
-            self.terminate(data)
+            yield
+        finally:
+            times[name] = time.perf_counter() - start
+
+    def execute(self) -> Optional[Dict[str, DataFrame]]:
+        times: Dict[str, float] = {}
+        try:
+            with ExitStack() as held:  # the pre-write suites' caches
+                with self._phase(times, "read"):
+                    data = self.read()
+                with self._phase(times, "transform"):
+                    data = self.transform(data)
+                with self._phase(times, "dq"):
+                    data = self.process_dq(data, held)
+                with self._phase(times, "write"):
+                    written = self.write(data)
+            with self._phase(times, "terminate"):
+                self.terminate(data)
             return written or None
         except Exception as e:
             # failure notifications hook (reference data_loader.py:241-243)
@@ -198,3 +259,8 @@ class DataLoader:
 
             NotifierFactory.generate_failure_notification(self.terminate_specs, e)
             raise
+        finally:
+            _LOGGER.info(
+                "DataLoader phase wall s: %s",
+                " ".join(f"{p}={times[p]:.3f}" for p in PHASES if p in times),
+            )

@@ -3,7 +3,7 @@
 Reference parity: ``algorithms/dq_validator.py:87-169``. Streaming inputs run
 the DQ suite per micro-batch via trigger-once foreachBatch; on failure with
 ``restore_prev_version`` a Delta time-travel rollback is attempted (Delta
-runtimes only).
+runtimes only). A ``cache_df`` cache is released when the suite is done.
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ class DQValidator:
 
                 def _validate(batch_df, _):
                     try:
-                        DQFactory.run_dq_process(batch_df.sparkSession, self.dq_spec, batch_df)
+                        with DQFactory.cached(self.dq_spec, batch_df):
+                            DQFactory.run_dq_process(batch_df.sparkSession, self.dq_spec, batch_df)
                     except DQValidationsFailedException as e:
                         errors.append(e)
 
@@ -45,7 +46,8 @@ class DQValidator:
                 if errors:
                     raise errors[0]
                 return None
-            return DQFactory.run_dq_process(self.spark, self.dq_spec, df)
+            with DQFactory.cached(self.dq_spec, df):
+                return DQFactory.run_dq_process(self.spark, self.dq_spec, df)
         except DQValidationsFailedException:
             if self.restore_prev_version:
                 self._restore_previous_version()

@@ -34,6 +34,7 @@ from lakehouse_engine_spark.core.definitions import (
 from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io.reader_factory import ReaderFactory
 from lakehouse_engine_spark.utils.acon_utils import parse_input_spec
+from lakehouse_engine_spark.utils.sql_parser import query_over
 
 EMPTY_DF_MSG = (
     "The reconciliation has failed because either the truth dataset or the "
@@ -75,18 +76,9 @@ class Reconciliator:
 
     def _read(self, spec: InputSpec, query: Optional[str], view: str) -> DataFrame:
         """Read one side; a preprocess query reads it as the temp view
-        ``view``, which is dropped once the query's frame is analyzed (the
-        frame holds the view's plan, not its name). The session catalog
-        drops it: ``spark.catalog.dropTempView`` would also uncache every
-        entry with the view's plan, which may be the caller's."""
+        ``view``, which does not outlive the query's frame."""
         df = ReaderFactory.get_data(self.spark, spec)
-        if not query:
-            return df
-        df.createOrReplaceTempView(view)
-        try:
-            return self.spark.sql(query)
-        finally:
-            self.spark._jsparkSession.sessionState().catalog().dropTempView(view)
+        return query_over(df, view, query) if query else df
 
     def get_source_of_truth(self) -> DataFrame:
         return self._read(self.truth_spec, self.truth_preprocess_query, "truth")

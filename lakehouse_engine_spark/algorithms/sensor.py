@@ -32,6 +32,7 @@ from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io import merge_writer
 from lakehouse_engine_spark.io.reader_factory import ReaderFactory
 from lakehouse_engine_spark.utils.acon_utils import parse_input_spec
+from lakehouse_engine_spark.utils.sql_parser import query_over
 
 SENSOR_SCHEMA = T.StructType(
     [
@@ -153,8 +154,7 @@ class Sensor:
 
     def _preprocess(self, df: DataFrame) -> DataFrame:
         if self.spec.preprocess_query:
-            df.createOrReplaceTempView("sensor_new_data")
-            return df.sparkSession.sql(self.spec.preprocess_query)
+            return query_over(df, "sensor_new_data", self.spec.preprocess_query)
         return df
 
     def _check_batch(self, df: DataFrame) -> bool:

@@ -3,10 +3,40 @@
 Reference parity: ``dq_processors/dq_factory.py:280-378`` (process),
 ``:423-527`` (result-sink explosion), ``:636-719`` (failure policies) and
 ``dq_processors/validator.py:136-228`` (source tagging) — minus the GE
-dependency. All row-level expectations evaluate in ONE aggregate pass over the
-input. A uniqueness expectation rides in the same pass: it groups by its
-column, and the row counts fold over the groups. Only a uniqueness check on a
-second column and the queried-aggregate expectation add a pass each.
+dependency.
+
+A suite is decided from a handful of counts: the element count ``__n``,
+each row expectation's unexpected count ``__u{i}`` and, with a uniqueness
+check, ``__dup`` — the rows whose key occurs more than once. Two sources
+produce them, and one ``_finish`` turns them into the result rows, the
+result sink, the file-store artifact and the pass/fail decision:
+
+* **the pre-write pass** (:meth:`DQFactory.run_dq_process`) — ONE
+  aggregate over the input, grouped by the first uniqueness column when
+  there is one. Only a uniqueness check on a second column and the
+  queried-aggregate expectation add a pass each.
+* **the observed write** (:meth:`DQFactory.observe`) — the same counts ride
+  the write that consumes the frame as ONE ``DataFrame.observe``; uniqueness
+  reads ``count(1) over (partition by key)``, which on a condensed CDC batch
+  reuses the condense step's partitioning, so no pass of its own. A staged
+  non-Delta merge (``io/merge_writer._rewrite``) runs the decision between
+  staging and swap: a refused suite drops the staged dir and leaves the
+  target untouched. When the observation arrives empty (adaptive execution
+  pruned an empty source) or the write decides before it runs (the first
+  load of a missing catalog table), the decision runs the pre-write pass.
+
+The DataLoader takes the observed path for a batch spec only when all of
+these hold (:meth:`DQFactory.observable` holds the spec-level ones): no
+``tag_source_data``; no ``unexpected_rows_pk`` with a sink; no
+``expect_queried_column_agg_value_to_be``, no second uniqueness column and
+no ``expect_table_row_count_to_be_between``; and exactly one output spec
+reads the spec, which is the ACON's first output spec and a non-Delta
+``merge`` — so no target has been written when the suite decides.
+
+Observed metrics are accumulators: when a shuffle-map task re-runs, its
+counts can be merged twice, so a reported count may over-count. A decision
+does not flip on that — an expectation fails on any unexpected row either
+way — which is why an exact row-count bound keeps the pre-write pass.
 """
 
 from __future__ import annotations
@@ -14,9 +44,12 @@ from __future__ import annotations
 import datetime
 import json
 import logging
-from typing import List, Tuple
+import time
+from contextlib import contextmanager
+from typing import Callable, List, NamedTuple, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,6 +104,43 @@ _KNOWN_EXTRA_COLUMNS = {
 }
 
 
+_UNIQUE = "expect_column_values_to_be_unique"
+# the per-key row count the observed uniqueness check reads
+_KEY_COUNT = "__dq_cnt"
+# observed metrics arrive through Spark's listener bus, just after
+# the action returns; past this wait the decision runs the pre-write pass
+OBSERVATION_WAIT_S = 30.0
+
+
+class _Suite(NamedTuple):
+    """A compiled suite: each row expectation with its condition (True = row
+    OK), the aggregate-level expectations, and the first uniqueness column
+    (None without one)."""
+
+    row_fns: List[Tuple[DQFunctionSpec, object]]
+    agg_fns: List[DQFunctionSpec]
+    unique_col: Optional[str]
+
+
+def _observed_counts(observation: Observation) -> Optional[dict]:
+    """The observed counts, or None when they did not arrive with values.
+
+    Never ``Observation.get`` unchecked: it blocks for good on a plan that
+    never ran, and fails when adaptive execution pruned the observed
+    subtree of an empty source (its future holds an empty row)."""
+    future = observation._jo.future()
+    deadline = time.monotonic() + OBSERVATION_WAIT_S
+    while not future.isCompleted():
+        if time.monotonic() > deadline:
+            _LOGGER.warning("DQ observation did not arrive; running the suite's own pass")
+            return None
+        time.sleep(0.005)
+    done = future.value().get()
+    if done.isFailure() or done.get().length() == 0:
+        return None
+    return {k: int(v or 0) for k, v in observation.get.items()}
+
+
 class DQFactory:
     """Compiles and runs DQSpec expectation suites."""
 
@@ -90,7 +160,29 @@ class DQFactory:
         return "||".join(r["__pk"] for r in vals)
 
     @staticmethod
-    def _suite_stats(df: DataFrame, row_fns, agg_fns) -> Tuple[object, dict]:
+    def _compile(spec: DQSpec) -> _Suite:
+        row_fns: List[Tuple[DQFunctionSpec, object]] = []
+        agg_fns: List[DQFunctionSpec] = []
+        for fn in list(spec.dq_functions) + list(spec.critical_functions):
+            if fn.function in E.ROW_EXPECTATIONS:
+                row_fns.append((fn, E.ROW_EXPECTATIONS[fn.function](**fn.args)))
+            elif fn.function in E.AGG_EXPECTATIONS:
+                agg_fns.append(fn)
+            else:
+                raise ValueError(f"Unknown DQ expectation: {fn.function}")
+        unique_col = next((fn.args["column"] for fn in agg_fns if fn.function == _UNIQUE), None)
+        return _Suite(row_fns, agg_fns, unique_col)
+
+    @staticmethod
+    def _unexpected(suite: _Suite) -> list:
+        """Each row expectation's unexpected count, ``__u{i}``."""
+        return [
+            F.sum(F.when(~cond, F.lit(1))).alias(f"__u{i}")
+            for i, (_, cond) in enumerate(suite.row_fns)
+        ]
+
+    @classmethod
+    def _suite_stats(cls, df: DataFrame, suite: _Suite) -> dict:
         """ONE aggregate pass over ``df``: the element count ``__n`` and
         every row expectation's unexpected count ``__u{i}``.
 
@@ -98,66 +190,116 @@ class DQFactory:
         uniqueness column with a per-key row count plus the per-key
         unexpected sums, then folds the groups into ``__n``, ``__u{i}`` and
         ``__dup`` — the rows whose key occurs more than once, NULL keys
-        included, exactly :func:`expectations.eval_unique`. Returns that
-        column (None without uniqueness) and the counts."""
-        unique_col = next(
-            (
-                fn.args["column"]
-                for fn in agg_fns
-                if fn.function == "expect_column_values_to_be_unique"
-            ),
-            None,
-        )
-        unexpected = [F.when(~cond, F.lit(1)) for _, cond in row_fns]
-        if unique_col is None:
-            row = df.agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[F.sum(u).alias(f"__u{i}") for i, u in enumerate(unexpected)],
-            ).first()
+        included, exactly :func:`expectations.eval_unique`."""
+        if suite.unique_col is None:
+            row = df.agg(F.count(F.lit(1)).alias("__n"), *cls._unexpected(suite)).first()
         else:
             cnt = F.col("__cnt")
             row = (
-                df.groupBy(unique_col)
-                .agg(
-                    F.count(F.lit(1)).alias("__cnt"),
-                    *[F.sum(u).alias(f"__u{i}") for i, u in enumerate(unexpected)],
-                )
+                df.groupBy(suite.unique_col)
+                .agg(F.count(F.lit(1)).alias("__cnt"), *cls._unexpected(suite))
                 .agg(
                     F.sum(cnt).alias("__n"),
                     F.sum(F.when(cnt > 1, cnt)).alias("__dup"),
-                    *[F.sum(f"__u{i}").alias(f"__u{i}") for i in range(len(unexpected))],
+                    *[F.sum(f"__u{i}").alias(f"__u{i}") for i in range(len(suite.row_fns))],
                 )
                 .first()
             )
-        return unique_col, {k: int(v or 0) for k, v in row.asDict().items()}
+        return {k: int(v or 0) for k, v in row.asDict().items()}
+
+    @staticmethod
+    @contextmanager
+    def cached(spec: DQSpec, df: DataFrame):
+        """``cache_df``: keep ``df`` cached while the block runs (the suite
+        and the write after it both read it), then release it. A frame the
+        caller had cached already stays cached."""
+        own = spec.cache_df and df.storageLevel == StorageLevel.NONE
+        if own:
+            df.cache()
+        try:
+            yield
+        finally:
+            if own:
+                df.unpersist()
 
     @classmethod
     def run_dq_process(cls, spark: SparkSession, spec: DQSpec, df: DataFrame) -> DataFrame:
-        if spec.cache_df:
-            df = df.cache()
-        functions = list(spec.dq_functions) + list(spec.critical_functions)
-        critical = {id(f) for f in spec.critical_functions}
+        """The pre-write pass: count the suite over ``df``, then finish."""
+        suite = cls._compile(spec)
+        return cls._finish(spark, spec, df, suite, cls._suite_stats(df, suite))
 
-        row_fns: List[Tuple[DQFunctionSpec, object]] = []
-        agg_fns: List[DQFunctionSpec] = []
-        for fn in functions:
-            if fn.function in E.ROW_EXPECTATIONS:
-                row_fns.append((fn, E.ROW_EXPECTATIONS[fn.function](**fn.args)))
-            elif fn.function in E.AGG_EXPECTATIONS:
-                agg_fns.append(fn)
-            else:
-                raise ValueError(f"Unknown DQ expectation: {fn.function}")
+    @staticmethod
+    def _wants_sink(spec: DQSpec) -> bool:
+        return bool(
+            spec.result_sink_location or spec.result_sink_db_table
+            or (spec.local_fs_root_dir and spec.store_backend == "file_system")
+        )
 
-        unique_col, stats = cls._suite_stats(df, row_fns, agg_fns)
+    @classmethod
+    def observable(cls, spec: DQSpec) -> bool:
+        """True when ``spec``'s counts can ride the write of its frame: no
+        tagged rows, no processed-keys summary, no expectation that needs
+        its own pass or an exact row count (module docstring)."""
+        fns = list(spec.dq_functions) + list(spec.critical_functions)
+        names = {fn.function for fn in fns}
+        return not (
+            spec.tag_source_data
+            or (spec.unexpected_rows_pk and cls._wants_sink(spec))
+            or names & {"expect_queried_column_agg_value_to_be",
+                        "expect_table_row_count_to_be_between"}
+            or len({fn.args["column"] for fn in fns if fn.function == _UNIQUE}) > 1
+        )
+
+    @classmethod
+    def observe(
+        cls, spark: SparkSession, spec: DQSpec, df: DataFrame
+    ) -> Tuple[DataFrame, Callable[[bool], None]]:
+        """Attach the suite's counts to ``df`` as ONE ``observe``.
+
+        Returns the observed frame and the decision. The write that consumes
+        the frame calls ``decide(True)`` once its action has run, or
+        ``decide(False)`` when it decides before running it. The decision
+        reads the observation when it arrived with values, and otherwise
+        runs the pre-write pass over ``df``; it then finishes as
+        :meth:`run_dq_process` does, raising on a failing suite. Uniqueness
+        reads ``count(1) over (partition by key)``, added for the observation
+        and dropped after it."""
+        suite = cls._compile(spec)
+        counts = [F.count(F.lit(1)).alias("__n"), *cls._unexpected(suite)]
+        framed = df
+        if suite.unique_col is not None:
+            framed = df.withColumn(
+                _KEY_COUNT, F.count(F.lit(1)).over(Window.partitionBy(suite.unique_col))
+            )
+            counts.append(F.sum(F.when(F.col(_KEY_COUNT) > 1, F.lit(1))).alias("__dup"))
+        observation = Observation()
+        observed = framed.observe(observation, *counts)
+        if suite.unique_col is not None:
+            observed = observed.drop(_KEY_COUNT)
+
+        def decide(ran: bool) -> None:
+            stats = _observed_counts(observation) if ran else None
+            if stats is None:
+                stats = cls._suite_stats(df, suite)
+            cls._finish(spark, spec, df, suite, stats)
+
+        return observed, decide
+
+    @classmethod
+    def _finish(
+        cls, spark: SparkSession, spec: DQSpec, df: DataFrame, suite: _Suite, stats: dict
+    ) -> DataFrame:
+        """Decide the suite from its counts: build the result rows, write the
+        result sink and the file-store artifact, then raise on failure per
+        the spec's policy. Returns ``df``, tagged when the spec asks."""
         n = stats["__n"]
-
         results = []  # (fn_spec, success, unexpected_count, element_count)
-        for i, (fn, _) in enumerate(row_fns):
+        for i, (fn, _) in enumerate(suite.row_fns):
             u = stats[f"__u{i}"]
             results.append((fn, u == 0, u, n))
-        for fn in agg_fns:
-            if fn.function == "expect_column_values_to_be_unique":
-                if fn.args["column"] == unique_col:
+        for fn in suite.agg_fns:
+            if fn.function == _UNIQUE:
+                if fn.args["column"] == suite.unique_col:
                     u, total = stats["__dup"], n
                 else:
                     u, total = E.eval_unique(df, fn.args["column"])
@@ -184,13 +326,9 @@ class DQFactory:
             f"-{run_time:%Y%m%d%H%M%S}-checkpoint"
         )
         n_ok = sum(1 for _, ok, _, _ in results if ok)
-        wants_sink = bool(
-            spec.result_sink_location or spec.result_sink_db_table
-            or (spec.local_fs_root_dir and spec.store_backend == "file_system")
-        )
         processed_keys = (
             cls._processed_keys(df, spec.unexpected_rows_pk)
-            if wants_sink and spec.unexpected_rows_pk
+            if cls._wants_sink(spec) and spec.unexpected_rows_pk
             else None
         )
         rows = [
@@ -247,9 +385,9 @@ class DQFactory:
 
         out_df = df
         if spec.tag_source_data:
-            out_df = cls._tag_source(df, row_fns, run_name, overall)
+            out_df = cls._tag_source(df, suite.row_fns, run_name, overall)
 
-        cls._log_or_fail(spec, results, critical, n)
+        cls._log_or_fail(spec, results)
         return out_df
 
     # ------------------------------------------------------------- internals
@@ -401,10 +539,11 @@ class DQFactory:
         )
 
     @staticmethod
-    def _log_or_fail(spec: DQSpec, results, critical_ids, n: int) -> None:
+    def _log_or_fail(spec: DQSpec, results) -> None:
         failed = [(fn, u, cnt) for fn, ok, u, cnt in results if not ok]
         if not failed:
             return
+        critical_ids = {id(f) for f in spec.critical_functions}
         crit_failed = [fn.function for fn, _, _ in failed if id(fn) in critical_ids]
         if crit_failed:
             raise DQValidationsFailedException(

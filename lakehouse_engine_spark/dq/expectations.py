@@ -21,6 +21,8 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_engine_spark.utils.sql_parser import query_over
+
 RowCond = Callable[..., Column]
 
 
@@ -209,12 +211,8 @@ def eval_queried_agg(
     LAST group decides; here EVERY group must satisfy (strictly
     stronger — any fixture that passes there passes here for the same
     reason). The legacy ``user_query``/``query`` single-value form keeps
-    its inclusive min/max contract."""
-    # temp views are session-scoped: register AND query through the
-    # frame's own session (the caller's handle can be a different
-    # session object under foreachBatch or cloned-session setups)
-    df.createOrReplaceTempView("batch")
-    spark = df.sparkSession
+    its inclusive min/max contract. Either query reads ``df`` as the temp
+    view ``batch``, which does not outlive it."""
     if "column" in template_dict and "agg_type" in template_dict:
         col = template_dict["column"]
         agg = template_dict["agg_type"]
@@ -224,7 +222,7 @@ def eval_queried_agg(
         q = f"SELECT {sel}{agg}({col}) AS __agg FROM batch"
         if groups:
             q += f" GROUP BY {groups}"
-        rows = spark.sql(q).collect()
+        rows = query_over(df, "batch", q).collect()
         if not rows:
             return False
         vals = [r["__agg"] for r in rows]
@@ -257,7 +255,7 @@ def eval_queried_agg(
             # the EXPECTATION fails; the run must not crash
             return False
     q = template_dict["user_query"] if "user_query" in template_dict else template_dict["query"]
-    row = spark.sql(q).first()
+    row = query_over(df, "batch", q).first()
     val = row[0] if row is not None else None
     lo, hi = template_dict.get("min_value"), template_dict.get("max_value")
     if val is None:

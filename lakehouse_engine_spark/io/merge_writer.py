@@ -24,7 +24,7 @@ Merge predicates reference the aliases ``current`` (target) and ``new``
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
@@ -45,12 +45,26 @@ def merge(
     location: Optional[str] = None,
     db_table: Optional[str] = None,
     data_format: str = "delta",
+    check: Optional[Callable[[bool], None]] = None,
 ) -> None:
-    """Merge ``df`` (alias ``new``) into the target (alias ``current``)."""
-    if ExecEnv.delta_available() and data_format == "delta":
+    """Merge ``df`` (alias ``new``) into the target (alias ``current``).
+
+    ``check(ran)`` decides whether the merge may commit and raises to refuse
+    it. A rewrite runs it after staging, with ``ran=True`` (:func:`_rewrite`);
+    before a write that creates a catalog table, and before a Delta merge,
+    it runs with ``ran=False``."""
+    if not rewrites(data_format):
+        if check is not None:
+            check(False)
         _merge_delta(spark, df, merge_opts, location, db_table)
     else:
-        _merge_rewrite(spark, df, merge_opts, location, db_table, data_format)
+        _merge_rewrite(spark, df, merge_opts, location, db_table, data_format, check)
+
+
+def rewrites(data_format: str) -> bool:
+    """True when a merge or ``replace_where`` into ``data_format`` is a
+    :func:`_rewrite`, i.e. unless it is a Delta target with delta-spark."""
+    return not (ExecEnv.delta_available() and data_format == "delta")
 
 
 def replace_where(
@@ -68,7 +82,7 @@ def replace_where(
     Otherwise one :func:`_rewrite` of ``NOT (predicate)`` ∪ ``rows``; a row
     whose predicate is NULL is kept, as ``DELETE`` keeps it. A missing
     target is created from ``rows``."""
-    if ExecEnv.delta_available() and data_format == "delta":
+    if not rewrites(data_format):
         exists = rows is None or _target_exists(spark, location, db_table)
         if exists:
             spark.sql(f"DELETE FROM {db_table or f'delta.`{location}`'} WHERE {predicate}")
@@ -263,7 +277,7 @@ def _store_assign(df, schema, keep_extra: bool = False):
     return df.select(*out)
 
 
-def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_format) -> None:
+def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_format, check) -> None:
     """Join-based merge for non-Delta targets, through :func:`_rewrite`.
 
     Packs each side into a struct column named after its merge alias so the
@@ -282,10 +296,12 @@ def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_forma
         target, src, src_cols = _prepare_merge(spark, target, df, opts)
         return _merged(target, src, opts, src_cols)
 
-    _rewrite(spark, db_table, location, data_format, "merge", merged, first_load)
+    _rewrite(spark, db_table, location, data_format, "merge", merged, first_load, check)
 
 
-def _rewrite(spark, db_table, location, data_format, op, rebuild, first_load) -> None:
+def _rewrite(
+    spark, db_table, location, data_format, op, rebuild, first_load, check=None
+) -> None:
     """Replace a table or path target with ``rebuild(target)``, or with
     ``first_load()`` when the target does not exist yet.
 
@@ -293,7 +309,9 @@ def _rewrite(spark, db_table, location, data_format, op, rebuild, first_load) ->
     :class:`~lakehouse_engine_spark.io.table_lock.WriterLock` on the
     target's path, heal an interrupted swap, read the target, stage the
     result in ``<loc>__staging``, ``lock.verify()``, then swap it in with
-    two renames. Two engine writers racing the same target get ONE winner
+    two renames. ``check(True)``, when given, runs between staging and
+    ``lock.verify()``; if it raises, the staged dir is dropped and the target
+    stays as it was. Two engine writers racing the same target get ONE winner
     and one loud ``ConcurrentWriterError`` instead of a silent lost-update
     (real Delta serializes via atomic log commits). A failure before the
     second rename keeps the old table (a crash between the renames is
@@ -314,6 +332,8 @@ def _rewrite(spark, db_table, location, data_format, op, rebuild, first_load) ->
     if db_table:
         _, location = catalog_location(spark, db_table)
         if location is None:
+            if check is not None:
+                check(False)
             first_load().write.format(fmt).mode("overwrite").saveAsTable(db_table)
             return
     with WriterLock(spark, location, op=op) as lock:
@@ -323,6 +343,12 @@ def _rewrite(spark, db_table, location, data_format, op, rebuild, first_load) ->
         else:
             result, parts = rebuild(target), _partition_columns(target)
         fs_utils.stage(spark, location, result, fmt, parts)
+        if check is not None:
+            try:
+                check(True)
+            except BaseException:
+                fs_utils.discard(spark, location)
+                raise
         lock.verify()
         if db_table:
             known = {c.lower() for c in target.columns}

@@ -21,7 +21,11 @@ from lakehouse_engine_spark.core.definitions import (
 )
 from lakehouse_engine_spark.io import merge_writer
 
-MicroBatchFn = Callable[[DataFrame, int], DataFrame]
+# (batch, batch id, sink) -> the sink's result: the DataLoader's per-batch
+# transformers and DQ, which hand the batch to ``sink`` to be written
+MicroBatchFn = Callable[[DataFrame, int, Callable[[DataFrame], Optional[DataFrame]]],
+                        Optional[DataFrame]]
+Check = Callable[[bool], None]
 
 # per-view checkpointed micro-batch frames for the streaming `dataframe`
 # sink — lets the accumulated view be a flat union instead of a
@@ -38,21 +42,26 @@ class WriterFactory:
         df: DataFrame,
         spec: OutputSpec,
         micro_batch_fn: Optional[MicroBatchFn] = None,
+        check: Optional[Check] = None,
     ) -> Optional[DataFrame]:
-        """Write ``df``; returns a DataFrame only for the ``dataframe`` sink."""
+        """Write ``df``; returns a DataFrame only for the ``dataframe`` sink.
+        ``check`` is the DQ decision of a suite observed on ``df``, run by a
+        batch ``merge`` before it commits (``merge_writer.merge``)."""
         if df.isStreaming:
             return _write_streaming(spark, df, spec, micro_batch_fn)
         if micro_batch_fn is not None:
-            df = micro_batch_fn(df, -1)
-        return _write_batch(spark, df, spec)
+            return micro_batch_fn(df, -1, lambda out: _write_batch(spark, out, spec))
+        return _write_batch(spark, df, spec, check)
 
 
-def _write_batch(spark: SparkSession, df: DataFrame, spec: OutputSpec) -> Optional[DataFrame]:
+def _write_batch(
+    spark: SparkSession, df: DataFrame, spec: OutputSpec, check: Optional[Check] = None
+) -> Optional[DataFrame]:
     fmt, options = spec.data_format, dict(spec.options or {})
     if spec.write_type == WriteType.MERGE.value:
         if not spec.merge_opts:
             raise WrongArgumentsError(f"OutputSpec {spec.spec_id}: merge requires merge_opts")
-        merge_writer.merge(spark, df, spec.merge_opts, spec.location, spec.db_table, fmt)
+        merge_writer.merge(spark, df, spec.merge_opts, spec.location, spec.db_table, fmt, check)
         return None
     if fmt == OutputFormat.CONSOLE.value:
         df.show(int(options.get("limit", 20)), truncate=options.get("truncate", True))
@@ -201,31 +210,36 @@ def _write_streaming(
             _STREAM_ACCUM.pop(view, None)
 
         def _process(batch_df: DataFrame, batch_id: int) -> None:
-            out = micro_batch_fn(batch_df, batch_id) if micro_batch_fn else batch_df
-            if spec.with_batch_id:
-                from pyspark.sql import functions as F
+            def _sink(out: DataFrame) -> None:
+                if spec.with_batch_id:
+                    from pyspark.sql import functions as F
 
-                out = out.withColumn("lhe_batch_id", F.lit(batch_id))
-            if spec.data_format == OutputFormat.DATAFRAME.value:
-                # Accumulate micro-batches into a global temp view
-                # (reference ``io/writers/dataframe_writer.py:33-205``).
-                # Each batch is checkpointed ONCE (lineage cut, O(batch)
-                # work) and the view is a flat lazy union of the batch
-                # frames — re-checkpointing the merged set every batch
-                # would be O(batches x total-rows), quadratic over a
-                # long-running stream. Plan size grows O(n_batches); rows
-                # live in executor block storage, so the sink remains a
-                # debug/summary tool, not a durable one — use a file/table
-                # sink for unbounded streams.
-                from functools import reduce
+                    out = out.withColumn("lhe_batch_id", F.lit(batch_id))
+                if spec.data_format == OutputFormat.DATAFRAME.value:
+                    # Accumulate micro-batches into a global temp view
+                    # (reference ``io/writers/dataframe_writer.py:33-205``).
+                    # Each batch is checkpointed ONCE (lineage cut, O(batch)
+                    # work) and the view is a flat lazy union of the batch
+                    # frames — re-checkpointing the merged set every batch
+                    # would be O(batches x total-rows), quadratic over a
+                    # long-running stream. Plan size grows O(n_batches); rows
+                    # live in executor block storage, so the sink remains a
+                    # debug/summary tool, not a durable one — use a file/table
+                    # sink for unbounded streams.
+                    from functools import reduce
 
-                batches = _STREAM_ACCUM.setdefault(view, [])
-                batches.append(out.localCheckpoint(eager=True))
-                reduce(
-                    lambda a, b: a.unionByName(b), batches
-                ).createOrReplaceGlobalTempView(view)
+                    batches = _STREAM_ACCUM.setdefault(view, [])
+                    batches.append(out.localCheckpoint(eager=True))
+                    reduce(
+                        lambda a, b: a.unionByName(b), batches
+                    ).createOrReplaceGlobalTempView(view)
+                else:
+                    _write_batch(out.sparkSession, out, spec)
+
+            if micro_batch_fn:
+                micro_batch_fn(batch_df, batch_id, _sink)
             else:
-                _write_batch(out.sparkSession, out, spec)
+                _sink(batch_df)
 
         writer = df.writeStream.foreachBatch(_process).outputMode(_output_mode(spec))
     else:

@@ -8,6 +8,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from lakehouse_engine_spark.core.definitions import CustomTransformerError
+from lakehouse_engine_spark.utils.sql_parser import query_over
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -26,10 +27,10 @@ def custom_transformation(custom_transformer: Callable[[DataFrame], DataFrame]) 
 
 def sql_transformation(sql: str) -> TransformerFn:
     """Run a SQL statement over registered temp views; the incoming DataFrame
-    is available as the view ``lhe_current`` as well."""
+    is available as the view ``lhe_current`` as well, while the statement
+    is analyzed."""
 
     def _sql(df: DataFrame) -> DataFrame:
-        df.createOrReplaceTempView("lhe_current")
-        return df.sparkSession.sql(sql)
+        return query_over(df, "lhe_current", sql)
 
     return _sql

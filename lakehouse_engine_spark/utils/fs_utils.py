@@ -22,7 +22,9 @@ object-store usage records (``utils/engine_usage``):
    ``<location>__staging`` (a static overwrite, so a leftover staging dir
    from a crash is cleared); nothing touches the live dir, so a failed
    write job leaves it as it was;
-2. **verify** — the caller's last check (the writer lock's token);
+2. **verify** — the caller's last checks (a DQ suite observed during the
+   staged write, the writer lock's token); a refused commit drops the
+   staged dir (:func:`discard`);
 3. **swap** (:func:`swap`) — rename live → ``<location>__old``, staging →
    live, then delete ``__old``. Each rename's return value is checked (HDFS
    reports failure by returning false; an unchecked first rename would move
@@ -129,6 +131,12 @@ def stage(
     may read ``location`` itself: the live dir is not touched."""
     writer = df.write.format(data_format).mode("overwrite").partitionBy(*partition_by)
     writer.option("partitionOverwriteMode", "static").save(location.rstrip("/") + STAGING)
+
+
+def discard(spark: SparkSession, location: str) -> None:
+    """Drop the staged dir of a commit that will not swap."""
+    fs, live = _fs(spark, location)
+    fs.delete(live.suffix(STAGING), True)
 
 
 def swap(spark: SparkSession, location: str) -> None:

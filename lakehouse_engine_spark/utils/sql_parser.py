@@ -1,14 +1,33 @@
-"""SQL file splitting — statement splitter respecting quotes/comments.
+"""SQL helpers: the statement splitter, and a query over a frame through a
+temp view that does not outlive it.
 
-Reference semantics: ``utils/sql_parser_utils.py:9-173`` (hand-written state
-machine). Splits a DDL file into executable statements on ``;`` while
-ignoring semicolons inside single/double quotes, backticks, line comments
-(``--``) and block comments (``/* */``).
+Splitter reference semantics: ``utils/sql_parser_utils.py:9-173``
+(hand-written state machine). Splits a DDL file into executable statements
+on ``;`` while ignoring semicolons inside single/double quotes, backticks,
+line comments (``--``) and block comments (``/* */``).
 """
 
 from __future__ import annotations
 
 from typing import List
+
+from pyspark.sql import DataFrame
+
+
+def query_over(df: DataFrame, view: str, query: str) -> DataFrame:
+    """``spark.sql(query)`` with ``df`` registered as the temp view ``view``
+    while the query is analyzed. The returned frame holds the view's plan,
+    not its name, so the view is dropped before returning. The session
+    catalog drops it: ``spark.catalog.dropTempView`` would also uncache
+    every cache entry with the view's plan, which may be the caller's.
+    Runs in ``df``'s own session, which under foreachBatch may not be the
+    caller's."""
+    spark = df.sparkSession
+    df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(query)
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
 
 
 def split_sql_statements(sql: str) -> List[str]:

@@ -247,6 +247,36 @@ def test_sensor_batch_with_preprocess(spark, tmp_dir):
     assert execute_sensor(acon) is False
 
 
+def test_queries_over_a_frame_leave_no_view(spark, tmp_dir):
+    """The sensor's preprocess query, ``sql_transformation`` and both forms
+    of the queried-aggregate expectation read their frame through a temp
+    view that is gone once the query's frame is built; a frame the caller
+    cached stays cached."""
+    from lakehouse_engine_spark.dq.expectations import eval_queried_agg
+    from lakehouse_engine_spark.transformers.custom_transformers import sql_transformation
+
+    upstream = os.path.join(tmp_dir, "upstream")
+    spark.createDataFrame([(1, "old"), (2, "new")], "id INT, tag STRING").write.parquet(upstream)
+    cached = spark.read.parquet(upstream).cache()
+    assert execute_sensor({
+        "sensor_id": "s_views", "assets": [],
+        "control_db_table_name": os.path.join(tmp_dir, "control"),
+        "input_spec": {"spec_id": "up", "data_format": "parquet", "location": upstream},
+        "preprocess_query": "SELECT * FROM sensor_new_data WHERE tag = 'new'",
+        "fail_on_empty_result": False,
+    }) is True
+    got = sql_transformation("SELECT id FROM lhe_current WHERE tag = 'new'")(cached)
+    assert eval_queried_agg(spark, cached, {"column": "id", "agg_type": "max",
+                                            "min_value": 2, "max_value": 2})
+    assert eval_queried_agg(spark, cached, {"query": "SELECT count(*) FROM batch",
+                                            "min_value": 2, "max_value": 2})
+    for view in ("sensor_new_data", "lhe_current", "batch"):
+        assert not spark.catalog.tableExists(view), view
+    assert [r["id"] for r in got.collect()] == [2]
+    assert cached.storageLevel.useMemory
+    cached.unpersist()
+
+
 # ---------------------------------------------------------------- managers
 def test_sql_parser_splits_respecting_quotes_and_comments():
     sql = """

@@ -3,6 +3,7 @@ sink (reference ``dq_processors/dq_factory.py`` semantics without GE)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -411,3 +412,257 @@ def test_uniqueness_adds_no_pass_over_the_input(spark):
     assert _jobs(spark, suite(base, *_ROW_SUITE, _UNIQUE_ID)) == _jobs(
         spark, lambda: eval_unique(base, "id")
     )
+
+
+# ------------------------------------------------- suite observed in the merge
+
+_CDC_TARGET = [(k, 1, 10 + k) for k in range(8)]
+# condensed: keys 1 (update), 2 (delete), 8 and 9 (inserts) and one NULL key;
+# key 3's newest image has the excluded mode X, so the key drops out
+_CDC_BATCH = [
+    (1, 2, "N", 20), (1, 3, "", 21), (2, 2, "D", 0), (3, 1, "N", 5), (3, 2, "X", 6),
+    (8, 1, "N", 30), (9, 1, "N", 31), (9, 2, "", 60), (None, 1, "N", 7),
+]
+_CDC_CONDENSED_ROWS = 5
+_IN_SET = ("expect_column_values_to_be_in_set",
+           {"column": "recordmode", "value_set": ["", "N", "D"]})
+_UNIQUE_KEY = ("expect_column_values_to_be_unique", {"column": "li_key"})
+_KEY_NOT_NULL = ("expect_column_values_to_not_be_null", {"column": "li_key"})
+
+
+def _fns(functions):
+    return [{"function": f, "args": a} for f, a in functions]
+
+
+def _cdc_acon(spark, root, table, batch, dq, *, create=True, first_output=False):
+    """A CDC-shaped ACON: condense the batch, run the suite ``dq``
+    (``dq_functions``/``critical_functions`` as (name, args) pairs, other DQ
+    spec keys as they are; None for no suite), merge into the parquet
+    catalog table ``table``, created from ``_CDC_TARGET`` when ``create``."""
+    batch_path = os.path.join(root, "batch")
+    spark.createDataFrame(
+        batch, "li_key INT, change_seq INT, recordmode STRING, qty INT"
+    ).write.mode("overwrite").parquet(batch_path)
+    if create:
+        spark.createDataFrame(
+            _CDC_TARGET, "li_key INT, change_seq INT, qty INT"
+        ).write.format("parquet").saveAsTable(table)
+    dq_specs = [] if dq is None else [{
+        "spec_id": "checked", "input_id": "condensed", "dq_type": "validator",
+        "result_sink_location": os.path.join(root, "dq_results"),
+        "result_sink_format": "parquet",
+        **{k: _fns(v) if k.endswith("functions") else v for k, v in dq.items()},
+    }]
+    outputs = [{
+        "spec_id": "silver", "input_id": "condensed" if dq is None else "checked",
+        "write_type": "merge", "data_format": "parquet", "db_table": table,
+        "merge_opts": {
+            "merge_predicate": "current.li_key = new.li_key",
+            "update_predicate": "new.change_seq > current.change_seq",
+            "delete_predicate": "new.recordmode = 'D'",
+            "insert_predicate": "new.recordmode <> 'D'",
+        },
+    }]
+    if first_output:
+        outputs.insert(0, {"spec_id": "raw", "input_id": "cdc", "data_format": "dataframe"})
+    return {
+        "input_specs": [{"spec_id": "cdc", "data_format": "parquet", "location": batch_path}],
+        "transform_specs": [{
+            "spec_id": "condensed", "input_id": "cdc",
+            "transformers": [{"function": "condense_record_mode_cdc", "args": {
+                "business_key": ["li_key"], "ranking_key_desc": ["change_seq"],
+                "valid_record_modes": ["", "N", "D"]}}],
+        }],
+        "dq_specs": dq_specs,
+        "output_specs": outputs,
+    }
+
+
+def _cdc_load(spark, root, table, batch, dq, **kw):
+    """Run :func:`_cdc_acon`'s load. Returns the DQ error's message (or
+    None), the target's rows, the DQ result rows without the run's name and
+    time, and whether a staged dir was left beside the table."""
+    from lakehouse_engine_spark.io.merge_writer import catalog_location
+
+    error = None
+    try:
+        load_data(_cdc_acon(spark, root, table, batch, dq, **kw))
+    except DQValidationsFailedException as exc:
+        error = str(exc)
+    target = (
+        sorted((tuple(r) for r in spark.table(table).collect()), key=str)
+        if spark.catalog.tableExists(table) else None
+    )
+    dropped = ("run_name", "run_time", "run_time_year", "run_time_month", "run_time_day")
+    results = sorted(
+        (r.asDict() for r in spark.read.parquet(os.path.join(root, "dq_results"))
+         .drop(*dropped).collect()), key=str
+    )
+    location = catalog_location(spark, table)[1] or f"file:{root}/none"
+    staged = os.path.exists(location.replace("file:", "", 1).rstrip("/") + "__staging")
+    return error, target, results, staged
+
+
+def _load_both_ways(spark, tmp_dir, monkeypatch, case, batch, dq, **kw):
+    """``{path: (error, target, results, staged, suite passes)}`` of the same
+    load on the pre-write path (observation switched off) and the observed
+    path. ``suite passes`` counts the suite's own aggregate passes."""
+    real = vars(DQFactory)["_suite_stats"].__func__
+    out = {}
+    db = f"dq_observed_{case}"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{os.path.join(tmp_dir, 'warehouse')}'")
+    for path in ("pre_write", "observed"):
+        passes = []
+
+        def spy(cls, df, suite):
+            passes.append(1)
+            return real(cls, df, suite)
+
+        with monkeypatch.context() as m:
+            m.setattr(DQFactory, "_suite_stats", classmethod(spy))
+            if path == "pre_write":
+                m.setattr(DQFactory, "observable", classmethod(lambda cls, spec: False))
+            root = os.path.join(tmp_dir, path)
+            out[path] = _cdc_load(spark, root, f"{db}.{path}", batch, dq, **kw) + (len(passes),)
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+    return out
+
+
+def _element_counts(results):
+    return {r["element_count"] for r in results}
+
+
+_PASSING = {"dq_functions": [_IN_SET, _UNIQUE_KEY,
+                             ("expect_column_values_to_be_between",
+                              {"column": "change_seq", "min_value": 1, "max_value": 10})]}
+
+
+@pytest.mark.parametrize(
+    "case, dq, fails",
+    [
+        ("pass", _PASSING, False),
+        ("critical", {"dq_functions": [_IN_SET, _UNIQUE_KEY],
+                      "critical_functions": [_KEY_NOT_NULL]}, True),
+        ("max_pct", {"dq_functions": [_KEY_NOT_NULL, _UNIQUE_KEY, _IN_SET],
+                     "max_percentage_failure": 20.0}, True),
+        # quantity 60 is out of range, and the condensed change_seq values
+        # repeat: the window of that uniqueness check is not the condense's
+        ("no_fail", {"dq_functions": [
+            ("expect_column_values_to_be_between",
+             {"column": "qty", "min_value": 1, "max_value": 50}),
+            ("expect_column_values_to_be_unique", {"column": "change_seq"})],
+            "fail_on_error": False}, False),
+    ],
+)
+def test_observed_suite_matches_the_pre_write_pass(spark, tmp_dir, monkeypatch, case, dq, fails):
+    """The suite observed during the staged merge gives the DQ result rows
+    and the target of the pre-write pass; a refused suite leaves the target
+    as it was and no staged dir. The observed path runs no pass of its own,
+    and its element count is the condensed batch's row count."""
+    out = _load_both_ways(spark, tmp_dir, monkeypatch, case, _CDC_BATCH, dq)
+    pre, obs = out["pre_write"], out["observed"]
+    assert (pre[0] is None, obs[0] is None) == (not fails, not fails)
+    assert obs[1:3] == pre[1:3] and obs[2]
+    if fails:
+        assert obs[1] == sorted(_CDC_TARGET, key=str)
+    else:
+        assert obs[1] != sorted(_CDC_TARGET, key=str)
+    assert not obs[3] and not pre[3]
+    assert (pre[4], obs[4]) == (1, 0)
+    assert _element_counts(obs[2]) == {_CDC_CONDENSED_ROWS}
+
+
+def test_observed_suite_on_an_all_excluded_batch(spark, tmp_dir, monkeypatch):
+    """Every key's newest image is excluded, so the merge's source is
+    empty and adaptive execution prunes the observed subtree: the decision
+    runs the suite's own pass and reports 0 elements."""
+    batch = [(k, 2, "X", 5) for k in range(4)]
+    out = _load_both_ways(spark, tmp_dir, monkeypatch, "excluded", batch, _PASSING)
+    pre, obs = out["pre_write"], out["observed"]
+    assert pre[:4] == obs[:4]
+    assert obs[0] is None and obs[1] == sorted(_CDC_TARGET, key=str) and not obs[3]
+    assert (pre[4], obs[4]) == (1, 1)
+    assert _element_counts(obs[2]) == {0}
+
+
+@pytest.mark.parametrize("suite, fails", [(_PASSING, False),
+                                          ({"critical_functions": [_KEY_NOT_NULL]}, True)])
+def test_observed_suite_on_the_first_load_of_a_catalog_table(
+    spark, tmp_dir, monkeypatch, suite, fails
+):
+    """A missing catalog table is created by ``saveAsTable``, unstaged: the
+    suite is decided by its own pass before the table is created."""
+    case = f"first_{int(fails)}"
+    out = _load_both_ways(spark, tmp_dir, monkeypatch, case, _CDC_BATCH, suite, create=False)
+    pre, obs = out["pre_write"], out["observed"]
+    assert pre[:4] == obs[:4] and (obs[0] is not None) == fails
+    assert (obs[1] is None) == fails
+    assert (pre[4], obs[4]) == (1, 1)
+    assert _element_counts(obs[2]) == {_CDC_CONDENSED_ROWS}
+
+
+def test_suite_feeding_a_later_output_runs_before_the_writes(spark, tmp_dir, monkeypatch):
+    """When the merge is not the ACON's first output spec, the suite keeps
+    its pre-write pass: a failing suite stops the earlier write too."""
+    dq = {"critical_functions": [_KEY_NOT_NULL]}
+    out = _load_both_ways(spark, tmp_dir, monkeypatch, "later", _CDC_BATCH, dq, first_output=True)
+    pre, obs = out["pre_write"], out["observed"]
+    assert pre[:4] == obs[:4] and obs[0] is not None
+    assert (pre[4], obs[4]) == (1, 1)
+
+
+# jobs of the CDC-shaped load below: the batch read's parquet schema job and
+# the merge's own 4; a suite pass of its own before the merge fired 3 more
+CDC_LOAD_JOBS = 5
+
+
+def test_observed_suite_adds_no_job_to_the_merge(spark, tmp_dir):
+    """The suite with uniqueness rides the merge: the load fires exactly the
+    jobs of the same load with no suite."""
+    db = "dq_observed_jobs"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{os.path.join(tmp_dir, 'warehouse')}'")
+    jobs = {}
+    # the result sink's append is a job of its own: the suite writes its
+    # file-store artifact instead, as perfbench's cdc_merge does
+    suite = {**_PASSING, "result_sink_location": None, "store_backend": "file_system",
+             "local_fs_root_dir": os.path.join(tmp_dir, "dq_store")}
+    for name, dq in (("suite", suite), ("bare", None)):
+        acon = _cdc_acon(spark, os.path.join(tmp_dir, name), f"{db}.{name}", _CDC_BATCH, dq)
+        jobs[name] = _jobs(spark, lambda: load_data(acon))
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+    assert jobs == {"suite": CDC_LOAD_JOBS, "bare": CDC_LOAD_JOBS}
+
+
+@pytest.mark.parametrize("fails", [False, True])
+def test_cache_df_is_released(spark, tmp_dir, fails):
+    """``cache_df`` caches the suite's input only while the suite (and, in
+    ``load_data``, the writes after it) run: no cache entry is left, on
+    success or failure; a frame the caller cached stays cached."""
+    src = os.path.join(tmp_dir, "src")
+    spark.createDataFrame([(1, "x"), (2, None)], "id INT, v STRING").write.parquet(src)
+    dq = {"spec_id": "dq", "input_id": "in", "cache_df": True, "dq_functions": [
+        {"function": "expect_column_values_to_not_be_null", "args": {"column": "v" if fails else "id"}}
+    ]}
+    read = {"spec_id": "in", "data_format": "parquet", "location": src}
+    outcome = (
+        (lambda: pytest.raises(DQValidationsFailedException)) if fails else contextlib.nullcontext
+    )
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    out = os.path.join(tmp_dir, "out")
+    for run_it in (
+        lambda: load_data({"input_specs": [read], "dq_specs": [dq], "output_specs": [
+            {"spec_id": "o", "input_id": "dq", "data_format": "parquet", "location": out}]}),
+        lambda: execute_dq_validation({"input_spec": read, "dq_spec": dq}),
+    ):
+        with outcome():
+            run_it()
+        assert cache.isEmpty()
+    assert os.path.exists(out) != fails
+    caller = spark.read.parquet(src).cache()
+    with outcome():
+        execute_dq_validation({"input_spec": read, "dq_spec": dq})
+    assert caller.storageLevel.useMemory
+    caller.unpersist()

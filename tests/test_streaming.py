@@ -219,6 +219,27 @@ def test_streaming_dq_runs_in_micro_batch(spark, tmp_dir):
     assert res["o"].count() == 2
 
 
+def test_streaming_dq_cache_df_is_released_per_batch(spark, tmp_dir):
+    """A micro-batch suite with ``cache_df`` holds its batch until the batch
+    is written, then releases it: no cache entry outlives the stream."""
+    src, out = os.path.join(tmp_dir, "src"), os.path.join(tmp_dir, "out")
+    _stage(spark, src, [(1, 1)])
+    _stage(spark, src, [(2, 1)])
+    spark.catalog.clearCache()
+    load_data({
+        "input_specs": [{"spec_id": "s", "data_format": "parquet", "location": src,
+                         "read_type": "streaming", "schema": SCHEMA,
+                         "options": {"maxFilesPerTrigger": 1}}],
+        "dq_specs": [{"spec_id": "dq", "input_id": "s", "cache_df": True, "dq_functions": [
+            {"function": "expect_column_values_to_not_be_null", "args": {"column": "k"}}]}],
+        "output_specs": [{"spec_id": "o", "input_id": "dq", "data_format": "parquet",
+                          "location": out,
+                          "options": {"checkpointLocation": os.path.join(tmp_dir, "ck")}}],
+    })
+    assert spark.read.parquet(out).count() == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_streaming_dataframe_sink_accumulates_many_batches(spark, tmp_dir):
     # one file per micro-batch via maxFilesPerTrigger: 20 batches through the
     # foreachBatch dataframe sink; each batch is checkpointed once and the
