@@ -362,6 +362,16 @@ def _train_merge_loop(
     )
 
 
+def _merge_list(merges: DataFrame) -> List[Tuple[str, str]]:
+    """The merge table's ``(left, right)`` pairs in rank order, NULL ranks
+    first as in Spark's ascending sort. One collect, sorted on the driver:
+    the table is vocabulary-sized, and ``orderBy`` would spend a
+    range-partition sample and a shuffle on it."""
+    rows = merges.select("rank", "left", "right").collect()
+    rows.sort(key=lambda r: (r["rank"] is not None, r["rank"]))
+    return [(r["left"], r["right"]) for r in rows]
+
+
 @register("bpe_encode")
 def bpe_encode(
     merges: DataFrame,
@@ -373,8 +383,9 @@ def bpe_encode(
 ) -> TransformerFn:
     """Tokenize the corpus with a trained merge table: adds ``output_col``
     (array of subword pieces, word-order preserved) and
-    ``<output_col>_n``. ``merges`` is the ``bpe_train`` output (collected
-    to the driver — vocabulary-sized). Reassembly is keyed on ``id_col``,
+    ``<output_col>_n``. ``merges`` is the ``bpe_train`` output, collected
+    to the driver in one job and rank-sorted there (:func:`_merge_list` —
+    vocabulary-sized). Reassembly is keyed on ``id_col``,
     which must be UNIQUE per row (duplicate ids would interleave their
     token streams); token-less documents survive with an empty array.
 
@@ -388,9 +399,7 @@ def bpe_encode(
     """
 
     def _make():
-        mlist = [
-            (r["left"], r["right"]) for r in merges.orderBy("rank").collect()
-        ]
+        mlist = _merge_list(merges)
         return lambda w: apply_merges_py(w, mlist)
 
     return _dictionary_encode(
@@ -879,9 +888,7 @@ def bpe_byte_encode(
     """
 
     def _make():
-        mlist = [
-            (r["left"], r["right"]) for r in merges.orderBy("rank").collect()
-        ]
+        mlist = _merge_list(merges)
         return lambda w: apply_merges_byte_py(w, mlist)
 
     return _dictionary_encode(

@@ -24,13 +24,19 @@ def _static_num_partitions(df: DataFrame) -> int:
     at plan-construction time (measured: 2 jobs / 4 s for one shuffled
     frame; q31 paid ~10 such jobs per build through its two
     ensure_parallelism call sites). The static plan builds the RDD DAG
-    lazily — zero jobs — and its count is the right signal for this
-    gate: a starved SOURCE (one small file, a collapsed dimension)
-    shows its true split count, while any plan with an upstream
-    exchange reports >= spark.sql.shuffle.partitions and skips the
-    repartition it never needed. The conf flip is driver-side and
-    momentary; engine composition is single-threaded by contract
-    (the same assumption ExecEnv's session mutation already makes).
+    lazily — zero jobs for an unpersisted frame — and its count is the
+    right signal for this gate. A PERSISTED input whose cached plan has
+    exchanges is the exception: ``df.rdd`` builds the cache's RDD, and
+    its shuffle stages run at plan-construction time. Those are jobs the
+    first action would fire anyway, moved earlier rather than added (a
+    cached groupBy over ``range(1000)``: 1 probe job + 1 collect job,
+    against 3 collect jobs unprobed). A starved SOURCE (one small
+    file, a collapsed dimension) shows its true split count, while any
+    plan with an upstream exchange reports >= spark.sql.shuffle.partitions
+    and skips the repartition it never needed. The conf flip is
+    driver-side and momentary; engine composition is single-threaded by
+    contract (the same assumption ExecEnv's session mutation already
+    makes).
     """
     spark = df.sparkSession
     old = spark.conf.get("spark.sql.adaptive.enabled", "true")

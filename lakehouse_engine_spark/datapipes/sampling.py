@@ -275,9 +275,13 @@ def mixture_plan(
     0 by definition); groups in ``weights`` with no corpus rows appear
     with ``available = 0``.
 
-    Scale design: ONE map-side-combined groupBy over the token column —
-    the only corpus-sized work; everything else is per-group arithmetic
-    on a weights-sized frame joined against a broadcast literal table.
+    Scale design: ONE global aggregate over the planned groups' rows —
+    a ``sum(when(group = g, tokens))`` per weighted group, so k
+    comparisons per row for a k-group recipe, map-side combined into one
+    exchange. Its single row is unfolded by ``inline`` into literal
+    ``(group, parts, available)`` structs and everything else is
+    per-group arithmetic on those k rows: no join, no Python-side weights
+    table, and the plan ends in one partition.
     """
     if budget_tokens < 0:
         raise ValueError("mixture_plan: budget_tokens must be >= 0")
@@ -296,36 +300,30 @@ def mixture_plan(
         raise ValueError("mixture_plan: weight parts sum to zero")
 
     def _plan(df: DataFrame) -> DataFrame:
-        spark = df.sparkSession
-        wdf = spark.createDataFrame(
-            [(g, int(p)) for g, p in sorted(weights.items())],
-            f"`{group_col}` string, parts long",
-        )
-        # the weights frame keys groups as STRING; a non-string corpus
-        # group column would otherwise match through implicit casts that
-        # can silently yield available=0 — cast it explicitly so the
-        # filter/join semantics are string-vs-string on both sides (the
-        # string fast path stays a no-op, preserving scan pushdown)
-        src = df
+        # the weights key groups as STRING; a non-string corpus group
+        # column would otherwise compare through implicit casts that can
+        # silently yield available=0 — cast it explicitly so the filter and
+        # the per-group sums compare string to string (the string fast path
+        # stays a no-op, preserving scan pushdown)
+        grp = F.col(group_col)
         if df.schema[group_col].dataType.simpleString() != "string":
-            src = df.withColumn(group_col, F.col(group_col).cast("string"))
+            grp = grp.cast("string")
+        plan = sorted((str(g), int(p)) for g, p in weights.items())
+        tok = F.col(token_col).cast("long")
         # pre-filter to planned groups: the predicate pushes to the scan
-        # and bounds the aggregate output at |weights| rows, so it can be
-        # broadcast as the RIGHT side of the weights-preserving left join
-        # (the preserved side of an outer join cannot be broadcast)
-        avail = (
-            src.where(F.col(group_col).isin([g for g in weights]))
-            .groupBy(group_col)
-            .agg(F.sum(F.col(token_col).cast("long")).alias("available"))
+        sums = df.where(grp.isin([g for g, _ in plan])).agg(
+            *[F.sum(F.when(grp == g, tok)).alias(f"__a{i}")
+              for i, (g, _) in enumerate(plan)]
         )
-        base = (
-            wdf.join(F.broadcast(avail), group_col, "left")
-            .select(
-                group_col,
-                "parts",
-                F.coalesce("available", F.lit(0)).alias("available"),
+        rows = [
+            F.struct(
+                F.lit(g).alias(group_col),
+                F.lit(p).cast("long").alias("parts"),
+                F.coalesce(f"__a{i}", F.lit(0).cast("long")).alias("available"),
             )
-        )
+            for i, (g, p) in enumerate(plan)
+        ]
+        base = sums.select(F.inline(F.array(*rows)))
         desired = F.expr(f"({budget_tokens} * parts) div {total_parts}")
         out = base.withColumn("desired_tokens", desired)
         cap = F.expr(f"({max_epochs_ppm} * available) div 1000000")

@@ -298,6 +298,20 @@ def repetition_signals(
     return _rep
 
 
+def _bench_gram_hashes(
+    benchmark_df: DataFrame, text_col: str, ngram: int, broadcast_benchmark: bool
+) -> DataFrame:
+    """The md5 of every benchmark word ``ngram``-gram as ``__gh``, NOT
+    deduplicated: the decontamination ops probe it with a ``left_semi``
+    join, which benchmark duplicates cannot multiply, so a ``distinct``
+    would only add an exchange. Broadcast-hinted unless the caller shuffles
+    a giant benchmark."""
+    bench = benchmark_df.select(
+        F.explode(shingles(F.col(text_col), ngram)).alias("__g")
+    ).select(F.md5("__g").alias("__gh"))
+    return F.broadcast(bench) if broadcast_benchmark else bench
+
+
 @register("text_decontaminate")
 def decontaminate(
     benchmark_df: DataFrame,
@@ -312,12 +326,16 @@ def decontaminate(
     ``ngram`` with a benchmark/eval set — the standard guard against test-set
     leakage into pretraining corpora.
 
-    Scale design: the benchmark side reduces to DISTINCT n-gram hashes — for
-    real eval suites that is thousands of rows, so it **broadcasts** and the
-    corpus-side probe is a map-side hash join on a 32-char key; no shuffle of
-    corpus n-grams. Per-doc hit counts come from one map-side-combined
-    groupBy on the (rare) matching grams. With ``broadcast_benchmark=False``
-    the same plan runs as a shuffle join for giant benchmark sets.
+    Scale design: the benchmark side is its n-gram hashes
+    (:func:`_bench_gram_hashes`, not deduplicated) — for real eval suites
+    that is thousands of rows, so it **broadcasts** and the corpus-side
+    probe is a map-side ``left_semi`` hash join on a 32-char key, which
+    benchmark duplicates cannot multiply; no shuffle of corpus n-grams.
+    ``n_contaminated_ngrams`` (distinct matching gram hashes per doc)
+    comes from ONE groupBy over the (rare) matching grams, so the plan's
+    only corpus-side exchange carries matches, not every document gram.
+    With ``broadcast_benchmark=False`` the same plan runs as a shuffle
+    join for giant benchmark sets.
     """
     if mode not in ("flag", "drop"):
         raise ValueError(
@@ -325,15 +343,9 @@ def decontaminate(
         )
 
     def _decon(df: DataFrame) -> DataFrame:
-        bench = (
-            benchmark_df.select(
-                F.explode(shingles(F.col(benchmark_text_col), ngram)).alias("__g")
-            )
-            .select(F.md5("__g").alias("__gh"))
-            .distinct()
+        bench = _bench_gram_hashes(
+            benchmark_df, benchmark_text_col, ngram, broadcast_benchmark
         )
-        if broadcast_benchmark:
-            bench = F.broadcast(bench)
         doc_grams = (
             ensure_parallelism(df)
             .select(
@@ -341,10 +353,11 @@ def decontaminate(
                 F.explode(shingles(F.col(input_col), ngram)).alias("__g"),
             )
             .select("__id", F.md5("__g").alias("__gh"))
-            .dropDuplicates(["__id", "__gh"])
         )
-        hits = doc_grams.join(bench, "__gh").groupBy("__id").agg(
-            F.count(F.lit(1)).alias("__nhit")
+        hits = (
+            doc_grams.join(bench, "__gh", "left_semi")
+            .groupBy("__id")
+            .agg(F.size(F.collect_set("__gh")).alias("__nhit"))
         )
         out = df.join(hits, df[id_col] == hits["__id"], "left").drop("__id")
         out = out.withColumns(
@@ -376,7 +389,7 @@ def decontaminate_bloom(
     """Benchmark decontamination via a Bloom filter instead of a hash-set
     join — the constant-size-sidecar scale path.
 
-    :func:`decontaminate` ships the benchmark's DISTINCT n-gram hashes to
+    :func:`decontaminate` ships the benchmark's n-gram hashes to
     every probe task (fine for thousands of grams; a liability when the
     "benchmark" is a 100M-gram held-out corpus). This variant folds the
     benchmark into a FIXED-size bitmap (``num_bits``; the default 2^20 bits
@@ -2574,9 +2587,11 @@ def decontaminate_spans(
     regardless of length. Adds ``output_col`` (array<string>),
     ``n_removed_tokens``, ``n_fragments``.
 
-    Scale design: benchmark grams broadcast (eval sets are small; pass
+    Scale design: the benchmark's gram hashes broadcast undeduplicated
+    (:func:`_bench_gram_hashes`; eval sets are small — pass
     ``broadcast_benchmark=False`` to shuffle-join a giant one); the
-    corpus makes one gram-explode pass into a semi-join, and ONLY the
+    corpus makes one gram-explode pass into a ``left_semi`` join, which
+    benchmark duplicates cannot multiply, and ONLY the
     documents with hits (the rare case) take the exploded
     gaps-and-islands path (posexplode -> kept-token islands via one
     doc-keyed window -> fragment reassembly); clean documents ride a
@@ -2596,17 +2611,9 @@ def decontaminate_spans(
     def _decon(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        bench = (
-            benchmark_df.select(
-                F.explode(
-                    shingles(F.col(benchmark_text_col), ngram)
-                ).alias("__g")
-            )
-            .select(F.md5("__g").alias("__gh"))
-            .distinct()
+        bench = _bench_gram_hashes(
+            benchmark_df, benchmark_text_col, ngram, broadcast_benchmark
         )
-        if broadcast_benchmark:
-            bench = F.broadcast(bench)
         base = ensure_parallelism(df).select(
             F.col(id_col).alias("__id"), F.col(input_col).alias("__tx")
         )
@@ -2632,7 +2639,7 @@ def decontaminate_spans(
                 ).alias("__p0", "__gh"),
             )
             .select("__id", (F.col("__p0") + 1).alias("__p"), "__gh")
-            .join(bench, "__gh")
+            .join(bench, "__gh", "left_semi")
             .select("__id", "__p")
         )
         hit_starts = starts.groupBy("__id").agg(

@@ -6544,3 +6544,297 @@ def test_r14_stats_layout_review_fixes(spark):
     # key collapsing the clustered write)
     with pytest.raises(ValueError, match="bits_per_col"):
         t("layout_zorder", cols=["a"], bits_per_col=0)
+
+
+# ------------------------------------- curation plans vs the plans they replaced
+# text_decontaminate(_spans), mixture_plan and bpe_encode/bpe_byte_encode
+# each compile to the smallest plan that gives their rows. The plans they
+# replaced stay here as oracles: the new rows must equal theirs.
+
+
+def _jobs_of(spark, fn):
+    """Number of Spark jobs fn() fires."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"curation-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture()
+def decon_case(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d a b c d"),  # "a b c" and "b c d" twice in one doc
+            (2, "x a b c y"),
+            (3, "b c d e f"),
+            (4, None),
+            (5, "a b"),  # shorter than the n-gram: one whole-text gram
+            (6, "nothing shared here at all"),
+        ],
+        "doc_id INT, text STRING",
+    )
+    bench = spark.createDataFrame(
+        [
+            (1, "a b c d a b c"),  # "a b c" twice in one benchmark item
+            (2, "a b c d"),  # and its grams again in a second item
+            (3, "A B"),
+        ],
+        "bid INT, text STRING",
+    )
+    return docs, bench
+
+
+def _decontaminate_distinct_join(docs, bench, ngram, mode, broadcast_benchmark):
+    """text_decontaminate's former plan: the DISTINCT benchmark gram set
+    inner-joined to per-doc deduplicated corpus grams, then counted."""
+    from lakehouse_engine_spark.datapipes.text import shingles
+
+    bgrams = bench.select(F.explode(shingles(F.col("text"), ngram)).alias("__g"))
+    bgrams = bgrams.select(F.md5("__g").alias("__gh")).distinct()
+    if broadcast_benchmark:
+        bgrams = F.broadcast(bgrams)
+    grams = (
+        docs.select(
+            F.col("doc_id").alias("__id"),
+            F.explode(shingles(F.col("text"), ngram)).alias("__g"),
+        )
+        .select("__id", F.md5("__g").alias("__gh"))
+        .dropDuplicates(["__id", "__gh"])
+    )
+    hits = grams.join(bgrams, "__gh").groupBy("__id").agg(
+        F.count(F.lit(1)).alias("__nhit")
+    )
+    out = docs.join(hits, docs["doc_id"] == hits["__id"], "left").drop("__id")
+    n = F.coalesce("__nhit", F.lit(0))
+    out = out.withColumns(
+        {"n_contaminated_ngrams": n.cast("int"), "is_contaminated": n > 0}
+    ).drop("__nhit")
+    if mode == "drop":
+        return out.filter(~F.col("is_contaminated")).drop(
+            "n_contaminated_ngrams", "is_contaminated"
+        )
+    return out
+
+
+@pytest.mark.parametrize("broadcast_benchmark", [True, False])
+@pytest.mark.parametrize("mode", ["flag", "drop"])
+def test_decontaminate_semi_join_matches_distinct_join(
+    decon_case, mode, broadcast_benchmark
+):
+    """Duplicate benchmark grams cannot multiply a left_semi probe, and
+    n_contaminated_ngrams still counts DISTINCT matching grams per doc."""
+    docs, bench = decon_case
+    got = docs.transform(
+        t("text_decontaminate", benchmark_df=bench, ngram=3, mode=mode,
+          broadcast_benchmark=broadcast_benchmark)
+    )
+    want = _decontaminate_distinct_join(docs, bench, 3, mode, broadcast_benchmark)
+    rows = got.collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
+    if mode == "flag":
+        n = {r["doc_id"]: r["n_contaminated_ngrams"] for r in rows}
+        # doc 1 holds 4 distinct benchmark grams, 6 with repeats
+        assert n == {1: 4, 2: 1, 3: 1, 4: 0, 5: 1, 6: 0}
+
+
+def test_decontaminate_corpus_side_has_no_pair_exchange(decon_case):
+    """The corpus grams are not deduplicated on (doc, gram): the plan's
+    only corpus-side exchange is the per-doc count of matching grams."""
+    import re
+
+    docs, bench = decon_case
+    pair = re.compile(r"hashpartitioning\(__id#\d+, __gh#")
+    old = _decontaminate_distinct_join(docs, bench, 3, "flag", True)
+    assert pair.search(_executed_plan(old))
+    new = docs.transform(t("text_decontaminate", benchmark_df=bench, ngram=3))
+    assert not pair.search(_executed_plan(new))
+
+
+def test_decontaminate_spans_ignores_benchmark_duplicates(spark):
+    """A benchmark whose grams repeat, within an item and across items,
+    cuts the same spans as one copy of each gram."""
+    once = spark.createDataFrame([(1, "p q r s")], "bid INT, text STRING")
+    dup = spark.createDataFrame(
+        [(1, "p q r s p q r s"), (2, "p q r s"), (3, "P Q R S")],
+        "bid INT, text STRING",
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c p q r s d e f"),
+            (2, "p q r s p q r s"),
+            (3, "clean text only here"),
+            (4, None),
+            (5, "p q"),
+        ],
+        "doc_id INT, text STRING",
+    )
+
+    def run(bench):
+        out = docs.transform(
+            t("text_decontaminate_spans", benchmark_df=bench, ngram=3,
+              min_fragment_tokens=1)
+        )
+        return sorted(map(tuple, out.collect()), key=lambda r: r[0])
+
+    got = run(dup)
+    assert got == run(once)
+    by_id = {r[0]: r for r in got}
+    assert by_id[1][2:] == (["a b c", "d e f"], 4, 2)
+    # "s p q" and "r s p" are benchmark grams only in the repeated item
+    assert by_id[2][2:] == ([], 8, 0)
+
+
+def _mixture_rows_weights_join(df, group_col, weights, budget, token_col, cap_ppm):
+    """mixture_plan's former plan: a Python-list weights table left-joined
+    to a broadcast groupBy of the planned groups, then the integer
+    arithmetic replayed on the driver."""
+    spark = df.sparkSession
+    wdf = spark.createDataFrame(
+        [(g, int(p)) for g, p in sorted(weights.items())],
+        f"`{group_col}` string, parts long",
+    )
+    src = df.withColumn(group_col, F.col(group_col).cast("string"))
+    avail = (
+        src.where(F.col(group_col).isin(list(weights)))
+        .groupBy(group_col)
+        .agg(F.sum(F.col(token_col).cast("long")).alias("available"))
+    )
+    total = sum(weights.values())
+    rows = []
+    for g, parts, avail_ in wdf.join(F.broadcast(avail), group_col, "left").collect():
+        avail_ = avail_ or 0
+        desired = budget * parts // total
+        plan = min(desired, cap_ppm * avail_ // 1_000_000)
+        rate = plan * 1_000_000 // avail_ if avail_ > 0 else 0
+        epochs = desired * 1_000_000 // avail_ if avail_ > 0 else 0
+        rows.append(
+            (g, parts, avail_, desired, plan, plan < desired, rate, epochs,
+             desired - plan)
+        )
+    return sorted(rows)
+
+
+@pytest.mark.parametrize(
+    "corpus, weights",
+    [
+        (
+            "SELECT id AS doc_id, element_at(array('en', 'de', NULL), "
+            "int(id % 3) + 1) AS lang, IF(id % 5 = 0, NULL, id) AS n_tokens "
+            "FROM range(60)",
+            {"en": 50, "de": 30, "xx": 20},
+        ),
+        (
+            "SELECT id AS doc_id, int(id % 4) AS lang, id AS n_tokens FROM range(40)",
+            {"1": 3, "2": 1, "7": 1},
+        ),
+        ("SELECT 1L AS doc_id, 'en' AS lang, 5L AS n_tokens WHERE false",
+         {"en": 1, "de": 1}),
+    ],
+    ids=["null-groups-and-tokens", "int-groups", "empty-corpus"],
+)
+def test_mixture_plan_matches_weights_join(spark, corpus, weights):
+    df = spark.sql(corpus)
+    got = df.transform(
+        t("mixture_plan", group_col="lang", weights=weights,
+          budget_tokens=10_000, max_epochs_ppm=1_500_000)
+    )
+    want = _mixture_rows_weights_join(df, "lang", weights, 10_000, "n_tokens", 1_500_000)
+    assert sorted(map(tuple, got.collect())) == want
+    assert got.schema["lang"].dataType.simpleString() == "string"
+
+
+def test_mixture_plan_is_one_aggregate(spark):
+    """No Python-side weights table, no join, one output partition."""
+    df = spark.sql(
+        "SELECT id AS doc_id, element_at(array('en', 'de'), int(id % 2) + 1) AS lang, "
+        "id AS n_tokens FROM range(20)"
+    )
+    out = df.transform(
+        t("mixture_plan", group_col="lang", weights={"en": 2, "de": 1},
+          budget_tokens=100)
+    )
+    plan = _executed_plan(out)
+    assert "ExistingRDD" not in plan and "Join" not in plan
+    assert out.rdd.getNumPartitions() == 1
+
+
+# merge ranks out of order across partitions, with a NULL rank (Spark's
+# ascending order puts it first): rank order gives "abc" -> abc and
+# "bcd" -> b cd, while descending order would give a bc and bc d
+_SHUFFLED_MERGES = [(2, "ab", "c"), (1, "b", "c"), (0, "a", "b"), (None, "c", "d")]
+
+
+@pytest.mark.parametrize("op", ["bpe_encode", "bpe_byte_encode"])
+def test_bpe_merge_list_matches_ordered_collect(spark, monkeypatch, op):
+    from lakehouse_engine_spark.datapipes import bpe
+
+    merges = spark.createDataFrame(
+        [(r, a, b, a + b) for r, a, b in _SHUFFLED_MERGES],
+        "rank INT, left STRING, right STRING, merged STRING",
+    ).repartition(3)
+    docs = spark.createDataFrame(
+        [(1, "abc bcd"), (2, "cd ab"), (3, "")], "doc_id INT, text STRING"
+    )
+
+    def encode():
+        out = docs.transform(t(op, merges=merges))
+        return sorted(map(tuple, out.collect()), key=lambda r: r[0])
+
+    got = encode()
+    monkeypatch.setattr(
+        bpe,
+        "_merge_list",
+        lambda m: [(r["left"], r["right"]) for r in m.orderBy("rank").collect()],
+    )
+    assert got == encode()
+    end = ["</w>"] if op == "bpe_encode" else []
+    assert got[0][2] == ["abc"] + end + ["b", "cd"] + end
+
+
+# Spark jobs each curation op fires on the fixtures above, plan build and
+# collect together. The former plans fired 7, 3 and 6: an exchange for the
+# distinct benchmark grams and one for the (doc, gram) dropDuplicates; a
+# Python-list weights table joined to a broadcast groupBy; an orderBy of
+# the merge table (range sample, shuffle, collect)
+CURATION_JOBS = {
+    "text_decontaminate": 5,
+    "mixture_plan": 2,
+    "bpe_encode": 4,
+    "bpe_byte_encode": 4,
+}
+
+
+def test_curation_ops_fire_only_the_jobs_their_results_need(spark, decon_case):
+    docs, bench = decon_case
+    corpus = spark.sql(
+        "SELECT id AS doc_id, element_at(array('en', 'de', 'fr'), int(id % 3) + 1) "
+        "AS lang, id AS n_tokens FROM range(40)"
+    )
+    merges = spark.createDataFrame(
+        [(i, a, b, a + b) for i, (a, b) in enumerate([("a", "b"), ("ab", "c")])],
+        "rank INT, left STRING, right STRING, merged STRING",
+    )
+    runs = {
+        "text_decontaminate": lambda: docs.transform(
+            t("text_decontaminate", benchmark_df=bench, ngram=3)
+        ).collect(),
+        "mixture_plan": lambda: corpus.transform(
+            t("mixture_plan", group_col="lang", weights={"en": 5, "de": 3, "xx": 2},
+              budget_tokens=1000)
+        ).collect(),
+        "bpe_encode": lambda: docs.transform(t("bpe_encode", merges=merges)).collect(),
+        "bpe_byte_encode": lambda: docs.transform(
+            t("bpe_byte_encode", merges=merges)
+        ).collect(),
+    }
+    assert {op: _jobs_of(spark, run) for op, run in runs.items()} == CURATION_JOBS
