@@ -16,7 +16,10 @@ engine itself. Numeric design for cross-engine hash-matching:
 
 from __future__ import annotations
 
+import json
 import os
+import pathlib
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -3453,8 +3456,8 @@ def dp127_hilbert_layout(spark: SparkSession, sf: str) -> DataFrame:
     same minmax bucket arithmetic as dp103's z-order (shared helper),
     then the xy2d quadrant/rotate recursion unrolled one level per bit.
     All integer CASE arithmetic; the oracle replays the recursion as a
-    chain of per-level CTEs, bit for bit. See tools/scale_probes_r7.py
-    probe_hilbert_vs_zorder_spans for the measured file-skipping
+    chain of per-level CTEs, bit for bit. See tools/scale_probes.py
+    hilbert_vs_zorder_spans for the measured file-skipping
     comparison against the Morton key."""
     orders = load_table(spark, sf, "orders")
     out = orders.transform(
@@ -4899,8 +4902,8 @@ def q31_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     ACON-level knob for exactly this, measured in BASELINE.md (r12 knob
     study: 5.35 s un-persisted vs 3.84 s persisted at sf0.1, and the
     gap widens with corpus width); the 100k-doc probe
-    (tools/scale_probes_r9.py) quantified the un-persisted chain at
-    24.8 s, the sum of its stages.
+    (tools/scale_probes.py curation_pipeline_100k) quantified the
+    un-persisted chain at 24.8 s, the sum of its stages.
     """
     from lakehouse_engine_spark import load_data
 
@@ -5005,312 +5008,104 @@ def q31_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Queries whose CODE changed (or that are new) in the current round —
-# they must sit inside the driver window so the change gets a hard
-# driver signal. tests/test_entry_registry derives the expected window
-# from this constant + the CORRECTNESS history, so update it as part of
-# every rotation. Round 13: the four ADVICE fixes (NaN exclusion in
-# streaming_topk_score, the two-sided paragraph-key range guard, and —
-# pytest-only surfaces — UTC commit-log timestamps) plus the measured
-# q31/q33 persist splices; dp134 front-loads because its r12 code
-# change (validation branch + d>3 LAPACK arm) sat in the remainder
-# last round against the rotation policy (r12 ADVICE #4).
-WINDOW_RETOUCHED = (
-    # r14 optimization touches that carried only local ALL-MATCH evidence
-    # into r15 (the r14 verdict's rotation item): tiered dictionary
-    # attach + literal-map tier
-    "dp118_wordpiece_encode",
-    "dp125_unigram_encode",
-    # r14 construction de-chatter cohort (SQL-string expression builds;
-    # plans byte-identical modulo ids) + the winnow/layout batch
-    "dp06_dedup_minhash",
-    "dp07_dedup_ngram_jaccard",
-    "dp08_embedding_dedup",
-    "dp11_dedup_simhash",
-    "dp28_embedding_dedup_lsh",
-    "dp39_cross_corpus_dedup",
-    "dp40_cross_near_dedup",
-    "dp42_cross_embedding_dedup",
-    "dp91_lsh_bucket_stats",
-    "dp97_semantic_dedup",
-    "dp147_paragraph_dedup",
-    "dp138_winnow_fingerprint",
-    "dp141_winnow_overlap",
-    "dp148_winnow_cross",
-    "dp104_zorder_rank",
-    "dp127_hilbert_layout",
-    "dp103_zorder_layout",
-    "q31_curation_pipeline",
-    "q33_ccnet_curation",
-    # r15: driver-tier Lloyd k-means (bit-identical parity pinned)
-    "dp112_embedding_kmeans",
-    "dp113_cluster_stats",
-    "dp130_kmeans_hier",
-    "dp131_knn_ivf_hier",
-    "dp132_semantic_dedup_hier",
-    "dp133_prototype_prune",
-    # r14 construction de-chatter cohort (same evidence class)
-    "dp13_knn_ivf",
-    # r15: dedup-CC round-1 identity-label specialization
-    "dp20_dup_clusters",
-    "dp61_keep_best_dedup",
-    # r15: quality_prune top-word sorted-run rewrite
-    "dp34_quality_prune",
-    "dp49_curation_report",
-    # r15: dsir gram/bucket SQL-string build (plan byte-identical)
-    "dp115_dsir_score",
-    # r15: bm25 broadcast pin (probe job removed)
-    "dp83_bm25_topk",
-)
+# The driver's correctness gate checks the first DRIVER_WINDOW entries of
+# queries() each round, so their order is derived (driver_order) from
+# TOUCHED and the CORRECTNESS_r<NN>.json history of the rounds before ROUND.
+ROUND = 16
+DRIVER_WINDOW = 50
+
+# query -> the last round a change altered its optimized plan (at any size
+# tier) or its output on some input. A refactor that leaves the plan
+# identical does not count; a new query enters with its round. The table
+# starts at round 14: the round-13 touches the old rotation notes named
+# (dp134, dp147, dp150, q31, q33) were driver-checked in round 13 or later.
+TOUCHED = {
+    **dict.fromkeys(
+        (
+            "dp12_knn_lsh", "dp13_knn_ivf", "dp16_asof_join", "dp17_range_join",
+            "dp19_profile", "dp21_pii_redact", "dp30_asof_forward_tolerance",
+            "dp38_embedding_quantize", "dp41_quantile_prune",
+            "dp45_embedding_mean_pool", "dp46_token_budget_sample",
+            "dp47_line_dedup", "dp51_winsorize", "dp52_zscore_normalize",
+            "dp56_cohort_retention", "dp57_robust_scale", "dp71_trend_fit",
+            "dp75_snapshot_diff", "dp76_schema_drift", "dp80_asof_nearest",
+            "dp92_image_resize", "dp93_audio_resample", "dp98_ngram_counts",
+            "dp100_unimax_sample", "dp106_temperature_sample",
+            "dp108_corpus_overlap", "dp109_unicode_normalize",
+            "dp110_random_projection", "dp115_dsir_score", "dp116_pq_encode",
+            "dp117_knn_pq", "dp120_dup_line_stats", "dp122_pca_moments",
+            "dp123_frequent_terms", "dp129_group_quantile_prune",
+            "dp135_event_pattern", "dp138_winnow_fingerprint",
+            "dp140_correlation_matrix", "dp160_stream_quantile_prune",
+            "dp161_stream_winsorize",
+        ),
+        14,
+    ),
+    **dict.fromkeys(
+        (
+            "dp34_quality_prune", "dp49_curation_report", "dp83_bm25_topk",
+            "dp112_embedding_kmeans", "dp113_cluster_stats", "dp130_kmeans_hier",
+            "dp131_knn_ivf_hier", "dp132_semantic_dedup_hier",
+            "dp133_prototype_prune",
+        ),
+        15,
+    ),
+    **dict.fromkeys(
+        (
+            "dp20_dup_clusters", "dp23_decontaminate", "dp61_keep_best_dedup",
+            "dp69_bpe_tokenize", "dp69b_bpe_encode", "dp87_pagerank",
+            "dp102_decontaminate_bloom", "dp118_wordpiece_encode",
+            "dp119_decontaminate_spans", "dp121_graph_components",
+            "dp125_unigram_encode", "dp126_mixture_plan", "dp143_bottomk_sample",
+            "dp158_byte_bpe", "dp159_gpt2_bpe", "dp162_gpt2_bpe_train",
+            "q31_curation_pipeline", "q32_tokenize_pipeline",
+            "q34_tokenizer_fertility",
+        ),
+        16,
+    ),
+}
+
+
+def driver_order(names, touched, checked, window=DRIVER_WINDOW) -> list:
+    """``names`` in driver order. ``checked`` maps a query to its last
+    driver-checked round (absent: never checked). Retouched queries, whose
+    ``touched`` round is later than that, lead; when more than ``window``
+    are retouched, only the stalest ``window`` lead. The rest follow. Both
+    parts run stalest check first, ties by name."""
+
+    def stalest(q):
+        return (checked.get(q, 0), q)
+
+    lead = sorted(
+        (q for q in names if touched.get(q, 0) > checked.get(q, 0)), key=stalest
+    )[:window]
+    rest = sorted(set(names) - set(lead), key=stalest)
+    return lead + rest
+
+
+def driver_checked() -> dict:
+    """query -> the latest round below ``ROUND`` whose
+    ``CORRECTNESS_r<NN>.json`` beside this file (the working directory
+    when run without one) holds it."""
+    root = pathlib.Path(globals().get("__file__", "./_")).resolve().parent
+    last: dict = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        rnd = int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name).group(1))
+        if rnd < ROUND:
+            for q in json.loads(path.read_text()):
+                last[q] = max(last.get(q, 0), rnd)
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry ORDER is load-bearing: the driver's correctness gate checks
-    # the first 50 entries each round. Policy (round 13, continued r14):
-    # front-load WINDOW_RETOUCHED — the 5 new r14 queries, the bpe
-    # dictionary-encode path, the multimodal decode family touched by
-    # the streaming-gate refactor, and the 9 queries whose ops took r14
-    # review fixes (value-neutral ON TESTDATA, verified ALL MATCH, but
-    # behavior-changed on NULL/degenerate inputs) — then the entire
-    # remaining r09-stale cohort: 27 retouched (5 of them also r09
-    # members) + 23 r09 = 50 exactly; the r10 fills moved below the
-    # boundary (equal-staleness outside is allowed by the rotation
-    # rule). Value-neutral-by-construction changes (pack_sequences
-    # single-hash refactor, salted_join mapless default) are NOT
-    # retouched: dp29/dp60 keep their slots below. The second r14 review
-    # batch (multimodal/embeddings NaN+decode hygiene) also touched
-    # dp38/dp45/dp92/dp93/dp110/dp122 — the window cannot hold them AND
-    # the full r09 cohort (the r13 verdict's explicit done criterion),
-    # so they were value-verified via the committed check_oracle run
-    # (ALL MATCH) and LEAD the r15 window — as do the third-batch
-    # (ANN/graph review) touched queries dp12/dp13/dp112/dp116/dp117/
-    # dp130/dp131/dp87 and the fourth-batch (text review) queries
-    # dp21/dp23/dp34/dp47/dp98/dp102/dp108/dp109/dp115/dp119/dp120/
-    # dp123/dp138 and the fifth-batch (stats/layout review) queries
-    # dp19/dp51/dp52/dp57/dp135/dp140 (same ALL-MATCH evidence;
-    # dp56/dp71/dp75/dp76 of that batch are already in this window). The
-    # r14 optimization pass also touched the wordpiece/unigram encoders
-    # (tiered dictionary attach + the unigram literal-map tier):
-    # dp118/dp125 carry the same committed ALL-MATCH evidence (sf0.01
-    # AND sf0.1, tools/check_oracle.py) and join the r15-window lead
-    # list — the window cannot hold them and the full r09 cohort. The
-    # second r14 optimization batch (window-min CC rounds; dedup-CC
-    # propagation/label-carry fusion) touched dp121/dp20/dp61 — same
-    # committed ALL-MATCH evidence at sf0.01 AND sf0.1, same r15-lead
-    # queue (dp87, also touched by that batch, sits inside this window
-    # and gets its hard driver signal now). The third r14 optimization
-    # batch (construction de-chatter: SQL-string expression builds in
-    # datapipes/colbuild.py, value-identical operator for operator)
-    # touched dp06/dp07/dp08/dp11/dp13/dp20/dp28/dp39/dp40/dp42/dp61/
-    # dp91/dp97/dp131/dp132/dp133/dp147/q31/q33 — oracle ALL MATCH at
-    # sf0.01 (full set) and sf0.1 (dp07/dp08/dp20/dp28/dp42/dp97/
-    # dp131/dp132/q31), same r15-lead queue.
-    # Entries 51+ still get
-    # value-verified every round via tools/check_oracle.py; the window
-    # derivation is pinned by tests/test_entry_registry.py.
-    return {
-        "dp118_wordpiece_encode": dp118_wordpiece_encode,  # retouched r15
-        "dp125_unigram_encode": dp125_unigram_encode,  # retouched r15
-        "dp06_dedup_minhash": dp06_dedup_minhash,  # retouched r15
-        "dp07_dedup_ngram_jaccard": dp07_dedup_ngram_jaccard,  # retouched r15
-        "dp08_embedding_dedup": dp08_embedding_dedup,  # retouched r15
-        "dp11_dedup_simhash": dp11_dedup_simhash,  # retouched r15
-        "dp13_knn_ivf": dp13_knn_ivf,  # retouched r15
-        "dp20_dup_clusters": dp20_dup_clusters,  # retouched r15
-        "dp28_embedding_dedup_lsh": dp28_embedding_dedup_lsh,  # retouched r15
-        "dp39_cross_corpus_dedup": dp39_cross_corpus_dedup,  # retouched r15
-        "dp40_cross_near_dedup": dp40_cross_near_dedup,  # retouched r15
-        "dp42_cross_embedding_dedup": dp42_cross_embedding_dedup,  # retouched r15
-        "dp61_keep_best_dedup": dp61_keep_best_dedup,  # retouched r15
-        "dp91_lsh_bucket_stats": dp91_lsh_bucket_stats,  # retouched r15
-        "dp97_semantic_dedup": dp97_semantic_dedup,  # retouched r15
-        "dp131_knn_ivf_hier": dp131_knn_ivf_hier,  # retouched r15
-        "dp132_semantic_dedup_hier": dp132_semantic_dedup_hier,  # retouched r15
-        "dp133_prototype_prune": dp133_prototype_prune,  # retouched r15
-        "dp147_paragraph_dedup": dp147_paragraph_dedup,  # retouched r15
-        "q31_curation_pipeline": q31_curation_pipeline,  # retouched r15
-        "q33_ccnet_curation": q33_ccnet_curation,  # retouched r15
-        "dp138_winnow_fingerprint": dp138_winnow_fingerprint,  # retouched r15
-        "dp141_winnow_overlap": dp141_winnow_overlap,  # retouched r15
-        "dp148_winnow_cross": dp148_winnow_cross,  # retouched r15
-        "dp104_zorder_rank": dp104_zorder_rank,  # retouched r15
-        "dp127_hilbert_layout": dp127_hilbert_layout,  # retouched r15
-        "dp103_zorder_layout": dp103_zorder_layout,  # retouched r15
-        "dp112_embedding_kmeans": dp112_embedding_kmeans,  # retouched r15
-        "dp113_cluster_stats": dp113_cluster_stats,  # retouched r15
-        "dp130_kmeans_hier": dp130_kmeans_hier,  # retouched r15
-        "dp34_quality_prune": dp34_quality_prune,  # retouched r15
-        "dp49_curation_report": dp49_curation_report,  # retouched r15
-        "dp115_dsir_score": dp115_dsir_score,  # retouched r15
-        "dp83_bm25_topk": dp83_bm25_topk,  # retouched r15
-        "dp01_text_quality": dp01_text_quality,  # rotation r15 (last hard signal r10)
-        "dp02_langid": dp02_langid,  # rotation r15 (last hard signal r10)
-        "dp03_token_count": dp03_token_count,  # rotation r15 (last hard signal r10)
-        "dp04_fingerprint": dp04_fingerprint,  # rotation r15 (last hard signal r10)
-        "dp09_knn_brute": dp09_knn_brute,  # rotation r15 (last hard signal r10)
-        "dp102_decontaminate_bloom": dp102_decontaminate_bloom,  # rotation r15 (last hard signal r10)
-        "dp107_profile_skew": dp107_profile_skew,  # rotation r15 (last hard signal r10)
-        "dp109_unicode_normalize": dp109_unicode_normalize,  # rotation r15 (last hard signal r10)
-        "dp111_interval_overlap_join": dp111_interval_overlap_join,  # rotation r15 (last hard signal r10)
-        "dp14_hash_split": dp14_hash_split,  # rotation r15 (last hard signal r10)
-        "dp15_hash_sample": dp15_hash_sample,  # rotation r15 (last hard signal r10)
-        "dp18_sessionize": dp18_sessionize,  # rotation r15 (last hard signal r10)
-        "dp19_profile": dp19_profile,  # rotation r15 (last hard signal r10)
-        "dp68_json_props": dp68_json_props,  # rotation r15 (last hard signal r10)
-        "dp69_bpe_tokenize": dp69_bpe_tokenize,  # rotation r15 (last hard signal r10)
-        "dp92_image_resize": dp92_image_resize,  # rotation r15 (last hard signal r10)
-        # ---- driver window boundary (entry 50 = dp92_image_resize) ----
-        # --- remainder: value-verified via tools/check_oracle.py every
-        # --- round; ordered stalest-first ---
-        "dp93_audio_resample": dp93_audio_resample,  # last hard driver signal r10
-        "dp99_hash_embedding": dp99_hash_embedding,  # last hard driver signal r10
-        "q01_pricing_summary": q01_pricing_summary,  # last hard driver signal r10
-        "q03_latest_order_per_customer": q03_latest_order_per_customer,  # last hard driver signal r10
-        "q08_reconciliation": q08_reconciliation,  # last hard driver signal r10
-        "q09_flatten_explode": q09_flatten_explode,  # last hard driver signal r10
-        "q14_window_running": q14_window_running,  # last hard driver signal r10
-        "q17_gab_weekly_rollup": q17_gab_weekly_rollup,  # last hard driver signal r10
-        "q19_join_transformer": q19_join_transformer,  # last hard driver signal r10
-        "q29_gab_day_recon_recompute": q29_gab_day_recon_recompute,  # last hard driver signal r10
-        "dp135_event_pattern": dp135_event_pattern,  # last hard driver signal r11
-        "dp136_source_divergence": dp136_source_divergence,  # last hard driver signal r11
-        "dp137_ngram_novelty": dp137_ngram_novelty,  # last hard driver signal r11
-        "dp139_seed_classifier": dp139_seed_classifier,  # last hard driver signal r11
-        "dp140_correlation_matrix": dp140_correlation_matrix,  # last hard driver signal r11
-        "dp21_pii_redact": dp21_pii_redact,  # last hard driver signal r11
-        "dp22_repetition": dp22_repetition,  # last hard driver signal r11
-        "dp23_decontaminate": dp23_decontaminate,  # last hard driver signal r11
-        "dp24_vocab_top_k": dp24_vocab_top_k,  # last hard driver signal r11
-        "dp25_stratified_sample": dp25_stratified_sample,  # last hard driver signal r11
-        "dp26_mixture_sample": dp26_mixture_sample,  # last hard driver signal r11
-        "q02_revenue_by_segment": q02_revenue_by_segment,  # last hard driver signal r11
-        "q04_union_dedup": q04_union_dedup,  # last hard driver signal r11
-        "q05_incremental_filter": q05_incremental_filter,  # last hard driver signal r11
-        "q06_condense_cdc": q06_condense_cdc,  # last hard driver signal r11
-        "q07_dq_stats": q07_dq_stats,  # last hard driver signal r11
-        "q10_date_hierarchy": q10_date_hierarchy,  # last hard driver signal r11
-        "q11_hash_masker": q11_hash_masker,  # last hard driver signal r11
-        "q12_column_ops": q12_column_ops,  # last hard driver signal r11
-        "q13_get_max_value": q13_get_max_value,  # last hard driver signal r11
-        "q15_events_hourly": q15_events_hourly,  # last hard driver signal r11
-        "q16_events_dedup": q16_events_dedup,  # last hard driver signal r11
-        "q18_gab_monthly_rollup": q18_gab_monthly_rollup,  # last hard driver signal r11
-        "q20_union_by_name": q20_union_by_name,  # last hard driver signal r11
-        "q21_gab_quarterly_rollup": q21_gab_quarterly_rollup,  # last hard driver signal r11
-        "q22_gab_quarter_month_snapshot": q22_gab_quarter_month_snapshot,  # last hard driver signal r11
-        "dp108_corpus_overlap": dp108_corpus_overlap,  # last hard driver signal r12
-        "dp110_random_projection": dp110_random_projection,  # last hard driver signal r12
-        "dp114_gopher_rules": dp114_gopher_rules,  # last hard driver signal r12
-        "dp116_pq_encode": dp116_pq_encode,  # last hard driver signal r12
-        "dp117_knn_pq": dp117_knn_pq,  # last hard driver signal r12
-        "dp119_decontaminate_spans": dp119_decontaminate_spans,  # last hard driver signal r12
-        "dp120_dup_line_stats": dp120_dup_line_stats,  # last hard driver signal r12
-        "dp122_pca_moments": dp122_pca_moments,  # last hard driver signal r12
-        "dp123_frequent_terms": dp123_frequent_terms,  # last hard driver signal r12
-        "dp124_word_pmi": dp124_word_pmi,  # last hard driver signal r12
-        "dp126_mixture_plan": dp126_mixture_plan,  # last hard driver signal r12
-        "dp128_frequent_bigrams": dp128_frequent_bigrams,  # last hard driver signal r12
-        "dp12_knn_lsh": dp12_knn_lsh,  # last hard driver signal r12
-        "dp149_quality_buckets": dp149_quality_buckets,  # last hard driver signal r12
-        "dp151_char_entropy": dp151_char_entropy,  # last hard driver signal r12
-        "dp29_pack_sequences": dp29_pack_sequences,  # last hard driver signal r12
-        "dp31_sessionize_boundary": dp31_sessionize_boundary,  # last hard driver signal r12
-        "dp33_text_chunk": dp33_text_chunk,  # last hard driver signal r12
-        "dp35_lm_score": dp35_lm_score,  # last hard driver signal r12
-        "dp36_tfidf_top_terms": dp36_tfidf_top_terms,  # last hard driver signal r12
-        "dp37_global_shuffle": dp37_global_shuffle,  # last hard driver signal r12
-        "dp38_embedding_quantize": dp38_embedding_quantize,  # last hard driver signal r12
-        "dp44_lm_score_bigram": dp44_lm_score_bigram,  # last hard driver signal r12
-        "dp45_embedding_mean_pool": dp45_embedding_mean_pool,  # last hard driver signal r12
-        "dp47_line_dedup": dp47_line_dedup,  # last hard driver signal r12
-        "dp50_hopping_window": dp50_hopping_window,  # last hard driver signal r12
-        "dp51_winsorize": dp51_winsorize,  # last hard driver signal r12
-        "dp52_zscore_normalize": dp52_zscore_normalize,  # last hard driver signal r12
-        "dp53_weighted_sample": dp53_weighted_sample,  # last hard driver signal r12
-        "dp54_trailing_window": dp54_trailing_window,  # last hard driver signal r12
-        "dp55_funnel": dp55_funnel,  # last hard driver signal r12
-        "dp62_cluster_sample": dp62_cluster_sample,  # last hard driver signal r12
-        "dp05_dedup_exact": dp05_dedup_exact,  # last hard driver signal r13
-        "dp101_reservoir_quantiles": dp101_reservoir_quantiles,  # last hard driver signal r13
-        "dp105_stream_dedup_exact": dp105_stream_dedup_exact,  # last hard driver signal r13
-        "dp121_graph_components": dp121_graph_components,  # last hard driver signal r13
-        "dp134_linear_fit": dp134_linear_fit,  # last hard driver signal r13
-        "dp142_streaming_pattern": dp142_streaming_pattern,  # last hard driver signal r13
-        "dp143_bottomk_sample": dp143_bottomk_sample,  # last hard driver signal r13
-        "dp144_streaming_heavy_hitters": dp144_streaming_heavy_hitters,  # last hard driver signal r13
-        "dp145_streaming_funnel": dp145_streaming_funnel,  # last hard driver signal r13
-        "dp146_session_stats": dp146_session_stats,  # last hard driver signal r13
-        "dp150_streaming_topk": dp150_streaming_topk,  # last hard driver signal r13
-        "dp152_streaming_quality_buckets": dp152_streaming_quality_buckets,  # last hard driver signal r13
-        "dp153_c4_rules": dp153_c4_rules,  # last hard driver signal r13
-        "dp154_script_mix": dp154_script_mix,  # last hard driver signal r13
-        "dp155_knn_pq_refine": dp155_knn_pq_refine,  # last hard driver signal r13
-        "dp156_embedding_sanitize": dp156_embedding_sanitize,  # last hard driver signal r13
-        "dp157_knn_mmr": dp157_knn_mmr,  # last hard driver signal r13
-        "dp48_substring_dedup": dp48_substring_dedup,  # last hard driver signal r13
-        "dp56_cohort_retention": dp56_cohort_retention,  # last hard driver signal r13
-        "dp57_robust_scale": dp57_robust_scale,  # last hard driver signal r13
-        "dp58_quantile_summary": dp58_quantile_summary,  # last hard driver signal r13
-        "dp59_event_pivot": dp59_event_pivot,  # last hard driver signal r13
-        "dp60_salted_join": dp60_salted_join,  # last hard driver signal r13
-        "dp63_cdc_chunk": dp63_cdc_chunk,  # last hard driver signal r13
-        "dp64_ewma_anomaly": dp64_ewma_anomaly,  # last hard driver signal r13
-        "dp65_fuzzy_join": dp65_fuzzy_join,  # last hard driver signal r13
-        "dp94_running_totals": dp94_running_totals,  # last hard driver signal r13
-        "dp95_approx_distinct": dp95_approx_distinct,  # last hard driver signal r13
-        "dp98_ngram_counts": dp98_ngram_counts,  # last hard driver signal r13
-        "q30_gab_week_day_snapshot": q30_gab_week_day_snapshot,  # last hard driver signal r13
-        "dp100_unimax_sample": dp100_unimax_sample,  # last hard driver signal r14
-        "dp106_temperature_sample": dp106_temperature_sample,  # last hard driver signal r14
-        "dp10_multimodal_bytes": dp10_multimodal_bytes,  # last hard driver signal r14
-        "dp129_group_quantile_prune": dp129_group_quantile_prune,  # last hard driver signal r14
-        "dp158_byte_bpe": dp158_byte_bpe,  # last hard driver signal r14
-        "dp159_gpt2_bpe": dp159_gpt2_bpe,  # last hard driver signal r14
-        "dp160_stream_quantile_prune": dp160_stream_quantile_prune,  # last hard driver signal r14
-        "dp161_stream_winsorize": dp161_stream_winsorize,  # last hard driver signal r14
-        "dp162_gpt2_bpe_train": dp162_gpt2_bpe_train,  # last hard driver signal r14
-        "dp16_asof_join": dp16_asof_join,  # last hard driver signal r14
-        "dp17_range_join": dp17_range_join,  # last hard driver signal r14
-        "dp27_image_decode": dp27_image_decode,  # last hard driver signal r14
-        "dp30_asof_forward_tolerance": dp30_asof_forward_tolerance,  # last hard driver signal r14
-        "dp32_audio_decode": dp32_audio_decode,  # last hard driver signal r14
-        "dp41_quantile_prune": dp41_quantile_prune,  # last hard driver signal r14
-        "dp43_image_phash_dedup": dp43_image_phash_dedup,  # last hard driver signal r14
-        "dp46_token_budget_sample": dp46_token_budget_sample,  # last hard driver signal r14
-        "dp66_scd2_build": dp66_scd2_build,  # last hard driver signal r14
-        "dp67_merge_intervals": dp67_merge_intervals,  # last hard driver signal r14
-        "dp69b_bpe_encode": dp69b_bpe_encode,  # last hard driver signal r14
-        "dp70_video_frames": dp70_video_frames,  # last hard driver signal r14
-        "dp71_trend_fit": dp71_trend_fit,  # last hard driver signal r14
-        "dp72_histogram": dp72_histogram,  # last hard driver signal r14
-        "dp73_weighted_sample_k": dp73_weighted_sample_k,  # last hard driver signal r14
-        "dp74_lexical_diversity": dp74_lexical_diversity,  # last hard driver signal r14
-        "dp75_snapshot_diff": dp75_snapshot_diff,  # last hard driver signal r14
-        "dp76_schema_drift": dp76_schema_drift,  # last hard driver signal r14
-        "dp77_quality_model_filter": dp77_quality_model_filter,  # last hard driver signal r14
-        "dp78_event_transitions": dp78_event_transitions,  # last hard driver signal r14
-        "dp79_gap_fill": dp79_gap_fill,  # last hard driver signal r14
-        "dp80_asof_nearest": dp80_asof_nearest,  # last hard driver signal r14
-        "dp81_text_clean": dp81_text_clean,  # last hard driver signal r14
-        "dp82_url_normalize": dp82_url_normalize,  # last hard driver signal r14
-        "dp84_png_decode": dp84_png_decode,  # last hard driver signal r14
-        "dp85_jpeg_decode": dp85_jpeg_decode,  # last hard driver signal r14
-        "dp86_gif_decode": dp86_gif_decode,  # last hard driver signal r14
-        "dp87_pagerank": dp87_pagerank,  # last hard driver signal r14
-        "dp88_binary_decompress": dp88_binary_decompress,  # last hard driver signal r14
-        "dp89_sentence_split": dp89_sentence_split,  # last hard driver signal r14
-        "dp90_html_strip": dp90_html_strip,  # last hard driver signal r14
-        "dp96_g711_decode": dp96_g711_decode,  # last hard driver signal r14
-        "q23_rollup_grouping_sets": q23_rollup_grouping_sets,  # last hard driver signal r14
-        "q24_semi_anti_join": q24_semi_anti_join,  # last hard driver signal r14
-        "q25_scalar_subquery_avg": q25_scalar_subquery_avg,  # last hard driver signal r14
-        "q26_gab_daily_rollup": q26_gab_daily_rollup,  # last hard driver signal r14
-        "q27_gab_year_month_snapshot": q27_gab_year_month_snapshot,  # last hard driver signal r14
-        "q28_gab_weekly_sunday_rollup": q28_gab_weekly_sunday_rollup,  # last hard driver signal r14
-        "q32_tokenize_pipeline": q32_tokenize_pipeline,  # last hard driver signal r14
-        "q34_tokenizer_fertility": q34_tokenizer_fertility,  # last hard driver signal r14
-        "q35_multimodal_curation": q35_multimodal_curation,  # last hard driver signal r14
+    """Every ``q<N>_`` / ``dp<N>_`` function of this module, in driver
+    order."""
+    fns = {
+        name: fn
+        for name, fn in globals().items()
+        if re.match(r"(q|dp)\d+[a-z]?_", name)
     }
+    return {q: fns[q] for q in driver_order(fns, TOUCHED, driver_checked())}
 
 
 # --------------------------------------------------------------------------
@@ -7094,7 +6889,7 @@ def oracle_sql() -> dict[str, str]:
         "dp23_decontaminate": f"""
             WITH toks AS (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents),
             g AS (SELECT doc_id, unnest({_duck_shingles(8)}) AS g FROM toks),
-            bg AS (SELECT DISTINCT g FROM g WHERE doc_id % 50 = 0),
+            bg AS (SELECT DISTINCT g FROM g WHERE doc_id % 50 = 0 AND g <> ''),
             hits AS (
               SELECT dg.doc_id, COUNT(DISTINCT dg.g) AS n_hit
               FROM (SELECT DISTINCT doc_id, g FROM g) dg JOIN bg USING (g)
@@ -7114,7 +6909,7 @@ def oracle_sql() -> dict[str, str]:
                 (CAST('0x' || substr(md5(g), 1, 15) AS BIGINT)
                  + i * CAST('0x' || substr(md5(g || '#b2'), 1, 15) AS BIGINT))
                 % 65536 AS p
-              FROM (SELECT DISTINCT g FROM gr WHERE doc_id % 50 = 0) bg
+              FROM (SELECT DISTINCT g FROM gr WHERE doc_id % 50 = 0 AND g <> '') bg
               CROSS JOIN probes
             ),
             chunks AS (
@@ -7545,7 +7340,7 @@ def oracle_sql() -> dict[str, str]:
                 SELECT unnest({_duck_shingles(8)}) AS g
                 FROM (SELECT {_DUCK_TOKENS} AS w FROM documents
                       WHERE doc_id % 50 = 0)
-              )
+              ) WHERE g <> ''
             ),
             tcs AS (SELECT doc_id, {_DUCK_TOKENS_CS} AS w FROM documents),
             pos AS (

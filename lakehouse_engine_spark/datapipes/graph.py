@@ -73,7 +73,7 @@ def connected_components(
     rounds. The star transforms contract paths exponentially —
     O(log^2 n) rounds worst-case, 2-8 rounds in practice — so the same
     1M-node path converges in a handful of passes (see
-    tools/scale_probes_r7.py). Each half-round is ONE node-keyed
+    tools/scale_probes.py cc_path_1m). Each half-round is ONE node-keyed
     exchange feeding a window-min (r14: the earlier groupBy-min +
     join-back pair cost two exchanges plus a join per half-round for
     the identical per-row min — at scale the join was a sort-merge

@@ -58,6 +58,42 @@ def _guarded_group_totals(df: DataFrame, group_col: str, tok: Column, op: str):
     return rows
 
 
+def _tokens(token_col: Optional[str], input_col: str) -> Column:
+    """A row's token count: ``token_col``, or the whitespace words of
+    ``input_col``."""
+    if token_col:
+        return F.col(token_col)
+    return F.size(
+        F.filter(F.split(F.trim(F.col(input_col)), r"\s+"), lambda t: t != "")
+    )
+
+
+def _keep_below_thresholds(
+    df: DataFrame, group_col: str, thr_rows, id_col: str, seed: str
+) -> DataFrame:
+    """The rows of ``df`` whose stable hash bucket is below their group's
+    threshold: ``thr_rows`` are ``(group, threshold)`` pairs built on the
+    driver from at most ``MAX_MIX_GROUPS`` rows, so the table broadcasts,
+    and the NULL-safe join keeps a NULL group's rows. The keys keep the
+    group column's NATIVE dtype: a str(g) key joined against
+    cast-to-string disagrees for non-string types (Python 'True' vs
+    Spark 'true') and silently drops the whole group."""
+    thr_df = df.sparkSession.createDataFrame(
+        thr_rows,
+        T.StructType(
+            [
+                T.StructField("__g", df.schema[group_col].dataType, True),
+                T.StructField("__thr", T.LongType(), False),
+            ]
+        ),
+    )
+    return (
+        df.join(F.broadcast(thr_df), df[group_col].eqNullSafe(F.col("__g")))
+        .filter(_bucket(id_col, seed) < F.col("__thr"))
+        .drop("__g", "__thr")
+    )
+
+
 def _bucket_raw(id_col: str, seed: str) -> Column:
     """Full 60-bit md5-fold (no modulus) — the shared portable hash.
 
@@ -452,7 +488,6 @@ def unimax_sample(
     id_col: str = "doc_id",
     epochs: float = 1.0,
     seed: str = "",
-    broadcast_thresholds: bool = True,
 ) -> Callable[[DataFrame], DataFrame]:
     """UniMax language-balanced sampling (Chung et al. 2023,
     arXiv:2304.09151): split a TOTAL token budget across groups by
@@ -491,16 +526,7 @@ def unimax_sample(
     def _sample(df: DataFrame) -> DataFrame:
         import math
 
-        tok = (
-            F.col(token_col)
-            if token_col
-            else F.size(
-                F.filter(
-                    F.split(F.trim(F.col(input_col)), r"\s+"),
-                    lambda t: t != "",
-                )
-            )
-        )
+        tok = _tokens(token_col, input_col)
         totals = _guarded_group_totals(df, group_col, tok, "unimax_sample")
         stats = sorted(
             (
@@ -535,27 +561,7 @@ def unimax_sample(
             else:
                 thr = min(BUCKETS, alloc[g] * BUCKETS // tot)
             thr_rows.append((g, thr))
-        spark = df.sparkSession
-        # threshold keys keep the group column's NATIVE dtype: a str(g)
-        # key joined against cast-to-string disagrees for non-string
-        # types (Python 'True' vs Spark 'true') and silently drops the
-        # whole group (r14 review finding)
-        thr_df = spark.createDataFrame(
-            thr_rows,
-            T.StructType(
-                [
-                    T.StructField("__g", df.schema[group_col].dataType, True),
-                    T.StructField("__thr", T.LongType(), False),
-                ]
-            ),
-        )
-        if broadcast_thresholds:
-            thr_df = F.broadcast(thr_df)
-        return (
-            df.join(thr_df, df[group_col].eqNullSafe(F.col("__g")))
-            .filter(_bucket(id_col, seed) < F.col("__thr"))
-            .drop("__g", "__thr")
-        )
+        return _keep_below_thresholds(df, group_col, thr_rows, id_col, seed)
 
     return _sample
 
@@ -569,7 +575,6 @@ def temperature_sample(
     input_col: str = "text",
     id_col: str = "doc_id",
     seed: str = "",
-    broadcast_thresholds: bool = True,
 ) -> Callable[[DataFrame], DataFrame]:
     """Temperature-scaled mixture sampling (the T5/mT5 convention,
     arXiv:1910.10683 §3.3.1): group g's share of a total token budget is
@@ -609,16 +614,7 @@ def temperature_sample(
     def _sample(df: DataFrame) -> DataFrame:
         import math
 
-        tok = (
-            F.col(token_col)
-            if token_col
-            else F.size(
-                F.filter(
-                    F.split(F.trim(F.col(input_col)), r"\s+"),
-                    lambda t: t != "",
-                )
-            )
-        )
+        tok = _tokens(token_col, input_col)
         totals = _guarded_group_totals(
             df, group_col, tok, "temperature_sample"
         )
@@ -640,27 +636,7 @@ def temperature_sample(
                 alloc = budget_tokens * w // wsum if wsum else 0
                 thr = min(BUCKETS, alloc * BUCKETS // tot)
             thr_rows.append((g, thr))
-        spark = df.sparkSession
-        # threshold keys keep the group column's NATIVE dtype: a str(g)
-        # key joined against cast-to-string disagrees for non-string
-        # types (Python 'True' vs Spark 'true') and silently drops the
-        # whole group (r14 review finding)
-        thr_df = spark.createDataFrame(
-            thr_rows,
-            T.StructType(
-                [
-                    T.StructField("__g", df.schema[group_col].dataType, True),
-                    T.StructField("__thr", T.LongType(), False),
-                ]
-            ),
-        )
-        if broadcast_thresholds:
-            thr_df = F.broadcast(thr_df)
-        return (
-            df.join(thr_df, df[group_col].eqNullSafe(F.col("__g")))
-            .filter(_bucket(id_col, seed) < F.col("__thr"))
-            .drop("__g", "__thr")
-        )
+        return _keep_below_thresholds(df, group_col, thr_rows, id_col, seed)
 
     return _sample
 

@@ -720,8 +720,11 @@ def streaming_dedup_exact(
     a digest idle that long is evicted (a later duplicate re-admits — the
     standard boundedness/completeness trade; leave TTL off for
     replay-window streams where the checkpoint outlives the source
-    retention). Per-micro-batch worker memory is bounded by the rows of
-    ONE digest in that batch, not by state size.
+    retention). An armed timeout keeps Spark running no-data
+    micro-batches, so the streaming writer refuses it under an
+    ``availableNow`` or ``once`` trigger; run it under ``processingTime``.
+    Per-micro-batch worker memory is bounded by the rows of ONE digest in
+    that batch, not by state size.
     """
     cols_for_digest = list(key_cols) if key_cols else [input_col]
 

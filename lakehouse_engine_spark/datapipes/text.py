@@ -305,11 +305,21 @@ def _bench_gram_hashes(
     deduplicated: the decontamination ops probe it with a ``left_semi``
     join, which benchmark duplicates cannot multiply, so a ``distinct``
     would only add an exchange. Broadcast-hinted unless the caller shuffles
-    a giant benchmark."""
-    bench = benchmark_df.select(
-        F.explode(shingles(F.col(text_col), ngram)).alias("__g")
-    ).select(F.md5("__g").alias("__gh"))
+    a giant benchmark. The ``""`` gram of a NULL, empty or whitespace-only
+    benchmark row is dropped (:func:`_bench_grams`)."""
+    bench = _bench_grams(benchmark_df, text_col, ngram).select(
+        F.md5("__g").alias("__gh")
+    )
     return F.broadcast(bench) if broadcast_benchmark else bench
+
+
+def _bench_grams(benchmark_df: DataFrame, text_col: str, ngram: int) -> DataFrame:
+    """Every benchmark word ``ngram``-gram as ``__g``, without the ``""``
+    that :func:`shingles` gives a text with no words: that gram is no
+    benchmark content, and it would flag every empty corpus document."""
+    return benchmark_df.select(
+        F.explode(shingles(F.col(text_col), ngram)).alias("__g")
+    ).where(F.col("__g") != "")
 
 
 @register("text_decontaminate")
@@ -462,9 +472,7 @@ def decontaminate_bloom(
 
     def _bloom(df: DataFrame) -> DataFrame:
         bench_pos = (
-            benchmark_df.select(
-                F.explode(shingles(F.col(benchmark_text_col), ngram)).alias("__g")
-            )
+            _bench_grams(benchmark_df, benchmark_text_col, ngram)
             .select(F.explode(F.array(*_positions(F.col("__g")))).alias("__p"))
             .distinct()
         )

@@ -8,6 +8,7 @@ execution of micro-batch transformers, DQ processors and merges.
 
 from __future__ import annotations
 
+import re
 from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -166,6 +167,24 @@ def _trigger_kwargs(spec: OutputSpec) -> dict:
     return {}
 
 
+def _refuse_undrainable(df: DataFrame, spec: OutputSpec, trigger: dict) -> None:
+    """Raise before ``start()`` when a draining trigger (``availableNow``,
+    ``once``) meets a processing-time state timeout (``streaming_dedup_exact``
+    with ``ttl_minutes``): Spark keeps running no-data micro-batches for the
+    armed timeout after the input is drained, so the query never ends."""
+    draining = next((k for k in ("availableNow", "once") if trigger.get(k)), None)
+    if draining and re.search(
+        r"WithState\b[^\n]*\bProcessingTimeTimeout\b",
+        df._jdf.queryExecution().logical().toString(),
+    ):
+        raise ValueError(
+            f"streaming output '{spec.spec_id}': a processing-time state "
+            f"timeout (ProcessingTimeTimeout, e.g. ttl_minutes) never lets a "
+            f"{draining} trigger finish; use a processingTime trigger or "
+            "drop the timeout"
+        )
+
+
 def _output_mode(spec: OutputSpec) -> str:
     return {
         WriteType.COMPLETE.value: "complete",
@@ -195,6 +214,7 @@ def _write_streaming(
 ) -> Optional[DataFrame]:
     options = dict(spec.options or {})
     fmt = spec.data_format
+    _refuse_undrainable(df, spec, _trigger_kwargs(spec))
 
     if fmt == OutputFormat.SHAREPOINT.value:
         from lakehouse_engine_spark.core.definitions import NotSupportedException

@@ -1793,6 +1793,20 @@ def test_no_unset_broadcast_knobs_in_registered_ops():
     assert found == ["text_bm25_topk.broadcast_queries"]
 
 
+def test_driver_built_threshold_tables_take_no_broadcast_option():
+    """unimax/temperature thresholds come from at most MAX_MIX_GROUPS
+    driver rows and always broadcast, so the option is gone (a TypeError);
+    token_budget_sample's distributed table keeps it."""
+    from lakehouse_engine_spark.datapipes import sampling
+
+    for op in (sampling.unimax_sample, sampling.temperature_sample):
+        with pytest.raises(TypeError, match="broadcast_thresholds"):
+            op(budget_tokens=10, broadcast_thresholds=True)
+    sampling.token_budget_sample(
+        group_col="lang", token_col="n", budgets={}, broadcast_thresholds=False
+    )
+
+
 def test_cc_keep_best_selects_argmax(spark):
     """keep="best": each duplicate cluster keeps its argmax(best_by) member
     (ties -> smallest id); singletons always survive; invalid keep/best_by
@@ -6692,6 +6706,40 @@ def test_decontaminate_spans_ignores_benchmark_duplicates(spark):
     assert by_id[1][2:] == (["a b c", "d e f"], 4, 2)
     # "s p q" and "r s p" are benchmark grams only in the repeated item
     assert by_id[2][2:] == ([], 8, 0)
+
+
+def test_decontaminate_ignores_empty_benchmark_rows(spark):
+    """A NULL benchmark row gives no gram: the NULL, empty and
+    whitespace-only corpus documents stay clean under all three ops."""
+    bench = spark.createDataFrame(
+        [(1, "some benchmark question text"), (2, None)], "bid INT, text STRING"
+    )
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "some benchmark question text")],
+        "doc_id INT, text STRING",
+    )
+    flagged = docs.transform(
+        t("text_decontaminate", benchmark_df=bench, ngram=3)
+    ).collect()
+    assert {r["doc_id"]: r["n_contaminated_ngrams"] for r in flagged} == {
+        1: 0, 2: 0, 3: 0, 4: 2,
+    }
+    kept = docs.transform(
+        t("text_decontaminate", benchmark_df=bench, ngram=3, mode="drop")
+    )
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3]
+    bloom = docs.transform(
+        t("text_decontaminate_bloom", benchmark_df=bench, ngram=3)
+    ).collect()
+    assert {r["doc_id"]: r["maybe_contaminated"] for r in bloom} == {
+        1: False, 2: False, 3: False, 4: True,
+    }
+    spans = docs.transform(
+        t("text_decontaminate_spans", benchmark_df=bench, ngram=3)
+    ).collect()
+    assert {r["doc_id"]: r["n_removed_tokens"] for r in spans} == {
+        1: 0, 2: 0, 3: 0, 4: 4,
+    }
 
 
 def _mixture_rows_weights_join(df, group_col, weights, budget, token_col, cap_ppm):

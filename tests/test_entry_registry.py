@@ -25,18 +25,18 @@ def test_registry_consistency():
 
 
 def test_driver_window_holds_rotation_cohort():
-    """The 50-entry driver window must front-load (a) every query named
-    in entry.WINDOW_RETOUCHED — new or code-touched this round — and
-    (b) the queries whose last hard driver signal is the STALEST on the
-    board. Derived entirely from the registry's own WINDOW_RETOUCHED
-    constant plus the CORRECTNESS_r*.json history, so a rotation only
-    has to update WINDOW_RETOUCHED — per-round name pins can never go
-    stale again (the round-8 lesson). The newest CORRECTNESS file is
-    skipped only when its key set is EXACTLY the current first-50: that
-    file is the product of this very window (the driver writes it from
-    the registry order), not evidence the window should rotate; any
-    genuine partial rotation changes the set and the file counts as
-    history."""
+    """The 50-entry driver window must front-load (a) every retouched
+    query — one whose entry.TOUCHED round is later than its last hard
+    driver signal (the stalest 50 of them when more) — and (b) the queries
+    whose last hard driver signal is the STALEST on the board. Derived
+    here independently from entry.TOUCHED plus the CORRECTNESS_r*.json
+    history, so a rotation only has to update TOUCHED (and ROUND) —
+    per-round name pins can never go stale again (the round-8 lesson). The
+    newest CORRECTNESS file is skipped only when its key set is EXACTLY
+    the current first-50: that file is the product of this very window
+    (the driver writes it from the registry order), not evidence the
+    window should rotate; any genuine partial rotation changes the set and
+    the file counts as history."""
     import json
     import pathlib
     import re
@@ -45,10 +45,8 @@ def test_driver_window_holds_rotation_cohort():
     window = names[:50]
     wset = set(window)
     assert len(window) == 50 and len(wset) == 50
-    retouched = set(entry.WINDOW_RETOUCHED)
-    assert retouched <= set(names), sorted(retouched - set(names))
-    # (a) retouched queries are inside the window
-    assert retouched <= wset, sorted(retouched - wset)
+    touched = set(entry.TOUCHED)
+    assert touched <= set(names), sorted(touched - set(names))
 
     root = pathlib.Path(__file__).parent.parent
     files = sorted(
@@ -63,6 +61,14 @@ def test_driver_window_holds_rotation_cohort():
             continue  # this file was generated FROM the current window
         for k in keys:
             last[k] = max(last.get(k, 0), rnd)
+    # (a) retouched queries (the stalest 50 of them) are inside the window
+    retouched = set(
+        sorted(
+            (k for k in names if entry.TOUCHED.get(k, 0) > last.get(k, 0)),
+            key=lambda k: (last.get(k, 0), k),
+        )[:50]
+    )
+    assert retouched <= wset, sorted(retouched - wset)
     if not last:
         return  # round 1: no history yet, nothing to derive
     # new queries (never driver-checked) must be getting their first
@@ -81,8 +87,49 @@ def test_driver_window_holds_rotation_cohort():
         assert stale_out == [], (
             f"queries staler than the window boundary r{boundary:02d} were "
             f"rotated out: {stale_out} — rotate them in (or add them to "
-            "WINDOW_RETOUCHED if their code changed)"
+            "TOUCHED if their code changed)"
         )
+
+
+def test_driver_order_rule_on_a_synthetic_history():
+    """Retouched first, stalest check first, ties by name; the rest
+    stalest first; more retouched queries than the window: the stalest
+    ones lead and the others sort among the rest."""
+    names = ["a", "b", "c", "d", "e", "f", "g"]
+    checked = {"a": 3, "b": 1, "c": 2, "d": 2, "e": 1, "f": 3}  # g: never
+    touched = {"a": 4, "c": 3, "d": 2, "f": 5, "g": 4}
+    assert entry.driver_order(names, touched, checked, window=5) == [
+        "g", "c", "a", "f", "b", "e", "d",
+    ]
+    # overflow: four retouched, a window of two
+    assert entry.driver_order(names, touched, checked, window=2) == [
+        "g", "c", "b", "e", "d", "a", "f",
+    ]
+    # no history: retouched by name, then the rest by name
+    assert entry.driver_order(names, touched, {}, window=5) == [
+        "a", "c", "d", "f", "g", "b", "e",
+    ]
+    # a checked round at or after the touch is no retouch
+    assert entry.driver_order(["x", "y"], {"x": 2}, {"x": 2, "y": 1}) == ["y", "x"]
+
+
+def test_queries_are_the_module_query_functions():
+    """queries() holds no hand-kept list: its entries are exactly the
+    module's top-level ``q<N>_`` / ``dp<N>_`` functions."""
+    import ast
+    import pathlib
+    import re
+
+    tree = ast.parse(pathlib.Path(entry.__file__).read_text())
+    defined = {
+        node.name
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        and re.match(r"(q|dp)\d+[a-z]?_", node.name)
+    }
+    q = entry.queries()
+    assert set(q) == defined
+    assert all(q[name] is getattr(entry, name) for name in q)
 
 
 def test_every_query_has_a_committed_anchor():

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from lakehouse_engine_spark import load_data
 from lakehouse_engine_spark.algorithms.data_loader import DataLoader
 
@@ -1057,3 +1059,69 @@ def test_r13_screens_run_inside_the_streaming_plan(spark, tmp_dir):
     assert got[2]["n_lines_kept"] == 0 and not got[2]["c4_keep"]
     assert got[2]["script_dominant"] == "cyrillic"
     assert got[1]["script_dominant"] == "latin"
+
+
+@pytest.mark.parametrize("trigger", [{}, {"streaming_once": True}])
+def test_processing_time_timeout_refused_under_draining_trigger(spark, tmp_dir, trigger):
+    """A processing-time state timeout keeps Spark running no-data
+    micro-batches, so an availableNow (default) or once drain would never
+    end: the writer raises before start(), and starts no query."""
+    src = os.path.join(tmp_dir, "src")
+    _stage(spark, src, [(1, 1), (2, 1)])
+    acon = {
+        "input_specs": [
+            {
+                "spec_id": "s",
+                "data_format": "parquet",
+                "location": src,
+                "read_type": "streaming",
+                "schema": SCHEMA,
+            }
+        ],
+        "transform_specs": [
+            {
+                "spec_id": "t",
+                "input_id": "s",
+                "transformers": [
+                    {
+                        "function": "streaming_dedup_exact",
+                        "args": {"key_cols": ["k"], "id_col": "ver", "ttl_minutes": 5},
+                    }
+                ],
+            }
+        ],
+        "output_specs": [
+            {
+                "spec_id": "o",
+                "input_id": "t",
+                "data_format": "parquet",
+                "location": os.path.join(tmp_dir, "out"),
+                "options": {"checkpointLocation": os.path.join(tmp_dir, "ck")},
+                **trigger,
+            }
+        ],
+    }
+    active = len(spark.streams.active)
+    draining = "once" if trigger else "availableNow"
+    with pytest.raises(ValueError, match=rf"ProcessingTimeTimeout.*{draining} trigger"):
+        load_data(acon)
+    assert len(spark.streams.active) == active
+
+
+def test_processing_time_timeout_allowed_under_processing_time_trigger(spark, tmp_dir):
+    from lakehouse_engine_spark.core.definitions import OutputSpec, TransformerSpec
+    from lakehouse_engine_spark.io.writer_factory import _refuse_undrainable
+    from lakehouse_engine_spark.transformers.transformer_factory import (
+        TransformerFactory,
+    )
+
+    src = os.path.join(tmp_dir, "src")
+    _stage(spark, src, [(1, 1)])
+    op = TransformerFactory.get_transformer(
+        TransformerSpec("streaming_dedup_exact", {"key_cols": ["k"], "ttl_minutes": 5})
+    )
+    stream = spark.readStream.schema("k INT, ver INT").parquet(src).transform(op)
+    spec = OutputSpec(spec_id="o", input_id="t", data_format="parquet")
+    _refuse_undrainable(stream, spec, {"processingTime": "1 second"})
+    with pytest.raises(ValueError, match="availableNow"):
+        _refuse_undrainable(stream, spec, {"availableNow": True})
