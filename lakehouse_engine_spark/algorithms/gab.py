@@ -17,7 +17,9 @@ snapshots, GAB:
    40-dimension/40-metric insights table, and after the last run writes the
    whole queue as ONE DELETE+INSERT (:meth:`GAB._flush`); the table ends as
    the reference's DELETE+INSERT per run leaves it (reference
-   ``core/gab_sql_generator.py:87-184, 429-545``);
+   ``core/gab_sql_generator.py:87-184, 429-545``). The queue is not cached:
+   it is materialized once, and each run's delete bounds are observed on
+   that one action;
 5. creates a consumption view re-aliasing dims/metrics and computing
    configured calculated metrics (reference ``core/gab_sql_generator.py:187-426``).
 
@@ -48,11 +50,12 @@ from datetime import datetime, timedelta
 from functools import reduce
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.core.definitions import GABCadence, GABSpec
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.datapipes.materialize import probe_materialize
 from lakehouse_engine_spark.io.merge_writer import replace_where
 from lakehouse_engine_spark.utils.gab_utils import (
     ORDERED_CADENCES,
@@ -63,11 +66,29 @@ from lakehouse_engine_spark.utils.gab_utils import (
     reconciliation_cadences,
     render_template,
 )
+from lakehouse_engine_spark.utils.observation import observed_row
 
 logger = logging.getLogger(__name__)
 
 N_DIMENSIONS = 40  # d1..d40 + from_date/to_date (reference gab_sql_generator.py:159-184)
 N_METRICS = 40  # m1..m40
+
+# a flushed run's row count and the min/max of its from and to dates
+_BOUNDS = ("n", "f0", "f1", "t0", "t1")
+
+
+def _run_bounds(k: int) -> List[Column]:
+    """Run ``k``'s :data:`_BOUNDS`, named ``<bound>_<k>``, as aggregates over
+    the flushed union of every run's rows."""
+    run = F.col("__run") == k
+    from_date, to_date = F.when(run, F.col("from_date")), F.when(run, F.col("to_date"))
+    return [
+        agg.alias(f"{name}_{k}")
+        for name, agg in zip(_BOUNDS, [
+            F.count(F.when(run, F.lit(1))),
+            F.min(from_date), F.max(from_date), F.min(to_date), F.max(to_date),
+        ])
+    ]
 
 
 def _parse_config_column(value) -> dict:
@@ -481,20 +502,26 @@ class GAB:
         The table ends as a DELETE+INSERT per run, in queue order, leaves
         it. Run ``k``'s delete predicate is its ``query_id`` and cadence
         with the min/max bounds of its rows' from/to dates (reference
-        ``core/gab_sql_generator.py:429-545``): one aggregate, grouped by
-        run, gives every run's bounds. The target loses the rows that any
-        run's predicate matches; a queued row survives only if no LATER
-        run's predicate matches it, so overlapping windows (snapshot runs
-        of one cadence, WEEK recomputed at MONTH end) keep the last run's
-        rows. A run without bounds (no rows, or only NULL from dates) was
-        skipped, rows and all, once the table existed, and is here too; a
-        missing table is created from the queued rows.
+        ``core/gab_sql_generator.py:429-545``). The target loses the rows
+        that any run's predicate matches; a queued row survives only if no
+        LATER run's predicate matches it, so overlapping windows (snapshot
+        runs of one cadence, WEEK recomputed at MONTH end) keep the last
+        run's rows. A run without bounds (no rows, or only NULL from dates)
+        was skipped, rows and all, once the table existed, and is here too;
+        a missing table is created from the queued rows.
 
-        The queued rows are cached while the bounds and the write read
-        them. They are written in as many partitions as their estimated
-        size needs at ``spark.sql.files.maxPartitionBytes`` (at least one),
-        not one per partition of the union. One query computes every row,
-        so every row a flush writes carries the same ``lh_created_on``.
+        The queued rows are materialized once
+        (:func:`~lakehouse_engine_spark.datapipes.materialize.probe_materialize`),
+        and every run's row count and bounds are observed on that one
+        action; the write reads the materialized rows. When no observation
+        arrived (the rows were left unmaterialized under dynamic allocation
+        without a checkpoint dir, adaptive execution pruned the observed
+        subtree, or the wait for it timed out), the same aggregates run over
+        the rows as one query. The rows are written in as many partitions as
+        their estimated size needs at ``spark.sql.files.maxPartitionBytes``
+        (at least one), not one per partition of the union. One query
+        computes every row, so every row a flush writes carries the same
+        ``lh_created_on``.
         """
         if not queue:
             return
@@ -503,26 +530,22 @@ class GAB:
         union = reduce(
             DataFrame.unionByName,
             [fresh.withColumn("__run", F.lit(k)) for k, (_, fresh) in enumerate(queue)],
-        ).cache()
+        )
+        observation = Observation()
+        bounds_aggs = [agg for k in range(len(queue)) for agg in _run_bounds(k)]
+        observed = union.observe(observation, *bounds_aggs)
         try:
+            union = probe_materialize(observed)
+            row = observed_row(observation) if union is not observed else None
+            if row is None:
+                row = union.agg(*bounds_aggs).first().asDict()
+            bounds = [{name: row[f"{name}_{k}"] for name in _BOUNDS} for k in range(len(queue))]
             exists = spark.catalog.tableExists(target)
-            bounds = {
-                r["__run"]: r
-                for r in union.groupBy("__run")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("from_date").alias("f0"),
-                    F.max("from_date").alias("f1"),
-                    F.min("to_date").alias("t0"),
-                    F.max("to_date").alias("t1"),
-                )
-                .collect()
-            }
             preds: List[Tuple[int, str]] = []
             dropped: List[str] = []  # when a queued row is not written
             for k, (cadence, _) in enumerate(queue):
-                b = bounds.get(k)
-                if b is None or b["f0"] is None:
+                b = bounds[k]
+                if b["f0"] is None:
                     if exists or k:  # run 0 alone creates a missing table
                         dropped.append(f"__run = {k}")
                     continue
@@ -536,7 +559,7 @@ class GAB:
             delete_pred = " OR ".join(p for _, p in preds) if exists else "FALSE"
             dropped += [f"(__run < {k} AND {p})" for k, p in preds if k]
             rows = union.filter(f"NOT coalesce({' OR '.join(['FALSE'] + dropped)}, FALSE)")
-            n_rows = sum(b["n"] for b in bounds.values())
+            n_rows = sum(b["n"] for b in bounds)
             row_bytes = union._jdf.schema().defaultSize()
             max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
             rows = rows.drop("__run").coalesce(max(1, math.ceil(n_rows * row_bytes / max_bytes)))
@@ -545,7 +568,6 @@ class GAB:
                 data_format=ExecEnv.default_output_format(),
             )
         finally:
-            union.unpersist()
             queue.clear()
 
     # ------------------------------------------------- consumption views

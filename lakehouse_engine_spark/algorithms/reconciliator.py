@@ -19,7 +19,7 @@ queries read are dropped once the frames are built.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
@@ -34,6 +34,7 @@ from lakehouse_engine_spark.core.definitions import (
 from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io.reader_factory import ReaderFactory
 from lakehouse_engine_spark.utils.acon_utils import parse_input_spec
+from lakehouse_engine_spark.utils.schema_utils import free_name
 from lakehouse_engine_spark.utils.sql_parser import query_over
 
 EMPTY_DF_MSG = (
@@ -49,15 +50,6 @@ class ReconciliationType:
     PCT = "percentage"
     ABS = "absolute"
     ABS_ALIAS = "abs"
-
-
-def _free_name(base: str, taken: Iterable[str]) -> str:
-    """``base``, prefixed with underscores until no name in ``taken``
-    equals it case-insensitively."""
-    lowered = {c.lower() for c in taken}
-    while base.lower() in lowered:
-        base = "_" + base
-    return base
 
 
 class Reconciliator:
@@ -136,7 +128,7 @@ class Reconciliator:
             f"{side}_{c}" for side in ("truth", "current") for c in metric_cols
         ]
         truth_rows, current_rows = (
-            _free_name(n, taken) for n in ("__truth_rows", "__current_rows")
+            free_name(n, taken) for n in ("__truth_rows", "__current_rows")
         )
 
         def project(df: DataFrame, side: str, rows: str) -> DataFrame:

@@ -44,7 +44,6 @@ from __future__ import annotations
 import datetime
 import json
 import logging
-import time
 from contextlib import contextmanager
 from typing import Callable, List, NamedTuple, Optional, Tuple
 
@@ -61,6 +60,7 @@ from lakehouse_engine_spark.core.definitions import (
     WriteType,
 )
 from lakehouse_engine_spark.dq import expectations as E
+from lakehouse_engine_spark.utils.observation import observed_row
 
 _LOGGER = logging.getLogger(__name__)
 
@@ -107,9 +107,6 @@ _KNOWN_EXTRA_COLUMNS = {
 _UNIQUE = "expect_column_values_to_be_unique"
 # the per-key row count the observed uniqueness check reads
 _KEY_COUNT = "__dq_cnt"
-# observed metrics arrive through Spark's listener bus, just after
-# the action returns; past this wait the decision runs the pre-write pass
-OBSERVATION_WAIT_S = 30.0
 
 
 class _Suite(NamedTuple):
@@ -120,25 +117,6 @@ class _Suite(NamedTuple):
     row_fns: List[Tuple[DQFunctionSpec, object]]
     agg_fns: List[DQFunctionSpec]
     unique_col: Optional[str]
-
-
-def _observed_counts(observation: Observation) -> Optional[dict]:
-    """The observed counts, or None when they did not arrive with values.
-
-    Never ``Observation.get`` unchecked: it blocks for good on a plan that
-    never ran, and fails when adaptive execution pruned the observed
-    subtree of an empty source (its future holds an empty row)."""
-    future = observation._jo.future()
-    deadline = time.monotonic() + OBSERVATION_WAIT_S
-    while not future.isCompleted():
-        if time.monotonic() > deadline:
-            _LOGGER.warning("DQ observation did not arrive; running the suite's own pass")
-            return None
-        time.sleep(0.005)
-    done = future.value().get()
-    if done.isFailure() or done.get().length() == 0:
-        return None
-    return {k: int(v or 0) for k, v in observation.get.items()}
 
 
 class DQFactory:
@@ -278,9 +256,11 @@ class DQFactory:
             observed = observed.drop(_KEY_COUNT)
 
         def decide(ran: bool) -> None:
-            stats = _observed_counts(observation) if ran else None
-            if stats is None:
+            row = observed_row(observation) if ran else None
+            if row is None:
                 stats = cls._suite_stats(df, suite)
+            else:
+                stats = {k: int(v or 0) for k, v in row.items()}
             cls._finish(spark, spec, df, suite, stats)
 
         return observed, decide

@@ -36,6 +36,7 @@ from lakehouse_engine_spark.core.definitions import MergeOptions
 from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io.table_lock import WriterLock
 from lakehouse_engine_spark.utils import fs_utils
+from lakehouse_engine_spark.utils.schema_utils import free_name
 
 
 def merge(
@@ -280,9 +281,11 @@ def _store_assign(df, schema, keep_extra: bool = False):
 def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_format, check) -> None:
     """Join-based merge for non-Delta targets, through :func:`_rewrite`.
 
-    Packs each side into a struct column named after its merge alias so the
-    user's ``current.x = new.y`` predicates evaluate unchanged as struct-field
-    accesses. Store assignment follows Delta: the target's declared schema
+    Joins the target aliased ``current`` to the source aliased ``new``, so
+    the user's ``current.x = new.y`` predicates resolve unchanged as
+    qualified columns and the join keys are the sides' own columns: a source
+    already hash-partitioned on them (a condensed CDC batch) is not shuffled
+    again. Store assignment follows Delta: the target's declared schema
     (the table itself, or the catalog table registered at a path target)
     casts the incoming frame before merging, so e.g. a CSV batch whose
     inferSchema disagrees with the DDL lands with the declared types.
@@ -460,20 +463,23 @@ def _prepare_merge(spark, target, df, opts: MergeOptions):
 def _merged(target, df, opts: MergeOptions, src_cols) -> DataFrame:
     """The merge result as ONE filter + projection over the full outer join.
 
-    Each joined row is target-only (``new`` is null), source-only
-    (``current`` is null) or matched. ``keep`` applies Delta's clause
-    semantics — a NULL condition never fires: a matched row is dropped only
-    when the delete condition is true (insert-only keeps every matched row),
-    a source-only row is admitted only when the insert condition is true.
-    Each output column then picks the current value, the insert value or,
-    when the update condition is true, the update value."""
+    Each joined row is target-only (the ``new`` side's marker is null),
+    source-only (the ``current`` side's marker is null) or matched. ``keep``
+    applies Delta's clause semantics — a NULL condition never fires: a
+    matched row is dropped only when the delete condition is true
+    (insert-only keeps every matched row), a source-only row is admitted only
+    when the insert condition is true. Each output column then picks the
+    current value, the insert value or, when the update condition is true,
+    the update value."""
     cols = target.columns
-    cur = target.select(F.struct(*cols).alias("current"))
-    new = df.select(F.struct(*df.columns).alias("new"))
+    # one marker per side, NULL on the rows the full outer join pads
+    marker = free_name("_merge_side", cols + df.columns)
+    cur = target.withColumn(marker, F.lit(True)).alias("current")
+    new = df.withColumn(marker, F.lit(True)).alias("new")
     joined = cur.join(new, on=F.expr(opts.merge_predicate), how="full_outer")
 
-    target_only = F.col("new").isNull()
-    source_only = F.col("current").isNull()
+    target_only = F.col(f"new.{marker}").isNull()
+    source_only = F.col(f"current.{marker}").isNull()
 
     def _fires(pred):
         return F.coalesce(F.expr(pred), F.lit(False)) if pred else F.lit(True)

@@ -9,11 +9,20 @@ into the scan's ReadSchema (column pruning still applies).
 from __future__ import annotations
 
 import json
-from typing import List, Optional
+from typing import Iterable, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
+
+
+def free_name(base: str, taken: Iterable[str]) -> str:
+    """``base``, prefixed with underscores until no name in ``taken``
+    equals it case-insensitively."""
+    lowered = {c.lower() for c in taken}
+    while base.lower() in lowered:
+        base = "_" + base
+    return base
 
 
 def schema_from_dict(schema) -> StructType:

@@ -573,17 +573,34 @@ def test_observed_suite_matches_the_pre_write_pass(spark, tmp_dir, monkeypatch, 
     assert _element_counts(obs[2]) == {_CDC_CONDENSED_ROWS}
 
 
-def test_observed_suite_on_an_all_excluded_batch(spark, tmp_dir, monkeypatch):
+def _assert_all_excluded_batch(spark, tmp_dir, monkeypatch, case, dq, passes):
     """Every key's newest image is excluded, so the merge's source is
-    empty and adaptive execution prunes the observed subtree: the decision
-    runs the suite's own pass and reports 0 elements."""
+    empty: both paths leave the target as it was and report 0 elements,
+    the observed one after ``passes`` passes of the suite's own."""
     batch = [(k, 2, "X", 5) for k in range(4)]
-    out = _load_both_ways(spark, tmp_dir, monkeypatch, "excluded", batch, _PASSING)
+    out = _load_both_ways(spark, tmp_dir, monkeypatch, case, batch, dq)
     pre, obs = out["pre_write"], out["observed"]
     assert pre[:4] == obs[:4]
     assert obs[0] is None and obs[1] == sorted(_CDC_TARGET, key=str) and not obs[3]
-    assert (pre[4], obs[4]) == (1, 1)
+    assert (pre[4], obs[4]) == (1, passes)
     assert _element_counts(obs[2]) == {0}
+
+
+def test_observed_suite_on_an_all_excluded_batch(spark, tmp_dir, monkeypatch):
+    """Unique on the condensed key, the observed rows feed the merge join
+    with no shuffle between, so the empty source is seen in the join's own
+    stage and the observation arrives: the decision reads it."""
+    _assert_all_excluded_batch(spark, tmp_dir, monkeypatch, "excluded", _PASSING, 0)
+
+
+def test_pruned_observation_runs_the_suites_own_pass(spark, tmp_dir, monkeypatch):
+    """Unique on a column the condense does not partition by, the observed
+    rows sit below the merge's shuffle on the merge key: adaptive execution
+    drops that empty stage from the final plan, its observation with it,
+    and the decision runs the suite's own pass."""
+    dq = {"dq_functions": [_IN_SET, ("expect_column_values_to_be_unique",
+                                     {"column": "change_seq"})]}
+    _assert_all_excluded_batch(spark, tmp_dir, monkeypatch, "pruned", dq, 1)
 
 
 @pytest.mark.parametrize("suite, fails", [(_PASSING, False),
@@ -613,8 +630,8 @@ def test_suite_feeding_a_later_output_runs_before_the_writes(spark, tmp_dir, mon
 
 
 # jobs of the CDC-shaped load below: the batch read's parquet schema job and
-# the merge's own 4; a suite pass of its own before the merge fired 3 more
-CDC_LOAD_JOBS = 5
+# the merge's own 3; a suite pass of its own before the merge fired 3 more
+CDC_LOAD_JOBS = 4
 
 
 def test_observed_suite_adds_no_job_to_the_merge(spark, tmp_dir):

@@ -454,11 +454,10 @@ _EDGE_RUNS = [
 ]
 
 
-@pytest.mark.parametrize("order", [[0, 1, 2, 3, 4], [3, 0, 2, 1], [2, 3, 0]])
-@pytest.mark.parametrize("seeded", [False, True])
-def test_flush_matches_per_run_chain_on_edge_runs(spark, order, seeded):
-    """The flush against the per-run chain on crafted runs, into a missing
-    and into an existing table."""
+def _flush_vs_per_run(spark, runs, seeded):
+    """The table the flush leaves from ``runs``, ``[(cadence, rows)]``, and
+    the one the per-run chain leaves, each as sorted rows; the table is
+    missing before, or holds a few rows overlapping the runs (``seeded``)."""
     got = {}
     for path in ("flush", "per_run"):
         table = f"flush_edge_{path}"
@@ -469,10 +468,7 @@ def test_flush_matches_per_run_chain_on_edge_runs(spark, order, seeded):
         gab = GAB.__new__(GAB)
         gab.spark = spark
         gab.spec = SimpleNamespace(target_database="default", target_table=table)
-        queue = [
-            (_EDGE_RUNS[k][0], spark.createDataFrame(_EDGE_RUNS[k][1], _EDGE_DDL))
-            for k in order
-        ]
+        queue = [(cadence, spark.createDataFrame(rows, _EDGE_DDL)) for cadence, rows in runs]
         if path == "flush":
             gab._flush({"query_id": "q"}, queue)
         else:
@@ -480,7 +476,43 @@ def test_flush_matches_per_run_chain_on_edge_runs(spark, order, seeded):
                 _delete_insert(gab, {"query_id": "q"}, cadence, fresh)
         got[path] = sorted((tuple(r) for r in spark.table(table).collect()), key=repr)
         spark.sql(f"DROP TABLE default.{table}")
-    assert got["flush"] == got["per_run"]
+    return got["flush"], got["per_run"]
+
+
+@pytest.mark.parametrize("order", [[0, 1, 2, 3, 4], [3, 0, 2, 1], [2, 3, 0]])
+@pytest.mark.parametrize("seeded", [False, True])
+def test_flush_matches_per_run_chain_on_edge_runs(spark, order, seeded):
+    """The flush against the per-run chain on crafted runs, into a missing
+    and into an existing table."""
+    flushed, per_run = _flush_vs_per_run(spark, [_EDGE_RUNS[k] for k in order], seeded)
+    assert flushed == per_run
+
+
+@pytest.mark.parametrize("seeded", [False, True])
+def test_flush_of_empty_runs_matches_per_run_chain(spark, seeded):
+    """A queue whose runs are all empty: a missing table is created empty,
+    an existing one is left as it was."""
+    flushed, per_run = _flush_vs_per_run(spark, [("DAY", []), ("MONTH", []), ("WEEK", [])], seeded)
+    assert flushed == per_run and bool(flushed) == seeded
+
+
+@pytest.mark.parametrize("seeded", [False, True])
+def test_unmaterialized_flush_matches_per_run_chain(spark, monkeypatch, seeded):
+    """Under dynamic allocation without a checkpoint dir the queued rows
+    are not materialized, so no action ran the observation: the flush
+    computes the bounds with its own aggregate and never waits for it."""
+    from lakehouse_engine_spark.algorithms import gab as gab_module
+    from lakehouse_engine_spark.datapipes import materialize
+
+    monkeypatch.setattr(materialize, "dyn_alloc_enabled", lambda spark: True)
+    monkeypatch.setattr(materialize, "has_checkpoint_dir", lambda spark: False)
+
+    def no_wait(_observation):
+        raise AssertionError("read an observation no action ran")
+
+    monkeypatch.setattr(gab_module, "observed_row", no_wait)
+    flushed, per_run = _flush_vs_per_run(spark, _EDGE_RUNS, seeded)
+    assert flushed == per_run
 
 
 def _assert_barrier_sees_earlier_runs(spark, gab_env, label, query_id):
@@ -544,10 +576,12 @@ def test_failed_flush_leaks_no_cache_and_keeps_target(spark, gab_env, monkeypatc
 
 
 # jobs a warm five-cadence refresh of the fixture fires with one flush: the
-# lookup collect, the bounds aggregate (adaptive execution runs each
-# shuffle stage of the six runs' rows as its own job) and one rewrite. A
+# lookup collect, one rewrite and the one materialization of the six runs'
+# rows, which observes their bounds: adaptive execution runs each shuffle
+# stage of the runs (the aggregates, the WEEK calendar's distinct and its
+# broadcast) as its own job, then one job materializes the rows. A
 # DELETE+INSERT per cadence run fires 25
-FLUSH_REFRESH_JOBS = 12
+FLUSH_REFRESH_JOBS = 10
 
 
 def test_refresh_rewrites_insights_once(spark, gab_env):

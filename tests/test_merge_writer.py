@@ -790,6 +790,48 @@ def test_single_pass_two_source_rows_matching_one_target_row(spark, merge_inputs
     assert [r for r in rows if r[0] == 1] == [(1, "first", 11), (1, "second", 12)]
 
 
+def test_single_pass_self_merge_matches_clause_oracle(spark, tmp_dir):
+    """A source derived from the target table itself: both join sides carry
+    the same relation's columns, told apart by the ``current`` and ``new``
+    aliases alone."""
+    path = os.path.join(tmp_dir, "self")
+    spark.createDataFrame(_TARGET_ROWS, "id INT, tag STRING, val INT").write.parquet(path)
+    target = spark.read.parquet(path)
+    # ids 2 and 4 match, 6 is source-only
+    source = target.filter("id % 2 = 1").selectExpr(
+        "id + 1 AS id", "upper(tag) AS tag", "val * 2 AS val"
+    )
+    rows = _assert_single_pass_matches_clause_oracle(
+        spark, target, source,
+        update_predicate="current.val < new.val OR current.val IS NULL",
+        delete_predicate="new.tag = 'C'",
+    )
+    assert (2, "A", 20) in rows and (4, None, 40) not in rows and (6, "E", 100) in rows
+
+
+@pytest.mark.parametrize("evolve", [False, True], ids=["extra_column", "evolved_column"])
+def test_single_pass_marker_name_collision_matches_clause_oracle(
+    spark, merge_inputs, request, evolve
+):
+    """A source column named like the side marker (any case), holding NULLs:
+    the marker takes another name, so no matched row reads as source-only.
+    With schema evolution the column reaches the target side too."""
+    if evolve:
+        request.getfixturevalue("auto_merge")
+    rows = _assert_single_pass_matches_clause_oracle(
+        spark,
+        merge_inputs[0],
+        _frame(
+            spark,
+            [(1, "A", 11, None), (3, "C", 31, None), (9, "I", 90, None)],
+            "id INT, tag STRING, val INT, _Merge_Side BOOLEAN",
+        ),
+        update_predicate="current.val < new.val",
+    )
+    updated = [r for r in rows if r[0] in (1, 3, 9)]
+    assert [r[:3] for r in updated] == [(1, "A", 11), (3, "C", 31), (9, "I", 90)]
+
+
 def _plan_nodes(frame, name):
     import re
 
