@@ -550,7 +550,7 @@ def dp10_multimodal_bytes(spark: SparkSession, sf: str) -> DataFrame:
     """Binary-column plumbing: pack text as payload, Arrow-batched feature
     extraction; byte counts are the portable check."""
     docs = load_table(spark, sf, "documents")
-    out = docs.transform(_t("multimodal_pack", payload_col="text", id_col="doc_id")).transform(
+    out = docs.transform(_t("multimodal_pack", payload_col="text")).transform(
         _t("multimodal_feature_extract", id_col="doc_id", feature_dim=4)
     )
     return out.selectExpr("id AS doc_id", "n_bytes")

@@ -429,29 +429,6 @@ class TerminatorSpec:
     args: dict = field(default_factory=dict)
 
 
-@dataclass
-class ReconciliatorSpec:
-    """Reconciliation spec (reference ``core/definitions.py:995-1039``)."""
-
-    metrics: List[dict]
-    truth_input_spec: InputSpec
-    current_input_spec: InputSpec
-    truth_preprocess_query: Optional[str] = None
-    truth_preprocess_query_args: Optional[List[dict]] = None
-    current_preprocess_query: Optional[str] = None
-    current_preprocess_query_args: Optional[List[dict]] = None
-    ignore_empty_df: bool = False
-
-
-@dataclass
-class DQValidatorSpec:
-    """DQ-at-rest spec (reference ``core/definitions.py:1043-1056``)."""
-
-    input_spec: InputSpec
-    dq_spec: DQSpec
-    restore_prev_version: bool = False
-
-
 class SensorStatus(str, Enum):
     """Sensor states (reference ``core/definitions.py:1073-1080``)."""
 

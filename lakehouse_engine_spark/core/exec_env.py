@@ -55,8 +55,8 @@ class ExecEnv:
         # bounds per-batch Python memory for binary decode stages at any
         # scale — the knob that lets the multimodal family run map-only
         # on the scan partitioning instead of probe+repartition (see
-        # datapipes/multimodal._byte_budget_src). 128 MB = the family's
-        # documented per-stage decode budget.
+        # the datapipes/multimodal module docstring). 128 MB = the
+        # family's documented per-stage decode budget.
         "spark.sql.execution.arrow.maxBytesPerBatch": str(128 * 1024 * 1024),
         "spark.sql.session.timeZone": "UTC",
         # Don't error on legacy datetime rebasing in parquet.

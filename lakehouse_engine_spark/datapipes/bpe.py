@@ -31,8 +31,8 @@ table, not the corpus:
   Python: they share one plan, :func:`_dictionary_encode`, which encodes
   the DISTINCT words only and attaches the word→pieces dictionary by its
   size — a literal map, driver-encoded broadcast rows, or a pandas encode
-  joined back by broadcast or, above ``_BROADCAST_THRESHOLD_ROWS`` words,
-  by shuffle — then reassembles per document with JVM array functions.
+  joined back by broadcast or, above ``driver_tier.BROADCAST_MAX_ROWS``
+  words, by shuffle — then reassembles per document with JVM array functions.
 """
 
 from __future__ import annotations
@@ -44,7 +44,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from lakehouse_engine_spark.datapipes.driver_tier import bounded_collect
+from lakehouse_engine_spark.datapipes.driver_tier import (
+    bounded_collect,
+    fits_broadcast,
+)
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
     probe_materialize,
@@ -394,8 +397,8 @@ def bpe_encode(
     :func:`_dictionary_encode`, and JVM-side per-document reassembly —
     Python never sees corpus-scale data. The dictionary is *distinct
     word types*, which on 100 TB of web text (typos, URLs, code) can
-    reach 10⁸–10⁹ rows, so above ``_BROADCAST_THRESHOLD_ROWS`` words the
-    encode join runs as a shuffle join on ``__w`` instead of a broadcast.
+    reach 10⁸–10⁹ rows, so above ``driver_tier.BROADCAST_MAX_ROWS`` words
+    the encode join runs as a shuffle join on ``__w`` instead of a broadcast.
     """
 
     def _make():
@@ -419,12 +422,11 @@ register_with("bpe_encode_with", bpe_encode, "merges_id", "merges")
 # ``_DRIVER_ENCODE_THRESHOLD_ROWS`` the pieces are computed on the DRIVER
 # (the merge list already lives there) and broadcast as plain rows — no
 # ArrowEvalPython inside a BroadcastExchange, no probe materialization,
-# no count job. Under ``_BROADCAST_THRESHOLD_ROWS`` the pandas-encoded
-# dictionary is broadcast; above it the join shuffles on ``__w``. All
-# three are dictionary-sized gates, corpus-size independent.
+# no count job. Above it the pandas-encoded dictionary is broadcast while
+# :func:`driver_tier.fits_broadcast` passes; beyond that the join shuffles
+# on ``__w``. All three are dictionary-sized gates, corpus-size independent.
 _LITERAL_MAP_THRESHOLD_ROWS = 256
 _DRIVER_ENCODE_THRESHOLD_ROWS = 200_000
-_BROADCAST_THRESHOLD_ROWS = 2_000_000
 _PIECES = "array<string>"
 
 
@@ -456,7 +458,7 @@ def _dictionary_encode(
        reassembly shuffle, no Python stage.
     2. ≤ ``_DRIVER_ENCODE_THRESHOLD_ROWS``: driver-encoded rows,
        broadcast join + per-doc reassembly.
-    3. ≤ ``_BROADCAST_THRESHOLD_ROWS``: distributed pandas encode,
+    3. ≤ ``driver_tier.BROADCAST_MAX_ROWS``: distributed pandas encode,
        broadcast join.
     4. else: distributed pandas encode, shuffle join on ``__w``.
 
@@ -548,7 +550,7 @@ def _dictionary_encode(
             enc = F.pandas_udf(_enc_fn, f"struct<{fields}>")(F.col("__w"))
             words = probe_materialize(distinct_words)
             dictionary = words.select("__w", *[enc[n].alias(n) for n in names])
-            if words.count() <= _BROADCAST_THRESHOLD_ROWS:
+            if fits_broadcast(words):
                 dictionary = F.broadcast(dictionary)
         exploded = with_words.select(
             F.col(id_col).alias("__id"),

@@ -204,7 +204,6 @@ def dedup_cross_exact(
     normalize: bool = True,
     mode: str = "drop",  # drop | flag
     flag_col: str = "in_reference",
-    broadcast_other: bool = False,
 ) -> TransformerFn:
     """Cross-corpus exact dedup: remove (or flag) rows whose content key
     already exists in a REFERENCE corpus — dedup against a previous
@@ -216,10 +215,8 @@ def dedup_cross_exact(
     (32-char strings, not full rows/texts), then a LEFT ANTI (or left) hash
     join on the digest — Spark's anti join never materializes matches, and
     the digest projection means the shuffle carries 32 bytes per reference
-    row regardless of document size. ``broadcast_other=True`` skips the
-    corpus-side shuffle entirely when the reference fits an executor
-    (typical for decontamination-style reference lists); with AQE on, a
-    small digest side auto-broadcasts anyway.
+    row regardless of document size. With AQE on, a small digest side
+    auto-broadcasts.
     """
     other_keys = list(other_key_cols or key_cols)
     if len(other_keys) != len(key_cols):
@@ -238,8 +235,6 @@ def dedup_cross_exact(
 
     def _dedup(df: DataFrame) -> DataFrame:
         ref = other_df.select(_digest(other_keys).alias("__kh")).distinct()
-        if broadcast_other:
-            ref = F.broadcast(ref)
         keyed = df.withColumn("__kh", _digest(list(key_cols)))
         if mode == "drop":
             return keyed.join(ref, "__kh", "left_anti").drop("__kh")
@@ -265,7 +260,6 @@ def dedup_cross_minhash(
     shingle_size: int = 3,
     mode: str = "drop",  # drop | flag
     flag_col: str = "near_reference",
-    broadcast_other: bool = False,
 ) -> TransformerFn:
     """Cross-corpus NEAR-duplicate removal: drop (or flag) documents whose
     MinHash band buckets collide with a REFERENCE corpus — the fuzzy
@@ -280,8 +274,7 @@ def dedup_cross_minhash(
     SEMI joins its own band hashes against that set, then distinct-ids the
     hits. Both joins carry only (id, digest) pairs; the md5-heavy signature
     pipeline runs once per side in codegen row space with map-side-combined
-    minima. ``broadcast_other=True`` makes the probe shuffle-free on the
-    corpus side when the reference bucket set fits an executor.
+    minima.
     """
     _validate_banding("dedup_cross_minhash", num_hashes, bands)
     rows = num_hashes // bands
@@ -291,8 +284,6 @@ def dedup_cross_minhash(
         o_id = other_id_col or id_col
         ref_sig = _minhash_sig_df(other_df, o_text, o_id, num_hashes, shingle_size)
         ref_buckets = _band_exploded(ref_sig, bands, rows).select("__h").distinct()
-        if broadcast_other:
-            ref_buckets = F.broadcast(ref_buckets)
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
         hits = (
             _band_exploded(sig, bands, rows)
@@ -537,27 +528,6 @@ def _band_exploded(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:
     ]
     return sig_df.select(
         "__id", F.expr(f"explode(array({', '.join(band_cols)})) as __h")
-    )
-
-
-def band_hashes(sig: Column, bands: int, rows: int) -> Column:
-    """Hash each band (contiguous ``rows`` slice of the signature). The band
-    index is baked into the hash so buckets key on one column."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat(
-                    F.lit(f"{b}:"),
-                    F.concat_ws(
-                        "|",
-                        F.transform(
-                            F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")
-                        ),
-                    ),
-                )
-            )
-            for b in range(bands)
-        ]
     )
 
 
@@ -2177,7 +2147,6 @@ def text_winnow_cross_overlap(
     min_shared: int = 2,
     max_bucket_size: Optional[int] = 10_000,
     pair_budget: Optional[int] = None,
-    broadcast_other: bool = False,
 ) -> TransformerFn:
     """Cross-corpus MOSS overlap: main documents scored against a
     REFERENCE corpus by shared winnowing fingerprints — provenance and
@@ -2194,8 +2163,6 @@ def text_winnow_cross_overlap(
     fingerprints drop by the LSH family's cap/:``pair_budget`` rule
     applied to the UNION of both sides (a gram common across either
     corpus is boilerplate); the pair join is fp-equi, main×ref only.
-    ``broadcast_other=True`` broadcasts the reference fingerprint set —
-    the decontamination posture when the reference is benchmark-sized.
     """
     if min_shared < 1:
         raise ValueError(
@@ -2233,9 +2200,8 @@ def text_winnow_cross_overlap(
             )
             main = main.join(hot, "fp", "left_anti")
             ref = ref.join(hot, "fp", "left_anti")
-        r = F.broadcast(ref) if broadcast_other else ref
         return (
-            main.join(r, "fp")
+            main.join(ref, "fp")
             .groupBy(F.col("__mid").alias("doc_id"), F.col("__rid").alias("ref_id"))
             .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
             .filter(F.col("shared_fps") >= min_shared)

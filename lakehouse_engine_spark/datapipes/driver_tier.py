@@ -25,6 +25,14 @@ them:
 
 Tests pin each operator's two tiers row-identical
 (``tests/test_driver_tier.py``).
+
+The same module owns the one broadcast gate, :func:`fits_broadcast`: a
+join side that can grow with the vocabulary or the query set (frequent-term
+candidates, PMI unigrams, TF-IDF document frequencies, BM25 query terms,
+the BPE word table) is broadcast only while one count of it stays within
+``BROADCAST_MAX_ROWS``; above it the join shuffles instead of OOMing
+executors. Join sides bounded by construction (a benchmark's gram hashes,
+per-group statistics, driver-built tables) are broadcast without a gate.
 """
 
 from __future__ import annotations
@@ -33,6 +41,15 @@ from typing import Dict, Hashable, Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import types as T
+
+
+BROADCAST_MAX_ROWS = 2_000_000
+
+
+def fits_broadcast(df: DataFrame) -> bool:
+    """True when ``df`` has at most ``BROADCAST_MAX_ROWS`` rows — one
+    count job, so callers gate on a persisted or checkpointed side."""
+    return df.count() <= BROADCAST_MAX_ROWS
 
 
 def bounded_collect(df: DataFrame, limit: int) -> Optional[List[Row]]:

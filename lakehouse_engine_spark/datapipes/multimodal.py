@@ -11,11 +11,16 @@ video remains behind the ffmpeg strict-mode stub and ``fake`` mode emits
 deterministic byte-derived output for pipeline-shape tests.
 
 At 100 TB: binary payloads dominate memory, so decode stages bound their
-input per ARROW BATCH (``spark.sql.execution.arrow.maxBytesPerBatch``; the
-``target_partition_mb`` budget enforced below the partition level) and run
-map-only on the scan partitioning — see ``_byte_budget_src`` — while
-metadata-only projections stay separate from payload scans (column pruning
-drops the binary column when only metadata is referenced).
+input per ARROW BATCH, not per partition: Spark 4 cuts ``mapInPandas``
+input batches by bytes (``spark.sql.execution.arrow.maxBytesPerBatch``,
+ExecEnv default 128 MB) and the decode loops hold one batch at a time.
+The decode stages run map-only on the scan partitioning (scan partitions
+are already byte-bounded by ``spark.sql.files.maxPartitionBytes``), with
+the partition count only RAISED by :func:`parallel.ensure_parallelism`
+when a batch input arrives starved; no plan-time payload-size probe and
+no Exchange carrying payload bytes. Metadata-only projections stay
+separate from payload scans (column pruning drops the binary column when
+only metadata is referenced).
 """
 
 from __future__ import annotations
@@ -29,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 from lakehouse_engine_spark.datapipes.registry import register
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -55,38 +61,6 @@ def _wav_or_none(decode_wav, b: bytes):
         return None
 
 
-def _byte_budget_src(
-    df: DataFrame, payload_col: str, id_col: str, target_partition_mb: int
-) -> DataFrame:
-    """(id, payload) projection for a decode stage, map-only.
-
-    Decode memory is bounded per ARROW BATCH, not per partition: Spark 4
-    cuts ``mapInPandas`` input batches by bytes
-    (``spark.sql.execution.arrow.maxBytesPerBatch``, ExecEnv default
-    128 MB — ``target_partition_mb``'s budget enforced one level lower),
-    and the decode loops here hold one batch at a time. That retires the
-    pre-r14 plan-time ``sum(length(payload))`` probe + whole-corpus
-    ``repartition``, which cost one full extra pass over the payload
-    bytes AND an Exchange carrying every payload byte on every decode —
-    at 100 TB that was the §8 "shuffle heavy bytes to make no decision"
-    anti-pattern (scan partitions are already byte-bounded by
-    ``spark.sql.files.maxPartitionBytes``). Partitioning is only RAISED
-    to cluster parallelism when the input arrives starved (a single tiny
-    file — production inputs arrive well-partitioned and this is a
-    no-op), never lowered.
-
-    Streaming inputs pass through unpartitioned as before: micro-batch
-    sizing is governed by the source
-    (``maxFilesPerTrigger``/``maxBytesPerTrigger``), and the Arrow byte
-    budget bounds decode memory there identically."""
-    from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
-
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col))
-    if df.isStreaming:
-        return src
-    return ensure_parallelism(src)
-
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType()),
@@ -100,7 +74,6 @@ FEATURE_SCHEMA = T.StructType(
 @register("multimodal_pack", streaming_ok=True)
 def pack_binary(
     payload_col: str,
-    id_col: str,
     media_type: str = "application/octet-stream",
     output_col: str = "payload",
 ) -> TransformerFn:
@@ -133,7 +106,6 @@ def feature_extract(
     id_col: str = "doc_id",
     feature_dim: int = 8,
     mode: str = "fake",  # fake | strict
-    target_partition_mb: int = 128,
 ) -> TransformerFn:
     """Decode/feature-extract binary payloads via Arrow-batched mapInPandas.
 
@@ -147,8 +119,9 @@ def feature_extract(
         )
 
     def _extract(df: DataFrame) -> DataFrame:
-        # size partitions by payload bytes, not row count (stream: pass-through)
-        src = _byte_budget_src(df, payload_col, id_col, target_partition_mb)
+        src = ensure_parallelism(
+            df.select(F.col(id_col).alias("id"), F.col(payload_col))
+        )
 
         def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
@@ -250,7 +223,6 @@ def image_decode(
     id_col: str = "doc_id",
     thumbnail_side: int = 8,
     on_unsupported: str = "null",  # null | error
-    target_partition_mb: int = 128,
 ) -> TransformerFn:
     """REAL image decode: PPM P6 / uncompressed BMP natively, plus any
     media type with a registered decoder (``media_codecs.register_decoder``
@@ -277,7 +249,9 @@ def image_decode(
         # though workers re-import media_codecs fresh
         decoders = available_decoders()
 
-        src = _byte_budget_src(df, payload_col, id_col, target_partition_mb)
+        src = ensure_parallelism(
+            df.select(F.col(id_col).alias("id"), F.col(payload_col))
+        )
 
         def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
@@ -316,14 +290,13 @@ def audio_decode(
     payload_col: str = "payload",
     id_col: str = "doc_id",
     on_unsupported: str = "null",  # null | error
-    target_partition_mb: int = 128,
 ) -> TransformerFn:
     """REAL audio decode for integer-PCM WAV (8/16/32-bit): sample rate,
     channel/frame counts, duration, and normalized RMS/peak levels — the
     signal stats an audio-corpus quality filter gates on (silence, clipping,
     too-short clips). The RIFF chunk walk + sample normalization is pure
-    numpy inside Arrow-batched ``mapInPandas`` with the same byte-budget
-    repartition as image decode. Compressed audio (mp3/flac/ogg) yields
+    numpy inside Arrow-batched ``mapInPandas`` with the same partition
+    guard as image decode. Compressed audio (mp3/flac/ogg) yields
     NULL fields (or raises with ``on_unsupported="error"``) — a codec
     library plugs in at the same boundary as image decoders."""
     if on_unsupported not in ("null", "error"):
@@ -338,7 +311,9 @@ def audio_decode(
             sniff_media,
         )
 
-        src = _byte_budget_src(df, payload_col, id_col, target_partition_mb)
+        src = ensure_parallelism(
+            df.select(F.col(id_col).alias("id"), F.col(payload_col))
+        )
 
         def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
@@ -433,7 +408,6 @@ def image_resize(
     height: int,
     payload_col: str = "payload",
     id_col: str = "doc_id",
-    target_partition_mb: int = 128,
 ) -> TransformerFn:
     """REAL nearest-neighbor resize for decodable payloads, re-encoded as
     PPM: ``(id, payload)`` out, NULL payload for unsupported codecs. The

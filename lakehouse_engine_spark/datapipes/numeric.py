@@ -35,8 +35,9 @@ from lakehouse_engine_spark.datapipes.registry import register
 TransformerFn = Callable[[DataFrame], DataFrame]
 
 
-def _null_safe_attach(base: DataFrame, stats: DataFrame, keys, broadcast=False):
-    """Attach a per-group stats frame with NULL-SAFE key equality: the
+def _null_safe_attach(base: DataFrame, stats: DataFrame, keys) -> DataFrame:
+    """Attach the broadcast per-group stats frame (one row per group, or
+    one row when ``keys`` is empty) with NULL-SAFE key equality: the
     plain ``join(on=keys)`` equi-join never matches NULL group keys, so
     NULL-group rows silently VANISHED from winsorize/robust_scale/
     zscore output even though groupBy had computed their stats row
@@ -45,12 +46,14 @@ def _null_safe_attach(base: DataFrame, stats: DataFrame, keys, broadcast=False):
     from functools import reduce as _reduce
     from operator import and_ as _and
 
-    renamed = stats.select(
-        *[F.col(k).alias(f"__gk_{i}") for i, k in enumerate(keys)],
-        *[c for c in stats.columns if c not in keys],
+    if not keys:
+        return base.crossJoin(F.broadcast(stats))
+    renamed = F.broadcast(
+        stats.select(
+            *[F.col(k).alias(f"__gk_{i}") for i, k in enumerate(keys)],
+            *[c for c in stats.columns if c not in keys],
+        )
     )
-    if broadcast:
-        renamed = F.broadcast(renamed)
     cond = _reduce(
         _and,
         [base[k].eqNullSafe(F.col(f"__gk_{i}")) for i, k in enumerate(keys)],
@@ -69,7 +72,6 @@ def winsorize(
     method: str = "approx",
     accuracy: int = 10_000,
     output_col: Optional[str] = None,
-    broadcast_stats: bool = True,
 ) -> TransformerFn:
     """Clip ``value_col`` to its [``lower``, ``upper``] percentile range,
     optionally per group. Adds ``<value_col>_wins`` (or ``output_col``)
@@ -80,11 +82,7 @@ def winsorize(
     interpolation — matches DuckDB ``quantile_cont`` for the oracle);
     ``method="approx"`` (default) uses ``percentile_approx`` with
     ``accuracy`` — the 100 TB path (mergeable sketch, bounded memory).
-
-    ``broadcast_stats``: the per-group bounds table broadcasts by default
-    (one row per group — tiny for the usual domain/lang groupings); pass
-    ``False`` when ``group_cols`` is high-cardinality (e.g. per-user) so
-    the attach runs as a shuffle join instead of OOMing executors.
+    The per-group bounds table (one row per group) is broadcast back.
     """
     if not 0.0 <= lower <= upper <= 1.0:
         raise ValueError(f"need 0 <= lower <= upper <= 1, got {lower}, {upper}")
@@ -110,13 +108,7 @@ def winsorize(
                 F.col("__p")[1].alias(f"{value_col}_hi"),
             )
         )
-        if broadcast_stats and not keys:
-            lim = F.broadcast(lim)
-        joined = (
-            _null_safe_attach(df, lim, keys, broadcast=broadcast_stats)
-            if keys
-            else df.crossJoin(lim)
-        )
+        joined = _null_safe_attach(df, lim, keys)
         lo, hi = F.col(f"{value_col}_lo"), F.col(f"{value_col}_hi")
         clipped = F.when(v.isNull(), F.lit(None).cast("double")).otherwise(
             F.least(F.greatest(v.cast("double"), lo), hi)
@@ -134,7 +126,6 @@ def robust_scale(
     method: str = "approx",
     accuracy: int = 10_000,
     output_col: Optional[str] = None,
-    broadcast_stats: bool = True,
 ) -> TransformerFn:
     """Robust standardization: ``(x - median) / (scale * MAD)`` with
     ``MAD = median(|x - median|)`` — the outlier-insensitive alternative
@@ -149,9 +140,7 @@ def robust_scale(
     broadcast back — still zero corpus shuffles. ``method="exact"`` uses
     Spark's sort-based ``percentile`` (oracle parity, buffers each group);
     ``method="approx"`` (default) the mergeable ``percentile_approx``
-    sketch — the 100 TB path. ``broadcast_stats=False`` switches the
-    one-row-per-group attach to a shuffle join for high-cardinality
-    groupings (per-user keys can reach 10^8+ rows).
+    sketch — the 100 TB path.
     """
     if method not in ("exact", "approx"):
         raise ValueError(f"method must be exact|approx, got {method!r}")
@@ -166,21 +155,12 @@ def robust_scale(
     def _scale(df: DataFrame) -> DataFrame:
         v = F.col(value_col)
 
-        def _attach(base: DataFrame, stats: DataFrame) -> DataFrame:
-            if broadcast_stats and not keys:
-                stats = F.broadcast(stats)
-            return (
-                _null_safe_attach(base, stats, keys, broadcast=broadcast_stats)
-                if keys
-                else base.crossJoin(stats)
-            )
-
         med = df.groupBy(*keys).agg(_median(v).alias("__med"))
-        with_med = _attach(df, med)
+        with_med = _null_safe_attach(df, med, keys)
         mad = with_med.groupBy(*keys).agg(
             _median(F.abs(v.cast("double") - F.col("__med"))).alias("__mad")
         )
-        joined = _attach(with_med, mad)
+        joined = _null_safe_attach(with_med, mad, keys)
         r = F.when(
             F.col("__mad").isNull() | (F.col("__mad") == 0) | v.isNull(),
             F.lit(None).cast("double"),
@@ -198,7 +178,6 @@ def zscore_normalize(
     group_cols: Optional[List[str]] = None,
     ddof: int = 0,
     output_col: Optional[str] = None,
-    broadcast_stats: bool = True,
 ) -> TransformerFn:
     """Standardize ``value_col`` to zero mean / unit variance, optionally
     per group (source, language, event type) — the mixing-comparability
@@ -208,9 +187,7 @@ def zscore_normalize(
 
     ``ddof=0`` → population stddev (DuckDB ``stddev_pop``), ``ddof=1`` →
     sample stddev. Two-pass: per-group mean/std aggregation (map-side
-    combined), broadcast back (``broadcast_stats=False`` for
-    high-cardinality groupings — shuffle join instead), codegen'd
-    projection.
+    combined), broadcast back, codegen'd projection.
     """
     if ddof not in (0, 1):
         raise ValueError(f"ddof must be 0 or 1, got {ddof}")
@@ -223,13 +200,7 @@ def zscore_normalize(
         stats = df.groupBy(*keys).agg(
             F.avg(v).alias("__mean"), std.alias("__std")
         )
-        if broadcast_stats and not keys:
-            stats = F.broadcast(stats)
-        joined = (
-            _null_safe_attach(df, stats, keys, broadcast=broadcast_stats)
-            if keys
-            else df.crossJoin(stats)
-        )
+        joined = _null_safe_attach(df, stats, keys)
         z = F.when(
             (F.col("__std").isNull()) | (F.col("__std") == 0) | v.isNull(),
             F.lit(None).cast("double"),

@@ -1,16 +1,15 @@
-"""Minimum-parallelism guard for compute-heavy datapipes stages.
+"""The one partition guard of the datapipes operators.
 
 Small inputs (one parquet file, a filtered dimension) arrive as a single
 partition; any O(n·signature) or O(pairs) stage built on them would then run
 as ONE task regardless of cluster size — broadcast joins inherit the stream
-side's partitioning. At 100 TB inputs arrive well-partitioned and this is a
-no-op; on small/collapsed inputs it spreads the expensive stage across the
-cluster for the price of shuffling a tiny table.
+side's partitioning. :func:`ensure_parallelism` raises such an input to
+``defaultParallelism`` partitions; at 100 TB inputs arrive well-partitioned
+and it is a no-op. The target is the cluster's parallelism, never a
+per-operator option, so every caller passes the frame alone.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -49,11 +48,14 @@ def _static_num_partitions(df: DataFrame) -> int:
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
-    """Repartition ``df`` up to ``min_partitions`` (default
-    ``sparkContext.defaultParallelism``) — never down."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` up to ``sparkContext.defaultParallelism`` —
+    never down. A streaming frame is returned unprobed: its micro-batch
+    sizing belongs to the source (``maxFilesPerTrigger`` /
+    ``maxBytesPerTrigger``), and it has no static plan to count."""
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _static_num_partitions(df) < target:
         return df.repartition(target)
     return df

@@ -401,7 +401,6 @@ def token_budget_sample(
     id_col: str = "doc_id",
     default_keep: bool = True,
     seed: str = "",
-    broadcast_thresholds: bool = True,
 ) -> Callable[[DataFrame], DataFrame]:
     """Token-budget mixture construction: downsample each domain/source to
     a TOKEN budget (not a row fraction) — "200 B tokens of web, 50 B of
@@ -418,10 +417,8 @@ def token_budget_sample(
 
     Scale design: pass 1 = one map-side-combined groupBy computing
     group token totals (rows = number of DISTINCT group values →
-    **broadcast** by default; pass ``broadcast_thresholds=False`` when
-    ``group_col`` is high-cardinality so the attach shuffles instead);
-    pass 2 = pure hash-filter projection. No windows, no sort, no
-    per-row state.
+    **broadcast**); pass 2 = pure hash-filter projection. No windows, no
+    sort, no per-row state.
     """
     for g, b in budgets.items():
         if b < 0:
@@ -465,13 +462,11 @@ def token_budget_sample(
             .otherwise(F.lit(float(BUCKETS) if default_keep else 0.0))
             .alias("__thr"),
         )
-        if broadcast_thresholds:
-            thr = F.broadcast(thr)
         return (
             # null-safe: rows with a NULL group must meet their own
             # threshold row, not vanish through NULL == NULL (the
             # unimax/temperature join convention, r14 review finding)
-            df.join(thr, df[group_col].eqNullSafe(F.col("__g")))
+            df.join(F.broadcast(thr), df[group_col].eqNullSafe(F.col("__g")))
             .filter(_bucket(id_col, seed).cast("double") < F.col("__thr"))
             .drop("__g", "__thr")
         )

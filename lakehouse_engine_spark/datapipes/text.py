@@ -21,18 +21,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.datapipes.colbuild import log_grid, md5_fold
+from lakehouse_engine_spark.datapipes.driver_tier import fits_broadcast
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 from lakehouse_engine_spark.datapipes.registry import register, register_with
 
 TransformerFn = Callable[[DataFrame], DataFrame]
-
-# Broadcast gates (rows) of the vocabulary-sized join sides: frequent-term
-# candidates, PMI unigrams, TF-IDF document frequencies and BM25 query
-# terms. At web scale these sides can be every distinct term, so each is
-# broadcast only while one count stays under its gate; above it the join
-# shuffles instead of OOMing executors.
-_CANDIDATE_BROADCAST_THRESHOLD_ROWS = 1_000_000
-_BROADCAST_THRESHOLD_ROWS = 2_000_000
 
 # whitespace tokens; filter('' ) guards leading/trailing whitespace
 def tokens(col: Column) -> Column:
@@ -298,19 +291,18 @@ def repetition_signals(
     return _rep
 
 
-def _bench_gram_hashes(
-    benchmark_df: DataFrame, text_col: str, ngram: int, broadcast_benchmark: bool
-) -> DataFrame:
+def _bench_gram_hashes(benchmark_df: DataFrame, text_col: str, ngram: int) -> DataFrame:
     """The md5 of every benchmark word ``ngram``-gram as ``__gh``, NOT
     deduplicated: the decontamination ops probe it with a ``left_semi``
     join, which benchmark duplicates cannot multiply, so a ``distinct``
-    would only add an exchange. Broadcast-hinted unless the caller shuffles
-    a giant benchmark. The ``""`` gram of a NULL, empty or whitespace-only
-    benchmark row is dropped (:func:`_bench_grams`)."""
-    bench = _bench_grams(benchmark_df, text_col, ngram).select(
-        F.md5("__g").alias("__gh")
+    would only add an exchange. Broadcast-hinted: eval sets are small.
+    The ``""`` gram of a NULL, empty or whitespace-only benchmark row is
+    dropped (:func:`_bench_grams`)."""
+    return F.broadcast(
+        _bench_grams(benchmark_df, text_col, ngram).select(
+            F.md5("__g").alias("__gh")
+        )
     )
-    return F.broadcast(bench) if broadcast_benchmark else bench
 
 
 def _bench_grams(benchmark_df: DataFrame, text_col: str, ngram: int) -> DataFrame:
@@ -330,7 +322,6 @@ def decontaminate(
     id_col: str = "doc_id",
     ngram: int = 8,
     mode: str = "flag",  # flag | drop
-    broadcast_benchmark: bool = True,
 ) -> TransformerFn:
     """Benchmark decontamination: flag (or drop) documents sharing any word
     ``ngram`` with a benchmark/eval set — the standard guard against test-set
@@ -344,8 +335,6 @@ def decontaminate(
     ``n_contaminated_ngrams`` (distinct matching gram hashes per doc)
     comes from ONE groupBy over the (rare) matching grams, so the plan's
     only corpus-side exchange carries matches, not every document gram.
-    With ``broadcast_benchmark=False`` the same plan runs as a shuffle
-    join for giant benchmark sets.
     """
     if mode not in ("flag", "drop"):
         raise ValueError(
@@ -353,9 +342,7 @@ def decontaminate(
         )
 
     def _decon(df: DataFrame) -> DataFrame:
-        bench = _bench_gram_hashes(
-            benchmark_df, benchmark_text_col, ngram, broadcast_benchmark
-        )
+        bench = _bench_gram_hashes(benchmark_df, benchmark_text_col, ngram)
         doc_grams = (
             ensure_parallelism(df)
             .select(
@@ -610,9 +597,8 @@ def frequent_terms(
     per partition ever reach the shuffle, independent of vocabulary
     size. Pass 2 re-scans the corpus once and exact-counts ONLY the
     candidate terms (hash semi-join against the deduped candidate set —
-    broadcast while the candidate count is within
-    ``_CANDIDATE_BROADCAST_THRESHOLD_ROWS``), then applies the exact
-    threshold.
+    broadcast while :func:`driver_tier.fits_broadcast` passes), then
+    applies the exact threshold.
     Recompute-over-shuffle, the same trade recorded for ``dsir_score``
     in BASELINE.md: two cheap scans beat shuffling an unbounded tail.
 
@@ -707,7 +693,7 @@ def frequent_terms(
             .localCheckpoint(eager=True)
         )
         summary.unpersist()
-        if cand.count() <= _CANDIDATE_BROADCAST_THRESHOLD_ROWS:
+        if fits_broadcast(cand):
             cand = F.broadcast(cand)
         exploded = sdf.select(F.explode(_stream()).alias("term"))
         return (
@@ -885,7 +871,6 @@ def hash_embedding(
 @register("text_chunk", streaming_ok=True)
 def text_chunk(
     input_col: str = "text",
-    id_col: str = "doc_id",
     chunk_tokens: int = 128,
     overlap: int = 0,
     min_tokens: int = 1,
@@ -1280,7 +1265,7 @@ def word_pmi(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        do_broadcast = words.count() <= _BROADCAST_THRESHOLD_ROWS
+        do_broadcast = fits_broadcast(words)
         words_side = F.broadcast(words) if do_broadcast else words
         uni = (
             base.select(F.explode("__t").alias("__w"))
@@ -1343,8 +1328,9 @@ def tfidf_top_terms(
     default ``min_df=1`` on web-scale text that is every distinct term —
     potentially 10⁸+ rows, which a forced broadcast would OOM. The op
     counts ``dfreq`` (one aggregate over the already-persisted pairs —
-    cheap) and broadcasts only under ``_BROADCAST_THRESHOLD_ROWS``; above
-    it the tf⋈df join runs as a regular shuffle join on ``term``.
+    cheap) and broadcasts only while :func:`driver_tier.fits_broadcast`
+    passes; above it the tf⋈df join runs as a regular shuffle join on
+    ``term``.
     """
 
     def _tfidf(df: DataFrame) -> DataFrame:
@@ -1368,7 +1354,7 @@ def tfidf_top_terms(
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") >= min_df)
         )
-        if dfreq.count() <= _BROADCAST_THRESHOLD_ROWS:
+        if fits_broadcast(dfreq):
             dfreq = F.broadcast(dfreq)
         w = Window.partitionBy("__id").orderBy(
             F.desc("__tfidf_s"), F.asc("term")
@@ -1476,7 +1462,6 @@ def shingles(col: Column, n: int = 3) -> Column:
 @register("text_cdc_chunk", streaming_ok=True)
 def cdc_chunk(
     input_col: str = "text",
-    id_col: str = "doc_id",
     window: int = 8,
     divisor: int = 16,
     min_tokens: int = 1,
@@ -1743,7 +1728,7 @@ def bm25_topk(
     Broadcast gate: the three query-derived tables (qterms, the query
     vocabulary, and the per-term document frequencies — all bounded by
     the QUERY SET, not the corpus) are broadcast only while the distinct
-    (query, term) count stays under ``_BROADCAST_THRESHOLD_ROWS``; for
+    (query, term) count passes :func:`driver_tier.fits_broadcast`; for
     eval-set mining with millions of queries the joins degrade to
     regular shuffle joins instead of blowing the broadcast. Default
     (``broadcast_queries=None``) probes the persisted qterms table with
@@ -1773,7 +1758,7 @@ def bm25_topk(
         # there is no sound place to unpersist after materialization).
         do_broadcast = broadcast_queries
         if do_broadcast is None:
-            do_broadcast = qterms.count() <= _BROADCAST_THRESHOLD_ROWS
+            do_broadcast = fits_broadcast(qterms)
         bq = F.broadcast if do_broadcast else (lambda d: d)
         qvocab = qterms.select("term").distinct()
         # corpus stats BEFORE vocab pruning: BM25's D, T and dl cover the
@@ -1846,7 +1831,6 @@ register_with("text_bm25_topk_with", bm25_topk, "queries_with", "queries_df")
 @register("text_sentence_split", streaming_ok=True)
 def sentence_split(
     input_col: str = "text",
-    id_col: str = "doc_id",
     min_chars: int = 1,
 ) -> TransformerFn:
     """Sentence segmentation: one output row per sentence with
@@ -2574,7 +2558,6 @@ def decontaminate_spans(
     ngram: int = 8,
     min_fragment_tokens: int = 20,
     output_col: str = "clean_fragments",
-    broadcast_benchmark: bool = True,
 ) -> TransformerFn:
     """SURGICAL decontamination (the GPT-3/PaLM appendix procedure):
     instead of dropping whole documents that share an n-gram with the
@@ -2596,10 +2579,9 @@ def decontaminate_spans(
     ``n_removed_tokens``, ``n_fragments``.
 
     Scale design: the benchmark's gram hashes broadcast undeduplicated
-    (:func:`_bench_gram_hashes`; eval sets are small — pass
-    ``broadcast_benchmark=False`` to shuffle-join a giant one); the
-    corpus makes one gram-explode pass into a ``left_semi`` join, which
-    benchmark duplicates cannot multiply, and ONLY the
+    (:func:`_bench_gram_hashes`; eval sets are small); the corpus makes
+    one gram-explode pass into a ``left_semi`` join, which benchmark
+    duplicates cannot multiply, and ONLY the
     documents with hits (the rare case) take the exploded
     gaps-and-islands path (posexplode -> kept-token islands via one
     doc-keyed window -> fragment reassembly); clean documents ride a
@@ -2619,9 +2601,7 @@ def decontaminate_spans(
     def _decon(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        bench = _bench_gram_hashes(
-            benchmark_df, benchmark_text_col, ngram, broadcast_benchmark
-        )
+        bench = _bench_gram_hashes(benchmark_df, benchmark_text_col, ngram)
         base = ensure_parallelism(df).select(
             F.col(id_col).alias("__id"), F.col(input_col).alias("__tx")
         )

@@ -31,8 +31,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"CAST(`{c}` DIV 1000 AS LONG)")))
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables=None) -> None:
-    """Expose the synthetic tables as temp views for SQL queries."""
-    for t in tables or TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

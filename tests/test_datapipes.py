@@ -232,7 +232,7 @@ def test_fingerprint_clusters_reordered_text(spark):
 # ------------------------------------------------------------- multimodal
 def test_multimodal_pack_and_extract(spark):
     df = spark.createDataFrame([(1, "payload-bytes")], "doc_id INT, text STRING")
-    packed = df.transform(t("multimodal_pack", payload_col="text", id_col="doc_id"))
+    packed = df.transform(t("multimodal_pack", payload_col="text"))
     assert dict(packed.dtypes)["payload"] == "binary"
     assert packed.select("media_meta.media_type").first()[0] == "application/octet-stream"
     out = packed.transform(t("multimodal_feature_extract", id_col="doc_id", feature_dim=4))
@@ -1077,8 +1077,7 @@ def test_dedup_cross_exact_drop_flag_normalize(spark):
     ).collect()
     assert sorted(r["doc_id"] for r in kept) == [2]  # 1 and 3 normalize-match ref
     flagged = {r["doc_id"]: r["in_reference"] for r in main.transform(
-        t("dedup_cross_exact", other_df=ref, key_cols=["text"], mode="flag",
-          broadcast_other=True)
+        t("dedup_cross_exact", other_df=ref, key_cols=["text"], mode="flag")
     ).collect()}
     assert flagged == {1: True, 2: False, 3: True}
     # normalize=False: exact bytes only
@@ -1105,7 +1104,7 @@ def test_dedup_cross_minhash_near_dup_detection(spark):
     assert flagged[2] is False
     kept = main.transform(
         t("dedup_cross_minhash", other_df=ref, num_hashes=12, bands=6,
-          shingle_size=2, broadcast_other=True)
+          shingle_size=2)
     ).collect()
     assert [r["doc_id"] for r in kept] == [2]
 
@@ -1771,11 +1770,12 @@ def test_join_with_wrappers_resolve_spec_ids(spark):
 
 
 def test_no_unset_broadcast_knobs_in_registered_ops():
-    """Broadcast gates are module constants, not per-call options: no
-    registered op takes a ``broadcast_*`` parameter defaulting to None
-    (an unpinned tri-state) or a ``*threshold_rows`` / ``max_broadcast_*``
-    size knob — except ``text_bm25_topk.broadcast_queries``, which dp83
-    pins to True to save build jobs."""
+    """Size choices live in ``driver_tier`` and ``parallel``, not in
+    per-call options: no registered op takes a ``broadcast_*`` parameter,
+    a ``*threshold_rows`` / ``max_broadcast_*`` size knob or a
+    ``target_partition_mb`` — except ``text_bm25_topk.broadcast_queries``,
+    which dp83 pins to True (saving the probe job) and the scale probes
+    pin to False."""
     import inspect
 
     import lakehouse_engine_spark.datapipes  # noqa: F401 — fills the registry
@@ -1784,27 +1784,62 @@ def test_no_unset_broadcast_knobs_in_registered_ops():
     found = []
     for name, factory in sorted(SIMPLE.items()):
         for p in inspect.signature(factory).parameters.values():
-            tri_state = p.name.startswith("broadcast_") and p.default is None
-            size_knob = p.name.endswith("threshold_rows") or p.name.startswith(
-                "max_broadcast_"
+            size_knob = (
+                p.name.startswith("broadcast_")
+                or p.name.endswith("threshold_rows")
+                or p.name.startswith("max_broadcast_")
+                or p.name == "target_partition_mb"
             )
-            if tri_state or size_knob:
+            if size_knob:
                 found.append(f"{name}.{p.name}")
     assert found == ["text_bm25_topk.broadcast_queries"]
 
 
+def test_size_gates_count_only_in_driver_tier():
+    """A size gate is an ordering comparison against ``.count()``; under
+    ``datapipes/`` only ``driver_tier.py`` makes one (``fits_broadcast``),
+    so every broadcast decision shares one limit. Spark-free: parses the
+    sources."""
+    import ast
+    import pathlib
+
+    import lakehouse_engine_spark.datapipes as dp
+
+    def is_count(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "count"
+            and not node.args
+        )
+
+    ordering = (ast.Lt, ast.LtE, ast.Gt, ast.GtE)
+    found = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(pathlib.Path(dp.__file__).parent.glob("*.py"))
+        if path.name != "driver_tier.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Compare)
+        and any(isinstance(op, ordering) for op in node.ops)
+        and any(is_count(c) for c in ast.walk(node))
+    ]
+    assert found == []
+
+
 def test_driver_built_threshold_tables_take_no_broadcast_option():
     """unimax/temperature thresholds come from at most MAX_MIX_GROUPS
-    driver rows and always broadcast, so the option is gone (a TypeError);
-    token_budget_sample's distributed table keeps it."""
+    driver rows and token_budget_sample's from one row per group; all
+    three always broadcast, so the option is gone (a TypeError)."""
     from lakehouse_engine_spark.datapipes import sampling
 
     for op in (sampling.unimax_sample, sampling.temperature_sample):
         with pytest.raises(TypeError, match="broadcast_thresholds"):
             op(budget_tokens=10, broadcast_thresholds=True)
-    sampling.token_budget_sample(
-        group_col="lang", token_col="n", budgets={}, broadcast_thresholds=False
-    )
+    with pytest.raises(TypeError, match="broadcast_thresholds"):
+        sampling.token_budget_sample(
+            group_col="lang", token_col="n", budgets={},
+            broadcast_thresholds=False,
+        )
 
 
 def test_cc_keep_best_selects_argmax(spark):
@@ -2938,7 +2973,7 @@ def test_frequent_terms_exact_vs_counter(spark, monkeypatch):
     import random
     from collections import Counter
 
-    from lakehouse_engine_spark.datapipes import text as text_mod
+    from lakehouse_engine_spark.datapipes import driver_tier
 
     rng = random.Random(3)
     vocab = [f"w{i}" for i in range(400)]
@@ -2962,7 +2997,7 @@ def test_frequent_terms_exact_vs_counter(spark, monkeypatch):
         }
         assert got == ref, f"support={support}"
     with monkeypatch.context() as mp:  # shuffle-join arm
-        mp.setattr(text_mod, "_CANDIDATE_BROADCAST_THRESHOLD_ROWS", 0)
+        mp.setattr(driver_tier, "BROADCAST_MAX_ROWS", 0)
         shuffled = {
             r["term"]: r["n"]
             for r in df.transform(
@@ -6608,15 +6643,13 @@ def decon_case(spark):
     return docs, bench
 
 
-def _decontaminate_distinct_join(docs, bench, ngram, mode, broadcast_benchmark):
+def _decontaminate_distinct_join(docs, bench, ngram, mode):
     """text_decontaminate's former plan: the DISTINCT benchmark gram set
     inner-joined to per-doc deduplicated corpus grams, then counted."""
     from lakehouse_engine_spark.datapipes.text import shingles
 
     bgrams = bench.select(F.explode(shingles(F.col("text"), ngram)).alias("__g"))
-    bgrams = bgrams.select(F.md5("__g").alias("__gh")).distinct()
-    if broadcast_benchmark:
-        bgrams = F.broadcast(bgrams)
+    bgrams = F.broadcast(bgrams.select(F.md5("__g").alias("__gh")).distinct())
     grams = (
         docs.select(
             F.col("doc_id").alias("__id"),
@@ -6640,19 +6673,15 @@ def _decontaminate_distinct_join(docs, bench, ngram, mode, broadcast_benchmark):
     return out
 
 
-@pytest.mark.parametrize("broadcast_benchmark", [True, False])
 @pytest.mark.parametrize("mode", ["flag", "drop"])
-def test_decontaminate_semi_join_matches_distinct_join(
-    decon_case, mode, broadcast_benchmark
-):
+def test_decontaminate_semi_join_matches_distinct_join(decon_case, mode):
     """Duplicate benchmark grams cannot multiply a left_semi probe, and
     n_contaminated_ngrams still counts DISTINCT matching grams per doc."""
     docs, bench = decon_case
     got = docs.transform(
-        t("text_decontaminate", benchmark_df=bench, ngram=3, mode=mode,
-          broadcast_benchmark=broadcast_benchmark)
+        t("text_decontaminate", benchmark_df=bench, ngram=3, mode=mode)
     )
-    want = _decontaminate_distinct_join(docs, bench, 3, mode, broadcast_benchmark)
+    want = _decontaminate_distinct_join(docs, bench, 3, mode)
     rows = got.collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
     if mode == "flag":
@@ -6668,7 +6697,7 @@ def test_decontaminate_corpus_side_has_no_pair_exchange(decon_case):
 
     docs, bench = decon_case
     pair = re.compile(r"hashpartitioning\(__id#\d+, __gh#")
-    old = _decontaminate_distinct_join(docs, bench, 3, "flag", True)
+    old = _decontaminate_distinct_join(docs, bench, 3, "flag")
     assert pair.search(_executed_plan(old))
     new = docs.transform(t("text_decontaminate", benchmark_df=bench, ngram=3))
     assert not pair.search(_executed_plan(new))

@@ -1,6 +1,6 @@
 """The driver-tier module (datapipes/driver_tier.py) and the operators
-behind its gates: each operator must return the same rows on both sides
-of its gate."""
+behind its gates, the broadcast gate included: each operator must return
+the same rows on both sides of its gate."""
 
 from __future__ import annotations
 
@@ -12,10 +12,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.core.definitions import TransformerSpec
-from lakehouse_engine_spark.datapipes import bpe, clustering, dedup, driver_tier, graph
+from lakehouse_engine_spark.datapipes import (
+    bpe,
+    clustering,
+    dedup,
+    driver_tier,
+    graph,
+    text,
+)
 from lakehouse_engine_spark.datapipes.driver_tier import (
     bounded_collect,
     driver_safe_ids,
+    fits_broadcast,
     min_labels,
 )
 from lakehouse_engine_spark.transformers.transformer_factory import TransformerFactory
@@ -84,7 +92,10 @@ def test_min_labels():
 def both_tiers(monkeypatch):
     """Run ``fn`` over ``frame`` with ``module.<gate>`` at its default and
     then at 0; return the two sorted row lists. Asserts the first run
-    took the driver tier and the second the distributed loop."""
+    took the driver tier and the second the distributed loop. The
+    broadcast gate (``gate="BROADCAST_MAX_ROWS"``) lives in
+    ``driver_tier``; its ``module`` is the operator's, where the spy
+    records each ``fits_broadcast`` choice."""
 
     def run(frame, fn, module, gate):
         took = []
@@ -94,10 +105,20 @@ def both_tiers(monkeypatch):
             took.append(rows is not None)
             return rows
 
-        monkeypatch.setattr(module, "bounded_collect", spy)
+        def spy_broadcast(df):
+            fits = driver_tier.fits_broadcast(df)
+            took.append(fits)
+            return fits
+
+        home = module
+        if gate == "BROADCAST_MAX_ROWS":
+            home = driver_tier
+            monkeypatch.setattr(module, "fits_broadcast", spy_broadcast)
+        else:
+            monkeypatch.setattr(module, "bounded_collect", spy)
         out = []
-        for limit in (getattr(module, gate), 0):
-            monkeypatch.setattr(module, gate, limit)
+        for limit in (getattr(home, gate), 0):
+            monkeypatch.setattr(home, gate, limit)
             took.clear()
             out.append(sorted(tuple(r) for r in frame.transform(fn).collect()))
             assert took == [limit > 0]
@@ -192,6 +213,16 @@ def _parity_case(spark, op, ids):
     if op == "embedding_kmeans_hier":
         fn = t(op, k_coarse=3, k_fine=3, coarse_iterations=2, fine_iterations=2)
         return clustering, "DRIVER_KMEANS_MAX_ELEMS", [(_vectors(spark, ids), fn)]
+    if op in ("text_word_pmi", "text_tfidf_top_terms"):
+        frame = spark.createDataFrame(
+            [
+                (i, f"alpha beta gamma{i % 3} delta word{i % 7} alpha beta")
+                for i in range(40)
+            ],
+            "doc_id LONG, text STRING",
+        )
+        kw = {"k": 50, "min_count": 2} if op == "text_word_pmi" else {"k": 3}
+        return text, "BROADCAST_MAX_ROWS", [(frame, t(op, **kw))]
     frame = spark.createDataFrame([(1, _BPE_TEXT)], "doc_id LONG, text STRING")
     if op == "bpe_train":
         fns = [(frame, t(op, num_merges=10, merges_per_round=m)) for m in (1, 3)]
@@ -213,6 +244,8 @@ _PARITY = [
 ] + [
     pytest.param("bpe_train", None, id="bpe_train"),
     pytest.param("bpe_byte_train", None, id="bpe_byte_train"),
+    pytest.param("text_word_pmi", None, id="text_word_pmi"),
+    pytest.param("text_tfidf_top_terms", None, id="text_tfidf_top_terms"),
 ]
 
 
@@ -247,6 +280,18 @@ def test_kmeans_hier_level_one_is_the_flat_trainer(spark, both_tiers, monkeypatc
     for flat, hier in zip(*runs):  # driver tier, then distributed
         assert [(r[0], r[2]) for r in flat] == [(r[0], r[2]) for r in hier]
         assert len({r[2] for r in flat}) == 3
+
+
+# ----- broadcast gate -----------------------------------------------------------
+
+
+def test_fits_broadcast_boundary(spark, monkeypatch):
+    df = spark.range(3)
+    assert fits_broadcast(df)
+    monkeypatch.setattr(driver_tier, "BROADCAST_MAX_ROWS", 3)
+    assert fits_broadcast(df)
+    monkeypatch.setattr(driver_tier, "BROADCAST_MAX_ROWS", 2)
+    assert not fits_broadcast(df)
 
 
 # ----- per-operator drift fixes -----------------------------------------------

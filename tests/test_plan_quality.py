@@ -364,20 +364,17 @@ def test_embedding_quantize_is_pure_projection(spark, sf_dir):
 
 def test_cross_dedup_joins_on_digest_only(spark, sf_dir):
     """The reference side reduces to distinct md5 digests before the join —
-    the join key is the 32-char digest, and with broadcast_other the corpus
-    side has no shuffle at all."""
+    the join key is the 32-char digest."""
     from lakehouse_engine_spark.datapipes.dedup import dedup_cross_exact
     from lakehouse_engine_spark.utils.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     ref = docs.filter("doc_id % 3 = 0")
     out = docs.transform(
-        dedup_cross_exact(other_df=ref, key_cols=["text"], broadcast_other=True)
+        dedup_cross_exact(other_df=ref, key_cols=["text"])
     )
     physical, _ = _plans(out)
-    assert "BroadcastHashJoin" in physical, physical[:2000]
-    assert "LeftAnti" in physical
-    assert "SortMergeJoin" not in physical
+    assert "LeftAnti" in physical, physical[:2000]
 
 
 def test_cross_minhash_semi_joins_digests(spark, sf_dir):
@@ -711,6 +708,7 @@ def test_dictionary_encode_tier_ladder(
     encoder (so all tiers agree, scores included). Session hygiene: the
     encode leaves no CacheManager entry after ``collect()``."""
     from lakehouse_engine_spark.datapipes import bpe as bpe_mod
+    from lakehouse_engine_spark.datapipes import driver_tier
     from lakehouse_engine_spark.datapipes.registry import SIMPLE
 
     spark.catalog.clearCache()
@@ -720,7 +718,7 @@ def test_dictionary_encode_tier_ladder(
     if tier >= 3:
         monkeypatch.setattr(bpe_mod, "_DRIVER_ENCODE_THRESHOLD_ROWS", 0)
     if tier == 4:
-        monkeypatch.setattr(bpe_mod, "_BROADCAST_THRESHOLD_ROWS", 0)
+        monkeypatch.setattr(driver_tier, "BROADCAST_MAX_ROWS", 0)
     docs = spark.createDataFrame(_LADDER_DOCS, "doc_id LONG, text STRING")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     if tier == 4:
@@ -778,15 +776,16 @@ def test_semi_anti_join_shapes(spark, sf_dir):
 
 
 def test_tfidf_large_vocab_does_not_broadcast(spark, monkeypatch):
-    """The df-side broadcast is SIZE-GATED: above _BROADCAST_THRESHOLD_ROWS
-    (here forced to 0) the op must NOT plant a broadcast hint — on 100 TB
-    of web text min_df=1 makes dfreq the full distinct-term vocabulary and
-    a forced broadcast OOMs executors regardless of
-    autoBroadcastJoinThreshold. With the hint gone, Spark's own size stats
-    decide; with auto-broadcast disabled (simulating a too-big-to-estimate
-    side) the join degrades to a shuffle join, proving no hint survives."""
+    """The df-side broadcast is SIZE-GATED: above
+    driver_tier.BROADCAST_MAX_ROWS (here forced to 0) the op must NOT
+    plant a broadcast hint — on 100 TB of web text min_df=1 makes dfreq
+    the full distinct-term vocabulary and a forced broadcast OOMs
+    executors regardless of autoBroadcastJoinThreshold. With the hint
+    gone, Spark's own size stats decide; with auto-broadcast disabled
+    (simulating a too-big-to-estimate side) the join degrades to a
+    shuffle join, proving no hint survives."""
     from lakehouse_engine_spark.core.definitions import TransformerSpec
-    from lakehouse_engine_spark.datapipes import text as text_mod
+    from lakehouse_engine_spark.datapipes import driver_tier
     from lakehouse_engine_spark.transformers.transformer_factory import (
         TransformerFactory,
     )
@@ -802,7 +801,7 @@ def test_tfidf_large_vocab_does_not_broadcast(spark, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         with monkeypatch.context() as mp:
-            mp.setattr(text_mod, "_BROADCAST_THRESHOLD_ROWS", 0)
+            mp.setattr(driver_tier, "BROADCAST_MAX_ROWS", 0)
             out = df.transform(fn)
         physical, _ = _plans(out)
     finally:
@@ -832,13 +831,13 @@ def test_bm25_prunes_corpus_by_broadcast_query_vocab(spark, sf_dir):
 
 def test_bm25_large_query_set_does_not_broadcast(spark, monkeypatch):
     """The three query-derived broadcasts in text_bm25_topk (qterms, query
-    vocab, per-term dfreq) are SIZE-GATED: with _BROADCAST_THRESHOLD_ROWS
-    forced to 0 every query-side join must plan as a shuffle join — the
-    docstring pitches eval-set mining, where query sets reach millions and
-    a forced broadcast blows the executors. Values must be identical
+    vocab, per-term dfreq) are SIZE-GATED: with
+    driver_tier.BROADCAST_MAX_ROWS forced to 0 every query-side join must
+    plan as a shuffle join — the docstring pitches eval-set mining, where
+    query sets reach millions and a forced broadcast blows the executors. Values must be identical
     either way (the gate changes the plan, not the scores)."""
     from lakehouse_engine_spark.core.definitions import TransformerSpec
-    from lakehouse_engine_spark.datapipes import text as text_mod
+    from lakehouse_engine_spark.datapipes import driver_tier
     from lakehouse_engine_spark.transformers.transformer_factory import (
         TransformerFactory,
     )
@@ -858,7 +857,7 @@ def test_bm25_large_query_set_does_not_broadcast(spark, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         with monkeypatch.context() as mp:
-            mp.setattr(text_mod, "_BROADCAST_THRESHOLD_ROWS", 0)
+            mp.setattr(driver_tier, "BROADCAST_MAX_ROWS", 0)
             out = docs.transform(tf("text_bm25_topk", queries_df=qs, k=3))
         physical, _ = _plans(out)
     finally:

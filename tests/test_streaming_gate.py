@@ -209,9 +209,7 @@ def _native_cases(spark):
         "multimodal_audio_decode": ("media", {}, False),
         "multimodal_audio_resample": ("media", {"target_rate": 8000}, False),
         "multimodal_feature_extract": ("media", {}, False),
-        "multimodal_pack": (
-            "media", {"payload_col": "payload", "id_col": "doc_id"}, False,
-        ),
+        "multimodal_pack": ("media", {"payload_col": "payload"}, False),
         "hash_sample": ("docs", {"id_col": "doc_id", "fraction": 0.9}, False),
         "hash_split": ("docs", {"id_col": "doc_id"}, False),
         "weighted_sample": (
