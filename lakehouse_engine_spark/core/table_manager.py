@@ -10,7 +10,7 @@ from __future__ import annotations
 from typing import Any, Optional
 
 from lakehouse_engine_spark.core.exec_env import ExecEnv
-from lakehouse_engine_spark.io.merge_writer import replace_where
+from lakehouse_engine_spark.io.merge_writer import analyze_table, replace_where
 from lakehouse_engine_spark.utils.sql_parser import split_sql_statements
 
 
@@ -153,4 +153,4 @@ class TableManager:
         )
 
     def compute_table_statistics(self) -> None:
-        self.spark.sql(f"ANALYZE TABLE {self.acon['table_or_view']} COMPUTE STATISTICS")
+        analyze_table(self.spark, self.acon["table_or_view"])

@@ -13,7 +13,8 @@ the target's partition columns), verify the lock, then swap the staged dir
 in with two renames (``utils/fs_utils``). A failed write job leaves
 the old table whole; readers outside the engine can briefly see no table
 between the two renames, and the next engine access heals a crash there.
-A catalog table keeps its entry (managed or EXTERNAL). MERGE builds one
+A catalog table keeps its entry (managed or EXTERNAL) and gets exact
+statistics from the staged write's observed row count. MERGE builds one
 filter + projection over a full outer join of target and source;
 ``replace_where`` builds ``NOT (predicate)`` plus the new rows. Correct,
 but O(target) IO; the Delta path is the 100 TB path.
@@ -27,8 +28,8 @@ from __future__ import annotations
 from typing import Callable, Optional
 
 from py4j.protocol import Py4JError
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException, PySparkException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -36,6 +37,7 @@ from lakehouse_engine_spark.core.definitions import MergeOptions
 from lakehouse_engine_spark.core.exec_env import ExecEnv
 from lakehouse_engine_spark.io.table_lock import WriterLock
 from lakehouse_engine_spark.utils import fs_utils
+from lakehouse_engine_spark.utils.observation import observed_row
 from lakehouse_engine_spark.utils.schema_utils import free_name
 
 
@@ -161,14 +163,19 @@ def catalog_location(spark, db_table):
     if not spark.catalog.tableExists(db_table):
         return None, None
     try:
-        rows = spark.sql(f"DESCRIBE FORMATTED {db_table}").collect()
+        info = _describe(spark, db_table)
     except AnalysisException:  # dropped since the check
         return None, None
-    # later rows win: the detailed-information section follows the
-    # column rows, so a column named "Type" or "Location" cannot shadow it
-    info = {r["col_name"]: r["data_type"] for r in rows}
     typ = str(info.get("Type") or "").strip().upper() or None
     return typ, info.get("Location")
+
+
+def _describe(spark, db_table) -> dict:
+    """``DESCRIBE FORMATTED`` of a catalog table as ``{name: value}``.
+    Later rows win: the detailed-information section follows the column
+    rows, so a column named e.g. "Type" cannot shadow it."""
+    rows = spark.sql(f"DESCRIBE FORMATTED {db_table}").collect()
+    return {r["col_name"]: r["data_type"] for r in rows}
 
 
 # location -> qualified table name, filled by successful lookups so a
@@ -325,7 +332,10 @@ def _rewrite(
     created, by ``saveAsTable``. Columns that autoMerge adds reach the
     catalog before the swap, so no crash can leave files whose columns the
     catalog does not know (a failed swap leaves them all null); partitions
-    and statistics follow the swap (:func:`_sync_catalog`). The staged write keeps the partition columns
+    and statistics follow the swap (:func:`_sync_catalog`). For a catalog
+    table the staged write observes its own row count (one
+    ``DataFrame.observe``, no extra job), which becomes the table's exact
+    statistics after the swap. The staged write keeps the partition columns
     of the relation Spark resolved for the target (the catalog's for a
     table, the discovered directory layout for a path) and is static
     whatever the session's partition overwrite mode, so a partition left
@@ -345,6 +355,10 @@ def _rewrite(
             result, parts = first_load(), []
         else:
             result, parts = rebuild(target), _partition_columns(target)
+        rows = None
+        if db_table:
+            rows = Observation()
+            result = result.observe(rows, F.count(F.lit(1)).alias("rows"))
         fs_utils.stage(spark, location, result, fmt, parts)
         if check is not None:
             try:
@@ -360,7 +374,7 @@ def _rewrite(
                 spark.sql(f"ALTER TABLE {db_table} ADD COLUMNS ({StructType(added).toDDL()})")
         fs_utils.swap(spark, location)
         if db_table:
-            _sync_catalog(spark, db_table, parts)
+            _sync_catalog(spark, db_table, parts, rows)
 
 
 def _read_target(spark, db_table, location, fmt) -> Optional[DataFrame]:
@@ -391,17 +405,94 @@ def _read_target(spark, db_table, location, fmt) -> Optional[DataFrame]:
     return target
 
 
-def _sync_catalog(spark, db_table, parts) -> None:
+def _sync_catalog(spark, db_table, parts, rows: Optional[Observation] = None) -> None:
     """Bring a kept catalog entry in line with the files a swap put in place:
-    the partition values on disk, no statistics of the swapped-out files (as
-    after Spark's own overwrite), and a relation Spark lists afresh."""
+    the partition values on disk, statistics of those files or none, and a
+    relation Spark lists afresh.
+
+    ``rows`` is the staged write's row-count observation. When it arrived,
+    the statistics become the files' size (``ANALYZE … NOSCAN``: a file
+    listing, no job) and that row count, which :func:`analyze_table` can
+    trust later; otherwise they are cleared, as after Spark's own overwrite.
+    Ordering keeps a crash from leaving statistics of swapped-out files:
+    :func:`_read_target`'s sync clears them before staging, and only the
+    sync after the swap sets them."""
     if parts:
         spark.sql(f"MSCK REPAIR TABLE {db_table} SYNC PARTITIONS")
-    state = spark._jsparkSession.sessionState()
-    state.catalog().alterTableStats(
-        state.sqlParser().parseTableIdentifier(db_table), spark._jvm.scala.Option.empty()
-    )
+    observed = observed_row(rows) if rows is not None else None
+    if observed is None or not _set_row_count(spark, db_table, observed["rows"]):
+        catalog, ident = _catalog_ident(spark, db_table)
+        catalog.alterTableStats(ident, spark._jvm.scala.Option.empty())
     spark.catalog.refreshTable(db_table)
+
+
+# qualified table name -> the statistics (``DESCRIBE``'s "<size> bytes,
+# <n> rows") this process's last rewrite of the table set from its own
+# staged write
+_REWRITE_STATS: dict = {}
+
+
+def _set_row_count(spark, db_table, rows: int) -> bool:
+    """Set ``db_table``'s statistics to its files' size (``NOSCAN``) and
+    ``rows``, and record them in :data:`_REWRITE_STATS`; False when the
+    catalog API refused the new statistics."""
+    _analyze(spark, db_table, scan=False)
+    catalog, ident = _catalog_ident(spark, db_table)
+    try:
+        exact = _with_row_count(spark, catalog.getTableMetadata(ident).stats().get(), rows)
+        catalog.alterTableStats(ident, spark._jvm.scala.Some(exact))
+    except (Py4JError, PySparkException):
+        return False
+    name, stats = _statistics(spark, db_table)
+    if not (stats or "").endswith(f", {rows} rows"):
+        return False
+    _REWRITE_STATS[name] = stats
+    return True
+
+
+def _with_row_count(spark, stats, rows: int):
+    """A copy of the JVM ``CatalogStatistics`` ``stats`` with row count
+    ``rows``. Internal API: the row count is a Scala ``BigInt``, which Py4J
+    turns into a Python ``int`` on every crossing, so the copy is built
+    inside the JVM, by the constructor, from ``stats``' own fields and the
+    ``Some(BigInt)`` row count of a ``range`` plan."""
+    fields = spark._jvm.java.util.ArrayList(
+        spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(stats.productIterator().toSeq())
+    )
+    fields.set(1, spark.range(0, rows)._jdf.queryExecution().analyzed().stats().rowCount())
+    return stats.getClass().getConstructors()[0].newInstance(fields.toArray())
+
+
+def _catalog_ident(spark, db_table):
+    state = spark._jsparkSession.sessionState()
+    return state.catalog(), state.sqlParser().parseTableIdentifier(db_table)
+
+
+def _statistics(spark, db_table) -> tuple:
+    """``(qualified name, statistics text or None)`` of a catalog table."""
+    info = _describe(spark, db_table)
+    return f"{info['Catalog']}.{info['Database']}.{info['Table']}", info.get("Statistics")
+
+
+def _analyze(spark, db_table, scan: bool) -> None:
+    spark.sql(f"ANALYZE TABLE {db_table} COMPUTE STATISTICS{'' if scan else ' NOSCAN'}")
+
+
+def analyze_table(spark, db_table) -> None:
+    """``ANALYZE TABLE … COMPUTE STATISTICS``, without its count scan when a
+    rewrite by this process left the statistics.
+
+    ``NOSCAN`` first lists the files: it keeps the statistics when their
+    size is unchanged and drops the row count otherwise. When the catalog
+    then still holds the statistics this process's last rewrite recorded,
+    they are exact and nothing more runs; any other change to the table
+    (Spark's own inserts clear the statistics) gets the full ANALYZE."""
+    recorded = _REWRITE_STATS.get(_statistics(spark, db_table)[0])
+    if recorded is not None:
+        _analyze(spark, db_table, scan=False)
+        if _statistics(spark, db_table)[1] == recorded:
+            return
+    _analyze(spark, db_table, scan=True)
 
 
 def _partition_columns(target: DataFrame) -> list:

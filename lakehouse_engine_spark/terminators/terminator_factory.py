@@ -9,7 +9,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_engine_spark.core.definitions import TerminatorSpec
 from lakehouse_engine_spark.core.exec_env import ExecEnv
-from lakehouse_engine_spark.io.merge_writer import catalog_location, replace_where
+from lakehouse_engine_spark.io.merge_writer import (
+    analyze_table,
+    catalog_location,
+    replace_where,
+)
 from lakehouse_engine_spark.utils import fs_utils
 
 _LOGGER = logging.getLogger(__name__)
@@ -56,6 +60,9 @@ def optimize_dataset(
 
     OPTIMIZE/VACUUM are Delta operations; on non-Delta runtimes only the
     ANALYZE statistics step applies (feeds Catalyst's CBO join reordering).
+    It is :func:`~lakehouse_engine_spark.io.merge_writer.analyze_table`:
+    after an engine rewrite of the table the statistics are already exact
+    and no count scan runs.
     """
     tgt = db_table or (f"delta.`{location}`" if location else None)
     if tgt is None:
@@ -67,7 +74,7 @@ def optimize_dataset(
         if vacuum:
             spark.sql(f"VACUUM {tgt} RETAIN {vacuum_hours} HOURS")
     if compute_table_stats and db_table:
-        spark.sql(f"ANALYZE TABLE {db_table} COMPUTE STATISTICS")
+        analyze_table(spark, db_table)
 
 
 def expose_cdf(

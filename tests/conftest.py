@@ -48,3 +48,33 @@ def assert_df_equal(got, want_rows, cols=None):
     assert got_rows == sorted([tuple(r) for r in want_rows]), (
         f"rows differ:\n got={got_rows}\nwant={sorted([tuple(r) for r in want_rows])}"
     )
+
+
+def table_statistics(spark, table):
+    """The ``Statistics`` of ``DESCRIBE TABLE EXTENDED`` (``"894 bytes, 3
+    rows"``), or None when the catalog holds none."""
+    info = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return {r["col_name"]: r["data_type"] for r in info}.get("Statistics")
+
+
+def assert_exact_statistics(spark, table):
+    """The table's statistics carry a row count and equal what a full
+    ``ANALYZE … COMPUTE STATISTICS`` of its files writes."""
+    got = table_statistics(spark, table)
+    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
+    assert got is not None and got.endswith(" rows"), got
+    assert got == table_statistics(spark, table)
+
+
+def spark_jobs(spark, fn):
+    """The number of Spark jobs ``fn()`` fires."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -15,6 +15,7 @@ from lakehouse_engine_spark.core.definitions import (
     DQValidationsFailedException,
 )
 from lakehouse_engine_spark.dq.dq_factory import DQFactory
+from tests.conftest import assert_exact_statistics, spark_jobs, table_statistics
 
 
 @pytest.fixture()
@@ -376,19 +377,6 @@ def test_tag_source_data_with_fused_uniqueness(spark, df):
                     (3, -1, False, False), (3, 500, False, False)]
 
 
-def _jobs(spark, fn):
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"dq-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_uniqueness_adds_no_pass_over_the_input(spark):
     """Load-independent guard against a second pass for uniqueness, by
     Spark job count. On input already partitioned by the key (what the
@@ -406,10 +394,10 @@ def test_uniqueness_adds_no_pass_over_the_input(spark):
         return lambda: run(spark, frame, functions, fail_on_error=False)
 
     keyed = base.repartition(4, "id")
-    assert _jobs(spark, suite(keyed, *_ROW_SUITE, _UNIQUE_ID)) == _jobs(
+    assert spark_jobs(spark, suite(keyed, *_ROW_SUITE, _UNIQUE_ID)) == spark_jobs(
         spark, suite(keyed, *_ROW_SUITE)
     )
-    assert _jobs(spark, suite(base, *_ROW_SUITE, _UNIQUE_ID)) == _jobs(
+    assert spark_jobs(spark, suite(base, *_ROW_SUITE, _UNIQUE_ID)) == spark_jobs(
         spark, lambda: eval_unique(base, "id")
     )
 
@@ -647,9 +635,89 @@ def test_observed_suite_adds_no_job_to_the_merge(spark, tmp_dir):
              "local_fs_root_dir": os.path.join(tmp_dir, "dq_store")}
     for name, dq in (("suite", suite), ("bare", None)):
         acon = _cdc_acon(spark, os.path.join(tmp_dir, name), f"{db}.{name}", _CDC_BATCH, dq)
-        jobs[name] = _jobs(spark, lambda: load_data(acon))
+        jobs[name] = spark_jobs(spark, lambda: load_data(acon))
     spark.sql(f"DROP DATABASE {db} CASCADE")
     assert jobs == {"suite": CDC_LOAD_JOBS, "bare": CDC_LOAD_JOBS}
+
+
+def _analyzed_cdc_load(spark, root, table):
+    """:func:`_cdc_acon`'s load without a suite, closed by an
+    ``optimize_dataset`` terminator."""
+    return {**_cdc_acon(spark, root, table, _CDC_BATCH, None), "terminate_specs": [
+        {"function": "optimize_dataset", "args": {"db_table": table, "vacuum": False}}]}
+
+
+def test_analyze_after_the_merge_adds_no_job(spark, tmp_dir):
+    """The merge leaves exact statistics, so the load's ANALYZE terminator
+    runs no count scan: the load fires exactly ``CDC_LOAD_JOBS`` jobs."""
+    db = "dq_analyzed_jobs"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{os.path.join(tmp_dir, 'warehouse')}'")
+    try:
+        acon = _analyzed_cdc_load(spark, tmp_dir, f"{db}.silver")
+        assert spark_jobs(spark, lambda: load_data(acon)) == CDC_LOAD_JOBS
+        assert_exact_statistics(spark, f"{db}.silver")
+    finally:
+        spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+def test_table_changed_outside_the_engine_is_recounted(spark, tmp_dir):
+    """A plain Spark INSERT after the merge leaves statistics the merge did
+    not record: the terminator runs the full ANALYZE (its count jobs) and
+    the table ends with the statistics a full ANALYZE gives."""
+    from lakehouse_engine_spark.terminators.terminator_factory import optimize_dataset
+
+    db = "dq_recounted"
+    table = f"{db}.silver"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{os.path.join(tmp_dir, 'warehouse')}'")
+    try:
+        load_data(_analyzed_cdc_load(spark, tmp_dir, table))
+        spark.sql(f"INSERT INTO {table} VALUES (100, 1, 1)")
+        assert spark_jobs(spark, lambda: optimize_dataset(spark, db_table=table)) > 0
+        assert_exact_statistics(spark, table)
+    finally:
+        spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+@pytest.mark.parametrize("fallback", ["absent", "refused"])
+def test_statistics_fall_back_to_cleared(spark, tmp_dir, monkeypatch, fallback):
+    """With no row count observed, or the catalog API refusing the new
+    statistics, the merge clears them as Spark's own overwrite does and
+    records nothing; the terminator then runs the full ANALYZE and the
+    table gets the statistics of a load that observed its rows."""
+    from py4j.protocol import Py4JError
+
+    from lakehouse_engine_spark.io import merge_writer
+    from lakehouse_engine_spark.terminators.terminator_factory import optimize_dataset
+
+    db = f"dq_fallback_{fallback}"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{os.path.join(tmp_dir, 'warehouse')}'")
+    try:
+        stats = {}
+        for name in ("observed", fallback):
+            table = f"{db}.{name}"
+            with monkeypatch.context() as m:
+                if name == "absent":
+                    m.setattr(merge_writer, "observed_row", lambda observation: None)
+                elif name == "refused":
+                    def refuse(*args):
+                        raise Py4JError("refused")
+
+                    m.setattr(merge_writer, "_with_row_count", refuse)
+                load_data(_cdc_acon(spark, os.path.join(tmp_dir, name), table, _CDC_BATCH, None))
+            after_load = table_statistics(spark, table)
+            jobs = spark_jobs(spark, lambda: optimize_dataset(spark, db_table=table))
+            stats[name] = after_load, jobs > 0, table_statistics(spark, table)
+            assert_exact_statistics(spark, table)
+        assert f"spark_catalog.{db}.{fallback}" not in merge_writer._REWRITE_STATS
+        assert stats[fallback][:2] == (None, True)
+        assert stats["observed"][1:] == (False, stats["observed"][0])
+        rows = {s[2].rsplit(", ", 1)[1] for s in stats.values()}
+        assert len(rows) == 1
+    finally:
+        spark.sql(f"DROP DATABASE {db} CASCADE")
 
 
 @pytest.mark.parametrize("fails", [False, True])

@@ -13,7 +13,12 @@ import pytest
 from lakehouse_engine_spark import load_data
 from lakehouse_engine_spark.io.table_lock import lock_path
 
-from tests.conftest import assert_df_equal
+from tests.conftest import (
+    assert_df_equal,
+    assert_exact_statistics,
+    spark_jobs,
+    table_statistics,
+)
 
 
 @pytest.fixture()
@@ -936,9 +941,9 @@ def test_missing_table_lookup_logs_no_error(spark, caplog):
 def test_automerge_adds_column_to_external_catalog_table(spark, tmp_dir):
     """autoMerge schema evolution into an EXTERNAL parquet catalog table: the
     swap keeps the catalog entry, so the added column must reach it through
-    ``ALTER TABLE … ADD COLUMNS`` for ``spark.table`` to show it; and, as
-    after Spark's own overwrite, no statistics of the swapped-out files
-    remain."""
+    ``ALTER TABLE … ADD COLUMNS`` for ``spark.table`` to show it; and no
+    statistics of the swapped-out files remain: the table's are those of
+    the new files, as a full ANALYZE computes them."""
     from lakehouse_engine_spark.io import merge_writer
 
     path = os.path.join(tmp_dir, "evolve_ext")
@@ -959,8 +964,7 @@ def test_automerge_adds_column_to_external_catalog_table(spark, tmp_dir):
         got = spark.table("evolve_ext")
         assert got.columns == ["id", "v", "extra"]
         assert_df_equal(got, [(1, "a", None), (2, "B", 20), (3, "c", 30)])
-        info = spark.sql("DESCRIBE FORMATTED evolve_ext").collect()
-        assert "Statistics" not in {r["col_name"] for r in info}
+        assert_exact_statistics(spark, "evolve_ext")
     finally:
         spark.conf.unset(key)
         spark.sql("DROP TABLE IF EXISTS evolve_ext")
@@ -1086,19 +1090,21 @@ def _data_files(path):
     return out
 
 
-def _rewrite_table(spark, tmp_dir, caller):
-    """The caller's partitioned EXTERNAL parquet table, registered with its
-    partitions; returns ``(table, path)``."""
+def _rewrite_table(spark, tmp_dir, caller, partitioned=True):
+    """The caller's EXTERNAL parquet table, partitioned and registered with
+    its partitions unless ``partitioned`` is False; returns ``(table,
+    path)``."""
     ddl, part, rows = _REWRITE_CASES[caller][:3]
     table = f"rewrite_{caller}"
     path = os.path.join(tmp_dir, table)
-    spark.createDataFrame(rows, ddl).write.partitionBy(part).parquet(path)
+    spark.createDataFrame(rows, ddl).write.partitionBy(*([part] if partitioned else [])).parquet(path)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
-        f"CREATE TABLE {table} ({ddl}) USING parquet PARTITIONED BY ({part}) "
-        f"LOCATION '{path}'"
+        f"CREATE TABLE {table} ({ddl}) USING parquet "
+        f"{f'PARTITIONED BY ({part}) ' if partitioned else ''}LOCATION '{path}'"
     )
-    spark.sql(f"MSCK REPAIR TABLE {table}")
+    if partitioned:
+        spark.sql(f"MSCK REPAIR TABLE {table}")
     return table, path
 
 
@@ -1203,6 +1209,31 @@ def test_rewrite_contract(spark, tmp_dir, caller, monkeypatch):
             assert shown == set(entries)
     finally:
         spark.conf.unset(key)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+@pytest.mark.parametrize("partitioned", [True, False])
+@pytest.mark.parametrize("caller", [c for c in _REWRITE_CASES if c != "cdf"])
+def test_rewrite_leaves_exact_statistics(spark, tmp_dir, caller, partitioned):
+    """A catalog caller's rewrite leaves the table's statistics as a full
+    ANALYZE of the new files computes them (size and rows), where the
+    table had statistics of its old files before; an ANALYZE after it
+    (``optimize_dataset``, ``compute_table_statistics``) then runs no job."""
+    from lakehouse_engine_spark.core.table_manager import TableManager
+
+    run, cols, want = (_REWRITE_CASES[caller][i] for i in (3, 4, 5))
+    table, path = _rewrite_table(spark, tmp_dir, caller, partitioned)
+    try:
+        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
+        run(spark, table, path)
+        assert_df_equal(spark.table(table), want, cols)
+        got = table_statistics(spark, table)
+        assert spark_jobs(spark, lambda: TableManager(
+            {"function": "compute_table_statistics", "table_or_view": table}
+        ).execute()) == 0
+        assert table_statistics(spark, table) == got
+        assert_exact_statistics(spark, table)
+    finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
@@ -1344,6 +1375,8 @@ def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller
     seen = {"files": _data_files(path)}
     if caller in _SIDECARS:
         old = read()
+    if table:  # statistics of the files the fault may swap out
+        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
     try:
         with monkeypatch.context() as m:
             _inject(m, fault, seen)
@@ -1359,8 +1392,16 @@ def test_commit_fault_leaves_old_or_new_rows(spark, tmp_dir, monkeypatch, caller
                 check_new()
             else:
                 assert_df_equal(spark.read.parquet(path), seen["rows"])
+        if table and caller != "cdf":
+            # no row count, or the one of the files in place: never the
+            # statistics of swapped-out files
+            stats = table_statistics(spark, table)
+            if stats is not None and stats.endswith(" rows"):
+                assert_exact_statistics(spark, table)
         rerun()
         assert not os.path.exists(path + "__old") and not os.path.exists(path + "__staging")
+        if table and caller != "cdf":
+            assert_exact_statistics(spark, table)
     finally:
         if table:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
