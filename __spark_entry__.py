@@ -5024,7 +5024,7 @@ DRIVER_WINDOW = 50
 TOUCHED = {
     **dict.fromkeys(
         (
-            "dp12_knn_lsh", "dp13_knn_ivf", "dp16_asof_join", "dp17_range_join",
+            "dp13_knn_ivf", "dp16_asof_join", "dp17_range_join",
             "dp19_profile", "dp21_pii_redact", "dp30_asof_forward_tolerance",
             "dp38_embedding_quantize", "dp41_quantile_prune",
             "dp45_embedding_mean_pool", "dp46_token_budget_sample",
@@ -5047,7 +5047,6 @@ TOUCHED = {
         (
             "dp34_quality_prune", "dp49_curation_report", "dp83_bm25_topk",
             "dp112_embedding_kmeans", "dp113_cluster_stats", "dp130_kmeans_hier",
-            "dp131_knn_ivf_hier", "dp132_semantic_dedup_hier",
             "dp133_prototype_prune",
         ),
         15,
@@ -5063,6 +5062,13 @@ TOUCHED = {
             "dp162_gpt2_bpe_train",
             "q31_curation_pipeline", "q32_tokenize_pipeline",
             "q34_tokenizer_fertility",
+            "dp07_dedup_ngram_jaccard", "dp08_embedding_dedup", "dp11_dedup_simhash",
+            "dp12_knn_lsh", "dp28_embedding_dedup_lsh", "dp35_lm_score",
+            "dp36_tfidf_top_terms", "dp42_cross_embedding_dedup",
+            "dp44_lm_score_bigram", "dp48_substring_dedup", "dp97_semantic_dedup",
+            "dp131_knn_ivf_hier", "dp132_semantic_dedup_hier",
+            "dp136_source_divergence", "dp139_seed_classifier",
+            "dp141_winnow_overlap", "dp148_winnow_cross", "q33_ccnet_curation",
         ),
         16,
     ),

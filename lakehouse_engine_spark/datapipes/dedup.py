@@ -73,6 +73,7 @@ from lakehouse_engine_spark.datapipes.driver_tier import (
 )
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
+    probe_materialize,
     release,
 )
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
@@ -400,29 +401,19 @@ def dedup_substring_exact(
 
     def _dedup(df: DataFrame) -> DataFrame:
         toks = F.filter(F.split(F.trim(F.col(input_col)), r"\s+"), lambda t: t != "")
-        # persist the tokenized corpus: base feeds the window filter,
-        # the slice reattach join, AND the posexplode — un-persisted,
-        # the dominant regexp-split projection executes 3x (the file's
-        # persist-the-shared-scan convention, see the sig/winnow sites)
-        base = (
-            ensure_parallelism(df)
-            .select(F.col(id_col).alias("__id"), toks.alias("__t"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        base = ensure_parallelism(df).select(
+            F.col(id_col).alias("__id"), toks.alias("__t")
         )
         n = F.size("__t")
+        # each doc's window digests in one projection of its own tokens
         wins = base.filter(n >= k).select(
             "__id",
-            F.explode(F.sequence(F.lit(0), n - k)).alias("__s"),
-        )
-        wins = (
-            base.join(wins, "__id")
-            .select(
-                "__id",
-                "__s",
-                F.md5(
-                    F.concat_ws(" ", F.slice("__t", F.col("__s") + 1, k))
-                ).alias("__gh"),
-            )
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), n - k),
+                    lambda s: F.md5(F.concat_ws(" ", F.slice("__t", s + 1, k))),
+                )
+            ).alias("__s", "__gh"),
         )
         w = Window.partitionBy("__gh").orderBy("__id", "__s")
         repeats = (
@@ -764,7 +755,7 @@ def _cosine_sigs(
     max_bucket_size: Optional[int],
     pair_budget: Optional[int],
 ) -> DataFrame:
-    """The cosine-LSH candidate space of one corpus, persisted: its
+    """The cosine-LSH candidate space of one corpus: its
     capped hyperplane bucket rows (``__t``, ``__sig``, ``__bid``,
     ``__bv``; ``similarity.hyperplane_signatures``) with the vector norm
     ``__norm`` computed ONCE per row, so the pair verify runs entirely
@@ -779,7 +770,6 @@ def _cosine_sigs(
         _cap_buckets(sigs, ["__t", "__sig"], max_bucket_size, pair_budget)
         .withColumn("__norm", _l2_norm(F.col("__bv")))
         .filter(F.col("__norm") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -857,9 +847,6 @@ def dedup_simhash(
 
     def _dedup(df: DataFrame) -> DataFrame:
         base = _simhash_sig_df(df, text_col, id_col, shingle_size)
-        # the chunk self-join reads the bucket rows twice; persist the tiny
-        # capped (id, sig, chunk) table so shingle hashing + 60 vote-sums
-        # AND the bucket-size window run once
         chunks = _cap_buckets(
             base.select(
                 "__id",
@@ -874,7 +861,7 @@ def dedup_simhash(
             ["__k", "__chunk"],
             max_bucket_size,
             pair_budget,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         pairs = (
             chunks.alias("l")
             .join(
@@ -929,14 +916,10 @@ def dedup_ngram_jaccard(
 
     def _dedup(df: DataFrame) -> DataFrame:
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
-        # both sides of the pair self-join read the bucket rows — persist so
-        # the md5-heavy signature pipeline AND the bucket-size window
-        # materialize once (ids+hashes only, a sliver of the corpus size;
-        # spills to disk if it ever doesn't fit)
         exploded = _cap_buckets(
             _band_exploded(sig, bands, rows), ["__h"], max_bucket_size,
             pair_budget,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         # candidate pairs carry ONLY ids through the bucket join + dedup;
         # the (large) shingle arrays attach afterwards, once per unique pair
         pairs = (
@@ -1029,6 +1012,12 @@ def dedup_connected_components(
     def _cc(df: DataFrame) -> DataFrame:
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
         edges = _band_exploded(sig, bands, rows).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            return _cc_emit(df, _cc_labels(df, edges))
+        finally:
+            edges.unpersist()
+
+    def _cc_labels(df: DataFrame, edges: DataFrame) -> DataFrame:
         probe = bounded_collect(edges, DEDUP_CC_DRIVER_MAX_EDGES)
         # a NULL id never equi-joins, so it stays on the distributed path
         if probe is not None and driver_safe_ids(probe, "__id", allow_null=False):
@@ -1043,8 +1032,7 @@ def dedup_connected_components(
                 ),
                 edges.schema["__id"].dataType,
             ).withColumnRenamed("__node", "__id")
-            edges.unpersist()
-            return _cc_emit(df, F.broadcast(labels))
+            return F.broadcast(labels)
         labels = iter_materialize(
             edges.select("__id").distinct().withColumn(
                 "__label", F.col("__id")
@@ -1123,8 +1111,7 @@ def dedup_connected_components(
                 "max_iterations=%d rounds; components may be split",
                 max_iterations,
             )
-        edges.unpersist()
-        return _cc_emit(df, labels)
+        return labels
 
     def _cc_emit(df: DataFrame, labels: DataFrame) -> DataFrame:
         out = df.join(labels, df[id_col] == labels["__id"], "left").drop("__id")
@@ -1231,9 +1218,6 @@ def dedup_embedding_cosine(
         dim = _width(df)
         norm = _l2_norm(F.col(embedding_col).cast("array<double>"))
         unit = F.transform(F.col(embedding_col).cast("array<double>"), lambda v: v / norm)
-        # normalize once, persist: both the spread stream side and the
-        # broadcast build side read the same tiny normalized table instead of
-        # re-running the normalization projection per join input.
         # Zero-norm vectors have no direction: they skip the pair space
         # entirely (the unit normalization would be 0/0) and survive via
         # the left join below — cosine similarity cannot call them
@@ -1242,12 +1226,14 @@ def dedup_embedding_cosine(
         # (colbuild): Catalyst collapses them back into the single
         # element_at(transform(...), i) projection the one-select form
         # analyzed to — identical values, ~3x fewer driver round-trips
-        vecs = (
+        # probed: inside the pair loop an unmaterialized stream side would
+        # re-derive its components per PAIR (the loop evaluates the
+        # projection lazily), not per row
+        vecs = probe_materialize(
             ensure_parallelism(df)
             .filter(norm > 0)
             .select(F.col(id_col).alias("__id"), unit.alias("__u"))
             .select("__id", *element_aliases("__u", dim, "__e"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         dot = dot_cols("l.__e{i}", "r.__e{i}", dim)
         # stream side carries the O(n²) loop — spread it; build side broadcasts
@@ -1305,13 +1291,6 @@ def dedup_semantic_centroid(
     ``max_cluster_size`` are dropped from pairing (fail-safe cap, same
     policy as the LSH bucket cap). The verify dot product is the codegen
     ``element_at`` chain — no interpreted array lambdas on the pair path.
-    Cache lifetime note: the expanded corpus and the capped assignment
-    are persisted because each feeds TWO downstream joins of the
-    returned (lazy) plan, so there is no sound point inside the operator
-    to unpersist them — in a long-lived session that reuses one
-    SparkSession across many invocations, reclaim them with
-    ``spark.catalog.clearCache()`` (or materialize + unpersist at the
-    call site).
     Zero-norm vectors (e.g. empty documents through
     ``text_hash_embedding``) have no cosine direction: they skip
     assignment and pairing and always survive.
@@ -1372,13 +1351,10 @@ def dedup_semantic_centroid(
         # and minutes for the array-carrying pair verify); extracting the
         # components to plain double columns ONCE keeps the dot products
         # fused scalar arithmetic.
-        corpus = (
-            nonzero.select(
-                "__sid",
-                "__norm",
-                *element_aliases("__sv", dim, "__e"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        corpus = nonzero.select(
+            "__sid",
+            "__norm",
+            *element_aliases("__sv", dim, "__e"),
         )
         spark = df.sparkSession
         centroids = spark.createDataFrame(
@@ -1409,9 +1385,11 @@ def dedup_semantic_centroid(
             .agg(F.max(F.struct("__sim", "__cid")).alias("__b"))
             .select("__sid", F.col("__b.__cid").alias("__cid"))
         )
-        assigned = _cap_buckets(
-            corpus.join(slim, "__sid"), ["__cid"], max_cluster_size
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # probed: the in-cluster verify is a pair loop over it (the
+        # materialize sharing rule)
+        assigned = probe_materialize(
+            _cap_buckets(corpus.join(slim, "__sid"), ["__cid"], max_cluster_size)
+        )
         heads = _semantic_verify_heads(assigned, dim, threshold)
         return _semantic_annotate(df, id_col, heads, keep)
 
@@ -1546,7 +1524,7 @@ def dedup_semantic_hier(
             base.filter((F.col("__norm") > 0) & F.col("__cid").isNotNull()),
             ["__cid"],
             max_cluster_size,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         # SLIM pair join (ids+cell only), vectors re-attached once per
         # pair — the dedup_embedding_cosine LSH design. The flat arm
         # fuses the scalars through its pair join because its regime is
@@ -1943,7 +1921,7 @@ def text_winnow_overlap(
             ["fp"],
             max_bucket_size,
             pair_budget,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         pairs = (
             f.alias("l")
             .join(f.alias("r"), "fp")
@@ -2172,23 +2150,24 @@ def text_winnow_cross_overlap(
     from lakehouse_engine_spark.datapipes.text import winnow_fingerprint
 
     def _overlap(df: DataFrame) -> DataFrame:
-        # persist both fingerprint sets: each feeds the union boilerplate
-        # cap AND the pair join — un-persisted, the per-doc winnow chain
-        # (the expensive projection) would run TWICE per side
         main = (
             winnow_fingerprint(input_col=text_col, id_col=id_col, k=k, window=window)(df)
             .select(F.col(id_col).alias("__mid"), "fp")
             .distinct()
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         ref = (
             winnow_fingerprint(
                 input_col=other_text_col, id_col=other_id_col, k=k, window=window
             )(other_df)
             .select(F.col(other_id_col).alias("__rid"), "fp")
             .distinct()
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         # boilerplate cap over BOTH corpora: a fingerprint's bucket is its
-        # total membership across main+ref
+        # total membership across main+ref. The cap is a left join and a
+        # null filter, not an anti join: Catalyst pushes an anti join below
+        # a side's distinct(), where it re-runs the side's winnow chain
+        # instead of reading the distinct() exchange the cap count reads
+        # too (the materialize sharing rule)
         both = main.select("fp").unionByName(ref.select("fp"))
         cap = _effective_cap(max_bucket_size, pair_budget)
         if cap is not None:
@@ -2196,10 +2175,10 @@ def text_winnow_cross_overlap(
                 both.groupBy("fp")
                 .agg(F.count(F.lit(1)).alias("__n"))
                 .filter(F.col("__n") > cap)
-                .select("fp")
+                .select("fp", F.lit(True).alias("__hot"))
             )
-            main = main.join(hot, "fp", "left_anti")
-            ref = ref.join(hot, "fp", "left_anti")
+            main = main.join(hot, "fp", "left").filter(F.col("__hot").isNull()).drop("__hot")
+            ref = ref.join(hot, "fp", "left").filter(F.col("__hot").isNull()).drop("__hot")
         return (
             main.join(ref, "fp")
             .groupBy(F.col("__mid").alias("doc_id"), F.col("__rid").alias("ref_id"))

@@ -48,7 +48,9 @@ BROADCAST_MAX_ROWS = 2_000_000
 
 def fits_broadcast(df: DataFrame) -> bool:
     """True when ``df`` has at most ``BROADCAST_MAX_ROWS`` rows — one
-    count job, so callers gate on a persisted or checkpointed side."""
+    count job, so callers gate on a side probed by
+    :func:`~lakehouse_engine_spark.datapipes.materialize.probe_materialize`
+    (the sharing rule there)."""
     return df.count() <= BROADCAST_MAX_ROWS
 
 

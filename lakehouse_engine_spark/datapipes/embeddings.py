@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from lakehouse_engine_spark.datapipes.colbuild import vector_width
 from lakehouse_engine_spark.datapipes.registry import register
 
+# out_dim * input width above which embedding_random_projection folds in
+# the Arrow kernel: past it the unrolled expression would blow Janino's
+# 64 KB codegen method limit
+RANDOM_PROJECTION_MAX_TERMS = 65_536
+
 TransformerFn = Callable[[DataFrame], DataFrame]
 
 
@@ -418,8 +423,6 @@ def embedding_random_projection(
     input_col: str = "embedding",
     output_col: str = "embedding_rp",
     seed: str = "rp",
-    method: str = "auto",
-    fold: str = "pinned",
 ) -> TransformerFn:
     """Johnson-Lindenstrauss random projection: map ``array<float>``
     vectors to ``out_dim`` dimensions with a seeded Rademacher (±1)
@@ -433,29 +436,25 @@ def embedding_random_projection(
     sum of ±x[j] scaled by 1/sqrt(out_dim) — a single numeric spec every
     execution path reproduces BIT-FOR-BIT.
 
-    Two physical paths select on ``out_dim * d_in`` (``method="auto"``):
+    Two physical paths select on ``out_dim * d_in`` against
+    ``RANDOM_PROJECTION_MAX_TERMS``:
 
-    * ``unroll`` (≤ 65,536 terms): the fold as one whole-stage-codegen
+    * unroll (≤ 65,536 terms): the fold as one whole-stage-codegen
       SQL expression — no shuffle, no Python, and an external SQL engine
       replays it exactly (the dp110 oracle surface). Past the budget the
       generated expression would blow Janino's 64 KB method limit, hence:
-    * ``kernel`` (beyond the budget, or forced): an Arrow-batched numpy
-      pass (the ``embedding_pq_encode`` pattern); the ±1 matrix is built
-      once on the driver (an int8 ``out_dim × d_in`` closure — ~100 KB
-      for 768→128) and each batch folds column-by-column in the SAME
+    * kernel (beyond the budget): an Arrow-batched numpy pass (the
+      ``embedding_pq_encode`` pattern); the ±1 matrix is built once on
+      the driver (an int8 ``out_dim × d_in`` closure — ~100 KB for
+      768→128) and each batch folds column-by-column in the SAME
       left-associative index order on IEEE doubles, so kernel output is
       bit-identical to the unrolled expression at any width — one op
       definition across regimes, independent of partitioning and Arrow
-      batch boundaries (per-row arithmetic only). ``fold="blas"`` opts
-      into a float64 BLAS matmul instead: ~10-20× faster on realistic
-      widths, deterministic for a fixed numpy/BLAS build, but its
-      summation order is implementation-defined — use it when downstream
-      consumers re-derive (ANN candidates get exact re-verification)
-      rather than replay.
+      batch boundaries (per-row arithmetic only).
 
-    Poisoned-row contract, IDENTICAL on both physical paths so
-    ``method="auto"`` does not change results at the 65,536-term
-    boundary (r14 review finding): a null embedding, a null ELEMENT, or
+    Poisoned-row contract, IDENTICAL on both physical paths so the
+    choice does not change results at the 65,536-term boundary (r14
+    review finding): a null embedding, a null ELEMENT, or
     a NaN value all project to ``out_dim`` NULL components. NULL is the
     only marker both paths can emit — the Arrow boundary erases NaN in
     BOTH directions (null elements arrive at the kernel as float64 NaN;
@@ -468,17 +467,6 @@ def embedding_random_projection(
     """
     if out_dim < 1:
         raise ValueError("embedding_random_projection: out_dim must be >= 1")
-    if method not in ("auto", "unroll", "kernel"):
-        raise ValueError(
-            f"embedding_random_projection: method must be auto|unroll|"
-            f"kernel, got {method!r}"
-        )
-    if fold not in ("pinned", "blas"):
-        raise ValueError(
-            f"embedding_random_projection: fold must be pinned|blas, "
-            f"got {fold!r}"
-        )
-    max_terms = 65_536
 
     def _sign(i: int, j: int) -> int:
         import hashlib
@@ -530,15 +518,12 @@ def embedding_random_projection(
                     X = np.where(pd.isnull(X), np.nan, X).astype(np.float64)
                 else:
                     X = X.astype(np.float64)
-                if fold == "pinned":
-                    # column-by-column left-associative fold: the exact
-                    # IEEE op sequence of the unrolled SQL expression —
-                    # acc_j = acc_{j-1} + (±1.0)*x_j, then * scale
-                    acc = X[:, 0:1] * Sd[0][None, :]
-                    for j in range(1, d_in):
-                        acc += X[:, j : j + 1] * Sd[j][None, :]
-                else:  # blas
-                    acc = X @ Sd
+                # column-by-column left-associative fold: the exact
+                # IEEE op sequence of the unrolled SQL expression —
+                # acc_j = acc_{j-1} + (±1.0)*x_j, then * scale
+                acc = X[:, 0:1] * Sd[0][None, :]
+                for j in range(1, d_in):
+                    acc += X[:, j : j + 1] * Sd[j][None, :]
                 Y = acc * scale
                 for r, t in enumerate(ok):
                     res[t] = Y[r]
@@ -561,19 +546,8 @@ def embedding_random_projection(
                 F.lit(None).cast("array<double>"),
             )
         scale = 1.0 / (out_dim**0.5)
-        use_kernel = method == "kernel" or (
-            method == "auto" and out_dim * d_in > max_terms
-        )
-        if use_kernel:
+        if out_dim * d_in > RANDOM_PROJECTION_MAX_TERMS:
             return _project_kernel(df, d_in, scale)
-        if out_dim * d_in > max_terms:
-            raise ValueError(
-                f"embedding_random_projection: out_dim * input width = "
-                f"{out_dim}*{d_in} exceeds {max_terms} unrolled terms "
-                "(Janino's 64 KB codegen method limit); use "
-                'method="auto"/"kernel" for the bit-identical Arrow '
-                "kernel path"
-            )
         return _project_unroll(df, d_in, scale)
 
     return _project

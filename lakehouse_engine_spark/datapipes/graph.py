@@ -303,61 +303,61 @@ def pagerank(
         # per-iteration join then only touches the rank table
         annotated = edges.join(outdeg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
         nodes = endpoints.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-        n = nodes.count()
-        if n == 0:
-            annotated.unpersist()
-            nodes.unpersist()
-            return _emit(labels_frame(df.sparkSession, {}, ndt, T.LongType()))
-        init_s = SCALE // n
-        base_s = (3 * SCALE) // (20 * n)
-        ranks = iter_materialize(
-            nodes.select("__node", F.lit(init_s).cast("long").alias("__r")),
-            eager=False,
-            corpus_sized=True,
-        )
-        zero_rows = nodes.select(
-            "__node", F.lit(0).cast("long").alias("__c")
-        )
-        for _ in range(iterations):
-            # Every node's zero row rides the SAME exchange the
-            # destination-keyed sum already pays (map-side combine folds
-            # it away), replacing the per-iteration `nodes LEFT JOIN
-            # contribs` — one fewer exchange and no join per round, and
-            # sum(contribs + 0) == coalesce(sum(contribs), 0) exactly in
-            # int64 (r14).
-            contribs = (
-                annotated.join(
-                    ranks.withColumnRenamed("__node", "__src"), "__src"
-                )
-                .select(
-                    F.col("__dst").alias("__node"),
-                    F.expr("(__r * 17) div (20 * __outdeg)").alias("__c"),
-                )
-                .union(zero_rows)
-                .groupBy("__node")
-                .agg(F.sum("__c").alias("__in"))
-            )
-            # LAZY truncation (eager=False): plan depth still resets per
-            # round, but no per-round job is launched — the final action
-            # computes the whole chain in one job, checkpointing each
-            # round's blocks as it first computes them (identical work,
-            # minus `iterations` job launches; r14). Safe because every
-            # corpus_sized arm of iter_materialize is checkpoint-based
-            # (release() is a no-op there) — the persist-wrapper arm,
-            # which must be materialized before its predecessor is
-            # released, is never taken for corpus-sized frames.
-            nxt = iter_materialize(
-                contribs.select(
-                    "__node",
-                    (F.lit(base_s) + F.col("__in")).cast("long").alias("__r"),
-                ),
+        try:
+            n = nodes.count()
+            if n == 0:
+                return _emit(labels_frame(df.sparkSession, {}, ndt, T.LongType()))
+            init_s = SCALE // n
+            base_s = (3 * SCALE) // (20 * n)
+            ranks = iter_materialize(
+                nodes.select("__node", F.lit(init_s).cast("long").alias("__r")),
                 eager=False,
                 corpus_sized=True,
             )
-            release(ranks)  # previous round, now superseded
-            ranks = nxt
-        annotated.unpersist()
-        nodes.unpersist()
+            zero_rows = nodes.select(
+                "__node", F.lit(0).cast("long").alias("__c")
+            )
+            for _ in range(iterations):
+                # Every node's zero row rides the SAME exchange the
+                # destination-keyed sum already pays (map-side combine folds
+                # it away), replacing the per-iteration `nodes LEFT JOIN
+                # contribs` — one fewer exchange and no join per round, and
+                # sum(contribs + 0) == coalesce(sum(contribs), 0) exactly in
+                # int64 (r14).
+                contribs = (
+                    annotated.join(
+                        ranks.withColumnRenamed("__node", "__src"), "__src"
+                    )
+                    .select(
+                        F.col("__dst").alias("__node"),
+                        F.expr("(__r * 17) div (20 * __outdeg)").alias("__c"),
+                    )
+                    .union(zero_rows)
+                    .groupBy("__node")
+                    .agg(F.sum("__c").alias("__in"))
+                )
+                # LAZY truncation (eager=False): plan depth still resets per
+                # round, but no per-round job is launched — the final action
+                # computes the whole chain in one job, checkpointing each
+                # round's blocks as it first computes them (identical work,
+                # minus `iterations` job launches; r14). Safe because every
+                # corpus_sized arm of iter_materialize is checkpoint-based
+                # (release() is a no-op there) — the persist-wrapper arm,
+                # which must be materialized before its predecessor is
+                # released, is never taken for corpus-sized frames.
+                nxt = iter_materialize(
+                    contribs.select(
+                        "__node",
+                        (F.lit(base_s) + F.col("__in")).cast("long").alias("__r"),
+                    ),
+                    eager=False,
+                    corpus_sized=True,
+                )
+                release(ranks)  # previous round, now superseded
+                ranks = nxt
+        finally:
+            annotated.unpersist()
+            nodes.unpersist()
         return _emit(ranks.withColumnRenamed("__r", "__label"))
 
     return _pr

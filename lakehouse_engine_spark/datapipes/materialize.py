@@ -1,4 +1,25 @@
-"""Materialization policy for iterative datapipes loops.
+"""Materialization policy of the datapipes operators.
+
+Sharing an intermediate. An operator holds no cache past its return, and
+shares a frame by one rule:
+
+* A frame read twice inside the returned plan is not materialized:
+  Catalyst's exchange reuse computes the work below a shared exchange
+  once per action. An anti join that Catalyst would push below that
+  exchange is written as a left join and a null filter
+  (``text_winnow_cross_overlap``).
+* A frame that a build-time action also reads (a size gate, a collect),
+  or whose repeated reads measurably dominate the operator (the
+  streamed side of a pair loop, whose projection codegen re-derives per
+  pair; a Python pass that readers prune differently), goes through
+  :func:`probe_materialize`, and the returned plan reads the probed
+  frame. A probe of a small side input (``text_bm25_topk``'s query
+  terms) or of a plain projection of the input
+  (``dedup_semantic_centroid``'s centroid sample) recomputes instead.
+* ``persist`` stays only inside an operator that runs its own actions
+  over the frame (the iterative loops: k-means, PageRank, connected
+  components, the incremental dedup ops, the frequent-terms summary)
+  and unpersists it in a ``finally`` before returning.
 
 Iterative operators (connected components, PageRank, the BPE trainer)
 re-derive a small control frame every round; without per-round plan
@@ -37,10 +58,10 @@ lineage recompute after executor loss would re-read the
 already-updated state and silently drop rows, so failing loudly is the
 correct behavior there.
 
-One-shot size probes (count now, reuse in a lazily-returned plan) use
-:func:`probe_materialize`: checkpoint on static clusters, NO
-materialization under dynamic allocation (a persist could never be
-released; the probe recomputes instead — leak-free and loss-safe).
+:func:`probe_materialize` (count now, reuse in a lazily-returned plan):
+checkpoint on static clusters, NO materialization under dynamic
+allocation (a persist could never be released; the probe recomputes
+instead — leak-free and loss-safe).
 """
 
 from __future__ import annotations

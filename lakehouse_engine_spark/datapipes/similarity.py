@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from typing import Callable, List, Optional
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,6 +26,7 @@ from lakehouse_engine_spark.datapipes.colbuild import (
     md5_fold,
     vector_width,
 )
+from lakehouse_engine_spark.datapipes.materialize import probe_materialize
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 
 from lakehouse_engine_spark.datapipes.dedup import cosine
@@ -250,44 +250,31 @@ def knn_lsh(
     """
 
     def _knn(df: DataFrame) -> DataFrame:
-        # corpus AND query sides both read sigs — persist so the heavy
-        # signature pass materializes once
         sigs = hyperplane_signatures(
             df, embedding_col, id_col, num_planes, num_tables, dim=dim
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            corpus = sigs.select(
-                F.col("__bid").alias("neighbor_id"), F.col("__bv").alias("__cv"), "__t", "__sig"
-            )
-            queries = sigs.join(
-                F.broadcast(df.filter(query_filter).select(F.col(id_col).alias("__bid"))),
-                "__bid",
-            ).select(
-                F.col("__bid").alias("query_id"), F.col("__bv").alias("__qv"), "__t", "__sig"
-            )
-            cands = (
-                F.broadcast(queries)
-                .join(corpus, ["__t", "__sig"])
-                .filter(F.col("query_id") != F.col("neighbor_id"))
-                .dropDuplicates(["query_id", "neighbor_id"])
-            )
-            scored = cands.withColumn("score", F.round(cosine(F.col("__qv"), F.col("__cv")), 6))
-            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-            out = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id", "score", "rank")
-            )
-            # materialize, then release the cache handle: the persist
-            # used to outlive the call FOREVER (one leaked signature set
-            # per invocation in a long session — r14 review finding);
-            # the knn_ivf_hier eager-checkpoint convention keeps the
-            # EXECUTED logical plan reachable for plan gates
-            result = out.localCheckpoint(eager=True)
-            result._lhe_plan_df = out
-            return result
-        finally:
-            sigs.unpersist()
+        )
+        corpus = sigs.select(
+            F.col("__bid").alias("neighbor_id"), F.col("__bv").alias("__cv"), "__t", "__sig"
+        )
+        queries = sigs.join(
+            F.broadcast(df.filter(query_filter).select(F.col(id_col).alias("__bid"))),
+            "__bid",
+        ).select(
+            F.col("__bid").alias("query_id"), F.col("__bv").alias("__qv"), "__t", "__sig"
+        )
+        cands = (
+            F.broadcast(queries)
+            .join(corpus, ["__t", "__sig"])
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .dropDuplicates(["query_id", "neighbor_id"])
+        )
+        scored = cands.withColumn("score", F.round(cosine(F.col("__qv"), F.col("__cv")), 6))
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "score", "rank")
+        )
 
     return _knn
 
@@ -344,8 +331,8 @@ def knn_ivf(
             for _ in range(iters):
                 # Lloyd round: broadcast-assign, then per-cluster mean. The
                 # element-wise mean is dim scalar AVG aggregates (codegen,
-                # map-side combined); the tiny result localCheckpoints so
-                # lineage stays flat across rounds.
+                # map-side combined); the tiny result goes through
+                # probe_materialize so lineage stays flat across rounds.
                 assign_it = (
                     base.join(F.broadcast(centroids))
                     .withColumn("__sim", cosine(F.col("__v"), F.col("__cv")))
@@ -354,7 +341,7 @@ def knn_ivf(
                     .select(F.col("__b.centroid_id").alias("centroid_id"),
                             F.col("__b.__v").alias("__v"))
                 )
-                centroids = (
+                centroids = probe_materialize(
                     assign_it.groupBy("centroid_id")
                     .agg(
                         F.expr(
@@ -366,7 +353,6 @@ def knn_ivf(
                             )
                         )
                     )
-                    .localCheckpoint(eager=True)
                 )
         # assign corpus vectors to their best centroid (broadcast centroids);
         # argmax via max(struct) — partial-aggregates map-side, so the shuffle
@@ -460,7 +446,9 @@ def knn_ivf_hier(
                 output_col="__cell",
             )
         )
-        base = (
+        # probed: the width probe and the returned plan's three reads, which
+        # prune different columns, would each re-run the cell assignment
+        base = probe_materialize(
             ensure_parallelism(assigned)
             .filter(F.col(embedding_col).isNotNull())
             .select(
@@ -469,93 +457,84 @@ def knn_ivf_hier(
                 _quantize_expr(embedding_col, quant_scale).alias("__qv"),
                 F.col("__cell"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        try:
-            dim = vector_width(base, "__qv")
-            if dim == 0:
-                # degenerate-corpus schema must MATCH the populated
-                # path's (ids keep the caller's id_col type — the
-                # knn_pq schema-flip lesson, r14 review finding)
-                idt = df.schema[id_col].dataType
-                return base.sparkSession.createDataFrame(
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("query_id", idt),
-                            T.StructField("neighbor_id", idt),
-                            T.StructField("score", T.DoubleType()),
-                            T.StructField("rank", T.IntegerType()),
-                        ]
-                    ),
-                )
-            sums = [
-                F.expr(f"sum(element_at(__qv, {i + 1})) as __s{i}")
-                for i in range(dim)
-            ]
-            cents_raw = base.groupBy("__cell").agg(
-                F.count(F.lit(1)).alias("__n"), *sums
+        dim = vector_width(base, "__qv")
+        if dim == 0:
+            # degenerate-corpus schema must MATCH the populated
+            # path's (ids keep the caller's id_col type — the
+            # knn_pq schema-flip lesson, r14 review finding)
+            idt = df.schema[id_col].dataType
+            return base.sparkSession.createDataFrame(
+                [],
+                T.StructType(
+                    [
+                        T.StructField("query_id", idt),
+                        T.StructField("neighbor_id", idt),
+                        T.StructField("score", T.DoubleType()),
+                        T.StructField("rank", T.IntegerType()),
+                    ]
+                ),
             )
-            # exact floor-div mean per dimension (the trainer's update rule)
-            mean_exprs = [
-                F.expr(
-                    f"CASE WHEN __s{i} >= 0 THEN __s{i} DIV __n "
-                    f"ELSE -((-__s{i} + __n - 1) DIV __n) END"
-                )
-                for i in range(dim)
-            ]
-            cents = cents_raw.select(
-                "__cell", F.array(*mean_exprs).alias("__cv")
+        sums = [
+            F.expr(f"sum(element_at(__qv, {i + 1})) as __s{i}")
+            for i in range(dim)
+        ]
+        cents_raw = base.groupBy("__cell").agg(
+            F.count(F.lit(1)).alias("__n"), *sums
+        )
+        # exact floor-div mean per dimension (the trainer's update rule)
+        mean_exprs = [
+            F.expr(
+                f"CASE WHEN __s{i} >= 0 THEN __s{i} DIV __n "
+                f"ELSE -((-__s{i} + __n - 1) DIV __n) END"
             )
-            # filter the CALLER's frame and semi-join (the knn_pq/knn_lsh
-            # pattern): a naive rename-rewrite of the predicate corrupts
-            # filters where id_col appears as a substring of another name
-            # or that reference non-id columns (r14 review finding)
-            qsrc = df.filter(query_filter) if query_filter else df
-            q = base.join(
-                F.broadcast(qsrc.select(F.col(id_col).alias("__vid"))),
-                "__vid",
-            ).select(
-                F.col("__vid").alias("query_id"),
-                F.col("__v").alias("__queryv"),
-                F.col("__qv").alias("__queryq"),
+            for i in range(dim)
+        ]
+        cents = cents_raw.select(
+            "__cell", F.array(*mean_exprs).alias("__cv")
+        )
+        # filter the CALLER's frame and semi-join (the knn_pq/knn_lsh
+        # pattern): a naive rename-rewrite of the predicate corrupts
+        # filters where id_col appears as a substring of another name
+        # or that reference non-id columns (r14 review finding)
+        qsrc = df.filter(query_filter) if query_filter else df
+        q = base.join(
+            F.broadcast(qsrc.select(F.col(id_col).alias("__vid"))),
+            "__vid",
+        ).select(
+            F.col("__vid").alias("query_id"),
+            F.col("__v").alias("__queryv"),
+            F.col("__qv").alias("__queryq"),
+        )
+        probe_w = Window.partitionBy("query_id").orderBy(
+            F.asc("__d"), F.asc("__cell")
+        )
+        probes = (
+            q.join(F.broadcast(cents))
+            .withColumn("__d", grid_sq_dist("__queryq", "__cv"))
+            .withColumn("__r", F.row_number().over(probe_w))
+            .filter(F.col("__r") <= nprobe)
+            .select("query_id", "__queryv", "__cell")
+        )
+        scored = (
+            F.broadcast(probes)
+            .join(base, "__cell")
+            .filter(F.col("query_id") != F.col("__vid"))
+            .withColumn(
+                "score", F.round(cosine(F.col("__queryv"), F.col("__v")), 6)
             )
-            probe_w = Window.partitionBy("query_id").orderBy(
-                F.asc("__d"), F.asc("__cell")
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("score"), F.asc("__vid")
+        )
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(
+                "query_id", F.col("__vid").alias("neighbor_id"),
+                "score", "rank",
             )
-            probes = (
-                q.join(F.broadcast(cents))
-                .withColumn("__d", grid_sq_dist("__queryq", "__cv"))
-                .withColumn("__r", F.row_number().over(probe_w))
-                .filter(F.col("__r") <= nprobe)
-                .select("query_id", "__queryv", "__cell")
-            )
-            scored = (
-                F.broadcast(probes)
-                .join(base, "__cell")
-                .filter(F.col("query_id") != F.col("__vid"))
-                .withColumn(
-                    "score", F.round(cosine(F.col("__queryv"), F.col("__v")), 6)
-                )
-            )
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.asc("__vid")
-            )
-            out = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(
-                    "query_id", F.col("__vid").alias("neighbor_id"),
-                    "score", "rank",
-                )
-            )
-            # materialize before unpersisting the frame the plan reads;
-            # keep the EXECUTED logical plan reachable for plan gates
-            result = out.localCheckpoint(eager=True)
-            result._lhe_plan_df = out
-            return result
-        finally:
-            base.unpersist()
+        )
 
     return _knn
 

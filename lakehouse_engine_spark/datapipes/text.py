@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.datapipes.colbuild import log_grid, md5_fold
 from lakehouse_engine_spark.datapipes.driver_tier import fits_broadcast
+from lakehouse_engine_spark.datapipes.materialize import probe_materialize
 from lakehouse_engine_spark.datapipes.parallel import ensure_parallelism
 from lakehouse_engine_spark.datapipes.registry import register, register_with
 
@@ -674,25 +675,21 @@ def frequent_terms(
         summary = toks.mapInPandas(part, "term string, nt long").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        total = summary.where(F.col("term").isNull()).agg(
-            F.sum("nt")
-        ).first()[0]
-        if not total:
-            summary.unpersist()
-            return df.sparkSession.createDataFrame(
-                [], "term string, n long, support double"
+        try:
+            total = summary.where(F.col("term").isNull()).agg(
+                F.sum("nt")
+            ).first()[0]
+            if not total:
+                return df.sparkSession.createDataFrame(
+                    [], "term string, n long, support double"
+                )
+            # candidates are <= counters rows per partition
+            cand = probe_materialize(
+                summary.where(F.col("term").isNotNull()).select("term").distinct()
             )
+        finally:
+            summary.unpersist()
         threshold = int(math.ceil(min_support * total))
-        # candidates are <= counters rows per partition; checkpoint them
-        # (eager, tiny) so the MG summary can be unpersisted NOW instead
-        # of leaking into the session (the bm25 qterms ADVICE class)
-        cand = (
-            summary.where(F.col("term").isNotNull())
-            .select("term")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        summary.unpersist()
         if fits_broadcast(cand):
             cand = F.broadcast(cand)
         exploded = sdf.select(F.explode(_stream()).alias("term"))
@@ -1052,7 +1049,9 @@ def lm_score(
     ``top_v`` rows (TakeOrderedAndProject, no global sort) → **broadcast**;
     the per-doc pass is explode → broadcast-hash-join → one map-side-
     combined groupBy on the doc id. No corpus-side shuffle other than the
-    doc-id agg; the vocab side is constant-size at any corpus scale.
+    doc-id agg; the vocab side is constant-size at any corpus scale. The
+    total-mass scalar and the probe join share the vocab's exchange (the
+    :mod:`~lakehouse_engine_spark.datapipes.materialize` sharing rule).
     """
 
     def _score(df: DataFrame) -> DataFrame:
@@ -1060,17 +1059,12 @@ def lm_score(
             df.select(F.col(id_col).alias("__id"), tokens_lower(F.col(input_col)).alias("__t"))
             .select("__id", F.explode("__t").alias("__w"))
         )
-        from pyspark import StorageLevel
-
-        # persist: the (≤ top_v)-row vocab feeds BOTH the total-mass scalar
-        # and the broadcast probe join — without it the full corpus token
-        # count (a 100 TB scan + shuffle) runs twice
         vocab = (
             toks.groupBy("__w")
             .agg(F.count(F.lit(1)).alias("__c"))
             .orderBy(F.desc("__c"), F.asc("__w"))
             .limit(top_v)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         # N = total in-vocab token mass; a single scalar — computed once from
         # the (≤ top_v)-row vocab, not from the corpus
         total = vocab.agg(F.sum("__c").alias("__n"))
@@ -1132,11 +1126,11 @@ def lm_score_bigram(
     computed corpus-wide but semi-joined down to the (≤ top_v) distinct
     vocab prefixes before broadcasting. The per-doc pass is one bigram
     explode → two broadcast joins → one doc-keyed map-side-combined agg.
+    The prefix prune and the probe join share the vocab's exchange (the
+    :mod:`~lakehouse_engine_spark.datapipes.materialize` sharing rule).
     """
 
     def _score(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
         toks = tokens_lower(F.col(input_col))
         base = df.select(F.col(id_col).alias("__id"), toks.alias("__t")).filter(
             F.size("__t") >= 2
@@ -1163,7 +1157,7 @@ def lm_score_bigram(
             .agg(F.count(F.lit(1)).alias("__cb"))
             .orderBy(F.desc("__cb"), F.asc("__bg"))
             .limit(top_v)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         prefixes = vocab.select(
             F.split("__bg", " ").getItem(0).alias("__w")
         ).distinct()
@@ -1219,7 +1213,9 @@ def word_pmi(
     engine-``round()`` half-way hazards. ``pmi = pmi_s / 10⁴``.
 
     Scale design: the bigram count is one map-side-combined aggregate
-    cut to ``>= min_count`` survivors (eagerly checkpointed — tiny);
+    cut to ``>= min_count`` survivors (probed with
+    :func:`~lakehouse_engine_spark.datapipes.materialize.probe_materialize`
+    — tiny);
     unigram counts are then computed ONLY for words appearing in a
     surviving pair, by pruning the corpus token stream with a size-gated
     broadcast semi-join before the count — the full unigram vocabulary
@@ -1253,17 +1249,15 @@ def word_pmi(
                 )
             ).alias("__p")
         ).select(F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
-        bi = (
+        bi = probe_materialize(
             pairs.groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).alias("n_ab"))
             .where(F.col("n_ab") >= min_count)
-            .localCheckpoint(eager=True)
         )
-        words = (
+        words = probe_materialize(
             bi.select(F.col("w1").alias("__w"))
             .union(bi.select(F.col("w2").alias("__w")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         do_broadcast = fits_broadcast(words)
         words_side = F.broadcast(words) if do_broadcast else words
@@ -1327,8 +1321,9 @@ def tfidf_top_terms(
     Broadcast gate: the df side is "vocabulary-sized", but with the
     default ``min_df=1`` on web-scale text that is every distinct term —
     potentially 10⁸+ rows, which a forced broadcast would OOM. The op
-    counts ``dfreq`` (one aggregate over the already-persisted pairs —
-    cheap) and broadcasts only while :func:`driver_tier.fits_broadcast`
+    counts ``dfreq`` (one aggregate over the probed pairs — cheap; see
+    :mod:`~lakehouse_engine_spark.datapipes.materialize` for the sharing
+    rule) and broadcasts only while :func:`driver_tier.fits_broadcast`
     passes; above it the tf⋈df join runs as a regular shuffle join on
     ``term``.
     """
@@ -1337,18 +1332,14 @@ def tfidf_top_terms(
         from pyspark.sql import Window
 
         n_docs = df.select(F.countDistinct(F.col(id_col)).alias("__nd"))
-        from pyspark import StorageLevel
-
-        # persist: the (doc, term, tf) aggregate feeds BOTH the df-side
-        # term counts and the scoring join — without it the corpus
-        # tokenize/explode/shuffle pipeline executes twice (no
-        # ReusedExchange across the two consumers)
-        pairs = (
+        # the broadcast gate counts dfreq at build time, so the (doc, term,
+        # tf) aggregate both consumers read is probed once
+        pairs = probe_materialize(
             df.select(F.col(id_col).alias("__id"), tokens_lower(F.col(input_col)).alias("__t"))
             .select("__id", F.explode("__t").alias("term"))
             .groupBy("__id", "term")
             .agg(F.count(F.lit(1)).alias("tf"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         dfreq = (
             pairs.groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -1731,8 +1722,8 @@ def bm25_topk(
     (query, term) count passes :func:`driver_tier.fits_broadcast`; for
     eval-set mining with millions of queries the joins degrade to
     regular shuffle joins instead of blowing the broadcast. Default
-    (``broadcast_queries=None``) probes the persisted qterms table with
-    one count (no corpus scan); pass ``True``/``False`` to pin the
+    (``broadcast_queries=None``) probes the qterms table with one count
+    (no corpus scan); pass ``True``/``False`` to pin the
     strategy and skip the probe. The 1-row corpus-stats table is always
     broadcast.
     """
@@ -1751,11 +1742,9 @@ def bm25_topk(
             F.explode(tokens_lower(F.col(query_col))).alias("term"),
         ).distinct()
         # qterms is reused three ways (vocab prune, final scoring join,
-        # size probe), but its distinct() ends in an Exchange, so within
-        # the caller's single action ReusedExchange dedupes the identical
-        # subplans — a lingering persist is NOT needed for that and would
-        # leak cache in long-lived sessions (the returned plan is lazy, so
-        # there is no sound place to unpersist after materialization).
+        # size probe); the probe recounts the small query side, and the
+        # returned plan shares its distinct() Exchange (the materialize
+        # sharing rule)
         do_broadcast = broadcast_queries
         if do_broadcast is None:
             do_broadcast = fits_broadcast(qterms)
@@ -2409,8 +2398,8 @@ def dsir_score(
     the raw token stream — and BOTH consumers (the source bucket
     distribution and the per-doc scoring join) derive from that same
     exchange, which ReusedExchange dedupes within the single action
-    (the ``text_bm25_topk`` pattern; no persist, no cache-lifetime
-    leak). The target makes its own one explode pass into ≤
+    (the :mod:`~lakehouse_engine_spark.datapipes.materialize` sharing
+    rule). The target makes its own one explode pass into ≤
     ``num_buckets`` combined rows. The merged bucket table and the
     1-row totals both BROADCAST (gated: ``num_buckets`` ≤ 1M keeps the
     broadcast ≤ ~25 MB); scoring is broadcast-hash-join over the
@@ -2914,21 +2903,18 @@ def source_unigram_divergence(
     Scale design: one corpus-wide (source, token) count — a standard
     map-side-combined word-count shuffle; EVERYTHING downstream runs on
     vocabulary-sized tables derived from it (the corpus count re-aggs
-    the source counts — the corpus is scanned ONCE). The source-count
-    table persists because it feeds both the re-agg and the join; the
-    per-source result is one row per source.
+    the source counts — the corpus is scanned ONCE: the re-agg and the
+    join share the source-count exchange, the
+    :mod:`~lakehouse_engine_spark.datapipes.materialize` sharing rule).
+    The per-source result is one row per source.
     """
 
     def _div(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
         toks = df.select(
             F.col(group_col).alias("__g"),
             F.explode(tokens_lower(F.col(input_col))).alias("__w"),
         )
-        sw = (
-            toks.groupBy("__g", "__w").agg(F.count(F.lit(1)).alias("__c"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        sw = toks.groupBy("__g", "__w").agg(F.count(F.lit(1)).alias("__c"))
         cw = sw.groupBy("__w").agg(F.sum("__c").alias("__cw"))
         tot = cw.agg(F.sum("__cw").alias("__n"))
         agg = (
@@ -3185,8 +3171,10 @@ def seed_classifier_score(
 
     Scale design: one token-count pass per class (map-side combined,
     vocabulary-sized output), full-outer merge, TakeOrdered cap to
-    ``top_v`` → the vocab table persists (it feeds the 1-row masses AND
-    the probe) and **broadcasts**; scoring is explode →
+    ``top_v`` → the vocab table (it feeds the 1-row masses AND the probe,
+    sharing its exchanges — the
+    :mod:`~lakehouse_engine_spark.datapipes.materialize` sharing rule)
+    **broadcasts**; scoring is explode →
     broadcast-hash-join → one doc-keyed agg — the ``text_lm_score``
     posture: no corpus-side shuffle beyond the doc-id agg, vocab side
     constant-size at any corpus scale.
@@ -3195,8 +3183,6 @@ def seed_classifier_score(
         raise ValueError(f"text_seed_classifier_score: top_v must be >= 1, got {top_v}")
 
     def _score(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
         cn = (
             df.select(F.explode(tokens_lower(F.col(input_col))).alias("__w"))
             .groupBy("__w")
@@ -3216,7 +3202,7 @@ def seed_classifier_score(
             )
             .orderBy(F.desc(F.col("__cn") + F.col("__cp")), F.asc("__w"))
             .limit(top_v)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         masses = vocab.agg(
             F.sum("__cp").alias("__np"),
             F.sum("__cn").alias("__nn"),

@@ -464,8 +464,22 @@ def _with_row_count(spark, stats, rows: int):
 
 
 def _catalog_ident(spark, db_table):
+    """The session catalog and the ``TableIdentifier`` of ``db_table``: a
+    one-, two- or three-part name (``spark_catalog.<db>.<t>``), the names
+    ``DESCRIBE`` and ``ANALYZE`` accept (``parseTableIdentifier`` rejects
+    three parts)."""
+    jvm = spark._jvm
     state = spark._jsparkSession.sessionState()
-    return state.catalog(), state.sqlParser().parseTableIdentifier(db_table)
+    parts = list(
+        jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            state.sqlParser().parseMultipartIdentifier(db_table)
+        )
+    )
+    table, db, catalog = (parts[::-1] + [None, None])[:3]
+    opt = jvm.scala.Option.apply
+    return state.catalog(), jvm.org.apache.spark.sql.catalyst.TableIdentifier(
+        table, opt(db), opt(catalog)
+    )
 
 
 def _statistics(spark, db_table) -> tuple:

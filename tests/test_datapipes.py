@@ -1826,6 +1826,67 @@ def test_size_gates_count_only_in_driver_tier():
     assert found == []
 
 
+def test_datapipes_hold_no_cache_past_return():
+    """The sharing rule of ``datapipes/materialize.py``, checked on the
+    sources: a ``.persist(`` outside ``materialize.py`` is assigned to a
+    name that its own function unpersists in a ``finally``, and
+    ``localCheckpoint(`` appears only in ``materialize.py`` and
+    ``dedup._commit_state``. Spark-free: parses the sources."""
+    import ast
+    import pathlib
+
+    import lakehouse_engine_spark.datapipes as dp
+
+    def own_nodes(fn):
+        # fn's nodes, without those of the functions nested in it
+        todo = list(ast.iter_child_nodes(fn))
+        while todo:
+            node = todo.pop()
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield node
+                todo.extend(ast.iter_child_nodes(node))
+
+    def calls(nodes, attr):
+        return [
+            n for n in nodes
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+        ]
+
+    found = []
+    for path in sorted(pathlib.Path(dp.__file__).parent.glob("*.py")):
+        if path.name == "materialize.py":
+            continue
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nodes = list(own_nodes(fn))
+            where = f"{path.name}:{fn.name}"
+            if calls(nodes, "localCheckpoint") and where != "dedup.py:_commit_state":
+                found.append(f"{where} localCheckpoint")
+            released = {
+                c.func.value.id
+                for n in nodes
+                if isinstance(n, ast.Try)
+                for c in calls([m for s in n.finalbody for m in ast.walk(s)], "unpersist")
+                if isinstance(c.func.value, ast.Name)
+            }
+            persisted = [
+                (n.targets, c)
+                for n in nodes
+                if isinstance(n, ast.Assign)
+                for c in calls(ast.walk(n.value), "persist")
+            ]
+            for targets, _ in persisted:
+                names = {t.id for t in targets if isinstance(t, ast.Name)}
+                if not names or not names <= released:
+                    found.append(f"{where} persist without a finally unpersist")
+            if len(calls(nodes, "persist")) > len(persisted):
+                found.append(f"{where} persist not assigned to a name")
+    assert found == []
+
+
 def test_driver_built_threshold_tables_take_no_broadcast_option():
     """unimax/temperature thresholds come from at most MAX_MIX_GROUPS
     driver rows and token_budget_sample's from one row per group; all
@@ -4553,10 +4614,11 @@ def test_random_projection_preserves_distances(spark):
 
 
 def test_random_projection_guards_and_quoting(spark):
-    """Width guard: out_dim * d_in beyond the unrolled-term cap raises
-    with guidance instead of stalling the planner; non-identifier column
-    names are backtick-quoted into the generated SQL."""
-    import pyspark.sql.functions as F
+    """Width guard: out_dim * d_in beyond the unrolled-term cap folds in
+    the Arrow kernel instead of stalling the planner; non-identifier
+    column names are backtick-quoted into the generated SQL; the path is
+    no option (passing ``method`` or ``fold`` is a TypeError)."""
+    from lakehouse_engine_spark.datapipes import embeddings
 
     weird = spark.createDataFrame(
         [(1, [1.0, 2.0, 3.0, 4.0])], "vec_id LONG, `my emb` ARRAY<DOUBLE>"
@@ -4568,20 +4630,17 @@ def test_random_projection_guards_and_quoting(spark):
     wide = spark.createDataFrame(
         [(1, [float(i) for i in range(1024)])], "vec_id LONG, embedding ARRAY<DOUBLE>"
     )
-    with pytest.raises(ValueError, match="unrolled terms"):
-        wide.transform(
-            t("embedding_random_projection", out_dim=256, method="unroll")
-        ).collect()
-    # auto switches to the Arrow kernel past the cap instead of raising —
-    # realistic LLM widths (1024 -> 256) project fine
+    # past the cap the Arrow kernel folds instead of the unrolled
+    # expression — realistic LLM widths (1024 -> 256) project fine
+    assert 256 * 1024 > embeddings.RANDOM_PROJECTION_MAX_TERMS
     big = wide.transform(
         t("embedding_random_projection", out_dim=256)
     ).collect()
     assert len(big[0]["embedding_rp"]) == 256
-    with pytest.raises(ValueError, match="method"):
-        t("embedding_random_projection", out_dim=2, method="nope")
-    with pytest.raises(ValueError, match="fold"):
-        t("embedding_random_projection", out_dim=2, fold="nope")
+    with pytest.raises(TypeError, match="method"):
+        embeddings.embedding_random_projection(out_dim=2, method="kernel")
+    with pytest.raises(TypeError, match="fold"):
+        embeddings.embedding_random_projection(out_dim=2, fold="blas")
     # null-first-row corpus still infers the width from later rows
     nulled = spark.createDataFrame(
         [(0, None), (1, [1.0, 0.0])], "vec_id LONG, embedding ARRAY<DOUBLE>"
@@ -4591,15 +4650,16 @@ def test_random_projection_guards_and_quoting(spark):
     assert rows[1] is not None and len(rows[1]) == 2
 
 
-def test_random_projection_kernel_bit_identical_to_unroll(spark):
-    """The Arrow kernel's column-by-column pinned fold performs the SAME
+def test_random_projection_kernel_bit_identical_to_unroll(spark, monkeypatch):
+    """The Arrow kernel's column-by-column fold performs the SAME
     left-associative IEEE op sequence as the unrolled SQL expression, so
-    forced-kernel output is bit-for-bit equal to forced-unroll output —
-    one numeric spec across both physical regimes (null rows and
-    null-element rows included). fold="blas" agrees to ~1e-12 relative;
-    results are invariant to partitioning and Arrow batch boundaries."""
-    import math
+    kernel output (the term cap patched to 0) is bit-for-bit equal to
+    unroll output — one numeric spec across both physical regimes (null
+    rows and null-element rows included); results are invariant to
+    partitioning and Arrow batch boundaries."""
     import random as rnd
+
+    from lakehouse_engine_spark.datapipes import embeddings
 
     rnd.seed(11)
     d, k = 32, 16
@@ -4609,16 +4669,17 @@ def test_random_projection_kernel_bit_identical_to_unroll(spark):
     nul[5] = None
     rows.append((101, nul))
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    a = {r["vec_id"]: r["embedding_rp"] for r in df.transform(
-        t("embedding_random_projection", out_dim=k, method="unroll")
-    ).collect()}
-    b = {r["vec_id"]: r["embedding_rp"] for r in df.transform(
-        t("embedding_random_projection", out_dim=k, method="kernel")
-    ).collect()}
-    c = {r["vec_id"]: r["embedding_rp"] for r in df.transform(
-        t("embedding_random_projection", out_dim=k, method="kernel",
-          fold="blas")
-    ).collect()}
+
+    def project(frame, max_terms):
+        monkeypatch.setattr(embeddings, "RANDOM_PROJECTION_MAX_TERMS", max_terms)
+        return frame.transform(t("embedding_random_projection", out_dim=k))
+
+    unroll = project(df, d * k)
+    assert "ArrowEvalPython" not in unroll._jdf.queryExecution().executedPlan().toString()
+    a = {r["vec_id"]: r["embedding_rp"] for r in unroll.collect()}
+    kernel = project(df, 0)
+    assert "ArrowEvalPython" in kernel._jdf.queryExecution().executedPlan().toString()
+    b = {r["vec_id"]: r["embedding_rp"] for r in kernel.collect()}
     # TRUE bitwise identity: Python float == is value comparison
     # (-0.0 == 0.0 would pass), so compare the raw IEEE-754 bit patterns
     import struct
@@ -4633,20 +4694,12 @@ def test_random_projection_kernel_bit_identical_to_unroll(spark):
         assert _bits(a[i]) == _bits(b[i]), i
     # null row and null-element row both null-poison into [None] * k
     assert a[100] == [None] * k and a[101] == [None] * k
-    for i in a:
-        if a[i] is None or a[i][0] is None:
-            assert c[i] == a[i]
-            continue
-        for x, z in zip(a[i], c[i]):
-            assert math.isclose(x, z, rel_tol=1e-9)
     # batch/partition invariance of the kernel path
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", 7)
         b2 = {r["vec_id"]: r["embedding_rp"] for r in
-              df.repartition(7).transform(
-                  t("embedding_random_projection", out_dim=k,
-                    method="kernel")).collect()}
+              project(df.repartition(7), 0).collect()}
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert b2 == b
@@ -6415,13 +6468,8 @@ def test_r14_ann_graph_review_fixes(spark):
     ).collect()}
     assert km[1]["cluster_dist"] == 0 and km[2]["cluster_dist"] is None
 
-    # (6) knn_lsh releases its signature cache: the DataFrame persist
-    # (plan-cache keyed, NEVER reclaimed by GC) is gone; what remains is
-    # at most the result's localCheckpoint block, which the
-    # ContextCleaner reclaims when the result is dereferenced —
-    # GC-bounded instead of a permanent per-invocation leak
-    import gc as _gc
-
+    # (6) knn_lsh holds no cache: its plan is returned lazily, so no
+    # persisted or checkpointed RDD outlives the call
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.5]) for i in range(30)],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
@@ -6430,9 +6478,7 @@ def test_r14_ann_graph_review_fixes(spark):
     res = emb.transform(t("knn_lsh", k=2, query_filter="vec_id < 3"))
     res.collect()
     mid = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert mid <= before + 1, (before, mid)  # only the checkpoint block
-    del res
-    _gc.collect()
+    assert mid <= before, (before, mid)
 
 
 def test_r14_text_review_fixes(spark):

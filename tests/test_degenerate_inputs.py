@@ -10,9 +10,11 @@ Each case is (op name, args, fixture, empty_mode):
 ``empty_mode="zero"`` — zero output rows on empty input (row-wise ops,
 grouped aggregates); ``"any"`` — a global aggregate legitimately emits
 its summary row(s) even on an empty corpus (just must not raise).
-The assertion is only "plan builds and executes, column set stable
-across empty/single" — value semantics live in the per-op tests and the
-DuckDB oracles.
+The assertion is "plan builds and executes, column set stable across
+empty/single, and the op leaves no cache entry in the session" — value
+semantics live in the per-op tests and the DuckDB oracles. An argument
+given as ``SELF`` takes the case's own input frame (the second input of
+a two-input op); ``STATE`` takes a fresh state directory.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ EV_SCHEMA = (
 )
 NUM_SCHEMA = "id LONG, grp STRING, x DOUBLE, is_ok BOOLEAN"
 NUM_ROW = [(1, "a", 2.5, True)]
+SELF = "<the input frame>"
+STATE = "<a fresh state directory>"
 
 CASES = [
     ("text_quality_score", {}, "docs", "zero"),
@@ -221,6 +225,27 @@ CASES = [
         "docs",
         "zero",
     ),
+    ("source_unigram_divergence", {"group_col": "lang"}, "docs", "zero"),
+    ("text_seed_classifier_score", {"pos_df": SELF}, "docs", "zero"),
+    ("text_winnow_overlap", {"min_shared": 1}, "docs", "zero"),
+    ("text_winnow_cross_overlap", {"other_df": SELF, "min_shared": 1}, "docs", "zero"),
+    ("dedup_connected_components", {}, "docs", "zero"),
+    ("dedup_incremental_minhash", {"state_location": STATE}, "docs", "zero"),
+    ("dedup_incremental_embedding", {"state_location": STATE}, "emb", "zero"),
+    ("dedup_cross_embedding", {"other_df": SELF, "mode": "flag"}, "emb", "zero"),
+    (
+        "knn_ivf_hier",
+        {"k": 2, "query_filter": "vec_id >= 0", "k_coarse": 2, "k_fine": 2},
+        "emb",
+        "zero",
+    ),
+    ("embedding_kmeans_hier", {"k_coarse": 2, "k_fine": 2}, "emb", "zero"),
+    (
+        "knn_ivf",
+        {"k": 2, "query_filter": "vec_id >= 0", "num_centroids": 2, "iters": 1},
+        "emb",
+        "zero",
+    ),
 ]
 
 
@@ -246,20 +271,28 @@ def _fixture(spark, kind, empty):
     CASES,
     ids=[f"{c[0]}-{i}" for i, c in enumerate(CASES)],
 )
-def test_op_survives_empty_and_single_row(spark, name, args, kind, empty_mode):
-    single = _fixture(spark, kind, empty=False)
-    out_single = single.transform(t(name, **args))
-    assert out_single.count() >= 0
+def test_op_survives_empty_and_single_row(
+    spark, tmp_path, name, args, kind, empty_mode
+):
+    def run(frame, state):
+        bound = {
+            k: frame if v == SELF else str(tmp_path / state) if v == STATE else v
+            for k, v in args.items()
+        }
+        out = frame.transform(t(name, **bound))
+        return out, out.collect()
 
-    empty = _fixture(spark, kind, empty=True)
-    out_empty = empty.transform(t(name, **args))
-    n_empty = out_empty.count()
+    spark.catalog.clearCache()
+    out_single, _ = run(_fixture(spark, kind, empty=False), "single")
+    out_empty, rows_empty = run(_fixture(spark, kind, empty=True), "empty")
     if empty_mode == "zero":
-        assert n_empty == 0
+        assert rows_empty == []
     # column set stable across empty vs single-row input
     assert [f.name for f in out_empty.schema.fields] == [
         f.name for f in out_single.schema.fields
     ]
+    # the op holds no cache past its return
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_two_input_ops_survive_empty_sides(spark):

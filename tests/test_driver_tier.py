@@ -89,10 +89,11 @@ def test_min_labels():
 
 
 @pytest.fixture()
-def both_tiers(monkeypatch):
+def both_tiers(spark, monkeypatch):
     """Run ``fn`` over ``frame`` with ``module.<gate>`` at its default and
     then at 0; return the two sorted row lists. Asserts the first run
-    took the driver tier and the second the distributed loop. The
+    took the driver tier and the second the distributed loop, and that
+    neither leaves a cache entry in the session. The
     broadcast gate (``gate="BROADCAST_MAX_ROWS"``) lives in
     ``driver_tier``; its ``module`` is the operator's, where the spy
     records each ``fits_broadcast`` choice."""
@@ -117,11 +118,14 @@ def both_tiers(monkeypatch):
         else:
             monkeypatch.setattr(module, "bounded_collect", spy)
         out = []
+        cache = spark._jsparkSession.sharedState().cacheManager()
         for limit in (getattr(home, gate), 0):
             monkeypatch.setattr(home, gate, limit)
             took.clear()
+            spark.catalog.clearCache()
             out.append(sorted(tuple(r) for r in frame.transform(fn).collect()))
             assert took == [limit > 0]
+            assert cache.isEmpty()
         return out
 
     return run

@@ -935,7 +935,7 @@ def test_r14_multimodal_embeddings_review_fixes(spark):
     assert {r["id"] for r in rows} == {2} and len(rows) == 2
 
 
-def test_r14_embedding_nan_review_fixes(spark):
+def test_r14_embedding_nan_review_fixes(spark, monkeypatch):
     """NaN/Inf hygiene for the embedding family (r14 review pins)."""
     import math
 
@@ -981,12 +981,16 @@ def test_r14_embedding_nan_review_fixes(spark):
     # random projection: poisoned rows project to all-NULL components on
     # BOTH physical paths (the Arrow boundary erases NaN both ways, so
     # NULL is the one marker the paths can agree on); clean rows equal
-    kern = dirty.transform(
-        t("embedding_random_projection", out_dim=2, method="kernel")
-    ).collect()
-    unro = dirty.transform(
-        t("embedding_random_projection", out_dim=2, method="unroll")
-    ).collect()
+    from lakehouse_engine_spark.datapipes import embeddings
+
+    def project(max_terms):
+        monkeypatch.setattr(embeddings, "RANDOM_PROJECTION_MAX_TERMS", max_terms)
+        return dirty.transform(
+            t("embedding_random_projection", out_dim=2)
+        ).collect()
+
+    kern = project(0)
+    unro = project(1 << 20)
     for rk, ru in zip(sorted(kern, key=lambda r: r["id"]),
                       sorted(unro, key=lambda r: r["id"])):
         assert rk["embedding_rp"] == ru["embedding_rp"], rk["id"]

@@ -1237,6 +1237,27 @@ def test_rewrite_leaves_exact_statistics(spark, tmp_dir, caller, partitioned):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_three_part_table_name_merges_and_replaces(spark, tmp_dir):
+    """``merge`` and ``replace_where`` accept the three-part name
+    ``spark_catalog.<db>.<t>`` that ``catalog_location``, ``DESCRIBE`` and
+    ``ANALYZE`` accept, and leave exact statistics."""
+    from lakehouse_engine_spark.io import merge_writer
+
+    table, path = _rewrite_table(spark, tmp_dir, "merge")
+    name = f"spark_catalog.{spark.catalog.currentDatabase()}.{table}"
+    cols = ["id", "v", "p"]
+    try:
+        assert merge_writer.catalog_location(spark, name)[0] == "EXTERNAL"
+        _run_merge(spark, name, path)
+        assert_df_equal(spark.table(name), _REWRITE_CASES["merge"][5], cols)
+        assert_exact_statistics(spark, name)
+        merge_writer.replace_where(spark, "id = 3", db_table=name, data_format="parquet")
+        assert_df_equal(spark.table(name), [(1, "a", 1), (2, "B", 1)], cols)
+        assert_exact_statistics(spark, name)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 _FAULTS = ("row in the staged write", "after staging", "between the renames",
            "before deleting __old")
 
